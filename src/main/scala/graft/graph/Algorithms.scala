@@ -4,6 +4,7 @@ import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Loop
 
 /** GraphX bridge — the analytics layer the reference exposes only
   * indirectly through its OLAP split generator (R14,
@@ -236,77 +237,51 @@ object Algorithms {
     * a 10-deep unrolled join tree made Catalyst re-analyze the whole
     * tree per step (measured ~8 s on a 16k-edge graph — planning, not
     * data). Instead the loop-invariant relations (edges pre-joined
-    * with out-degree, vertex set) persist once and each iteration
-    * eagerly `localCheckpoint`s the narrow (id, pr) state, so every
-    * step is one shallow two-stage job regardless of `iters`.
+    * with out-degree, vertex set) persist once and the narrow (id, pr)
+    * state rolls through [[graft.util.Loop]] at cadence 5 (each
+    * round's state feeds exactly one consumer, the next round's join),
+    * so every step is one shallow two-stage job regardless of `iters`.
     */
   def pageRankExact(s: SparkSession, g: PropertyGraph, labels: Seq[String] = Nil,
                     iters: Int = 10): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val edges = e0.select(col("src"), col("dst"))
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // pre-partitioned on the per-round join key (r16): outdeg is small
-    // enough that the build join broadcasts it, so WITHOUT the explicit
-    // repartition the cache keeps the parquet scan layout and every
-    // round's state join re-exchanges (or re-sorts) the |E| side —
-    // the katz/weighted siblings already had this; measured A/B below
-    // size-derived partition count (r16, guide §2): tiny gate
-    // subgraphs collapse to one task per round-stage instead of
-    // paying the session's full fan-out; measured in Partitioning's
-    // scaladoc. Costs one count() job up front.
-    val edgesDeg = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(graft.util.Partitioning.loopParts(s, edges.count()),
-        col("src"))
-      .persist(MEMORY_AND_DISK)
-    val verts = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-      .persist(MEMORY_AND_DISK)
-    // vertices with NO in-edge receive zero propagated mass in every
-    // round, so their rank is the constant 150000 restart term —
-    // computed ONCE. contrib below covers exactly the has-in-edge
-    // set (pr always spans all vertices, so every dst gets a
-    // contribution row), which turns the per-round verts LEFT join —
-    // a full-vertex scan plus a broadcast build every round — into a
-    // shuffle-free union with this constant frame (r15, guide §2.4).
-    val noIn = verts
-      .join(edgesDeg.select(col("dst").as("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(150000L).as("pr"))
-      .persist(MEMORY_AND_DISK)
-    try {
-      val rc = new graft.util.Checkpoints.Rolling
-      var pr = rc.roll(verts.select(col("id"), lit(1000000L).as("pr")))
-      for (k <- 1 to iters) {
+    Loop.cached { c =>
+      val (edges, n) = c.counted(e0.select(col("src"), col("dst")))
+      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+      // pre-partitioned on the per-round join key (r16): outdeg is small
+      // enough that the build join broadcasts it, so WITHOUT the explicit
+      // repartition the cache keeps the parquet scan layout and every
+      // round's state join re-exchanges (or re-sorts) the |E| side;
+      // the partition count is size-derived (Loop.parts)
+      val edgesDeg = c(edges.join(outdeg, "src")
+        .select(col("src"), col("dst"), col("outdeg"))
+        .repartition(Loop.parts(s, n), col("src")))
+      val verts = c(edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct())
+      // vertices with NO in-edge receive zero propagated mass in every
+      // round, so their rank is the constant 150000 restart term —
+      // computed ONCE. contrib below covers exactly the has-in-edge
+      // set (pr always spans all vertices, so every dst gets a
+      // contribution row), which turns the per-round verts LEFT join —
+      // a full-vertex scan plus a broadcast build every round — into a
+      // shuffle-free union with this constant frame (r15, guide §2.4).
+      val noIn = c(verts
+        .join(edgesDeg.select(col("dst").as("id")), Seq("id"), "left_anti")
+        .select(col("id"), lit(150000L).as("pr")))
+      Loop.run(verts.select(col("id"), lit(1000000L).as("pr")), iters,
+          every = 5) { (pr, _) =>
         // shuffle_hash on the narrow state side: an SMJ would re-SORT
         // the cached pre-partitioned adjacency every round (the LPA /
         // ccAltRound lesson applied to the PR loop family, r16)
-        val contrib = edgesDeg
+        edgesDeg
           .join(pr.select(col("id").as("src"), col("pr"))
             .hint("shuffle_hash"), "src")
           .select(col("dst").as("id"), expr("pr div outdeg").as("c"))
           .groupBy(col("id")).agg(sum(col("c")).as("m"))
-        val next = contrib
           .select(col("id"), expr("150000L + (85L * m) div 100L").as("pr"))
           .unionByName(noIn)
-        // CHECKPOINT CADENCE 5 (r16; was 2): each round's state feeds
-        // exactly ONE consumer — the next round's join — so skipping
-        // the barrier loses nothing to recomputation while saving a
-        // full materialization stop per skipped round. CadenceProbe
-        // A/B on this exact shape: cadence2 5.21 / cadence5 4.72 /
-        // full-lazy 6.11 (min-of-4, alternated) — depth-5 chained
-        // plans still execute as one pipelined job, but the fully
-        // lazy 10-deep plan tips into planning overhead. The FINAL
-        // round always checkpoints: the returned frame must not
-        // reference the loop caches after the finally unpersists them.
-        pr = if (k % 5 == 0 || k == iters) rc.roll(next) else next
-      }
-      pr
-    } finally {
-      edgesDeg.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
-      noIn.unpersist(blocking = false)
+      }.state
     }
   }
 
@@ -330,47 +305,32 @@ object Algorithms {
   def pageRankWeightedExact(s: SparkSession, g: PropertyGraph,
       weight: org.apache.spark.sql.Column, labels: Seq[String] = Nil,
       iters: Int = 10): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val ew = e0.select(col("src"), col("dst"))
-      .withColumn("w", weight.cast("long"))
-      .filter(col("w") > 0) // positive-weight contract (see scaladoc)
-    val sw = ew.groupBy(col("src")).agg(sum(col("w")).as("sw"))
-    val edgesW = ew.join(sw, "src")
-      .select(col("src"), col("dst"), col("w"), col("sw"))
-      .repartition(graft.util.Partitioning.loopParts(s, ew.count()),
-        col("src")) // size-derived (r16) — see pageRankExact
-      .persist(MEMORY_AND_DISK)
-    val verts = edgesW.select(col("src").as("id"))
-      .union(edgesW.select(col("dst").as("id"))).distinct()
-      .persist(MEMORY_AND_DISK)
-    // constant no-in-edge frame — see pageRankExact (r15, guide §2.4)
-    val noIn = verts
-      .join(edgesW.select(col("dst").as("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(150000L).as("pr"))
-      .persist(MEMORY_AND_DISK)
-    try {
-      val rc = new graft.util.Checkpoints.Rolling
-      var pr = rc.roll(verts.select(col("id"), lit(1000000L).as("pr")))
-      for (k <- 1 to iters) {
-        val contrib = edgesW
+    Loop.cached { c =>
+      val (ew, n) = c.counted(e0.select(col("src"), col("dst"))
+        .withColumn("w", weight.cast("long"))
+        .filter(col("w") > 0)) // positive-weight contract (see scaladoc)
+      val sw = ew.groupBy(col("src")).agg(sum(col("w")).as("sw"))
+      val edgesW = c(ew.join(sw, "src")
+        .select(col("src"), col("dst"), col("w"), col("sw"))
+        .repartition(Loop.parts(s, n), col("src"))) // see pageRankExact
+      val verts = c(edgesW.select(col("src").as("id"))
+        .union(edgesW.select(col("dst").as("id"))).distinct())
+      // constant no-in-edge frame — see pageRankExact (r15, guide §2.4)
+      val noIn = c(verts
+        .join(edgesW.select(col("dst").as("id")), Seq("id"), "left_anti")
+        .select(col("id"), lit(150000L).as("pr")))
+      Loop.run(verts.select(col("id"), lit(1000000L).as("pr")), iters,
+          every = 5) { (pr, _) =>
+        edgesW
           .join(pr.select(col("id").as("src"), col("pr"))
             .hint("shuffle_hash"), "src") // stream the cache, build on state (r16)
           .select(col("dst").as("id"), expr("(pr * w) div sw").as("c"))
           .groupBy(col("id")).agg(sum(col("c")).as("m"))
-        val next = contrib
           .select(col("id"), expr("150000L + (85L * m) div 100L").as("pr"))
           .unionByName(noIn)
-        // cadence-2 checkpointing — see pageRankExact (single-consumer
-        // state; final round always materializes before the unpersist)
-        pr = if (k % 5 == 0 || k == iters) rc.roll(next) else next
-      }
-      pr
-    } finally {
-      edgesW.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
-      noIn.unpersist(blocking = false)
+      }.state
     }
   }
 
@@ -397,53 +357,50 @@ object Algorithms {
     */
   def eigenvectorExact(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, iters: Int = 10): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val sym = e0.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(explode(array(
-        struct(col("src").as("v"), col("dst").as("n")),
-        struct(col("dst").as("v"), col("src").as("n")))).as("e"))
-      .select(col("e.v").as("v"), col("e.n").as("n"))
-    // A+I as data: one self-loop row per vertex folds the +I into the
-    // SAME single join every step runs — no second state reference
-    // (which on the oracle side would make DuckDB's CTE inlining
-    // expand the plan tree exponentially across 10 steps)
-    val adj = sym.union(
-        sym.select(col("v")).distinct().select(col("v"), col("v").as("n")))
-      .repartition(graft.util.Partitioning.loopParts(s, sym.count()),
-        col("n")) // size-derived (r16) — see pageRankExact
-      .persist(MEMORY_AND_DISK)
-    try {
+    Loop.cached { c =>
+      val (sym, n) = c.counted(e0.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst"))
+        .select(explode(array(
+          struct(col("src").as("v"), col("dst").as("n")),
+          struct(col("dst").as("v"), col("src").as("n")))).as("e"))
+        .select(col("e.v").as("v"), col("e.n").as("n")))
+      // A+I as data: one self-loop row per vertex folds the +I into the
+      // SAME single join every step runs — no second state reference
+      // (which on the oracle side would make DuckDB's CTE inlining
+      // expand the plan tree exponentially across 10 steps)
+      val adj = c(sym.union(
+          sym.select(col("v")).distinct().select(col("v"), col("v").as("n")))
+        .repartition(Loop.parts(s, n), col("n"))) // see pageRankExact
       // vertex-set contract: scores are defined over vertices incident
       // to at least one (label-filtered) non-loop edge — isolated
       // vertices have no centrality mass and are absent from the
       // output. An empty edge set therefore yields an empty frame
       // rather than letting the null MAX aggregate below NPE.
-      if (adj.isEmpty) {
-        return adj.select(col("v").as("id"), lit(1000000L).as("score")).limit(0)
+      if (n == 0L) adj.select(col("v").as("id"), lit(1000000L).as("score")).limit(0)
+      else {
+        // the rolled state is each step's raw (id, m) sums: the scalar
+        // max and the next step share ONE materialization of the
+        // join+agg (reading the normalizer off a lazy frame doubles
+        // every step's work — the hitsExact lesson)
+        def scores(m: DataFrame): DataFrame = {
+          val mx = m.agg(max(col("m"))).head().getLong(0)
+          require(mx > 0 && mx <= Long.MaxValue / 1000000L,
+            s"eigenvector renormalizer out of range: $mx")
+          m.select(col("id"), expr(s"(m * 1000000L) div ${mx}L").as("score"))
+        }
+        val r = Loop.run(adj.select(col("v").as("id")).distinct()
+            .select(col("id"), lit(1000000L).as("score")), iters) { (st, k) =>
+          adj.join((if (k == 1) st else scores(st))
+              .select(col("id").as("n"), col("score"))
+              .hint("shuffle_hash"), "n") // stream the cache, build on state (r16)
+            .groupBy(col("v")).agg(sum(col("score")).as("m"))
+            .select(col("v").as("id"), col("m"))
+        }
+        if (r.rounds == 0) r.state else scores(r.state)
       }
-      val rc = new graft.util.Checkpoints.Rolling
-      var x = rc.roll(adj.select(col("v").as("id")).distinct()
-        .select(col("id"), lit(1000000L).as("score")))
-      for (_ <- 1 to iters) {
-        // checkpoint BEFORE the scalar read: the driver max and the
-        // next round must share ONE materialization of the join+agg,
-        // not recompute it (the hitsExact lesson — reading the
-        // normalizer off the lazy frame doubles every step's work)
-        val m = rc.roll(adj.join(x.select(col("id").as("n"), col("score"))
-            .hint("shuffle_hash"), "n") // stream the cache, build on state (r16)
-          .groupBy(col("v")).agg(sum(col("score")).as("m"))
-          .select(col("v").as("id"), col("m")))
-        val mx = m.agg(max(col("m"))).head().getLong(0)
-        require(mx > 0 && mx <= Long.MaxValue / 1000000L,
-          s"eigenvector renormalizer out of range: $mx")
-        x = m.select(col("id"),
-            expr(s"(m * 1000000L) div ${mx}L").as("score"))
-      }
-      x
-    } finally adj.unpersist(blocking = false)
+    }
   }
 
   /** HITS hubs-and-authorities (Kleinberg), exact integer units — the
@@ -469,70 +426,65 @@ object Algorithms {
     */
   def hitsExact(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, iters: Int = 8): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val e = e0.select(col("src"), col("dst"))
-    val eBySrc = e.repartition(col("src")).persist(MEMORY_AND_DISK)
-    val eByDst = e.repartition(col("dst")).persist(MEMORY_AND_DISK)
-    try {
-      if (eBySrc.isEmpty) {
-        return e.select(col("src").as("id"), lit(0L).as("hub"),
-          lit(0L).as("auth")).limit(0)
-      }
-      // overflow guard ONCE, up front: scores stay ≤ 10⁶ after every
-      // renormalize, so each half-step's raw sum is ≤ maxDegree·10⁶
-      // and the ×10⁶ rescale stays in Long iff maxDegree < 9.2·10⁶ —
-      // checking the degree bound here validates all iterations at
-      // once and keeps the loop free of driver round-trips
-      val maxDeg = e.select(col("src").as("id")).union(e.select(col("dst")))
-        .groupBy(col("id")).agg(count(lit(1)).as("d"))
-        .agg(max(col("d"))).head().getLong(0)
-      require(maxDeg > 0 && maxDeg <= Long.MaxValue / 1000000L / 1000000L,
-        s"hits: max degree $maxDeg would overflow the integer rescale")
-      // normalizer as a BROADCAST 1-row max joined back — no per-step
-      // scalar collect: the driver-read formulation cost one extra
-      // action per half-step (2× the job count), and reading the max
-      // off the un-checkpointed frame even re-ran the join+agg (the
-      // two together measured 10× on the 750k-edge gate)
-      def renorm(rc: graft.util.Checkpoints.Rolling, m: DataFrame): DataFrame = {
-        val mm = rc.roll(m)
-        mm.crossJoin(broadcast(mm.agg(max(col("m")).as("mx"))))
-          .select(col("id"), expr("(m * 1000000L) div mx").as("score"))
-      }
-      // one rolling slot per half-step chain: round k's hub state may
-      // release round k−1's HUB blocks, never the authority frame the
-      // final join still reads
-      val rcH = new graft.util.Checkpoints.Rolling
-      val rcA = new graft.util.Checkpoints.Rolling
-      var h = rcH.roll(eBySrc.select(col("src").as("id")).distinct()
-        .select(col("id"), lit(1000000L).as("score")))
-      var a = h.limit(0)
-      for (_ <- 1 to iters) {
+    Loop.cached { c =>
+      val (e, n) = c.counted(e0.select(col("src"), col("dst")))
+      if (n == 0L) e.select(col("src").as("id"), lit(0L).as("hub"),
+        lit(0L).as("auth")).limit(0)
+      else {
+        val eBySrc = c(e.repartition(col("src")))
+        val eByDst = c(e.repartition(col("dst")))
+        // overflow guard ONCE, up front: scores stay ≤ 10⁶ after every
+        // renormalize, so each half-step's raw sum is ≤ maxDegree·10⁶
+        // and the ×10⁶ rescale stays in Long iff maxDegree < 9.2·10⁶ —
+        // checking the degree bound here validates all iterations at
+        // once and keeps the loop free of collected scalars
+        val maxDeg = e.select(col("src").as("id")).union(e.select(col("dst")))
+          .groupBy(col("id")).agg(count(lit(1)).as("d"))
+          .agg(max(col("d"))).head().getLong(0)
+        require(maxDeg > 0 && maxDeg <= Long.MaxValue / 1000000L / 1000000L,
+          s"hits: max degree $maxDeg would overflow the integer rescale")
+        // normalizer as a BROADCAST 1-row max joined back onto the
+        // rolled raw sums — no per-step scalar collect: the collected-max
+        // formulation cost one extra action per half-step (2× the job
+        // count), and reading the max off the un-checkpointed frame
+        // even re-ran the join+agg (the two together measured 10× on
+        // the 750k-edge gate)
+        def scores(m: DataFrame): DataFrame =
+          m.crossJoin(broadcast(m.agg(max(col("m")).as("mx"))))
+            .select(col("id"), expr("(m * 1000000L) div mx").as("score"))
         // hint rides the narrow STATE side → it becomes the hash-join
         // build side (building on the 750k-edge side instead measured
         // 2× slower); the pre-partitioned persisted edges stream
-        a = renorm(rcA, eBySrc
-          .join(h.select(col("id").as("src"), col("score"))
-            .hint("shuffle_hash"), "src")
-          .groupBy(col("dst")).agg(sum(col("score")).as("m"))
-          .select(col("dst").as("id"), col("m")))
-        h = renorm(rcH, eByDst
-          .join(a.select(col("id").as("dst"), col("score"))
-            .hint("shuffle_hash"), "dst")
-          .groupBy(col("src")).agg(sum(col("score")).as("m"))
-          .select(col("src").as("id"), col("m")))
+        def pull(edges: DataFrame, from: String, to: String,
+                 st: DataFrame): DataFrame = edges
+          .join(st.select(col("id").as(from), col("score"))
+            .hint("shuffle_hash"), from)
+          .groupBy(col(to)).agg(sum(col("score")).as("m"))
+          .select(col(to).as("id"), col("m"))
+        // one round per HALF-step over (hub sums, authority sums), one
+        // rolling slot each: odd rounds pull authorities from hubs, even
+        // rounds hubs from authorities, so a hub roll never releases
+        // the authority frame the final join still reads. The seed's
+        // unit hub scores are read as they are.
+        val h0 = eBySrc.select(col("src").as("id")).distinct()
+          .select(col("id"), lit(1000000L).as("m"))
+        val (h, a) = Loop.run((h0, h0.limit(0)), 2 * iters) {
+          case ((h, a), t) =>
+            if (t % 2 == 1) (h, pull(eBySrc, "src", "dst",
+              if (t == 1) h.withColumnRenamed("m", "score") else scores(h)))
+            else (pull(eByDst, "dst", "src", scores(a)), a)
+        }.state
+        eBySrc.select(col("src").as("id"))
+          .union(eByDst.select(col("dst").as("id"))).distinct()
+          .join(scores(h).select(col("id"), col("score").as("hub")),
+            Seq("id"), "left")
+          .join(scores(a).select(col("id"), col("score").as("auth")),
+            Seq("id"), "left")
+          .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
+            coalesce(col("auth"), lit(0L)).as("auth"))
       }
-      val universe = eBySrc.select(col("src").as("id"))
-        .union(eByDst.select(col("dst").as("id"))).distinct()
-      universe
-        .join(h.select(col("id"), col("score").as("hub")), Seq("id"), "left")
-        .join(a.select(col("id"), col("score").as("auth")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
-          coalesce(col("auth"), lit(0L)).as("auth"))
-    } finally {
-      eBySrc.unpersist(blocking = false)
-      eByDst.unpersist(blocking = false)
     }
   }
 
@@ -605,18 +557,16 @@ object Algorithms {
   def randomWalks(s: SparkSession, g: PropertyGraph, seeds: DataFrame,
       labels: Seq[String] = Nil, steps: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
     val adj = symmetrize(undirectedDistinct(e0))
     val w = Window.partitionBy(col("v")).orderBy(col("n"))
-    val ranked = adj
-      .withColumn("rk", row_number().over(w))
-      .withColumn("outdeg", count(lit(1)).over(
-        Window.partitionBy(col("v"))))
-      .repartition(col("v"))
-      .persist(MEMORY_AND_DISK)
-    try {
+    Loop.cached { c =>
+      val ranked = c(adj
+        .withColumn("rk", row_number().over(w))
+        .withColumn("outdeg", count(lit(1)).over(
+          Window.partitionBy(col("v"))))
+        .repartition(col("v")))
       ranked.count() // materialize once; every step reuses the cache
       var frontier = seeds.select(col("seed"), col("seed").as("cur"))
         .localCheckpoint()
@@ -634,7 +584,7 @@ object Algorithms {
           col("cur").as("v")))
       }
       out
-    } finally ranked.unpersist(blocking = false)
+    }
   }
 
   /** Distributed greedy coloring (Jones–Plassmann): vertices take the
@@ -714,48 +664,38 @@ object Algorithms {
     */
   def dagLayersStatus(s: SparkSession, g: PropertyGraph, iters: Int = 8,
                       strict: Boolean = false): (DataFrame, Boolean) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // pre-partitioned on the per-round join key so the cached edge
-    // list never re-shuffles inside the loop (the LPA adjacency trick,
-    // pinned in PlanSpec)
-    val edges = g.edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(MEMORY_AND_DISK)
-    try {
+    val r = Loop.cached { c =>
+      // pre-partitioned on the per-round join key so the cached edge
+      // list never re-shuffles inside the loop (the LPA adjacency trick,
+      // pinned in PlanSpec)
+      val edges = c(g.edges.select(col("src"), col("dst"))
+        .repartition(col("src")))
       // frontier (delta) formulation: only vertices whose level ROSE
-      // last round can raise a successor this round, so the expensive
-      // edges-join touches each edge once per layer it propagates
-      // through — Σ|delta| work, not rounds × |E| — and the loop stops
-      // itself on an empty frontier (depth+1 rounds on a DAG) instead
-      // of burning fixed iterations past convergence.
-      val rc = new graft.util.Checkpoints.Rolling
-      var lvl = rc.roll(g.vertices.select(col("id")).distinct()
-        .select(col("id"), lit(0L).as("level")))
-      var delta = lvl
-      var round = 0
-      while (round < iters && !delta.isEmpty) {
-        round += 1
+      // last round (__rose) can raise a successor this round, so the
+      // expensive edges-join touches each edge once per layer it
+      // propagates through — Σ|delta| work, not rounds × |E| — and the
+      // loop stops itself on an empty frontier (depth+1 rounds on a
+      // DAG) instead of burning fixed iterations past convergence.
+      Loop.run(g.vertices.select(col("id")).distinct()
+          .select(col("id"), lit(0L).as("level"), lit(true).as("__rose")),
+          iters, stop = Loop.whenEmpty(_.filter(col("__rose")))) { (st, _) =>
         val cand = edges
-          .join(delta.select(col("id").as("src"), col("level"))
+          .join(st.filter(col("__rose")).select(col("id").as("src"), col("level"))
             .hint("shuffle_hash"), "src") // stream the cache (r16)
           .groupBy(col("dst")).agg(max(col("level") + 1L).as("cand"))
           .select(col("dst").as("id"), col("cand"))
-        val merged = rc.roll(lvl.join(cand.hint("shuffle_hash"), Seq("id"), "left")
+        st.select(col("id"), col("level"))
+          .join(cand.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"),
             greatest(col("level"), coalesce(col("cand"), col("level")))
               .as("level"),
-            (col("cand") > col("level")).as("__rose")))
-        delta = merged.filter(col("__rose")).select(col("id"), col("level"))
-        lvl = merged.select(col("id"), col("level"))
+            (col("cand") > col("level")).as("__rose"))
       }
-      val converged = delta.isEmpty
-      if (strict) require(converged,
-        s"dagLayers frontier still live after $iters rounds — graph is " +
-          "deeper than iters or cyclic (pass strict=false for detector mode)")
-      (lvl, converged)
-    } finally {
-      edges.unpersist(blocking = false)
     }
+    if (strict) require(r.converged,
+      s"dagLayers frontier still live after $iters rounds — graph is " +
+        "deeper than iters or cyclic (pass strict=false for detector mode)")
+    (r.state.select(col("id"), col("level")), r.converged)
   }
 
   /** One delta round of [[connectedComponentsAlt]]: label candidates
@@ -813,48 +753,41 @@ object Algorithms {
     * dominates because late rounds touch a vanishing frontier.
     */
   def connectedComponentsAlt(s: SparkSession, g: PropertyGraph,
-                             maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+                             maxIter: Int = 50): DataFrame = Loop.cached { c =>
     // no undirectedDistinct here: MIN-aggregation is idempotent under
     // duplicate/parallel/reversed edges, so the dedup shuffle would buy
     // nothing. Symmetrize in ONE pass over the (expensive, multi-table)
     // edge subtree via explode — a union would evaluate it twice — and
     // pre-partition on the round join key.
-    val adj = g.edges.select(col("src"), col("dst"))
+    val adj = c(g.edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       .select(explode(array(
         struct(col("src").as("v"), col("dst").as("n")),
         struct(col("dst").as("v"), col("src").as("n")))).as("e"))
       .select(col("e.v").as("v"), col("e.n").as("n"))
-      .repartition(col("n"))
-      .persist(MEMORY_AND_DISK)
-    try {
-      val rc = new graft.util.Checkpoints.Rolling
-      var lab = rc.roll(g.vertices.select(col("id")).distinct()
-        .select(col("id"), col("id").as("comp")))
-      // round 1 on the identity labeling needs no join at all:
-      // min neighbor id IS the candidate (comp(id) = id) — one
-      // aggregation replaces the heaviest (all-vertices) delta round
-      val first = rc.roll(lab.join(
-          adj.groupBy(col("v")).agg(min(col("n")).as("cand"))
-            .select(col("v").as("id"), col("cand")).hint("shuffle_hash"),
-          Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"),
-          (coalesce(col("cand"), col("comp")) < col("comp")).as("__chg")))
-      var delta = first.filter(col("__chg")).select(col("id"), col("comp"))
-      var lab2 = first.select(col("id"), col("comp"))
-      var it = 1
-      while (it < maxIter && !delta.isEmpty) {
-        it += 1
-        val merged = rc.roll(ccAltRound(adj, lab2, delta))
-        delta = merged.filter(col("__chg")).select(col("id"), col("comp"))
-        lab2 = merged.select(col("id"), col("comp"))
-      }
-      require(delta.isEmpty,
-        s"connectedComponentsAlt did not converge in $maxIter rounds")
-      lab2
-    } finally adj.unpersist(blocking = false)
+      .repartition(col("n")))
+    // the seed is the identity labeling; rounds carry __chg, so round 0
+    // has no delta to test
+    val r = Loop.run(g.vertices.select(col("id")).distinct()
+        .select(col("id"), col("id").as("comp")), maxIter,
+        stop = (st: DataFrame, k: Int) => k > 0 && st.filter(col("__chg")).isEmpty) {
+        (st, k) =>
+      if (k == 1) {
+        // round 1 on the identity labeling needs no join at all:
+        // min neighbor id IS the candidate (comp(id) = id) — one
+        // aggregation replaces the heaviest (all-vertices) delta round
+        st.join(adj.groupBy(col("v")).agg(min(col("n")).as("cand"))
+              .select(col("v").as("id"), col("cand")).hint("shuffle_hash"),
+            Seq("id"), "left")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"),
+            (coalesce(col("cand"), col("comp")) < col("comp")).as("__chg"))
+      } else ccAltRound(adj, st.select(col("id"), col("comp")),
+        st.filter(col("__chg")).select(col("id"), col("comp")))
+    }
+    require(r.converged,
+      s"connectedComponentsAlt did not converge in $maxIter rounds")
+    r.state.select(col("id"), col("comp"))
   }
 
   /** Personalized PageRank, exact integer units — [[pageRankExact]]
@@ -871,57 +804,40 @@ object Algorithms {
   def personalizedPageRankExact(s: SparkSession, g: PropertyGraph,
                                 seeds: DataFrame, labels: Seq[String] = Nil,
                                 iters: Int = 10): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val edges = e0.select(col("src"), col("dst"))
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(graft.util.Partitioning.loopParts(s, edges.count()),
-        col("src")) // pre-partitioned + size-derived (r16)
-      .persist(MEMORY_AND_DISK)
-    val vflag = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-      .join(seeds.select(col("id")).distinct()
-        .withColumn("__seed", lit(1L)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__seed"), lit(0L)).as("seed"))
-      .persist(MEMORY_AND_DISK)
-    // constant no-in-edge frame (per-vertex seed restart mass only) —
-    // see pageRankExact; the contrib side re-attaches the seed flag by
-    // joining the SMALL seed set instead of the full vflag frame
-    val seedFlag = seeds.select(col("id")).distinct()
-      .withColumn("__seed", lit(1L))
-      .persist(MEMORY_AND_DISK)
-    val noIn = vflag
-      .join(edgesDeg.select(col("dst").as("id")), Seq("id"), "left_anti")
-      .select(col("id"), (col("seed") * 150000L).as("pr"))
-      .persist(MEMORY_AND_DISK)
-    try {
-      val rc = new graft.util.Checkpoints.Rolling
-      var pr = rc.roll(vflag.select(col("id"), (col("seed") * 1000000L).as("pr")))
-      for (k <- 1 to iters) {
-        val contrib = edgesDeg
+    Loop.cached { c =>
+      val (edges, n) = c.counted(e0.select(col("src"), col("dst")))
+      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+      val edgesDeg = c(edges.join(outdeg, "src")
+        .select(col("src"), col("dst"), col("outdeg"))
+        .repartition(Loop.parts(s, n), col("src"))) // see pageRankExact
+      val vflag = c(edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct()
+        .join(seeds.select(col("id")).distinct()
+          .withColumn("__seed", lit(1L)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("__seed"), lit(0L)).as("seed")))
+      // constant no-in-edge frame (per-vertex seed restart mass only) —
+      // see pageRankExact; the contrib side re-attaches the seed flag by
+      // joining the SMALL seed set instead of the full vflag frame
+      val seedFlag = c(seeds.select(col("id")).distinct()
+        .withColumn("__seed", lit(1L)))
+      val noIn = c(vflag
+        .join(edgesDeg.select(col("dst").as("id")), Seq("id"), "left_anti")
+        .select(col("id"), (col("seed") * 150000L).as("pr")))
+      Loop.run(vflag.select(col("id"), (col("seed") * 1000000L).as("pr")),
+          iters, every = 5) { (pr, _) =>
+        edgesDeg
           .join(pr.select(col("id").as("src"), col("pr"))
             .hint("shuffle_hash"), "src") // stream the cache, build on state (r16)
           .select(col("dst").as("id"), expr("pr div outdeg").as("c"))
           .groupBy(col("id")).agg(sum(col("c")).as("m"))
-        val next = contrib
           .join(seedFlag, Seq("id"), "left")
           .select(col("id"),
             (coalesce(col("__seed"), lit(0L)) * 150000L +
               expr("(85L * m) div 100L")).as("pr"))
           .unionByName(noIn)
-        // cadence-2 checkpointing — see pageRankExact (single-consumer
-        // state; final round always materializes before the unpersist)
-        pr = if (k % 5 == 0 || k == iters) rc.roll(next) else next
-      }
-      pr
-    } finally {
-      edgesDeg.unpersist(blocking = false)
-      vflag.unpersist(blocking = false)
-      seedFlag.unpersist(blocking = false)
-      noIn.unpersist(blocking = false)
+      }.state
     }
   }
 
@@ -970,18 +886,15 @@ object Algorithms {
     */
   def louvainLevel1(s: SparkSession, g: PropertyGraph, rounds: Int = 6,
                     labels: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val all = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val und = undirectedDistinct(all).persist(MEMORY_AND_DISK)
-    val sym = symmetrize(und).repartition(col("n")).persist(MEMORY_AND_DISK)
-    val deg = degreesOf(und).persist(MEMORY_AND_DISK)
-    try {
-      val m2 = 2L * und.count()
+    Loop.cached { c =>
+      val (und, nUnd) = c.counted(undirectedDistinct(all))
+      val sym = c(symmetrize(und).repartition(col("n")))
+      val deg = c(degreesOf(und))
+      val m2 = 2L * nUnd
       require(m2 > 0, "louvain: empty edge set")
-      val rc = new graft.util.Checkpoints.Rolling
-      var asg = rc.roll(deg.select(col("v").as("id"), col("v").as("c")))
-      for (r <- 1 to rounds) {
+      Loop.run(deg.select(col("v").as("id"), col("v").as("c")), rounds) { (asg, r) =>
         val tot = asg.join(deg.select(col("v").as("id"), col("d")), "id")
           .groupBy(col("c")).agg(sum(col("d")).as("tot"))
         val kin = sym
@@ -1014,16 +927,10 @@ object Algorithms {
             max(when(col("own") === 1L, col("nc"))).as("cur"))
           .select(col("v").as("id"), col("b.score").as("bs"),
             (-col("b.mn")).as("bc"), col("os"), col("cur"))
-        asg = rc.roll(best
-          .select(col("id"),
-            when(col("id") % 2 === lit(r % 2) && col("bs") > col("os"),
-              col("bc")).otherwise(col("cur")).as("c")))
-      }
-      asg.localCheckpoint()
-    } finally {
-      und.unpersist(blocking = false)
-      sym.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
+        best.select(col("id"),
+          when(col("id") % 2 === lit(r % 2) && col("bs") > col("os"),
+            col("bc")).otherwise(col("cur")).as("c"))
+      }.state
     }
   }
 
@@ -1031,27 +938,21 @@ object Algorithms {
                        labels: Seq[String] = Nil): DataFrame = {
     val all = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val und = undirectedDistinct(all)
-    // persisted PRE-PARTITIONED on the join key: every round's
-    // adjacency-side shuffle disappears (InMemoryTableScan keeps the
-    // hash partitioning, so only the small label state moves per round)
-    val adj = symmetrize(und)
-      .repartition(col("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = g.vertices.select(col("id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rc = new graft.util.Checkpoints.Rolling
-      var lab = rc.roll(verts.select(col("id"), col("id").as("lbl")))
-      for (_ <- 1 to iters) {
+    Loop.cached { c =>
+      // persisted PRE-PARTITIONED on the join key: every round's
+      // adjacency-side shuffle disappears (InMemoryTableScan keeps the
+      // hash partitioning, so only the small label state moves per round)
+      val adj = c(symmetrize(undirectedDistinct(all)).repartition(col("n")))
+      val verts = c(g.vertices.select(col("id")).distinct())
+      Loop.run(verts.select(col("id"), col("id").as("lbl")), iters) { (lab, _) =>
         // shuffle_hash: an SMJ would re-SORT the cached pre-partitioned
         // adjacency every round (the ccAltRound lesson — ~0.9s/round)
         val nb = adj.join(
           lab.select(col("id").as("n"), col("lbl")).hint("shuffle_hash"), "n")
         // explicit repartition(v) BEFORE the two-level agg (r16): both
         // groupBys then run map-side local over the same layout — one
-        // exchange instead of two (AbLoopProbe lpab: 6.00 → 5.55 min,
-        // consistently faster on every alternated run)
+        // exchange instead of two (6.00 → 5.55 min, consistently faster
+        // on every alternated run — OPTIMIZATION_r16.md, LPA layout)
         val pick = nb.select(col("v"), col("lbl"))
           .repartition(col("v"))
           .groupBy(col("v"), col("lbl"))
@@ -1060,19 +961,16 @@ object Algorithms {
           // lexicographic struct max = (max count, then min label)
           .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
           .select(col("v").as("id"), (-col("m.nl")).as("new_lbl"))
-        lab = rc.roll(lab.join(pick, Seq("id"), "left")
-          .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl")))
-      }
-      lab
-    } finally {
-      adj.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
+        lab.join(pick, Seq("id"), "left")
+          .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
+      }.state
     }
     // r15 note: an iso-union round shape (state = pick ∪ constant
     // isolated frame, licensed by filtering adj to labeled endpoints
     // up front) was A/B'd in-JVM against this shape and REVERTED:
     // the one-time endpoint semi-joins cost more than the removed
-    // per-round left join at bench scale (AbLoopProbe: 9.18 vs 11.24).
+    // per-round left join at bench scale (9.18 vs 11.24 min,
+    // OPTIMIZATION_r15.md).
   }
 
   /** k-core: the maximal subgraph in which every vertex has at least k
@@ -1107,37 +1005,25 @@ object Algorithms {
     */
   def kCoreStatus(s: SparkSession, g: PropertyGraph, k: Int,
             labels: Seq[String] = Nil, maxRounds: Int = 30): (DataFrame, Boolean) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    // distinct over the canonical (a<b) pairs, then explode to both
-    // directions map-side — the previous shape deduped the DOUBLED
-    // union, paying the distinct shuffle on 2|E| rows instead of |E|
-    val und = symmetrize(undirectedDistinct(e0))
-      .select(col("v").as("src"), col("n").as("dst"))
-      .persist(MEMORY_AND_DISK)
-    try {
-      val rc = new graft.util.Checkpoints.Rolling
-      var alive = rc.roll(und.select(col("src").as("id")).distinct())
-      var aliveCount = alive.count()
-      var round = 0
-      var done = false
-      while (!done && round < maxRounds) {
-        val deg = und
+    val r = Loop.cached { c =>
+      // distinct over the canonical (a<b) pairs, then explode to both
+      // directions map-side — the previous shape deduped the DOUBLED
+      // union, paying the distinct shuffle on 2|E| rows instead of |E|
+      val und = c(symmetrize(undirectedDistinct(e0))
+        .select(col("v").as("src"), col("n").as("dst")))
+      // a peel round that removes nothing is the fixed point
+      Loop.run(und.select(col("src").as("id")).distinct(), maxRounds,
+          stop = Loop.whenUnchanged(_.count())) { (alive, _) =>
+        und
           .join(alive.select(col("id").as("src")), "src")
           .join(alive.select(col("id").as("dst")), "dst")
           .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        val next = rc.roll(deg.filter(col("deg") >= k).select(col("src").as("id")))
-        // track the survivor count in a local — alive.count() would be
-        // a second job per round over the already-counted frame
-        val nextCount = next.count()
-        done = nextCount == aliveCount
-        alive = next
-        aliveCount = nextCount
-        round += 1
+          .filter(col("deg") >= k).select(col("src").as("id"))
       }
-      (alive, done)
-    } finally und.unpersist(blocking = false)
+    }
+    (r.state, r.converged)
   }
 
   /** Multi-source BFS hop distances: ONE distributed loop carries all
@@ -1152,7 +1038,6 @@ object Algorithms {
   def multiSourceHops(s: SparkSession, g: PropertyGraph, seeds: Seq[Long],
                       labels: Seq[String] = Nil, reverse: Boolean = false,
                       maxDepth: Int = 30): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     import s.implicits._
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
@@ -1169,8 +1054,8 @@ object Algorithms {
     // per-round SCAN of the cached relation itself, which partition
     // count cannot remove — but the exchange it deletes is real
     // shuffle I/O on any cluster where the cache is not node-local.
-    val edges = dirEdges.repartition(col("src")).persist(MEMORY_AND_DISK)
-    try {
+    Loop.cached { c =>
+      val edges = c(dirEdges.repartition(col("src")))
       var frontier = seeds.toDF("seed")
         .select(col("seed"), col("seed").as("id")).localCheckpoint()
       var visited = frontier
@@ -1191,7 +1076,7 @@ object Algorithms {
       val zero = seeds.toDF("seed")
         .select(col("seed"), col("seed").as("id"), lit(0L).as("dist"))
       reached.foldLeft(zero)(_ unionByName _)
-    } finally edges.unpersist(blocking = false)
+    }
   }
 
   /** Closeness centrality of the given seed vertices (classic
@@ -1268,50 +1153,34 @@ object Algorithms {
     */
   def katzExact(s: SparkSession, g: PropertyGraph,
                 labels: Seq[String] = Nil, iters: Int = 6): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val edges = e0.select(col("src"), col("dst"))
-      .repartition(graft.util.Partitioning.loopParts(s,
-        e0.select(col("src")).count()), col("src")) // size-derived (r16)
-      .persist(MEMORY_AND_DISK)
-    try {
-      val verts = edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct()
-        .persist(MEMORY_AND_DISK)
-      try {
-        if (edges.isEmpty) {
-          return verts.select(col("id"), lit(1000000L).as("score")).limit(0)
-        }
+    Loop.cached { c =>
+      val (src, n) = c.counted(e0.select(col("src"), col("dst")))
+      val edges = c(src.repartition(Loop.parts(s, n), col("src"))) // see pageRankExact
+      val verts = c(edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct())
+      if (n == 0L) verts.select(col("id"), lit(1000000L).as("score")).limit(0)
+      else {
         val maxInDeg = edges.groupBy(col("dst"))
           .agg(count(lit(1)).as("d")).agg(max(col("d"))).head().getLong(0)
         val denom = 2L * maxInDeg
         // constant no-in-edge frame — see pageRankExact (r15, §2.4)
-        val noIn = verts
+        val noIn = c(verts
           .join(edges.select(col("dst").as("id")), Seq("id"), "left_anti")
-          .select(col("id"), lit(1000000L).as("score"))
-          .persist(MEMORY_AND_DISK)
-        try {
-          val rc = new graft.util.Checkpoints.Rolling
-          var x = rc.roll(verts.select(col("id"), lit(1000000L).as("score")))
-          for (k <- 1 to iters) {
-            val m = edges
-              .join(x.select(col("id").as("src"), col("score"))
-                .hint("shuffle_hash"), "src") // stream the cache (r16)
-              .groupBy(col("dst")).agg(sum(col("score")).as("m"))
-            val next = m
-              .select(col("dst").as("id"),
-                expr(s"1000000L + m div ${denom}L").as("score"))
-              .unionByName(noIn)
-            // cadence-2 checkpointing — see pageRankExact
-            // (single-consumer state; final round always materializes
-            // before the unpersist)
-            x = if (k % 5 == 0 || k == iters) rc.roll(next) else next
-          }
-          x
-        } finally noIn.unpersist(blocking = false)
-      } finally verts.unpersist(blocking = false)
-    } finally edges.unpersist(blocking = false)
+          .select(col("id"), lit(1000000L).as("score")))
+        Loop.run(verts.select(col("id"), lit(1000000L).as("score")), iters,
+            every = 5) { (x, _) =>
+          edges
+            .join(x.select(col("id").as("src"), col("score"))
+              .hint("shuffle_hash"), "src") // stream the cache (r16)
+            .groupBy(col("dst")).agg(sum(col("score")).as("m"))
+            .select(col("dst").as("id"),
+              expr(s"1000000L + m div ${denom}L").as("score"))
+            .unionByName(noIn)
+        }.state
+      }
+    }
   }
 
   /** Maximal independent set via Luby's algorithm with DETERMINISTIC
@@ -1339,21 +1208,15 @@ object Algorithms {
     */
   def maximalIndependentSet(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, maxRounds: Int = 6): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val sym = symmetrize(undirectedDistinct(e0))
-      .repartition(col("n"))
-      .persist(MEMORY_AND_DISK)
-    try {
-      val rcU = new graft.util.Checkpoints.Rolling
-      var und = rcU.roll(sym.select(col("v").as("id")).distinct()
-        .withColumn("pr", md5(col("id").cast("string"))))
-      var mis = Seq.empty[DataFrame]
-      var undCount = und.count()
-      var round = 0
-      while (undCount > 0 && round < maxRounds) {
-        round += 1
+    Loop.cached { c =>
+      val sym = c(symmetrize(undirectedDistinct(e0)).repartition(col("n")))
+      val mis = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      // state: the undecided (id, pr) set — done when it is empty
+      val r = Loop.run(sym.select(col("v").as("id")).distinct()
+          .withColumn("pr", md5(col("id").cast("string"))), maxRounds,
+          stop = Loop.whenEmpty()) { (und, _) =>
         val nbrMin = sym
           .join(und.select(col("id").as("n"), col("pr").as("npr")), "n")
           .groupBy(col("v")).agg(min(col("npr")).as("min_npr"))
@@ -1363,19 +1226,18 @@ object Algorithms {
           .filter(col("min_npr").isNull || col("pr") < col("min_npr"))
           .select(col("id"))
           .localCheckpoint()
+        mis += cand
         val removed = cand
           .union(sym.join(cand.select(col("id").as("v")), "v")
             .select(col("n").as("id")))
           .distinct()
-        und = rcU.roll(und.join(removed, Seq("id"), "left_anti"))
-        mis = mis :+ cand
-        undCount = und.count()
+        und.join(removed, Seq("id"), "left_anti")
       }
-      require(undCount == 0,
-        s"MIS did not converge in $maxRounds rounds: $undCount undecided")
+      require(r.converged, s"MIS did not converge in $maxRounds rounds: " +
+        s"${r.state.count()} undecided")
       // empty edge set ⇒ empty incident-vertex set ⇒ empty MIS frame
-      mis.reduceOption(_ union _).getOrElse(und.select(col("id")))
-    } finally sym.unpersist(blocking = false)
+      mis.reduceOption(_ union _).getOrElse(r.state.select(col("id")))
+    }
   }
 
   /** Maximal matching via parallel greedy (Luby on the line graph):
@@ -1395,18 +1257,14 @@ object Algorithms {
     */
   def maximalMatching(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, maxRounds: Int = 8): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val rcU = new graft.util.Checkpoints.Rolling
-    var und = rcU.roll(undirectedDistinct(e0)
-      .withColumn("pr",
-        md5(concat(col("a").cast("string"), lit("_"), col("b").cast("string")))))
-    var matched = Seq.empty[DataFrame]
-    var undCount = und.count()
-    var round = 0
-    while (undCount > 0 && round < maxRounds) {
-      round += 1
+    val matched = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // state: the undecided (a, b, pr) edge set — done when it is empty
+    val r = Loop.run(undirectedDistinct(e0)
+        .withColumn("pr",
+          md5(concat(col("a").cast("string"), lit("_"), col("b").cast("string")))),
+        maxRounds, stop = Loop.whenEmpty()) { (und, _) =>
       val vMin = und.select(explode(array(col("a"), col("b"))).as("v"), col("pr"))
         .groupBy(col("v")).agg(min(col("pr")).as("mn"))
       val sel = und
@@ -1415,18 +1273,17 @@ object Algorithms {
         .filter(col("pr") === col("mna") && col("pr") === col("mnb"))
         .select(col("a"), col("b"))
         .localCheckpoint()
-      matched = matched :+ sel
+      matched += sel
       val mv = sel.select(explode(array(col("a"), col("b"))).as("v")).distinct()
-      und = rcU.roll(und
+      und
         .join(mv.select(col("v").as("a")), Seq("a"), "left_anti")
         .join(mv.select(col("v").as("b")), Seq("b"), "left_anti")
-        .select(col("a"), col("b"), col("pr")))
-      undCount = und.count()
+        .select(col("a"), col("b"), col("pr"))
     }
-    require(undCount == 0,
-      s"matching did not converge in $maxRounds rounds: $undCount undecided")
+    require(r.converged, s"matching did not converge in $maxRounds rounds: " +
+      s"${r.state.count()} undecided")
     matched.reduceOption(_ unionByName _)
-      .getOrElse(und.select(col("a"), col("b")))
+      .getOrElse(r.state.select(col("a"), col("b")))
   }
 
   /** SimRank (Jeh–Widom), exact integer micro-units: "two objects are
@@ -1458,148 +1315,126 @@ object Algorithms {
   def simRankExact(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, iters: Int = 3,
       finalize: DataFrame => DataFrame = identity): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val e = e0.select(col("src"), col("dst")).distinct()
-      .persist(MEMORY_AND_DISK)
-    try {
+    Loop.cached { c =>
+      val (e, nE) = c.counted(e0.select(col("src"), col("dst")).distinct())
       val verts = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
-      val indeg = e.groupBy(col("dst")).agg(count(lit(1)).as("d"))
-        .persist(MEMORY_AND_DISK)
-      try {
-        val maxIn = indeg.agg(max(col("d"))).head() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0)
-        }
-        // division-first so the GUARD itself cannot wrap: maxIn*maxIn
-        // overflows Long for maxIn > ~3.0e9, which would let the
-        // require pass spuriously exactly when it must fire (ADVICE r9)
-        require(maxIn == 0L || maxIn <= Long.MaxValue / (5L * 1000000L) / maxIn,
-          s"simrank Σ would overflow 64 bits at max in-degree $maxIn")
-        val diag = verts
-          .select(col("id").as("i"), col("id").as("j"), lit(1000000L).as("s"))
-        // Two Σ-volume levers, both bit-identical by construction
-        // (SimrankProbe decomposition at sf0.1: the final round's Σ is
-        // 27.8M rows and its naive post-processing dominated the
-        // query):
-        // (a) sink-pair deferral — a SINK vertex (no out-edges) never
-        //     contributes to later rounds, so intermediate rounds
-        //     expand only against edges into NON-SINK targets; on the
-        //     customer→order→part DAG the dominant part-pair volume
-        //     runs ONCE, not every round;
-        // (b) the in-degrees ride the edge expansion (da/db as extra
-        //     grouping columns — functionally dependent on (a,b)), so
-        //     the Σ aggregate's output needs NO 27M-row joins after
-        //     the fact; and the FINAL round is never checkpointed —
-        //     `finalize` (the caller's top-k/filter reduction) runs
-        //     directly on the aggregate INSIDE the operator's cache
-        //     scope, so the full pair frame never materializes; the
-        //     canonical a<b aggregation below halves the Σ shuffle on
-        //     top. Together: 24.1 → 11.6 s steal-clean median at
-        //     sf0.1 for the a_simrank gate — the remainder IS the Σ
-        //     volume (14M surviving expansion rows into the final
-        //     aggregate, SimrankProbe).
-        val eDeg = e.join(indeg, "dst")
-          .select(col("src"), col("dst"), col("d"))
-          .persist(MEMORY_AND_DISK)
-        val eNonSinkDeg = eDeg.join(
-            e.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi")
-          .persist(MEMORY_AND_DISK)
-        // s is symmetric: aggregate CANONICAL (a < b) pairs only — the
-        // a > b expansion rows die in the map-side filter, so the Σ
-        // shuffle carries half the volume — then symmetrize the
-        // surviving pairs back map-side (explode) for the next round's
-        // two-sided lookup
-        // BROADCAST the edge frame into both expansion joins when it
-        // is small enough (r16): the Σ expansion's STREAM side (the
-        // pair state, 14M rows into the final aggregate at sf0.1)
-        // then never shuffles for the joins — only the final groupBy
-        // exchange remains. Simrank10Probe, same JVM, output-equal:
-        // final round 9.32 s → 4.62 s. Size-conditional because a
-        // 100 TB edge relation must NOT be broadcast: ≤4M rows
-        // (~100 MB hashed) broadcasts, above that the r15 shuffle
-        // shape is kept unchanged. e is already persisted, so the
-        // count is a cache scan.
-        val eBcast = e.count() <= 4000000L
-        def expandAgg(pairs: DataFrame, eRound: DataFrame): DataFrame = {
-          val l = eRound.select(col("src").as("i"), col("dst").as("a"),
-            col("d").as("da"))
-          val r = eRound.select(col("src").as("j"), col("dst").as("b"),
-            col("d").as("db"))
-          pairs
-            .join(if (eBcast) broadcast(l) else l, "i")
-            .join(if (eBcast) broadcast(r) else r, "j")
-            .filter(col("a") < col("b"))
-            .groupBy(col("a"), col("b"), col("da"), col("db"))
-            .agg(sum(col("s")).as("m"))
-        }
-        // DIAG SPLIT (round-10 Σ lever): state = diag ∪ off, and the
-        // expansion of a state ROW touches only that row, so the
-        // per-round aggregate decomposes into expandAgg(diag) ⊎
-        // expandAgg(off). The diag half — every first-meeting
-        // contribution Σ_{v: a,b ∈ out(v)} s(v,v) — is CONSTANT across
-        // rounds (s(v,v) ≡ 10⁶ is the SimRank axiom), so it is
-        // computed ONCE per edge-set variant, persisted in its
-        // aggregated (small) form, and re-joined each round instead of
-        // re-expanded: rounds whose off-state cannot expand (e.g. the
-        // gate DAG's round 2, where all off pairs sit on sink-feeding
-        // vertices) collapse to a re-union of the cached frame. The
-        // re-aggregation of the two aggregated halves is exact integer
-        // Σ re-association — bit-identical to the fused aggregate.
-        // MEASURED AND REJECTED (round 12): re-using mDiagNS for the
-        // FINAL round too, by quadrant (NS×NS cached ⊎ S×S expand ⊎
-        // one canonicalized NS×S cross join), is bit-identical but
-        // ~3 s SLOWER at sf0.1 (clean 19.3-20.2 vs 15.1-16.6 on the
-        // same window): the sink-target expansion is the dominant
-        // diag volume on a DAG corpus, so the split saves only the
-        // cheap co-riding fanout while adding two joins, an extra
-        // aggregate, and the anti-join that builds the sink edge set.
-        val mDiagNS = expandAgg(diag, eNonSinkDeg).persist(MEMORY_AND_DISK)
-        def roundScores(mParts: DataFrame): DataFrame = mParts
+      val indeg = c(e.groupBy(col("dst")).agg(count(lit(1)).as("d")))
+      val maxIn = indeg.agg(max(col("d"))).head() match {
+        case r if r.isNullAt(0) => 0L
+        case r => r.getLong(0)
+      }
+      // division-first so the GUARD itself cannot wrap: maxIn*maxIn
+      // overflows Long for maxIn > ~3.0e9, which would let the
+      // require pass spuriously exactly when it must fire (ADVICE r9)
+      require(maxIn == 0L || maxIn <= Long.MaxValue / (5L * 1000000L) / maxIn,
+        s"simrank Σ would overflow 64 bits at max in-degree $maxIn")
+      val diag = verts
+        .select(col("id").as("i"), col("id").as("j"), lit(1000000L).as("s"))
+      // Two Σ-volume levers, both bit-identical by construction
+      // (SimrankProbe decomposition at sf0.1: the final round's Σ is
+      // 27.8M rows and its naive post-processing dominated the
+      // query):
+      // (a) sink-pair deferral — a SINK vertex (no out-edges) never
+      //     contributes to later rounds, so intermediate rounds
+      //     expand only against edges into NON-SINK targets; on the
+      //     customer→order→part DAG the dominant part-pair volume
+      //     runs ONCE, not every round;
+      // (b) the in-degrees ride the edge expansion (da/db as extra
+      //     grouping columns — functionally dependent on (a,b)), so
+      //     the Σ aggregate's output needs NO 27M-row joins after
+      //     the fact; and the FINAL round is never checkpointed —
+      //     `finalize` (the caller's top-k/filter reduction) runs
+      //     directly on the aggregate INSIDE the operator's cache
+      //     scope, so the full pair frame never materializes; the
+      //     canonical a<b aggregation below halves the Σ shuffle on
+      //     top. Together: 24.1 → 11.6 s steal-clean median at
+      //     sf0.1 for the a_simrank gate — the remainder IS the Σ
+      //     volume (14M surviving expansion rows into the final
+      //     aggregate, SimrankProbe).
+      val eDeg = c(e.join(indeg, "dst")
+        .select(col("src"), col("dst"), col("d")))
+      val eNonSinkDeg = c(eDeg.join(
+          e.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi"))
+      // s is symmetric: aggregate CANONICAL (a < b) pairs only — the
+      // a > b expansion rows die in the map-side filter, so the Σ
+      // shuffle carries half the volume — then symmetrize the
+      // surviving pairs back map-side (explode) for the next round's
+      // two-sided lookup
+      // BROADCAST the edge frame into both expansion joins when it
+      // is small enough (r16): the Σ expansion's STREAM side (the
+      // pair state, 14M rows into the final aggregate at sf0.1)
+      // then never shuffles for the joins — only the final groupBy
+      // exchange remains. Simrank10Probe, same JVM, output-equal:
+      // final round 9.32 s → 4.62 s. Size-conditional because a
+      // 100 TB edge relation must NOT be broadcast: ≤4M rows
+      // (~100 MB hashed) broadcasts, above that the r15 shuffle
+      // shape is kept unchanged.
+      val eBcast = nE <= 4000000L
+      def expandAgg(pairs: DataFrame, eRound: DataFrame): DataFrame = {
+        val l = eRound.select(col("src").as("i"), col("dst").as("a"),
+          col("d").as("da"))
+        val r = eRound.select(col("src").as("j"), col("dst").as("b"),
+          col("d").as("db"))
+        pairs
+          .join(if (eBcast) broadcast(l) else l, "i")
+          .join(if (eBcast) broadcast(r) else r, "j")
+          .filter(col("a") < col("b"))
           .groupBy(col("a"), col("b"), col("da"), col("db"))
-          .agg(sum(col("m")).as("m"))
-          .select(col("a").as("i"), col("b").as("j"),
-            expr("(4L * m) div (5L * da * db)").as("s"))
-          .filter(col("s") > 0)
-        val rcS = new graft.util.Checkpoints.Rolling
-        var symOff = diag.limit(0) // symmetrized off-diagonal state
-        var lastOff = diag.limit(0)
-        for (k <- 1 to iters) {
-          val offC =
-            if (k < iters)
-              roundScores(mDiagNS.unionByName(expandAgg(symOff, eNonSinkDeg)))
-            else // final round: full edge set, diag half computed once here
-              roundScores(expandAgg(diag, eDeg)
-                .unionByName(expandAgg(symOff, eDeg)))
-          lastOff = offC
-          if (k < iters) {
-            // CHECKPOINT CADENCE 2: each round's aggregate feeds
-            // exactly one consumer (the next round), so skipping the
-            // barrier on odd rounds loses nothing to recomputation —
-            // the chained plan still evaluates once — and saves a full
-            // materialization stop per skipped round (~1 s at sf0.1).
-            // Lineage depth stays ≤ 2 rounds between cuts, safe for
-            // arbitrarily many iterations.
-            val chk = if (k % 2 == 0) rcS.roll(offC) else offC
-            symOff = chk.select(explode(array(
-                struct(col("i"), col("j"), col("s")),
-                struct(col("j").as("i"), col("i").as("j"), col("s")))).as("p"))
-              .select(col("p.i").as("i"), col("p.j").as("j"), col("p.s").as("s"))
-          }
-        }
-        // eager: materialize the (reduced) result while e/eDeg/indeg
-        // are still cached — everything unpersists right after
-        val result = finalize(lastOff
-            .select(col("i").as("a"), col("j").as("b"), col("s").as("score")))
-          .localCheckpoint()
-        eDeg.unpersist(blocking = false)
-        eNonSinkDeg.unpersist(blocking = false)
-        mDiagNS.unpersist(blocking = false)
-        result
-      } finally indeg.unpersist(blocking = false)
-    } finally e.unpersist(blocking = false)
+          .agg(sum(col("s")).as("m"))
+      }
+      // DIAG SPLIT (round-10 Σ lever): state = diag ∪ off, and the
+      // expansion of a state ROW touches only that row, so the
+      // per-round aggregate decomposes into expandAgg(diag) ⊎
+      // expandAgg(off). The diag half — every first-meeting
+      // contribution Σ_{v: a,b ∈ out(v)} s(v,v) — is CONSTANT across
+      // rounds (s(v,v) ≡ 10⁶ is the SimRank axiom), so it is
+      // computed ONCE per edge-set variant, persisted in its
+      // aggregated (small) form, and re-joined each round instead of
+      // re-expanded: rounds whose off-state cannot expand (e.g. the
+      // gate DAG's round 2, where all off pairs sit on sink-feeding
+      // vertices) collapse to a re-union of the cached frame. The
+      // re-aggregation of the two aggregated halves is exact integer
+      // Σ re-association — bit-identical to the fused aggregate.
+      // MEASURED AND REJECTED (round 12): re-using mDiagNS for the
+      // FINAL round too, by quadrant (NS×NS cached ⊎ S×S expand ⊎
+      // one canonicalized NS×S cross join), is bit-identical but
+      // ~3 s SLOWER at sf0.1 (clean 19.3-20.2 vs 15.1-16.6 on the
+      // same window): the sink-target expansion is the dominant
+      // diag volume on a DAG corpus, so the split saves only the
+      // cheap co-riding fanout while adding two joins, an extra
+      // aggregate, and the anti-join that builds the sink edge set.
+      val mDiagNS = c(expandAgg(diag, eNonSinkDeg))
+      def roundScores(mParts: DataFrame): DataFrame = mParts
+        .groupBy(col("a"), col("b"), col("da"), col("db"))
+        .agg(sum(col("m")).as("m"))
+        .select(col("a").as("i"), col("b").as("j"),
+          expr("(4L * m) div (5L * da * db)").as("s"))
+        .filter(col("s") > 0)
+      // off-diagonal state → both orientations for the two-sided lookup
+      def symmetric(off: DataFrame): DataFrame =
+        off.select(explode(array(
+            struct(col("i"), col("j"), col("s")),
+            struct(col("j").as("i"), col("i").as("j"), col("s")))).as("p"))
+          .select(col("p.i").as("i"), col("p.j").as("j"), col("p.s").as("s"))
+      // rounds 1..iters−1 at CHECKPOINT CADENCE 2: each round's
+      // aggregate feeds exactly one consumer (the next round), so a
+      // skipped barrier recomputes nothing and saves a full
+      // materialization stop (~1 s at sf0.1)
+      val off = Loop.run(diag.limit(0), iters - 1, every = 2) { (st, _) =>
+        roundScores(mDiagNS.unionByName(expandAgg(symmetric(st), eNonSinkDeg)))
+      }.state
+      // final round: full edge set, diag half computed once here, never
+      // checkpointed — `finalize` reduces it inside the cache scope
+      val last = if (iters < 1) off
+        else roundScores(expandAgg(diag, eDeg)
+          .unionByName(expandAgg(symmetric(off), eDeg)))
+      finalize(last
+          .select(col("i").as("a"), col("j").as("b"), col("s").as("score")))
+        .localCheckpoint()
+    }
   }
 
   /** Degree assortativity (Newman): the Pearson correlation of
@@ -1774,134 +1609,106 @@ object Algorithms {
       maxRounds: Int = 10, maxIter: Int = 30): DataFrame = {
     import s.implicits._
     val assigned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var edges = g.edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    var verts = g.vertices.select(col("id")).distinct().localCheckpoint()
-    var remaining = verts.count()
-    var round = 0
-    while (remaining > 0 && round < maxRounds) {
-      round += 1
-      // ---- trim phase: peel vertices with no in- or no out-edges,
-      // degrees maintained incrementally against the STATIC edge list
-      val indeg0 = edges.groupBy(col("dst").as("id"))
-        .agg(count(lit(1)).as("indeg"))
-      val outdeg0 = edges.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("outdeg"))
-      var deg = verts
-        .join(indeg0, Seq("id"), "left")
-        .join(outdeg0, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("indeg"), lit(0L)).as("indeg"),
-          coalesce(col("outdeg"), lit(0L)).as("outdeg"))
-        .localCheckpoint()
-      var trimming = true
-      var trims = 0
-      while (trimming && trims < maxIter) {
-        trims += 1
-        val dead = deg.filter(col("indeg") === 0 || col("outdeg") === 0)
-          .select(col("id")).localCheckpoint()
-        if (dead.isEmpty) trimming = false
-        else {
-          assigned += dead.select(col("id"), col("id").as("scc"))
-          // degree deltas: edges OUT OF the dead lower their dst's
-          // indeg, edges INTO the dead lower their src's outdeg;
-          // deltas landing on dead vertices vanish in the anti-join
-          val dIn = edges
-            .join(dead.select(col("id").as("src")), Seq("src"), "left_semi")
-            .groupBy(col("dst").as("id")).agg(count(lit(1)).as("d_in"))
-          val dOut = edges
-            .join(dead.select(col("id").as("dst")), Seq("dst"), "left_semi")
-            .groupBy(col("src").as("id")).agg(count(lit(1)).as("d_out"))
-          deg = deg.join(dead, Seq("id"), "left_anti")
-            .join(dIn, Seq("id"), "left")
-            .join(dOut, Seq("id"), "left")
+    // the live edge list restricted to live endpoints
+    def within(edges: DataFrame, verts: DataFrame): DataFrame = edges
+      .join(verts.select(col("id").as("src")), Seq("src"), "left_semi")
+      .join(verts.select(col("id").as("dst")), Seq("dst"), "left_semi")
+      .select(col("src"), col("dst"))
+    // outer state: (live vertices, live edges), done when no vertex is left
+    val outer = Loop.run((g.vertices.select(col("id")).distinct(),
+        g.edges.select(col("src"), col("dst"))
+          .filter(col("src") =!= col("dst")).distinct()), maxRounds,
+        stop = (st: (DataFrame, DataFrame), _: Int) => st._1.isEmpty) {
+      case ((verts0, edges0), _) =>
+        // ---- trim phase: peel vertices with no in- or no out-edges,
+        // degrees maintained incrementally against the STATIC edge list
+        val indeg0 = edges0.groupBy(col("dst").as("id"))
+          .agg(count(lit(1)).as("indeg"))
+        val outdeg0 = edges0.groupBy(col("src").as("id"))
+          .agg(count(lit(1)).as("outdeg"))
+        // a round with nothing to trim returns its degrees unchanged,
+        // which ends the phase (the cap alone is safe to hit early:
+        // trimming is an optimization, not a correctness step)
+        val deg = Loop.run(verts0
+            .join(indeg0, Seq("id"), "left")
+            .join(outdeg0, Seq("id"), "left")
             .select(col("id"),
-              (col("indeg") - coalesce(col("d_in"), lit(0L))).as("indeg"),
-              (col("outdeg") - coalesce(col("d_out"), lit(0L))).as("outdeg"))
-            .localCheckpoint()
+              coalesce(col("indeg"), lit(0L)).as("indeg"),
+              coalesce(col("outdeg"), lit(0L)).as("outdeg")), maxIter) { (deg, _) =>
+          val dead = deg.filter(col("indeg") === 0 || col("outdeg") === 0)
+            .select(col("id")).localCheckpoint()
+          if (dead.isEmpty) deg
+          else {
+            assigned += dead.select(col("id"), col("id").as("scc"))
+            // degree deltas: edges OUT OF the dead lower their dst's
+            // indeg, edges INTO the dead lower their src's outdeg;
+            // deltas landing on dead vertices vanish in the anti-join
+            val dIn = edges0
+              .join(dead.select(col("id").as("src")), Seq("src"), "left_semi")
+              .groupBy(col("dst").as("id")).agg(count(lit(1)).as("d_in"))
+            val dOut = edges0
+              .join(dead.select(col("id").as("dst")), Seq("dst"), "left_semi")
+              .groupBy(col("src").as("id")).agg(count(lit(1)).as("d_out"))
+            deg.join(dead, Seq("id"), "left_anti")
+              .join(dIn, Seq("id"), "left")
+              .join(dOut, Seq("id"), "left")
+              .select(col("id"),
+                (col("indeg") - coalesce(col("d_in"), lit(0L))).as("indeg"),
+                (col("outdeg") - coalesce(col("d_out"), lit(0L))).as("outdeg"))
+          }
+        }.state
+        if (deg.isEmpty) (verts0.limit(0), edges0) // trimming finished the job
+        else {
+          val verts = deg.select(col("id")).localCheckpoint()
+          Loop.release(deg)
+          // the one edge refilter per OUTER round: restrict to the
+          // surviving cyclic core before the coloring joins
+          val edges = within(edges0, verts).localCheckpoint()
+          // ---- forward coloring to fixpoint: c(v) = min id reaching v.
+          // Colors are monotone non-increasing, so an exact decimal sum
+          // is a sufficient convergence witness — one scalar aggregate
+          // per step instead of a full compare-join.
+          val fwd = Loop.run(verts.select(col("id"), col("id").as("c")), maxIter,
+              stop = Loop.whenUnchanged(Loop.decimalSum("c"))) { (c, _) =>
+            val in = edges.join(c.select(col("id").as("src"), col("c")), "src")
+              .groupBy(col("dst")).agg(min(col("c")).as("cin"))
+              .select(col("dst").as("id"), col("cin"))
+            c.join(in, Seq("id"), "left")
+              .select(col("id"), least(col("c"), coalesce(col("cin"),
+                col("c"))).as("c"))
+          }
+          // a non-fixpoint coloring (propagation distance > maxIter)
+          // would silently mis-assign components — fail instead
+          require(fwd.converged,
+            s"SCC forward coloring did not converge in $maxIter steps")
+          val c = fwd.state
+          // ---- backward reachability of the color root, within color
+          val e2 = edges
+            .join(c.select(col("id").as("src"), col("c").as("c_src")), "src")
+            .join(c.select(col("id").as("dst"), col("c").as("c_dst")), "dst")
+            .filter(col("c_src") === col("c_dst"))
+            .select(col("src"), col("dst")).localCheckpoint()
+          val bwd = Loop.run(c.filter(col("id") === col("c")).select(col("id")),
+              maxIter, stop = Loop.whenUnchanged(_.count())) { (m, _) =>
+            m.union(
+                e2.join(m.select(col("id").as("dst")), Seq("dst"), "left_semi")
+                  .select(col("src").as("id")))
+              .distinct()
+          }
+          require(bwd.converged,
+            s"SCC backward reachability did not converge in $maxIter steps")
+          val comp = c.join(bwd.state, Seq("id"), "left_semi")
+            .select(col("id"), col("c").as("scc")).localCheckpoint()
+          assigned += comp
+          // comp is materialized: this outer round's scratch frames
+          // (within-color edges + the two fixpoint states) are dead
+          Seq(e2, c, bwd.state).foreach(Loop.release)
+          val rest = verts.join(comp.select(col("id")), Seq("id"), "left_anti")
+          (rest, within(edges, rest))
         }
-      }
-      verts = deg.select(col("id")).localCheckpoint()
-      remaining = verts.count()
-      if (remaining > 0) {
-        // the one edge refilter per OUTER round: restrict to the
-        // surviving cyclic core before the coloring joins
-        edges = edges
-          .join(verts.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(verts.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")).localCheckpoint()
-        // ---- forward coloring to fixpoint: c(v) = min id reaching v.
-        // Colors are monotone non-increasing, so an exact decimal sum
-        // is a sufficient convergence witness — one scalar aggregate
-        // per step instead of a full compare-join.
-        def cSum(df: DataFrame): java.math.BigDecimal =
-          df.agg(sum(col("c").cast("decimal(38,0)"))).head().getDecimal(0)
-        val rcC = new graft.util.Checkpoints.Rolling
-        var c = rcC.roll(verts.select(col("id"), col("id").as("c")))
-        var prevSum = cSum(c)
-        var stable = false
-        var it = 0
-        while (!stable && it < maxIter) {
-          it += 1
-          val in = edges.join(c.select(col("id").as("src"), col("c")), "src")
-            .groupBy(col("dst")).agg(min(col("c")).as("cin"))
-            .select(col("dst").as("id"), col("cin"))
-          val next = rcC.roll(c.join(in, Seq("id"), "left")
-            .select(col("id"), least(col("c"), coalesce(col("cin"),
-              col("c"))).as("c")))
-          val s2 = cSum(next)
-          stable = s2.compareTo(prevSum) == 0
-          prevSum = s2
-          c = next
-        }
-        // a non-fixpoint coloring (propagation distance > maxIter)
-        // would silently mis-assign components — fail instead
-        require(stable,
-          s"SCC forward coloring did not converge in $maxIter steps")
-        // ---- backward reachability of the color root, within color
-        val e2 = edges
-          .join(c.select(col("id").as("src"), col("c").as("c_src")), "src")
-          .join(c.select(col("id").as("dst"), col("c").as("c_dst")), "dst")
-          .filter(col("c_src") === col("c_dst"))
-          .select(col("src"), col("dst")).localCheckpoint()
-        val rcM = new graft.util.Checkpoints.Rolling
-        var m = rcM.roll(c.filter(col("id") === col("c")).select(col("id")))
-        var mCount = m.count()
-        var grew = true
-        var bit = 0
-        while (grew && bit < maxIter) {
-          bit += 1
-          val next = rcM.roll(m.union(
-              e2.join(m.select(col("id").as("dst")), Seq("dst"), "left_semi")
-                .select(col("src").as("id")))
-            .distinct())
-          val nextCount = next.count()
-          grew = nextCount > mCount
-          m = next
-          mCount = nextCount
-        }
-        require(!grew,
-          s"SCC backward reachability did not converge in $maxIter steps")
-        val comp = c.join(m, Seq("id"), "left_semi")
-          .select(col("id"), col("c").as("scc")).localCheckpoint()
-        assigned += comp
-        // comp is materialized: this outer round's scratch frames
-        // (within-color edges + the two fixpoint states) are dead
-        graft.util.Checkpoints.release(e2)
-        rcC.releaseLast()
-        rcM.releaseLast()
-        verts = verts.join(comp.select(col("id")), Seq("id"), "left_anti")
-          .localCheckpoint()
-        edges = edges
-          .join(verts.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(verts.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")).localCheckpoint()
-        remaining = verts.count()
-      }
     }
-    require(remaining == 0,
-      s"SCC did not converge in $maxRounds rounds ($remaining left)")
+    require(outer.converged,
+      s"SCC did not converge in $maxRounds rounds (${outer.state._1.count()} left)")
     // empty input graph: no vertices were ever assigned
     if (assigned.isEmpty) Seq.empty[(Long, Long)].toDF("id", "scc")
     else assigned.reduce(_.unionByName(_))
@@ -1968,13 +1775,10 @@ object Algorithms {
   def betweenness(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, seeds: Option[DataFrame] = None,
       maxDepth: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val adj = symmetrize(undirectedDistinct(e))
-      .repartition(col("v"))
-      .persist(MEMORY_AND_DISK)
-    try {
+    Loop.cached { c =>
+      val adj = c(symmetrize(undirectedDistinct(e)).repartition(col("v")))
       val verts = adj.select(col("v").as("id")).distinct()
       val seedIds = seeds.getOrElse(verts).select(col("id"))
       // ---- forward BFS: layers(d) = (seed, id, sigma) at distance d
@@ -2040,7 +1844,7 @@ object Algorithms {
       verts.join(bc, Seq("id"), "left")
         .select(col("id"), coalesce(col("bc"), lit(0.0)).as("bc"))
         .localCheckpoint(eager = true)
-    } finally adj.unpersist(blocking = false)
+    }
   }
 
   def jaccardSimilarity(s: SparkSession, g: PropertyGraph, seed: Long,
@@ -2085,12 +1889,10 @@ object Algorithms {
   def pairShortestPath(s: SparkSession, g: PropertyGraph, source: Long,
                        target: Long, labels: Seq[String] = Nil,
                        maxDepth: Int = 4): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = if (labels.isEmpty) g.edges
     else g.edges.filter(col("label").isin(labels: _*))
-    val adj = symmetrize(undirectedDistinct(e))
-      .persist(MEMORY_AND_DISK)
-    try {
+    Loop.cached { c =>
+      val adj = c(symmetrize(undirectedDistinct(e)))
       var visited = s.range(1).select(lit(source).as("id"),
           lit(0L).as("dist"), lit(null).cast("long").as("parent"))
         .localCheckpoint()
@@ -2131,7 +1933,7 @@ object Algorithms {
         .join(walk.withColumn("k", lit(1L)), Seq("k"), "left")
         .select(lit(source).as("src_id"), lit(target).as("dst_id"),
           coalesce(col("dist"), lit(-1L)).as("dist"), col("path"))
-    } finally adj.unpersist(blocking = false)
+    }
   }
 
   /** k-truss decomposition via iterative support peeling — the
@@ -2165,30 +1967,20 @@ object Algorithms {
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("sup"))
     }
-    // EAGER localCheckpoint at entry, not lazy persist: support()
-    // scans the edge frame three times per round, and on a lazy cache
-    // round 1's job re-derives the (possibly expensive — the
-    // co-purchase projection) input under each scan before the cache
-    // fills. Measured on the gate path: 80 s lazy vs 18 s
-    // materialized (TrussProbe). Rounds then roll the checkpoint
-    // slot — round k−1's blocks release as soon as round k exists.
-    val rc = new graft.util.Checkpoints.Rolling
-    var e = rc.seed(edges.select(col("item_a").as("a"), col("item_b").as("b"))
-      .localCheckpoint(true))
-    var n = e.count()
+    // EAGER checkpoint at entry (the loop's rolled seed), not lazy
+    // persist: support() scans the edge frame three times per round,
+    // and on a lazy cache round 1's job re-derives the (possibly
+    // expensive — the co-purchase projection) input under each scan
+    // before the cache fills. Measured on the gate path: 80 s lazy vs
+    // 18 s materialized (TrussProbe). A no-op peel is the fixpoint.
+    val r = Loop.run(edges.select(col("item_a").as("a"), col("item_b").as("b")),
+        rounds, stop = Loop.whenUnchanged(_.count())) { (e, _) =>
+      e.join(support(e), Seq("a", "b"), "left")
+        .filter(coalesce(col("sup"), lit(0L)) >= thresh)
+        .select(col("a"), col("b"))
+    }
+    val e = r.state
     try {
-      var r = 0
-      var converged = false
-      while (r < rounds && !converged) {
-        r += 1
-        val next = rc.roll(e.join(support(e), Seq("a", "b"), "left")
-          .filter(coalesce(col("sup"), lit(0L)) >= thresh)
-          .select(col("a"), col("b")))
-        val n2 = next.count()
-        converged = n2 == n // a no-op peel is the fixpoint: stop early
-        n = n2
-        e = next
-      }
       // the final support pass both produces the per-edge output and
       // RE-CHECKS the fixpoint — a truncated peel must never ship
       val fin = e.join(support(e), Seq("a", "b"), "left")
@@ -2200,7 +1992,7 @@ object Algorithms {
         s"k-truss did not converge in $rounds rounds: $below edges below " +
           s"support ${thresh} remain — raise the round budget")
       fin
-    } finally rc.releaseLast()
+    } finally Loop.release(e)
   }
 
   /** Borůvka minimum spanning forest over a weighted undirected edge
@@ -2240,110 +2032,94 @@ object Algorithms {
     */
   def boruvkaMsf(s: SparkSession, edges: DataFrame, rounds: Int = 8,
                  jumps: Int = 8): DataFrame = {
-    // resetStats: the jump chain SELF-joins its own rolled state, which
-    // squares the checkpoint-inherited sizeInBytes BigInt every roll —
-    // digit count doubles per jump ACROSS rounds and the driver ends up
-    // pinned in gigadigit BigInteger.multiply inside stats estimation
-    // (see Checkpoints.Rolling scaladoc; measured in tools/MstProbe).
-    val rc = new graft.util.Checkpoints.Rolling(resetStats = true)
-    var cur = rc.roll(edges.select(col("a"), col("b"), col("w"),
-      col("a").as("ca"), col("b").as("cb")))
     val sels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val mns = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      var r = 0
-      var empty = cur.isEmpty
-      while (r < rounds && !empty) {
-        r += 1
-        val mn = cur.select(col("ca").as("c"),
-            struct(col("w"), col("a"), col("b"), col("cb").as("o")).as("e"))
-          .union(cur.select(col("cb").as("c"),
-            struct(col("w"), col("a"), col("b"), col("ca").as("o")).as("e")))
-          .groupBy(col("c")).agg(min(col("e")).as("e"))
-          .select(col("c"), col("e.w").as("w"), col("e.a").as("a"),
-            col("e.b").as("b"), col("e.o").as("o"))
-          .localCheckpoint(true)
-        // selection plans stay lazy over the checkpointed mn frames —
-        // mn release is deferred to after the final union materializes
-        // (6 tiny ≤#components-row frames held vs 6 extra checkpoint
-        // jobs saved; the per-round jobs dominate this query's cost)
-        mns += mn
-        sels += mn.select(col("a"), col("b"), col("w")).distinct()
-          .withColumn("round", lit(r))
-        // hook: p(c) = min-edge partner; mutual pairs root at min id
-        val par = mn.select(col("c"), col("o"))
-          .join(mn.select(col("c").as("o"), col("o").as("oo")), "o")
-          .select(col("c"),
-            when(col("oo") === col("c") && col("c") < col("o"), col("c"))
-              .otherwise(col("o")).as("p"))
-        // each jump references the previous table TWICE (x and y
-        // sides of the self-join): without a materialization per
-        // step the lineage doubles each jump — a 2^jumps plan. The
-        // hook map is ≤ #components rows and halving, so an eager
-        // rolling checkpoint per jump is cheap and keeps the plan
-        // linear. The jump fixpoint check rides the jump itself: a
-        // `moved` flag (did this jump change p?) is computed inside
-        // the same self-join and read back as a narrow scan of the
-        // just-checkpointed blocks — no second self-join job per
-        // jump. Pointer jumping is idempotent at the fixpoint, so
-        // "nothing moved" PROVES every chain is at its root.
-        val jc = new graft.util.Checkpoints.Rolling(resetStats = true)
-        var pj = jc.roll(par.withColumn("moved", lit(true)))
-        var anyMoved = true
-        var j = 0
-        while (j < jumps && anyMoved) {
-          j += 1
-          pj = jc.roll(pj.as("x").join(pj.select(col("c").as("p"),
-              col("p").as("pp")).as("y"), "p")
-            .select(col("x.c").as("c"), col("pp").as("p"),
-              (col("pp") =!= col("x.p")).as("moved")))
-          // fixpoint probe: isEmpty (a take-1 over the just-rolled
-          // blocks, short-circuiting) instead of a full count per jump
-          // — the count only matters on the failure path, where it is
-          // recomputed for the message (r15, guide §1.2)
-          anyMoved = !pj.filter(col("moved")).isEmpty
-        }
-        require(!anyMoved,
-          s"boruvkaMsf: ${pj.filter(col("moved")).count()} hook chains " +
-            s"still moving after $jumps jumps (depth > 2^$jumps) — " +
-            "raise the jump budget")
-        pj = pj.select(col("c"), col("p")).localCheckpoint(true)
-        jc.releaseLast()
-        // contract: relabel endpoints to roots, drop intra-component
-        // edges, prune parallel edges to the (w,a,b)-pair-min
-        val relabeled = cur
-          .join(pj.select(col("c").as("ca"), col("p").as("pa")),
-            Seq("ca"), "left")
-          .join(pj.select(col("c").as("cb"), col("p").as("pb")),
-            Seq("cb"), "left")
-          .select(col("a"), col("b"), col("w"),
-            coalesce(col("pa"), col("ca")).as("ca"),
-            coalesce(col("pb"), col("cb")).as("cb"))
-          .filter(col("ca") =!= col("cb"))
-        cur = rc.roll(relabeled
-          .select(col("a"), col("b"), col("w"),
-            least(col("ca"), col("cb")).as("ca"),
-            greatest(col("ca"), col("cb")).as("cb"))
-          .groupBy(col("ca"), col("cb"))
-          .agg(min(struct(col("w"), col("a"), col("b"))).as("e"))
-          .select(col("e.a").as("a"), col("e.b").as("b"),
-            col("e.w").as("w"), col("ca"), col("cb")))
-        // round-local state: cur's roll was pj's last reader (mn is
-        // still read by the deferred selection plans — released below)
-        graft.util.Checkpoints.release(pj)
-        empty = cur.isEmpty
+    // the previous round's hook map: its one reader, the relabel, is
+    // the state the loop rolled before this step began
+    var pjLast: Option[DataFrame] = None
+    // resetStats: the jump chain SELF-joins its own rolled state, which
+    // squares the checkpoint-inherited sizeInBytes estimate every roll
+    // (see graft.util.Loop)
+    val r = Loop.run(edges.select(col("a"), col("b"), col("w"),
+        col("a").as("ca"), col("b").as("cb")), rounds, resetStats = true,
+        stop = Loop.whenEmpty()) { (cur, round) =>
+      pjLast.foreach(Loop.release)
+      val mn = cur.select(col("ca").as("c"),
+          struct(col("w"), col("a"), col("b"), col("cb").as("o")).as("e"))
+        .union(cur.select(col("cb").as("c"),
+          struct(col("w"), col("a"), col("b"), col("ca").as("o")).as("e")))
+        .groupBy(col("c")).agg(min(col("e")).as("e"))
+        .select(col("c"), col("e.w").as("w"), col("e.a").as("a"),
+          col("e.b").as("b"), col("e.o").as("o"))
+        .localCheckpoint(true)
+      // selection plans stay lazy over the checkpointed mn frames —
+      // mn release is deferred to after the final union materializes
+      // (6 tiny ≤#components-row frames held vs 6 extra checkpoint
+      // jobs saved; the per-round jobs dominate this query's cost)
+      mns += mn
+      sels += mn.select(col("a"), col("b"), col("w")).distinct()
+        .withColumn("round", lit(round))
+      // hook: p(c) = min-edge partner; mutual pairs root at min id
+      val par = mn.select(col("c"), col("o"))
+        .join(mn.select(col("c").as("o"), col("o").as("oo")), "o")
+        .select(col("c"),
+          when(col("oo") === col("c") && col("c") < col("o"), col("c"))
+            .otherwise(col("o")).as("p"))
+      // each jump references the previous table TWICE (x and y
+      // sides of the self-join): without a materialization per
+      // step the lineage doubles each jump — a 2^jumps plan. The
+      // hook map is ≤ #components rows and halving, so a rolling
+      // checkpoint per jump is cheap and keeps the plan linear. The
+      // jump fixpoint check rides the jump itself: a `moved` flag
+      // (did this jump change p?) is computed inside the same
+      // self-join and read back as a narrow scan of the
+      // just-checkpointed blocks — no second self-join job per jump.
+      // Pointer jumping is idempotent at the fixpoint, so "nothing
+      // moved" PROVES every chain is at its root. The probe is
+      // isEmpty (a short-circuiting take-1), not a full count — the
+      // count only matters on the failure path (r15, guide §1.2).
+      val jumped = Loop.run(par.withColumn("moved", lit(true)), jumps,
+          resetStats = true, stop = (pj: DataFrame, j: Int) =>
+            j > 0 && pj.filter(col("moved")).isEmpty) { (pj, _) =>
+        pj.as("x").join(pj.select(col("c").as("p"),
+            col("p").as("pp")).as("y"), "p")
+          .select(col("x.c").as("c"), col("pp").as("p"),
+            (col("pp") =!= col("x.p")).as("moved"))
       }
-      require(empty,
+      require(jumped.converged,
+        s"boruvkaMsf: ${jumped.state.filter(col("moved")).count()} hook chains " +
+          s"still moving after $jumps jumps (depth > 2^$jumps) — " +
+          "raise the jump budget")
+      val pj = jumped.state.select(col("c"), col("p")).localCheckpoint(true)
+      Loop.release(jumped.state)
+      pjLast = Some(pj)
+      // contract: relabel endpoints to roots, drop intra-component
+      // edges, prune parallel edges to the (w,a,b)-pair-min
+      cur
+        .join(pj.select(col("c").as("ca"), col("p").as("pa")),
+          Seq("ca"), "left")
+        .join(pj.select(col("c").as("cb"), col("p").as("pb")),
+          Seq("cb"), "left")
+        .select(col("a"), col("b"), col("w"),
+          coalesce(col("pa"), col("ca")).as("ca"),
+          coalesce(col("pb"), col("cb")).as("cb"))
+        .filter(col("ca") =!= col("cb"))
+        .select(col("a"), col("b"), col("w"),
+          least(col("ca"), col("cb")).as("ca"),
+          greatest(col("ca"), col("cb")).as("cb"))
+        .groupBy(col("ca"), col("cb"))
+        .agg(min(struct(col("w"), col("a"), col("b"))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"),
+          col("e.w").as("w"), col("ca"), col("cb"))
+    }
+    try {
+      require(r.converged,
         s"boruvkaMsf did not converge in $rounds rounds: cross edges " +
           "remain — raise the round budget (log2(V) suffices)")
       if (sels.isEmpty)
         edges.select(col("a"), col("b"), col("w"), lit(1).as("round")).limit(0)
-      else {
-        val out = sels.reduce(_.unionByName(_)).localCheckpoint(true)
-        mns.foreach(graft.util.Checkpoints.release) // out was their last reader
-        out
-      }
-    } finally rc.releaseLast()
+      else sels.reduce(_.unionByName(_)).localCheckpoint(true)
+    } finally (mns ++ pjLast :+ r.state).foreach(Loop.release) // out was their last reader
   }
 
   /** All-pairs resource-allocation link prediction over a bipartite
@@ -2531,7 +2307,7 @@ object Algorithms {
             .otherwise(lit("outlier")).as("role")))
       .localCheckpoint(true)
     Seq(e, adj, sim, core, comp, coreclust, assigned)
-      .foreach(graft.util.Checkpoints.release)
+      .foreach(Loop.release)
     out
   }
 
@@ -2577,7 +2353,7 @@ object Algorithms {
           expr("2000000 * e_rich div (n_rich * (n_rich - 1))"))
           .otherwise(lit(null).cast("long")))
       .localCheckpoint(true) // |ks| rows; materialize before releasing e
-    graft.util.Checkpoints.release(e)
+    Loop.release(e)
     out
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Loop
 
 /** Deduplication operators for training-data pipelines (BASELINE.json
   * north-star surface).
@@ -566,7 +567,7 @@ object Dedup {
     * TEST is the only driver-side action. Returns (id, comp) with
     * comp = min doc_id reachable, i.e. the canonical representative.
     */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = Loop.cached { c =>
     // explode-symmetrize in ONE pass over the pair subtree: a union of
     // (fwd, reversed-fwd) names the pair pipeline twice, and Catalyst
     // reuses identical union branches only when an exchange sits at
@@ -574,52 +575,28 @@ object Dedup {
     // so an LSH-sourced pair list (the d9/d24 gate path) would
     // materialize its whole banding+verify DAG TWICE before the first
     // cluster round (the Algorithms.symmetrize lesson)
-    val edges = pairs.select(explode(array(
+    val edges = c(pairs.select(explode(array(
         struct(col("a_id").as("src"), col("b_id").as("dst")),
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("src")) // pre-partition for the per-round join (r16)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp"))
-        .localCheckpoint()
-      // convergence witness: the id set is constant across rounds and
-      // labels are monotone NON-INCREASING, so the exact decimal sum of
-      // comps is unchanged iff no label changed — ONE scalar aggregate
-      // over the just-checkpointed frame replaces the previous
-      // compare-join (+ its shuffle) per round (the stronglyConnected
-      // cSum discipline).
-      def cSum(df: DataFrame): java.math.BigDecimal = {
-        // SUM over zero rows is NULL — an empty pair list (e.g. a
-        // scanCluster corpus with no core-core edges) must converge on
-        // round 1, not NPE in the comparison
-        val d = df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-        if (d == null) java.math.BigDecimal.ZERO else d
-      }
-      var prevSum = cSum(labels)
-      var converged = false
-      var it = 0
-      while (!converged && it < maxIter) {
-        val viaNbr = edges
-          .join(labels.select(col("id").as("src"), col("comp"))
-            .hint("shuffle_hash"), "src") // stream the cache (r16)
-          .select(col("dst").as("id"), col("comp"))
-        val next = labels.union(viaNbr)
-          .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-          .localCheckpoint()
-        val s2 = cSum(next)
-        converged = s2.compareTo(prevSum) == 0
-        prevSum = s2
-        // round k−1's blocks are dead once `next` has materialized (its
-        // roll was labels' last reader) — release deterministically
-        // instead of waiting for a GC (SCALE.md block-release item)
-        graft.util.Checkpoints.release(labels)
-        labels = next
-        it += 1
-      }
-      labels
-    } finally edges.unpersist(blocking = true)
+      .repartition(col("src"))) // pre-partition for the per-round join (r16)
+    // convergence witness: the id set is constant across rounds and
+    // labels are monotone NON-INCREASING, so the exact decimal sum of
+    // comps is unchanged iff no label changed — ONE scalar aggregate
+    // over the just-checkpointed frame replaces a compare-join (+ its
+    // shuffle) per round (the stronglyConnected discipline); an empty
+    // pair list (a scanCluster corpus with no core-core edges) sums
+    // to 0 and converges on round 1
+    Loop.run(edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("comp")), maxIter,
+        stop = Loop.whenUnchanged(Loop.decimalSum("comp"))) { (labels, _) =>
+      val viaNbr = edges
+        .join(labels.select(col("id").as("src"), col("comp"))
+          .hint("shuffle_hash"), "src") // stream the cache (r16)
+        .select(col("dst").as("id"), col("comp"))
+      labels.union(viaNbr)
+        .groupBy(col("id")).agg(min(col("comp")).as("comp"))
+    }.state
   }
 
   /** Train/eval decontamination — the benchmark-leakage check of a

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Loop
 
 /** Similarity search over embedding columns (ArrayType(FloatType)) —
   * BASELINE.json north-star surface.
@@ -850,30 +851,28 @@ object Similarity {
   def mmrSelect(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
     def microCos(a: Column, b: Column): Column =
       floor(cosineMicro(a, b) * 1000000d + 0.5d).cast("long")
-    val cand = candidates.select(col("vec_id"), col("embedding"))
-      .crossJoin(maybeBroadcast(
-        queries.select(col("query_id"), col("query_vec")), queries,
-        DefaultMaxBroadcastRows))
-      .select(col("query_id"), col("vec_id"),
-        microCos(col("embedding"), col("query_vec")).as("simqu"))
-      .persist()
-    val pairs = candidates.select(col("vec_id").as("a"), col("embedding").as("ea"))
-      .join(candidates.select(col("vec_id").as("b"), col("embedding").as("eb")),
-        col("a") =!= col("b"))
-      .select(col("a"), col("b"), microCos(col("ea"), col("eb")).as("csu"))
-      .persist()
-    try {
+    Loop.cached { c =>
+      val cand = c(candidates.select(col("vec_id"), col("embedding"))
+        .crossJoin(maybeBroadcast(
+          queries.select(col("query_id"), col("query_vec")), queries,
+          DefaultMaxBroadcastRows))
+        .select(col("query_id"), col("vec_id"),
+          microCos(col("embedding"), col("query_vec")).as("simqu")))
+      val pairs = c(candidates.select(col("vec_id").as("a"), col("embedding").as("ea"))
+        .join(candidates.select(col("vec_id").as("b"), col("embedding").as("eb")),
+          col("a") =!= col("b"))
+        .select(col("a"), col("b"), microCos(col("ea"), col("eb")).as("csu")))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("score_u").desc, col("vec_id").asc)
-      val rc = new graft.util.Checkpoints.Rolling
-      var sel = rc.roll(cand
-        .select(col("query_id"), col("vec_id"),
-          (col("simqu") * 3L).as("score_u"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("query_id"), col("vec_id"), col("score_u"),
-          lit(1).as("pick")))
-      for (t <- 2 to k) {
-        val next = cand
+      // state: the running union of picks — each checkpoint holds the
+      // FULL union, so the previous round's blocks are releasable
+      Loop.run(cand
+          .select(col("query_id"), col("vec_id"),
+            (col("simqu") * 3L).as("score_u"))
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+          .select(col("query_id"), col("vec_id"), col("score_u"),
+            lit(1).as("pick")), k - 1) { (sel, round) =>
+        sel.union(cand
           .join(sel.select(col("query_id"), col("vec_id")), Seq("query_id", "vec_id"),
             "left_anti")
           .join(sel.select(col("query_id"), col("vec_id").as("sb")), "query_id")
@@ -884,16 +883,9 @@ object Similarity {
             (col("simqu") * 3L - col("ms")).as("score_u"))
           .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
           .select(col("query_id"), col("vec_id"), col("score_u"),
-            lit(t).as("pick"))
-        // the new checkpoint materializes the FULL running union, so
-        // the previous round's blocks are releasable immediately
-        sel = rc.roll(sel.union(next))
-      }
-      sel.select(col("query_id"), col("pick"), col("vec_id"),
+            lit(round + 1).as("pick")))
+      }.state.select(col("query_id"), col("pick"), col("vec_id"),
         (col("score_u").cast("double") / 4000000d).as("score"))
-    } finally {
-      cand.unpersist(blocking = false)
-      pairs.unpersist(blocking = false)
     }
   }
 
@@ -924,48 +916,49 @@ object Similarity {
   def kcenterSelect(corpus: DataFrame, k: Int = 8): DataFrame = {
     def microCos(a: Column, b: Column): Column =
       floor(cosineMicro(a, b) * 1000000d + 0.5d).cast("long")
-    val pts = corpus.select(col("vec_id"), col("embedding")).persist()
-    try {
-      val rc = new graft.util.Checkpoints.Rolling
-      // the seed + per-round picks are eager 1-row checkpoints that
-      // must outlive the state slot they were carved from; they are
-      // collected here and released deterministically once the result
-      // materializes (ADVICE r10: leaking k cached 1-row RDDs per call
-      // broke the repo's deterministic-release discipline)
-      val picksTaken = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val first = pts.orderBy(col("vec_id").asc).limit(1)
-        .localCheckpoint(true)
-      picksTaken += first
-      var lastVec = first.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_vec"))
-      var selIds = first.select(col("vec_id"))
-      var out = first.select(lit(1).as("pick"), col("vec_id"),
-        lit(-1000000L).as("far_u"))
-      var state = pts.select(col("vec_id"), col("embedding"),
-        lit(-1000000L).as("maxsim"))
-      for (t <- 2 to k) {
-        state = rc.roll(state.crossJoin(broadcast(lastVec))
-          .select(col("vec_id"), col("embedding"),
-            greatest(col("maxsim"), microCos(col("embedding"), col("c_vec")))
-              .as("maxsim")))
-        // eager 1-row checkpoint: the pick must outlive the state
-        // round it was carved from (the slot rolls next iteration)
-        val pick = state
-          .join(selIds, Seq("vec_id"), "left_anti")
+    Loop.cached { c =>
+      val pts = c(corpus.select(col("vec_id"), col("embedding")))
+      // picks are eager 1-row checkpoints that must outlive the state
+      // round they were carved from; they are released
+      // deterministically once the result materializes (ADVICE r10:
+      // leaking k cached 1-row RDDs per call broke the repo's
+      // deterministic-release discipline)
+      val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      picks += pts.orderBy(col("vec_id").asc).limit(1).localCheckpoint(true)
+      // pick t: the unpicked point least similar to its nearest pick
+      def pick(state: DataFrame): DataFrame = {
+        val p = state
+          .join(picks.map(_.select(col("vec_id"))).reduce(_.union(_)),
+            Seq("vec_id"), "left_anti")
           .orderBy(col("maxsim").asc, col("vec_id").asc).limit(1)
           .localCheckpoint(true)
-        picksTaken += pick
-        out = out.union(pick.select(lit(t).as("pick"), col("vec_id"),
-          col("maxsim").as("far_u")))
-        selIds = selIds.union(pick.select(col("vec_id")))
-        lastVec = pick.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_vec"))
+        picks += p
+        p
       }
-      val res = out.localCheckpoint(true)
-      rc.releaseLast()
-      picksTaken.foreach(graft.util.Checkpoints.release)
+      // fold the newest pick into every point's max similarity
+      def grow(state: DataFrame, center: DataFrame): DataFrame =
+        state.crossJoin(broadcast(center.select(col("vec_id").as("c_id"),
+            col("embedding").as("c_vec"))))
+          .select(col("vec_id"), col("embedding"),
+            greatest(col("maxsim"), microCos(col("embedding"), col("c_vec")))
+              .as("maxsim"))
+      // state after round t: max similarity to picks 1..t+1
+      val last = if (k < 2) None else {
+        val r = Loop.run(grow(pts.select(col("vec_id"), col("embedding"),
+            lit(-1000000L).as("maxsim")), picks.head), k - 2) { (state, _) =>
+          grow(state, pick(state))
+        }
+        pick(r.state)
+        Some(r.state)
+      }
+      val res = picks.zipWithIndex.map { case (p, i) =>
+          p.select(lit(i + 1).as("pick"), col("vec_id"),
+            (if (i == 0) lit(-1000000L) else col("maxsim")).as("far_u"))
+        }.reduce(_.union(_))
+        .localCheckpoint(true)
+      (last.toSeq ++ picks).foreach(Loop.release)
       res
-    } finally pts.unpersist(blocking = false)
+    }
   }
 
   /** Integer-exact Lloyd k-means over MILLI-quantized embeddings — the
@@ -1161,31 +1154,28 @@ object Similarity {
       .groupBy(col("a.dim").as("j"), col("b.dim").as("k"))
       .agg(sum(col("a.q") * col("b.q")).as("g0"))
       .localCheckpoint(true)
-    graft.util.Checkpoints.release(comps)
+    Loop.release(comps)
     val mg = gramRaw.agg(greatest(max(abs(col("g0"))), lit(1L)).as("mg"))
-    val rc = new graft.util.Checkpoints.Rolling
     val gram = gramRaw.crossJoin(broadcast(mg))
       .select(col("j"), col("k"),
         (when(col("g0") < 0, lit(-1L)).otherwise(lit(1L))
           * expr("abs(g0) div (mg div 1000000 + 1)")).as("g"))
       .localCheckpoint(true)
-    graft.util.Checkpoints.release(gramRaw)
-    var x = rc.seed(gram.select(col("j")).distinct()
-      .withColumn("v", lit(1000L)).localCheckpoint(true))
-    for (_ <- 1 to iters) {
+    Loop.release(gramRaw)
+    val x = Loop.run(gram.select(col("j")).distinct()
+        .withColumn("v", lit(1000L)), iters) { (x, _) =>
       val y = gram
         .join(x.select(col("j").as("k"), col("v").as("xv")), Seq("k"))
         .groupBy(col("j")).agg(sum(col("g") * col("xv")).as("y"))
       val m = y.agg(greatest(max(abs(col("y"))), lit(1L)).as("m"))
-      x = rc.roll(y.crossJoin(broadcast(m))
+      y.crossJoin(broadcast(m))
         .select(col("j"),
           (when(col("y") < 0, lit(-1L)).otherwise(lit(1L))
-            * expr("(abs(y) * 1000) div m")).as("v")))
-    }
+            * expr("(abs(y) * 1000) div m")).as("v"))
+    }.state
     val out = x.select(col("j").as("dim"), col("v").as("weight"))
       .localCheckpoint(true)
-    rc.releaseLast()
-    graft.util.Checkpoints.release(gram)
+    Seq(x, gram).foreach(Loop.release)
     out
   }
 

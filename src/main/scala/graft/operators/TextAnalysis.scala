@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Loop
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (BASELINE.json north-star surface; no reference analog — the
@@ -554,8 +555,8 @@ object TextAnalysis {
     * matches at even offsets from their run start merge (sym becomes
     * lft||rgt), the following position is consumed, survivors
     * renumber by row_number for the next round's lead(). State rolls
-    * through [[graft.util.Checkpoints.Rolling]] (round k−1's blocks
-    * release deterministically once round k materializes).
+    * through [[graft.util.Loop]] (round k−1's blocks release
+    * deterministically once round k materializes).
     *
     * Ties everywhere break by total order, so the learned rule
     * sequence is unique and an engine replaying the same rounds
@@ -567,7 +568,7 @@ object TextAnalysis {
   def bpeTrain(docs: org.apache.spark.sql.DataFrame,
       rounds: Int = 6): org.apache.spark.sql.DataFrame = {
     val (rules, finalState) = bpeTrainLoop(docs, rounds)
-    graft.util.Checkpoints.release(finalState) // rules only
+    Loop.release(finalState) // rules only
     rules
   }
 
@@ -583,7 +584,7 @@ object TextAnalysis {
   def bpeTokenize(docs: org.apache.spark.sql.DataFrame,
       rounds: Int = 6): org.apache.spark.sql.DataFrame = {
     val (rules, finalState) = bpeTrainLoop(docs, rounds)
-    graft.util.Checkpoints.release(rules) // only the state is read here
+    Loop.release(rules) // only the state is read here
     val perWord = finalState.groupBy(col("word"))
       .agg(count(lit(1)).cast("long").as("n_sym"))
     val tok = docs
@@ -597,7 +598,7 @@ object TextAnalysis {
         sum(col("n_sym")).as("n_tokens"))
     // materialize before releasing the state the plan still reads
     val res = out.localCheckpoint(true)
-    graft.util.Checkpoints.release(finalState)
+    Loop.release(finalState)
     res
   }
 
@@ -613,18 +614,13 @@ object TextAnalysis {
       .select(explode(tokens(coalesce(col("text"), lit("")))).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-    val rc = new graft.util.Checkpoints.Rolling
-    var state = rc.roll(vocab
-      .select(col("word"), col("freq"),
-        explode(sequence(lit(1), length(col("word")))).as("pos"))
-      .select(col("word"), col("freq"), col("pos"),
-        col("word").substr(col("pos"), lit(1)).as("sym")))
     val w = Window.partitionBy(col("word")).orderBy(col("pos"))
     val rules = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    var r = 0
-    var exhausted = false
-    while (r < rounds && !exhausted) {
-      r += 1
+    val state = Loop.run(vocab
+        .select(col("word"), col("freq"),
+          explode(sequence(lit(1), length(col("word")))).as("pos"))
+        .select(col("word"), col("freq"), col("pos"),
+          col("word").substr(col("pos"), lit(1)).as("sym")), rounds) { (state, r) =>
       val lk = state.withColumn("nxt", lead(col("sym"), 1).over(w))
       val top1 = lk.filter(col("nxt").isNotNull)
         .groupBy(col("sym").as("lft"), col("nxt").as("rgt"))
@@ -635,11 +631,11 @@ object TextAnalysis {
       if (top1.isEmpty) {
         // no adjacent pairs remain: every later round is a no-op, and
         // "merging" against the EMPTY rule frame would wipe the state
-        // (crossJoin with nothing) — stop, keep the state as-is. The
-        // oracle's remaining top CTEs are empty selects, so the rule
-        // list stays hash-identical.
-        graft.util.Checkpoints.release(top1)
-        exhausted = true
+        // (crossJoin with nothing) — return the state unchanged, which
+        // ends the loop. The oracle's remaining top CTEs are empty
+        // selects, so the rule list stays hash-identical.
+        Loop.release(top1)
+        state
       } else {
         rules += top1.select(lit(r).as("merge_round"),
           col("lft"), col("rgt"), col("n"))
@@ -658,7 +654,7 @@ object TextAnalysis {
         val wRun = Window.partitionBy(col("word")).orderBy(col("pos"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wg = Window.partitionBy(col("word"), col("grp"))
-        state = rc.roll(fl
+        fl
           .withColumn("grp", col("pos") -
             sum(when(col("hit"), 1L).otherwise(0L)).over(wRun))
           .withColumn("run_start",
@@ -671,18 +667,17 @@ object TextAnalysis {
           .select(col("word"), col("freq"), col("pos"),
             when(col("do_merge"), concat(col("sym"), col("nxt")))
               .otherwise(col("sym")).as("sym"))
-          .withColumn("pos", row_number().over(w)))
+          .withColumn("pos", row_number().over(w))
       }
-    }
+    }.state
     val out = (if (rules.isEmpty)
         state.select(lit(1).as("merge_round"), col("sym").as("lft"),
           col("sym").as("rgt"), col("freq").as("n")).limit(0)
       else rules.reduce(_.unionByName(_)).orderBy(col("merge_round")))
       .localCheckpoint(true)
-    rules.foreach(graft.util.Checkpoints.release)
-    // the LAST state stays checkpointed for the caller (rc slot
-    // ownership transfers: bpeTrain releases it, bpeTokenize reads
-    // it first)
+    rules.foreach(Loop.release)
+    // the LAST state stays checkpointed for the caller: bpeTrain
+    // releases it, bpeTokenize reads it first
     (out, state)
   }
 }

@@ -23,7 +23,7 @@ class AlgorithmsSpec extends AnyFunSuite {
     // SCALE.md block-release item: each round's localCheckpoint used
     // to pin its blocks until a GC surfaced the dead reference — a
     // 12-round loop transiently held 13 checkpoint RDDs. With the
-    // Checkpoints.Rolling release, the loop holds the current round
+    // graft.util.Loop rolling release, the loop holds the current round
     // (+ the persisted adjacency) only, independent of round count.
     val g1 = mkGraph((1L to 40L).map(i => (i, i % 40 + 1)))
     val before = spark.sparkContext.getPersistentRDDs.size

@@ -1,0 +1,154 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import graft.graph.{Algorithms, PropertyGraph}
+import graft.operators.Dedup
+import graft.util.Loop
+
+/** The iterative-loop combinator (graft.util.Loop): cadence, stop rule,
+  * release on failure, statistics reset, and the cache scope's
+  * source-once / materialize-before-release contract on every operator
+  * that runs through it.
+  */
+class LoopSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  private def isCheckpoint(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+
+  private def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("cadence 5 over 12 rounds checkpoints the seed and rounds 5, 10 and 12 only") {
+    val rolled = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val r = Loop.run(spark.range(20).toDF("id"), 12, every = 5) { (st, k) =>
+      if (isCheckpoint(st)) rolled += k - 1 // the state round k−1 left
+      st.select((col("id") + 1).as("id"))
+    }
+    if (isCheckpoint(r.state)) rolled += r.rounds
+    assert(rolled.toSeq == Seq(0, 5, 10, 12))
+    assert(r.rounds == 12 && !r.converged)
+    assert(r.state.agg(min(col("id"))).head().getLong(0) == 12L)
+  }
+
+  test("a converging loop reports its rounds and converged = true") {
+    val r = Loop.run(spark.range(5).toDF("id"), 20,
+        stop = Loop.whenEmpty()) { (st, k) => st.filter(col("id") >= k) }
+    assert(r.rounds == 5 && r.converged)
+    // an unchanged count stops the round after the last change
+    val u = Loop.run(spark.range(5).toDF("id"), 20,
+        stop = Loop.whenUnchanged(_.count())) { (st, k) =>
+      st.filter(col("id") >= math.min(k, 3)) }
+    assert(u.rounds == 4 && u.converged)
+    // a step that returns its input unchanged is a fixpoint
+    val f = Loop.run(spark.range(5).toDF("id"), 20) { (st, k) =>
+      if (k == 2) st else st.select(col("id")) }
+    assert(f.rounds == 2 && f.converged)
+  }
+
+  test("a round cap reports converged = false") {
+    val r = Loop.run(spark.range(5).toDF("id"), 3,
+        stop = Loop.whenEmpty()) { (st, k) => st.filter(col("id") >= k) }
+    assert(r.rounds == 3 && !r.converged)
+    assert(r.state.count() == 2L)
+  }
+
+  test("a step that throws leaves no cache or checkpoint persisted") {
+    val before = persistedIds
+    val e = intercept[IllegalStateException] {
+      Loop.cached { c =>
+        val base = c(spark.range(100).toDF("id"))
+        base.count()
+        Loop.run(base.select(col("id")), 5) { (st, k) =>
+          if (k == 3) throw new IllegalStateException("boom")
+          st.join(base, "id")
+        }.state
+      }
+    }
+    assert(e.getMessage == "boom")
+    val left = persistedIds -- before
+    assert(left.isEmpty, s"RDDs still persisted after the failure: $left")
+  }
+
+  test("resetStats keeps a 30-round self-join's size estimate bounded") {
+    // pointer jumping joins the rolled state with itself: an inherited
+    // estimate squares on every roll (the Borůvka hang)
+    def jumps(n: Int, reset: Boolean): BigInt =
+      Loop.run(spark.range(1000)
+          .select(col("id").as("c"), (col("id") / 2).cast("long").as("p")),
+          n, resetStats = reset) { (pj, _) =>
+        pj.as("x").join(pj.select(col("c").as("p"), col("p").as("pp")).as("y"), "p")
+          .select(col("x.c").as("c"), col("pp").as("p"))
+      }.state.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(jumps(30, reset = true).bitLength < 256)
+    // the bound is meaningful: without the reset 5 rolls already pass it
+    assert(jumps(5, reset = false).bitLength > 256)
+  }
+
+  test("cached checkpoints an output that reads a cache before releasing it") {
+    val before = persistedIds
+    val out = Loop.cached { c =>
+      val base = c(spark.range(10).toDF("id"))
+      base.select((col("id") * 2).as("x"))
+    }
+    assert(isCheckpoint(out))
+    assert(out.agg(sum(col("x"))).head().getLong(0) == 90L)
+    Loop.release(out)
+    assert((persistedIds -- before).isEmpty)
+  }
+
+  // ---- source-once contract over the migrated operators: the edge
+  // frame counts its own row evaluations through an accumulator
+
+  private val nEdges = 400
+
+  private def countingGraph(): (PropertyGraph, org.apache.spark.util.LongAccumulator) = {
+    val acc = spark.sparkContext.longAccumulator("edge-rows")
+    val tick = udf { (x: Long) => acc.add(1); x }.asNondeterministic()
+    // range-based (not a local Seq) so no optimizer rule evaluates the
+    // UDF while folding it into a local relation
+    val e = spark.range(nEdges)
+      .select(tick(col("id") % 50).as("src"),
+        ((col("id") * 7 + 3) % 50).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .select(col("src"), col("dst"), lit("link").as("label"),
+        lit(null).cast("long").as("sort_key"))
+    val v = spark.range(50).select(col("id"), lit("node").as("label"))
+    (PropertyGraph(v, e), acc)
+  }
+
+  private val operators: Seq[(String, PropertyGraph => DataFrame)] = Seq(
+    "pageRankExact" -> (g => Algorithms.pageRankExact(spark, g)),
+    "personalizedPageRankExact" -> (g => Algorithms.personalizedPageRankExact(
+      spark, g, spark.range(3).toDF("id"))),
+    "pageRankWeightedExact" -> (g => Algorithms.pageRankWeightedExact(
+      spark, g, col("src") % 3 + 1)),
+    "eigenvectorExact" -> (g => Algorithms.eigenvectorExact(spark, g)),
+    "katzExact" -> (g => Algorithms.katzExact(spark, g)),
+    "hitsExact" -> (g => Algorithms.hitsExact(spark, g)),
+    "labelPropagation" -> (g => Algorithms.labelPropagation(spark, g)),
+    "louvainLevel1" -> (g => Algorithms.louvainLevel1(spark, g)),
+    "dagLayers" -> (g => Algorithms.dagLayers(spark, g)),
+    "connectedComponentsAlt" -> (g => Algorithms.connectedComponentsAlt(spark, g)),
+    "kCore" -> (g => Algorithms.kCore(spark, g, 2)),
+    "maximalIndependentSet" -> (g => Algorithms.maximalIndependentSet(
+      spark, g, maxRounds = 30)),
+    "simRankExact" -> (g => Algorithms.simRankExact(spark, g)),
+    "dupClusters" -> (g => Dedup.dupClusters(
+      g.edges.select(col("src").as("a_id"), col("dst").as("b_id")))))
+
+  for ((name, op) <- operators)
+    test(s"$name evaluates its edge source once and returns a frame " +
+         "that never re-reads it") {
+      val (g, acc) = countingGraph()
+      val out = op(g)
+      assert(acc.value == nEdges.toLong,
+        s"$name evaluated ${acc.value} edge rows before returning")
+      out.collect()
+      assert(acc.value == nEdges.toLong,
+        s"the caller's action re-read ${acc.value - nEdges} edge rows")
+    }
+}
