@@ -192,7 +192,7 @@ object Bench {
     * line) — ground truth for "the host starved this VM during that
     * run", which no in-process heuristic can see. 0 where unavailable.
     */
-  private def stealJiffies(): Long =
+  private[graft] def stealJiffies(): Long =
     try {
       val line = scala.io.Source.fromFile("/proc/stat").getLines()
         .find(_.startsWith("cpu ")).getOrElse("")
@@ -208,7 +208,33 @@ object Bench {
     * concentrated in bursts that hit many-short-stage iterative
     * queries 3-10× while scan-bound queries barely notice.
     */
-  private val StealMaxJiffies = 250L
+  private[graft] val StealMaxJiffies = 250L
+
+  /** The ITERATIVE canary job over `sfDir`'s nation table (round-8
+    * lesson: the scan canary stayed flat at 0.36-0.58 s through a
+    * window where an unchanged iterative query recorded 3.2× its
+    * history — hypervisor steal throttles many-short-stage jobs via
+    * scheduling latency while a single scan+agg stage barely notices).
+    * The job is a fixed 5-round join+min-agg loop over the 25-row
+    * nation table: ~2 shuffles per round × `cpus` tasks each, so its
+    * cost IS stage-scheduling latency — the exact axis the scan canary
+    * is blind on. Data volume is negligible by construction so the two
+    * canaries separate the two contamination modes (CPU/cache pressure
+    * vs scheduler starvation). The table is read once, here.
+    */
+  private[graft] def iterCanary(spark: SparkSession, sfDir: String): () => Unit = {
+    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+      .selectExpr("n_nationkey AS id", "n_regionkey AS r")
+    () => {
+      var lbl = nation.selectExpr("id", "id AS lbl")
+      (1 to IterCanaryRounds).foreach { _ =>
+        val regionMin = lbl.join(nation, "id")
+          .groupBy("r").agg(org.apache.spark.sql.functions.min("lbl").as("rlbl"))
+        lbl = nation.join(regionMin, "r").selectExpr("id", "rlbl AS lbl")
+      }
+      lbl.write.format("noop").mode("overwrite").save()
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
@@ -221,34 +247,7 @@ object Bench {
     // old default of 4 silently benched at local[4] when launched
     // without the env var (round-9 mislabeled-artifact lesson)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // GraphX moves RDDs of Edge/vertex objects through the closure
-    // serializer (JavaSerializer by default) in every Pregel superstep
-    // and graph cache; Kryo + the GraphX class registrations is the
-    // configuration the GraphX docs mandate and cuts that CPU at any
-    // scale. DataFrame paths (Tungsten binary rows) are unaffected, so
-    // results cannot change — only the RDD-bridge gates get faster.
-    val kryoConf = new org.apache.spark.SparkConf()
-      .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    org.apache.spark.graphx.GraphXUtils.registerKryoClasses(kryoConf)
-    val spark = SparkSession.builder()
-      .config(kryoConf)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the ContextCleaner frees dead cache/localCheckpoint blocks only
-      // when a GC surfaces their weak refs; the default 30-min periodic
-      // GC lets ~150 queries of debt pile onto whichever heavy query
-      // meets the backlog (the observed 10-15x one-off spikes). One
-      // minute keeps the cleaner roughly current between windows.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      // GraphX Pregel lineage truncation every 10 supersteps — no-op
-      // for the shallow gate graphs, safety for deep-diameter CC
-      .config("spark.graphx.pregel.checkpointInterval", "10")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
+    val spark = Session.local(cpus.toInt,
       s"${sys.props("java.io.tmpdir")}/graft_bench_ckpt")
 
     def materialize(name: String, dir: String): Unit =
@@ -412,7 +411,7 @@ object Bench {
         .map { case (k, (a, b)) => "\"" + k + "\":[" + fmt(a) + "," + fmt(b) + "]" }
         .mkString("{", ",", "}")
       val detail =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"nqueries":${results.length},"nexpected":${names.length},"contended":$contended,"degraded":$degraded,"aborted":$aborted,"budget_s":${fmt(budgetS)},"elapsed_s":${fmt(elapsedS)},"degraded_tiers":$tiersJson,"skipped":$skippedJson,"load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)},"reruns":$rerunJson,"canary":"$CanaryName","canary_ref":${fmt(canaryRefSnap)},"canary_checks":$canaryJson,"iter_canary":"nation-lpa-${IterCanaryRounds}r","iter_canary_ref":${fmt(iterRefSnap)},"iter_canary_checks":$iterJson,"windows_rerun":$windowsJson,"stolen_runs":$stolenSnap,"suspect":$suspectJson,"failed":$failedJson,"capped":$cappedJson,"repass":$repassJson,"queries":${qJson(results)},"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"cpus":$cpus,"nqueries":${results.length},"nexpected":${names.length},"contended":$contended,"degraded":$degraded,"aborted":$aborted,"budget_s":${fmt(budgetS)},"elapsed_s":${fmt(elapsedS)},"degraded_tiers":$tiersJson,"skipped":$skippedJson,"load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)},"reruns":$rerunJson,"canary":"$CanaryName","canary_ref":${fmt(canaryRefSnap)},"canary_checks":$canaryJson,"iter_canary":"nation-lpa-${IterCanaryRounds}r","iter_canary_ref":${fmt(iterRefSnap)},"iter_canary_checks":$iterJson,"windows_rerun":$windowsJson,"stolen_runs":$stolenSnap,"suspect":$suspectJson,"failed":$failedJson,"capped":$cappedJson,"repass":$repassJson,"queries":${qJson(results)},"sf":"$sfDir"}"""
       val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL", "BENCH_DETAIL.json")
       try {
         java.nio.file.Files.write(
@@ -739,27 +738,7 @@ object Bench {
       t
     }
 
-    // ITERATIVE canary (round-8 lesson: the scan canary stayed flat at
-    // 0.36-0.58 s through a window where an unchanged iterative query
-    // recorded 3.2× its history — hypervisor steal throttles
-    // many-short-stage jobs via scheduling latency while a single
-    // scan+agg stage barely notices). This job is a fixed 5-round
-    // join+min-agg loop over the 25-row nation table: ~2 shuffles per
-    // round × 32 tasks each, so its cost IS stage-scheduling latency —
-    // the exact axis the scan canary is blind on. Data volume is
-    // negligible by construction so the two canaries separate the two
-    // contamination modes (CPU/cache pressure vs scheduler starvation).
-    val iterNation = spark.read.parquet(s"$sfDir/nation.parquet")
-      .selectExpr("n_nationkey AS id", "n_regionkey AS r")
-    def iterCanaryJob(): Unit = {
-      var lbl = iterNation.selectExpr("id", "id AS lbl")
-      (1 to IterCanaryRounds).foreach { _ =>
-        val regionMin = lbl.join(iterNation, "id")
-          .groupBy("r").agg(org.apache.spark.sql.functions.min("lbl").as("rlbl"))
-        lbl = iterNation.join(regionMin, "r").selectExpr("id", "rlbl AS lbl")
-      }
-      lbl.write.format("noop").mode("overwrite").save()
-    }
+    val iterCanaryJob = iterCanary(spark, sfDir)
     def iterCanaryTime(): Double = {
       val t = (1 to 2).map { _ =>
         val t0 = System.nanoTime()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,24 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Kryo + GraphX registrations — same configuration as Bench (the
-    // GraphX-documented serializer; value-neutral, speed-only)
-    val kryoConf = new org.apache.spark.SparkConf()
-      .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    org.apache.spark.graphx.GraphXUtils.registerKryoClasses(kryoConf)
-    val spark = SparkSession.builder()
-      .config(kryoConf)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // GraphX Pregel lineage truncation every 10 supersteps — no-op
-      // for the shallow gate graphs, safety for deep-diameter CC
-      .config("spark.graphx.pregel.checkpointInterval", "10")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
+    val spark = Session.local(cpus.toInt,
       s"${sys.props("java.io.tmpdir")}/graft_verify_ckpt")
     new java.io.File(outDir).mkdirs()
     // Dev aid: SPARK_GRAFT_ONLY=a,b,c restricts the dump (and the oracle

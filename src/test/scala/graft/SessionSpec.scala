@@ -1,0 +1,20 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Tier-1 runs under the session policy Bench and Verify use. */
+class SessionSpec extends AnyFunSuite {
+
+  test("the test session carries the production settings") {
+    val spark = TestSpark.spark
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.serializer") ==
+      "org.apache.spark.serializer.KryoSerializer")
+    assert(conf.get("spark.kryo.classesToRegister")
+      .contains("org.apache.spark.graphx.Edge"))
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.getCheckpointDir.nonEmpty)
+  }
+}

@@ -2,25 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared test session (one JVM-wide session; suites reuse it). */
+/** Shared test session (one JVM-wide session; suites reuse it), under
+  * the same policy as Bench and Verify (`graft.Session`).
+  */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // GraphX Pregel lineage safety for >20-superstep runs (deep-
-      // diameter CC): truncate every 10 supersteps via Spark's
-      // PeriodicGraphCheckpointer (needs the checkpoint dir below)
-      .config("spark.graphx.pregel.checkpointInterval", "10")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s.sparkContext.setCheckpointDir(
-      s"${sys.props("java.io.tmpdir")}/graft_test_ckpt")
-    s
-  }
+  lazy val spark: SparkSession =
+    Session.local(4, s"${sys.props("java.io.tmpdir")}/graft_test_ckpt")
   val sfDir = "/root/testdata/sf0.001"
 }
