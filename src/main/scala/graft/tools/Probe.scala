@@ -105,20 +105,20 @@ object Probe {
         val el = seconds(run(spark, n, dir))
         // a run that lost more than the bench's steal limit to the host
         // ran on the hypervisor's clock and is excluded from the median
-        // whenever any clean run exists. Beyond 60 s the limit scales:
+        // whenever any clean run exists (Bench's steal-clean median
+        // rule). Beyond 60 s the limit scales:
         // a run is flagged only when steal exceeds 2% of its total
         // core-time, since the background steal rate alone crosses the
         // absolute limit on every multi-minute run.
         val limit = if (el <= 60.0) Bench.StealMaxJiffies
           else math.max(Bench.StealMaxJiffies, (el * cpus * 100 * 0.02).toLong)
-        (el, Bench.stealJiffies() - s0 <= limit)
+        Bench.Timed(el, ok = true, stealClean = Bench.stealJiffies() - s0 <= limit,
+          capped = false)
       }
-      val ts = timed.map(_._1)
-      val clean = timed.filter(_._2).map(_._1).sorted
-      val med = if (clean.nonEmpty) clean(clean.length / 2)
-        else ts.sorted.apply(runs / 2)
-      val ann = timed.map { case (t, ok) => f"$t%.2f" + (if (ok) "" else "*") }
-      println(f"$n%-24s median=$med%7.2fs  clean=${clean.length}/$runs  " +
+      val med = Bench.measured(timed).median
+      val clean = timed.count(_.stealClean)
+      val ann = timed.map(t => f"${t.sec}%.2f" + (if (t.stealClean) "" else "*"))
+      println(f"$n%-24s median=$med%7.2fs  clean=$clean/$runs  " +
         s"in-order=${ann.mkString(",")}  (*=steal-contaminated, excluded)")
       canaries(n)
     }

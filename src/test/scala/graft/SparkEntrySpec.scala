@@ -1,6 +1,8 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The driver contract's registry: the flagship smoke, and that every
   * operator group's queries and oracles land in the union. */
@@ -24,5 +26,14 @@ class SparkEntrySpec extends AnyFunSuite {
 
   test("every oracle names a registered query") {
     assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
+  }
+
+  test("oracle_sql.json parses back to exactly the oracle map") {
+    val sql = SparkEntry.oracleSql +
+      ("x_escapes" -> "SELECT '\"q\"', 'a\\b', '\t', '\r\n', '\u0001' -- end")
+    val back = new ObjectMapper()
+      .readValue(Verify.oracleJson(sql), classOf[java.util.Map[String, String]])
+    assert(back.asScala.toMap == sql)
+    assert(back.get("x_escapes").exists(_ == '\u0001'))
   }
 }
