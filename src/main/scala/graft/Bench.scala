@@ -235,7 +235,7 @@ object Bench {
     * vs scheduler starvation). The table is read once, here.
     */
   private[graft] def iterCanary(spark: SparkSession, sfDir: String): () => Unit = {
-    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+    val nation = Tables.nation(spark, sfDir)
       .selectExpr("n_nationkey AS id", "n_regionkey AS r")
     () => {
       var lbl = nation.selectExpr("id", "id AS lbl")
