@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * ten index tables (TikvStore.java:361-380).
   *
   * Every table's schema is declared in [[schemas]], so a read costs no
-  * schema-inference job: an undeclared `spark.read.parquet` runs one
+  * schema-inference job: a parquet read without a schema runs one
   * Spark job per table to read a footer, and `PropertyGraph.fromTpch`
   * touches seven tables. The files are still listed and read fresh on
   * every call. A declared schema is not checked against the footer (a
