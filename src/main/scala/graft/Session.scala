@@ -20,8 +20,7 @@ object Session {
     *     the GraphX docs mandate. DataFrame paths (Tungsten binary rows)
     *     are unaffected, so results cannot change — only the RDD-bridge
     *     operators get faster.
-    *   - UTC session time, and nanosecond parquet timestamps read as
-    *     longs (`nanosAsLong`).
+    *   - UTC session time.
     *   - The ContextCleaner frees dead cache/localCheckpoint blocks only
     *     when a GC surfaces their weak refs; the default 30-min periodic
     *     GC lets ~150 queries of debt pile onto whichever heavy query
@@ -40,7 +39,6 @@ object Session {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.cleaner.periodicGC.interval", "1min")
       .config("spark.ui.enabled", "false")
       .config("spark.graphx.pregel.checkpointInterval", "10")

@@ -12,11 +12,12 @@ import org.apache.spark.sql.types._
   *
   * Every table's schema is declared in [[schemas]], so a read costs no
   * schema-inference job: a parquet read without a schema runs one
-  * Spark job per table to read a footer, and `PropertyGraph.fromTpch`
-  * touches seven tables. The files are still listed and read fresh on
-  * every call. A declared schema is not checked against the footer (a
-  * misspelled column reads as NULLs), so `TablesSpec` asserts that each
-  * declared schema equals the inferred one on every sf dir.
+  * Spark job per table to read a footer, and a `PropertyGraph.fromTpch`
+  * traversal touches up to seven tables. The files are still listed
+  * and read fresh on every call. A declared schema is not checked
+  * against the footer (a misspelled column reads as NULLs), so
+  * `TablesSpec` asserts that each declared schema equals the inferred
+  * one on every sf dir.
   */
 object Tables {
   val relational: Seq[String] =

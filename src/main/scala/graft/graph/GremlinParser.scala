@@ -1274,12 +1274,20 @@ object GremlinParser {
         return runInject(g, vals, steps.tail)
       case _ => ()
     }
-    val (src, rest) = (steps.head.asInstanceOf[GSource], steps.tail)
+    val src = steps.head.asInstanceOf[GSource]
+    // the hasLabel run that opens a V()/E() chain is applied to the
+    // source itself, before the sack/path riders below: on a schema'd
+    // graph the start then reads only those labels' frames
+    val (lead, rest) = src match {
+      case GSource(_, Seq()) => steps.tail.span(_.isInstanceOf[GHasLabel])
+      case _ => (Nil, steps.tail)
+    }
     var t = src match {
       case GSource(true, _) => g.E
       case GSource(false, Seq()) => g.V
       case GSource(false, ids) => g.V(ids: _*)
     }
+    t = lead.foldLeft(t)(applyStep)
     sackInit.foreach(i => t = t.withSackInit(i))
     if (rest.contains(GPath) || rest.contains(GTree) ||
         rest.contains(GSimplePath) || rest.contains(GCyclicPath) ||

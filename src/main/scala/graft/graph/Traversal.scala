@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.schema.EdgeLabelDef
 
 /** Property predicates — the HugeGraph/TinkerPop `P`/`Text` surface the
   * store contract serves (SURVEY §2.4): eq/gt/gte/lt/lte/between/
@@ -110,9 +111,67 @@ object P {
   * The frontier DataFrame always carries the full vertex/edge row;
   * Catalyst column pruning drops unused property columns, so this
   * costs nothing over an id-only frontier.
+  *
+  * Label sets. On a graph with a declared schema each step also carries
+  * the static set of labels its elements can have (`kinds`), and every
+  * vertex or edge lookup reads only the per-label frames of that set
+  * (PropertyGraph). The rule:
+  *  - `V()` holds every vertex label and `E()` every edge def; a
+  *    `hasLabel(ls)` directly on either reads only the frames of `ls`,
+  *    and `V(ids)` only the frames of the ids' label codes.
+  *  - `outE`/`inE` take the edge defs whose src/dst label is in the set
+  *    (and whose name is in the step's labels), so `out('placed')` from
+  *    `customer` reads the `placed` frame and lands on `order`;
+  *    `inV`/`outV`/`otherV` join only the frames of the defs' far ends.
+  *  - `as(t)` records the set for tag `t`; `select(t)` and
+  *    `select(..).by(..)` join only that set's frames.
+  *  - Filters (`has*`, `where`, `not`, `dedup`, `limit`, `order`, …)
+  *    keep the set; `hasLabel` narrows it.
+  *  - Any other step that can move a traverser — `bothE`, `union`,
+  *    `coalesce`, `optional`, `choose`, `local`, every `repeat` form,
+  *    `match`, `unfold` — yields the unknown set, and a merge of
+  *    sub-traversal results also forgets the tag sets.
+  * An unknown set reads the full `vertices`/`edges` unions: the same
+  * step code with a wider input. A graph built from plain frames has no
+  * schema, so all its sets are unknown.
   */
-final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
+final class Traversal private (val g: PropertyGraph, frame: () => DataFrame,
+    val isEdge: Boolean, private[graph] val kinds: Traversal.Kinds,
+    tagKinds: Map[String, Set[String]], whole: Boolean) {
   import Traversal._
+
+  /** The frontier. A `V()`/`E()` source builds it on first use, so a
+    * source narrowed by `hasLabel` never builds the full union.
+    */
+  lazy val df: DataFrame = frame()
+
+  /** A filter or rider step: a subset of the same elements, so the same
+    * label set and tag sets.
+    */
+  private def kept(next: DataFrame): Traversal =
+    new Traversal(g, () => next, isEdge, kinds, tagKinds, whole = false)
+
+  /** A step that moves each traverser to another element, whose label
+    * set `k` the caller proves; the tag columns ride unchanged.
+    */
+  private def moved(next: DataFrame, edge: Boolean, k: Kinds): Traversal =
+    new Traversal(g, () => next, edge, k, tagKinds, whole = false)
+
+  /** A step that merges sub-traversal results, which may have moved or
+    * re-tagged: nothing is proven about the frontier or its tags.
+    */
+  private def merged(next: DataFrame, edge: Boolean): Traversal =
+    new Traversal(g, () => next, edge, AnyKind, Map.empty, whole = false)
+
+  /** The label set `as(tag)` recorded for `tag`. */
+  private def tagKind(tag: String): Kinds =
+    tagKinds.get(tag).fold[Kinds](AnyKind)(VertexKinds)
+
+  /** The vertices a frontier of label set `k` can hold. */
+  private def verticesOf(k: Kinds): DataFrame = k match {
+    case VertexKinds(ls) => g.vertexFrames(ls)
+    case _ => g.vertices
+  }
 
   private def requireV(): Unit =
     require(!isEdge, "vertex step applied to edge frontier")
@@ -127,7 +186,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     */
   def withPath: Traversal = {
     requireV()
-    copy(df = df.withColumn(PATH, array(col("id"))))
+    kept(df.withColumn(PATH, array(col("id"))))
   }
 
   /** terminal: tracked paths as array<long> rows (bag semantics — one
@@ -179,10 +238,28 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
       .distinct()
   }
 
-  def hasLabel(ls: String*): Traversal =
-    copy(df = df.filter(col("label").isin(ls: _*)))
+  /** Keep the elements whose label is in `ls`. Directly on a `V()` or
+    * `E()` source of a schema'd graph this reads only the frames of
+    * `ls`, which hold nothing else.
+    */
+  def hasLabel(ls: String*): Traversal = {
+    val want = ls.toSet
+    val k = kinds match {
+      case VertexKinds(have) => VertexKinds(have & want)
+      case EdgeKinds(ds, otherIsDst) => EdgeKinds(ds.filter(d => want(d.name)), otherIsDst)
+      case AnyKind => g.schema match {
+        case Some(s) if !isEdge => VertexKinds(s.vertexLabels.map(_.name).toSet & want)
+        case _ => AnyKind
+      }
+    }
+    (whole, k) match {
+      case (true, VertexKinds(have)) => moved(g.vertexFrames(have), edge = false, k)
+      case (true, EdgeKinds(ds, _)) => moved(g.edgeFrames(ds), edge = true, k)
+      case _ => moved(df.filter(col("label").isin(ls: _*)), isEdge, k)
+    }
+  }
 
-  def has(key: String, p: P): Traversal = copy(df = df.filter(p.toColumn(col(key))))
+  def has(key: String, p: P): Traversal = kept(df.filter(p.toColumn(col(key))))
   def has(key: String, value: Any): Traversal = has(key, P.Eq(value))
 
   /** out-edges of the frontier (EDGE_OUT prefix scan analog,
@@ -202,9 +279,10 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
 
   def outE(ls: String*): Traversal = {
     requireV()
-    val e = filterEdges(g.edges, ls).withColumn(OTHER, col("dst"))
+    val ds = hopDefs(ls, _.srcLabel)
+    val e = filterEdges(ds.fold(g.edges)(g.edgeFrames), ls).withColumn(OTHER, col("dst"))
     val res = df.select(frontierCols: _*).join(e, col(FRONT) === col("src"))
-    Traversal(g, res, isEdge = true)
+    moved(res, edge = true, ds.fold[Kinds](AnyKind)(EdgeKinds(_, otherIsDst = true)))
   }
 
   /** in-edges (EDGE_IN analog): joined on dst against the dst-clustered
@@ -213,10 +291,25 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     */
   def inE(ls: String*): Traversal = {
     requireV()
-    val e = filterEdges(g.edgesForDst, ls).withColumn(OTHER, col("src"))
+    val ds = hopDefs(ls, _.dstLabel)
+    val e = filterEdges(ds.fold(g.edgesForDst)(g.edgeFrames), ls)
+      .withColumn(OTHER, col("src"))
     val res = df.select(frontierCols: _*).join(e, col(FRONT) === col("dst"))
-    Traversal(g, res, isEdge = true)
+    moved(res, edge = true, ds.fold[Kinds](AnyKind)(EdgeKinds(_, otherIsDst = false)))
   }
+
+  /** The schema's edge defs a hop from this frontier can take: named in
+    * `ls` (any, when empty) with their `near` end in the frontier's
+    * label set (any, when unknown). None on a graph without a schema.
+    */
+  private def hopDefs(ls: Seq[String],
+                      near: EdgeLabelDef => String): Option[Seq[EdgeLabelDef]] =
+    g.schema.map(_.edgeLabels.filter { d =>
+      (ls.isEmpty || ls.contains(d.name)) && (kinds match {
+        case VertexKinds(have) => have(near(d))
+        case _ => true
+      })
+    })
 
   /** union of out and in — the dual-table `both()` shape; an undirected
     * edge traversed from both ends appears twice, as in the reference.
@@ -225,7 +318,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     requireV()
     val o = outE(ls: _*)
     val i = inE(ls: _*)
-    Traversal(g, o.df.union(i.df), isEdge = true)
+    moved(o.df.union(i.df), edge = true, AnyKind)
   }
 
   /** move from edge frontier to the far-end vertex. */
@@ -235,13 +328,19 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
 
   private def toVertex(end: String): Traversal = {
     requireE()
+    val k = kinds match {
+      case EdgeKinds(ds, otherIsDst) =>
+        val toDst = end == "dst" || (end == OTHER && otherIsDst)
+        VertexKinds(ds.map(d => if (toDst) d.dstLabel else d.srcLabel).toSet)
+      case _ => AnyKind
+    }
     val keep = (if (hasPath) Seq(col(end).as(HOP), col(PATH))
                 else Seq(col(end).as(HOP))) ++ tagCols
-    val joined = df.select(keep: _*).join(g.vertices, col(HOP) === col("id")).drop(HOP)
+    val joined = df.select(keep: _*).join(verticesOf(k), col(HOP) === col("id")).drop(HOP)
     val res = if (hasPath)
       joined.withColumn(PATH, concat(col(PATH), array(col("id"))))
     else joined
-    Traversal(g, res, isEdge = false)
+    moved(res, edge = false, k)
   }
 
   def out(ls: String*): Traversal = outE(ls: _*).otherV
@@ -251,8 +350,10 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
   /** Gremlin repeat(out(...)).times(n): n-hop expansion as n chained
     * joins — each hop stays one distributed join (no driver loop).
     */
-  def repeat(n: Int)(step: Traversal => Traversal): Traversal =
-    (1 to n).foldLeft(this)((t, _) => step(t))
+  def repeat(n: Int)(step: Traversal => Traversal): Traversal = {
+    val r = (1 to n).foldLeft(this)((t, _) => step(t))
+    merged(r.df, r.isEdge)
+  }
 
   /** Gremlin repeat(...).emit().times(n): the BAG UNION of every
     * round's frontier (each round emitted, not just the last). Still n
@@ -267,7 +368,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
       cur = step(cur)
       acc = Some(acc.map(_.unionByName(cur.df)).getOrElse(cur.df))
     }
-    Traversal(g, acc.get, cur.isEdge)
+    merged(acc.get, cur.isEdge)
   }
 
   /** Gremlin simplePath(): keep only walks that never revisit a
@@ -277,7 +378,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     */
   def simplePath(): Traversal = {
     require(hasPath, "call withPath before traversing to use simplePath")
-    copy(df = df.filter(
+    kept(df.filter(
       size(array_distinct(col(PATH))) === size(col(PATH))))
   }
 
@@ -286,7 +387,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     */
   def cyclicPath(): Traversal = {
     require(hasPath, "call withPath before traversing to use cyclicPath")
-    copy(df = df.filter(
+    kept(df.filter(
       size(array_distinct(col(PATH))) < size(col(PATH))))
   }
 
@@ -385,7 +486,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
             s"within maxDepth=$maxDepth rounds — raise maxDepth (DSL " +
             "repeatUntil parameter) or bound the walk with times(n)")
       val ids = reached.getOrElse(df.limit(0).select(col("id")))
-      copy(df = g.vertices.join(ids, Seq("id"), "left_semi"))
+      merged(g.vertices.join(ids, Seq("id"), "left_semi"), edge = false)
     } finally {
       if (ownE) loopE.unpersist(blocking = true)
       if (ownV) loopV.unpersist(blocking = true)
@@ -567,7 +668,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
             "than the cap; raise maxDepth (DSL repeatUntilReached " +
             "parameter) or bound the walk with times(n)")
       val ids = halted.getOrElse(df.limit(0).select(col("id")))
-      copy(df = g.vertices.join(ids, Seq("id"), "left_semi"))
+      merged(g.vertices.join(ids, Seq("id"), "left_semi"), edge = false)
     } finally {
       if (ownE) loopE.unpersist(blocking = true)
       if (ownV) loopV.unpersist(blocking = true)
@@ -585,7 +686,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
       require(!r.isEdge, "union branches must end on a vertex frontier")
       r.df
     }
-    copy(df = dfs.reduce(_ unionByName _))
+    merged(dfs.reduce(_ unionByName _), edge = false)
   }
 
   /** Gremlin coalesce(t1, t2, …): per start vertex, the results of the
@@ -599,9 +700,9 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
   def coalesce(subs: (Traversal => Traversal)*): Traversal = {
     requireV()
     require(!hasPath, "coalesce does not compose with withPath")
-    val tagged = copy(df = df.withColumn(PATH, array(col("id")))
+    val tagged = kept(df.withColumn(PATH, array(col("id")))
       .withColumn(FCTX, lit(true)))
-    val vcols = g.vertices.columns
+    val vcols = g.vertexColumns
     val branches = subs.zipWithIndex.map { case (s, i) =>
       val r = s(tagged)
       require(!r.isEdge, "coalesce branches must end on a vertex frontier")
@@ -616,7 +717,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
       .join(winners, col(ORIGIN) === col("__worigin") &&
         col(BRANCH) === col("__winner"))
       .select(vcols.map(col): _*)
-    copy(df = res)
+    merged(res, edge = false)
   }
 
   /** Gremlin optional(t): t's results where t produces any, the
@@ -645,17 +746,17 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     val lk = "__local_origin"
     require(!df.columns.contains(TAG + lk), "nested local() not supported")
     val tagged = as(lk)
-    val r = sub(tagged.copy(df = tagged.df.withColumn(FCTX, lit(true))))
+    val r = sub(tagged.kept(tagged.df.withColumn(FCTX, lit(true))))
     require(!r.isEdge, "local sub must end on a vertex frontier")
     val ord: Seq[Column] =
       (if (orderKey.isEmpty) Nil
        else Seq(if (asc) col(orderKey).asc else col(orderKey).desc)) :+
         col("id").asc
     val w = Window.partitionBy(col(TAG + lk)).orderBy(ord: _*)
-    copy(df = r.df
+    merged(r.df
       .withColumn("__lrn", row_number().over(w))
       .filter(col("__lrn") <= n)
-      .drop("__lrn", TAG + lk, FCTX))
+      .drop("__lrn", TAG + lk, FCTX), edge = false)
   }
 
   /** Gremlin match(patterns…) — conjunctive pattern matching as a
@@ -727,7 +828,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
              onFalse: Traversal => Traversal = identity,
              pinCond: Boolean = false): Traversal = {
     requireV()
-    val origin = copy(df = df
+    val origin = kept(df
       .withColumn(PATH, array(col("id")))
       .withColumn(SFO, col("id")))
     // SHARED, UNCACHED: the semi and anti join reference the identical
@@ -747,13 +848,13 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
       try df.sparkSession.conf.get("spark.sql.exchange.reuse", "true").toBoolean
       catch { case _: Throwable => true }
     val reached = if (pinCond || !reuseOn) shared.localCheckpoint() else shared
-    val tb = onTrue(copy(df =
+    val tb = onTrue(kept(
       df.join(reached, col("id") === col("__origin"), "left_semi")))
-    val fb = onFalse(copy(df =
+    val fb = onFalse(kept(
       df.join(reached, col("id") === col("__origin"), "left_anti")))
     require(!tb.isEdge && !fb.isEdge,
       "choose branches must end on a vertex frontier")
-    copy(df = tb.df.unionByName(fb.df))
+    merged(tb.df.unionByName(fb.df), edge = false)
   }
 
   /** Gremlin project('a','b',…).by(…) terminal: one output row per
@@ -773,7 +874,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     var cur = df
     fields.foreach {
       case (l, Traversal.BySubCount(sub)) =>
-        val origin = copy(df = df.withColumn(PATH, array(col("id")))
+        val origin = kept(df.withColumn(PATH, array(col("id")))
           .withColumn(FCTX, lit(true)))
         val pid = s"__pid_$l"
         val cnt = sub(origin).df
@@ -793,7 +894,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
   /** filter frontier by vertex/edge ids. */
   def hasId(ids: Long*): Traversal = {
     requireV()
-    copy(df = df.filter(col("id").isin(ids: _*)))
+    kept(df.filter(col("id").isin(ids: _*)))
   }
 
   /** deterministic sample: hash-bucket of the id — stable across runs
@@ -802,7 +903,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
   def sample(denominator: Int, bucket: Int = 0): Traversal = {
     val key = if (isEdge) xxhash64(col("src"), col("dst"), col("label"))
     else xxhash64(col("id"))
-    copy(df = df.filter(pmod(key, lit(denominator)) === bucket))
+    kept(df.filter(pmod(key, lit(denominator)) === bucket))
   }
 
   /** terminal: Gremlin valueMap — id plus the requested properties. */
@@ -838,7 +939,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
         col("sort_key"))
       else col("id").cast("string")
     val bucket = conv(substring(md5(key), 1, 8), 16, 10).cast("long") % 10000L
-    copy(df = df.filter(bucket < lit(math.round(p * 10000))))
+    kept(df.filter(bucket < lit(math.round(p * 10000))))
   }
 
   /** terminal: Gremlin id() — the frontier's vertex ids (bag). Edge
@@ -901,7 +1002,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     // marks each row's origin (it survives every hop projection); the
     // PATH array still rides so path-dependent sub-steps
     // (simplePath/cyclicPath INSIDE the filter) keep working
-    val origin = copy(df = df
+    val origin = kept(df
       .withColumn(PATH, array(col("id")))
       .withColumn(SFO, col("id")))
     val reached = sub(origin).df
@@ -909,7 +1010,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
       .distinct()
     val joined = df.join(reached, col("id") === col("__origin"),
       if (anti) "left_anti" else "left_semi")
-    copy(df = joined)
+    kept(joined)
   }
 
   /** Gremlin withSack(init): attach a per-traverser numeric
@@ -925,7 +1026,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     * deterministic pipelines should aggregate before deduping.
     */
   def withSackInit(init: Double): Traversal =
-    copy(df = df.withColumn(SACK, lit(init)))
+    kept(df.withColumn(SACK, lit(init)))
 
   /** Gremlin sack(op).by(key): fold the CURRENT element's `key`
     * property into each traverser's sack — op ∈ sum/mult/min/max.
@@ -946,7 +1047,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
       case other =>
         throw new IllegalArgumentException(s"unsupported sack operator $other")
     }
-    copy(df = df.withColumn(SACK, next))
+    kept(df.withColumn(SACK, next))
   }
 
   /** terminal: Gremlin sack() — each traverser's sack value (bag). */
@@ -967,7 +1068,12 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     */
   def as(label: String): Traversal = {
     requireV()
-    copy(df = df.withColumn(TAG + label, col("id")))
+    val tags = kinds match {
+      case VertexKinds(ls) => tagKinds + (label -> ls)
+      case _ => tagKinds - label
+    }
+    val next = df.withColumn(TAG + label, col("id"))
+    new Traversal(g, () => next, isEdge = false, kinds, tags, whole = false)
   }
 
   /** Gremlin one-label `select('a')` MID-TRAVERSAL: jump the frontier
@@ -980,9 +1086,10 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     require(df.columns.contains(TAG + label), s"select: no as('$label') tag")
     val keep = Seq(col(TAG + label).as(HOP)) ++
       (if (hasPath) Seq(col(PATH)) else Nil) ++ tagCols
+    val k = tagKind(label)
     val joined = df.select(keep: _*)
-      .join(g.vertices, col(HOP) === col("id")).drop(HOP)
-    copy(df = joined)
+      .join(verticesOf(k), col(HOP) === col("id")).drop(HOP)
+    moved(joined, edge = false, k)
   }
 
   /** Gremlin multi-label `select('a','b',…)` terminal: one row per
@@ -1028,21 +1135,24 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     var cur = df.select(labels.map(l => col(TAG + l).as(s"__sel_$l")): _*)
     labels.zipWithIndex.foreach { case (l, i) =>
       val by = if (bys.length == 1) bys.head else bys(i)
+      val tk = tagKind(l)
       by match {
         case Traversal.ByKey(k) =>
-          require(g.vertices.columns.contains(k),
+          require(g.vertexColumns.contains(k),
             s"select().by('$k'): no such vertex property")
-          val vk = g.vertices.select(col("id").as(s"__vid_$l"),
+          val vk = verticesOf(tk).select(col("id").as(s"__vid_$l"),
             col(k).as(s"__val_$l"))
           cur = cur.join(vk, col(s"__sel_$l") === col(s"__vid_$l"))
         case Traversal.BySubCount(sub) =>
           // origins = the DISTINCT tagged vertices (per-origin
           // semantics without per-row execution, same discipline as
           // project()'s count clauses)
-          val origin = copy(isEdge = false, df = g.vertices
+          val rows = verticesOf(tk)
             .join(df.select(col(TAG + l).as("id")).distinct(), "id")
             .withColumn(PATH, array(col("id")))
-            .withColumn(FCTX, lit(true)))
+            .withColumn(FCTX, lit(true))
+          val origin = new Traversal(g, () => rows, isEdge = false, tk,
+            Map.empty, whole = false)
           val pid = s"__pid_$l"
           val cnt = sub(origin).df
             .groupBy(element_at(col(PATH), 1).as(pid))
@@ -1058,10 +1168,10 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
   }
 
   def dedup(): Traversal =
-    if (isEdge) copy(df = df.dropDuplicates("src", "dst", "label", "sort_key"))
-    else copy(df = df.dropDuplicates("id"))
+    if (isEdge) kept(df.dropDuplicates("src", "dst", "label", "sort_key"))
+    else kept(df.dropDuplicates("id"))
 
-  def limit(n: Int): Traversal = copy(df = df.limit(n))
+  def limit(n: Int): Traversal = kept(df.limit(n))
 
   /** Gremlin range(lo, hi): skip the first `lo` travellers, keep the
     * next `hi − lo`. Deterministic after an order() step (Offset +
@@ -1070,14 +1180,14 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     */
   def range(lo: Int, hi: Int): Traversal = {
     require(0 <= lo && lo <= hi, s"range bounds must satisfy 0 <= lo <= hi")
-    copy(df = df.offset(lo).limit(hi - lo))
+    kept(df.offset(lo).limit(hi - lo))
   }
 
   /** Gremlin skip(n): drop the first n travellers. */
-  def skip(n: Int): Traversal = copy(df = df.offset(n))
+  def skip(n: Int): Traversal = kept(df.offset(n))
 
   def order(key: String, asc: Boolean = true): Traversal =
-    copy(df = df.orderBy(if (asc) col(key).asc else col(key).desc))
+    kept(df.orderBy(if (asc) col(key).asc else col(key).desc))
 
   /** terminal: bag of property values. */
   def values(key: String): DataFrame = df.select(col(key))
@@ -1116,9 +1226,9 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, isEdge: Boolean) {
     * reference gets from key presence in the serialized row).
     */
   def hasKey(key: String): Traversal =
-    copy(df = df.filter(col(key).isNotNull))
+    kept(df.filter(col(key).isNotNull))
   def hasNot(key: String): Traversal =
-    copy(df = df.filter(col(key).isNull))
+    kept(df.filter(col(key).isNull))
 
   /** terminal: COUNT — the one aggregate the reference pushes down
     * (R10, TikvTable.java:135-148).
@@ -1174,12 +1284,46 @@ object Traversal {
   private def filterEdges(e: DataFrame, ls: Seq[String]): DataFrame =
     if (ls.isEmpty) e else e.filter(col("label").isin(ls: _*))
 
-  def vertices(g: PropertyGraph): Traversal = Traversal(g, g.vertices, isEdge = false)
+  /** What a graph's schema proves about the elements a frontier can
+    * hold (see the class doc).
+    */
+  private[graph] sealed trait Kinds
+  /** Nothing proven: any element of the graph. */
+  private[graph] case object AnyKind extends Kinds
+  /** A vertex frontier whose labels are among `ls`. */
+  private[graph] final case class VertexKinds(ls: Set[String]) extends Kinds
+  /** An edge frontier whose edges are among `defs`; `otherIsDst` says
+    * which end `otherV` reads (dst after `outE`, src after `inE`).
+    */
+  private[graph] final case class EdgeKinds(defs: Seq[EdgeLabelDef],
+                                            otherIsDst: Boolean) extends Kinds
 
-  def vertexIds(g: PropertyGraph, ids: Seq[Long]): Traversal =
-    Traversal(g, g.vertices.filter(col("id").isin(ids: _*)), isEdge = false)
+  /** A frontier over any frame of `g`: nothing is proven about it. */
+  def apply(g: PropertyGraph, df: DataFrame, isEdge: Boolean): Traversal =
+    new Traversal(g, () => df, isEdge, AnyKind, Map.empty, whole = false)
 
-  def edges(g: PropertyGraph): Traversal = Traversal(g, g.edges, isEdge = true)
+  def vertices(g: PropertyGraph): Traversal =
+    new Traversal(g, () => g.vertices, isEdge = false,
+      g.schema.fold[Kinds](AnyKind)(s => VertexKinds(s.vertexLabels.map(_.name).toSet)),
+      Map.empty, whole = true)
+
+  /** `g.V(ids)`: ids are label-namespaced, so on a schema'd graph only
+    * the frames of the ids' label codes are read.
+    */
+  def vertexIds(g: PropertyGraph, ids: Seq[Long]): Traversal = g.schema match {
+    case Some(s) =>
+      val codes = ids.map(_ >> PropertyGraph.Shift).toSet
+      val ls = s.vertexLabels.filter(v => codes(v.code)).map(_.name).toSet
+      val rows = g.vertexFrames(ls).filter(col("id").isin(ids: _*))
+      new Traversal(g, () => rows, isEdge = false, VertexKinds(ls), Map.empty,
+        whole = false)
+    case None => Traversal(g, g.vertices.filter(col("id").isin(ids: _*)), isEdge = false)
+  }
+
+  def edges(g: PropertyGraph): Traversal =
+    new Traversal(g, () => g.edges, isEdge = true,
+      g.schema.fold[Kinds](AnyKind)(s => EdgeKinds(s.edgeLabels, otherIsDst = true)),
+      Map.empty, whole = true)
 
   /** Gremlin unfold() over a [[Traversal.foldIds]] list: explode the id
     * bag back to one traverser per element and re-hydrate full vertex

@@ -145,7 +145,10 @@ final case class GraphSchema(propertyKeys: Seq[PropertyKeyDef],
 
 object GraphSchema {
   /** The TPC-H property-graph schema (FIXTURES.md mapping) — the
-    * declaration matching graft.graph.PropertyGraph.fromTpch.
+    * catalog of graft.graph.PropertyGraph.fromTpch: its label codes,
+    * property types and one frame per vertex label and per edge def
+    * come from here, and graft.graph.Traversal maps each step's label
+    * set through the edge defs.
     */
   val tpch: GraphSchema = GraphSchema(
     propertyKeys = Seq(

@@ -16,6 +16,32 @@ class PlanSpec extends AnyFunSuite {
   private def exchanges(p: String): Int =
     "Exchange".r.findAllIn(p).length
 
+  /** The tables a registered query's physical plan scans, one entry per
+    * file scan (subqueries and broadcast sides included), sorted.
+    */
+  private def scans(q: String): Seq[String] = {
+    val p = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    aqe.collectWithSubqueries(p) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths
+    }.flatten.map(_.getName.stripSuffix(".parquet")).sorted
+  }
+
+  /** The tables a registered query's ANALYZED plan reads, one entry per
+    * relation, sorted: what Catalyst analyses and optimizes, before it
+    * prunes a union branch whose literal label fails a filter.
+    */
+  private def analyzed(q: String): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    SparkEntry.queries(q)(spark, dir).queryExecution.analyzed.collectWithSubqueries {
+      case r: LogicalRelation => r.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths
+        case _ => Nil
+      }
+    }.flatten.map(_.getName.stripSuffix(".parquet")).sorted
+  }
+
   test("r2 point get: filter pushed to parquet, schema pruned") {
     val p = plan("r2_point_get")
     assert(p.contains("PushedFilters: [IsNotNull(c_custkey), EqualTo(c_custkey,42)]"))
@@ -428,5 +454,28 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Join"), s"plan:\n$p")
     // the only exchange allowed is the orderBy's range partitioning
     assert(exchanges(p) <= 1, s"plan:\n$p")
+  }
+
+  test("g29 select back: reads only customer and orders") {
+    // the start, select('c') and the placed hop read per-label frames,
+    // not the six-table vertex union
+    assert(scans("g29_select_back").toSet == Set("customer", "orders"))
+  }
+
+  test("g27 parsed group: reads only supplier and nation") {
+    assert(scans("g27_parsed_group").toSet == Set("supplier", "nation"))
+  }
+
+  test("g32 parsed sum: reads only part") {
+    // the six-branch union's other five scans were pruned by the
+    // optimizer, but only after it analysed and optimized them
+    assert(scans("g32_parsed_sum") == Seq("part"))
+    assert(analyzed("g32_parsed_sum") == Seq("part"))
+  }
+
+  test("g33 has-not: a label-free step reads the full vertex union, " +
+       "and no edge source") {
+    assert(scans("g33_has_not") ==
+      Seq("customer", "nation", "orders", "part", "region", "supplier"))
   }
 }

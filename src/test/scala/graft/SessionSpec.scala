@@ -13,7 +13,9 @@ class SessionSpec extends AnyFunSuite {
     assert(conf.get("spark.kryo.classesToRegister")
       .contains("org.apache.spark.graphx.Edge"))
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
-    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    // every table read declares its schema (Tables.schemas), so no read
+    // needs nanosecond parquet timestamps mapped to longs
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.sparkContext.getCheckpointDir.nonEmpty)
   }
