@@ -1,125 +1,176 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Loop
 
-/** GraphX bridge — the analytics layer the reference exposes only
-  * indirectly through its OLAP split generator (R14,
-  * TikvTable.java:284-336): external engines were expected to
-  * shard-read the whole graph and run algorithms elsewhere
+/** Graph analytics over the property graph's DataFrames — the layer
+  * the reference exposes only indirectly through its OLAP split
+  * generator (R14, TikvTable.java:284-336): external engines were
+  * expected to shard-read the whole graph and run algorithms elsewhere
   * (hugegraph-computer). Here the engine IS Spark, so the splits
   * operator dissolves into native partitioning and the algorithms run
-  * in-process on GraphX (BASELINE.json spark_approach).
+  * in-process (BASELINE.json spark_approach).
   *
-  * Iterative algorithms are the one place RDDs beat DataFrames
-  * (SURVEY §4.2.2): Pregel keeps per-superstep state off the driver
-  * and avoids re-planning a growing DataFrame lineage each iteration.
+  * Every iterative algorithm is a vertex program kept inside the
+  * relational dataflow (Pregelix): a DataFrame fixpoint on
+  * [[graft.util.Loop]], whose loop-invariant frames persist once and
+  * whose narrow per-round state rolls through eager checkpoints, so a
+  * round is one shallow job however many rounds run.
   */
 object Algorithms {
 
-  /** Edge list of the property graph (optionally label-filtered) as a
-    * GraphX edge RDD with unit attributes.
-    */
-  def edgeRdd(g: PropertyGraph, labels: Seq[String] = Nil): RDD[Edge[Int]] = {
-    val e = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
-    e.select(col("src"), col("dst")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-  }
-
-  def toGraphX(g: PropertyGraph, labels: Seq[String] = Nil): Graph[Int, Int] =
-    Graph.fromEdges(edgeRdd(g, labels), defaultValue = 0)
-
-  /** Materialize an algorithm's (small) result and release the cached
-    * GraphX graphs that produced it. `Graph.fromEdges`/Pregel cache
-    * vertex+edge RDDs at MEMORY_ONLY and never free them on their own;
-    * in a long-lived session (the bench runs ~100 queries ×3 in one
-    * JVM) the leaked blocks pile up until GC pressure taxes every
-    * later query. The result is localCheckpoint'ed first so the
-    * unpersist cannot force a recompute; its own (result-sized) blocks
-    * are released by the ContextCleaner once the frame is unreferenced.
-    */
-  private def finish(df: DataFrame, graphs: Graph[_, _]*): DataFrame = {
-    val out = df.localCheckpoint(eager = true)
-    graphs.foreach(_.unpersist(blocking = false))
-    out
-  }
-
   /** degrees (parallel edges counted, as in the reference's dual edge
     * tables where each adjacency row is its own KV; zero-degree
-    * vertices omitted, matching GraphX `Graph.degrees`).
+    * vertices omitted).
     *
-    * Pure DataFrame: one union + one codegen'd hash aggregate with
-    * map-side partials — no GraphX graph construction, no RDD caching.
-    * The GraphX path measured 3.0s at sf0.1 for what is a sub-second
-    * single-shuffle aggregation; at 100 TB this shape shuffles only
-    * (id, partial_count) pairs.
+    * One union + one codegen'd hash aggregate with map-side partials;
+    * at 100 TB this shape shuffles only (id, partial_count) pairs.
     */
   def degrees(s: SparkSession, g: PropertyGraph, labels: Seq[String] = Nil): DataFrame = {
-    val all = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val all = g.edgesOf(labels)
     all.select(col("src").as("id")).union(all.select(col("dst").as("id")))
       .groupBy(col("id"))
       .agg(count(lit(1)).cast("int").as("degree"))
   }
 
-  /** static PageRank, fixed iteration count for determinism. */
-  def pageRank(s: SparkSession, g: PropertyGraph, iters: Int = 10): DataFrame = {
-    import s.implicits._
-    val graph = toGraphX(g)
-    val ranked = graph.staticPageRank(iters)
-    finish(ranked.vertices.toDF("id", "rank"), graph, ranked)
-  }
-
-  /** connected components (undirected reachability; component id = min
-    * vertex id, so output is deterministic). Built from the EXPLICIT
-    * vertex set, not Graph.fromEdges: an isolated vertex (e.g. a part
-    * no lineitem references) is its own singleton component, which
-    * fromEdges would silently drop.
+  /** Static PageRank in doubles over the endpoints of all edges: every
+    * rank starts at 1.0, each round sets r' = 0.15 + 0.85·Σ r·(1/outdeg)
+    * over the in-edges (parallel edges counted), and after `iters`
+    * rounds the ranks are scaled to sum to n — GraphX's staticPageRank.
+    * Double sums depend on the reduce order, so values agree across
+    * engines only up to the last bits; [[pageRankExact]] is the
+    * bit-exact variant. Same loop shape as pageRankExact: the
+    * degree-annotated edges cached pre-partitioned on src, the
+    * constant no-in-edge frame, cadence 5.
     */
-  def connectedComponents(s: SparkSession, g: PropertyGraph): DataFrame = {
-    import s.implicits._
-    val verts = g.vertices.select(col("id")).rdd.map(r => (r.getLong(0), 0))
-    val graph = Graph(verts, edgeRdd(g), defaultVertexAttr = 0)
-    val cc = org.apache.spark.graphx.lib.ConnectedComponents.run(graph)
-    finish(cc.vertices.toDF("id", "component"), graph, cc)
+  def pageRank(s: SparkSession, g: PropertyGraph, iters: Int = 10): DataFrame = {
+    val ranks = Loop.cached { c =>
+      val (edges, n) = c.counted(g.edges.select(col("src"), col("dst")))
+      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+      val edgesDeg = c(edges.join(outdeg, "src")
+        .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("inv"))
+        .repartition(Loop.parts(s, n), col("src")))
+      val verts = c(edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct())
+      val noIn = c(verts
+        .join(edgesDeg.select(col("dst").as("id")), Seq("id"), "left_anti")
+        .select(col("id"), lit(0.15).as("rank")))
+      Loop.run(verts.select(col("id"), lit(1.0).as("rank")), iters,
+          every = 5) { (r, _) =>
+        edgesDeg
+          .join(r.select(col("id").as("src"), col("rank"))
+            .hint("shuffle_hash"), "src")
+          .groupBy(col("dst").as("id")).agg(sum(col("rank") * col("inv")).as("m"))
+          .select(col("id"), (lit(0.15) + lit(0.85) * col("m")).as("rank"))
+          .unionByName(noIn)
+      }.state
+    }
+    val t = ranks.agg(count(lit(1)), sum(col("rank"))).head()
+    if (t.isNullAt(1)) ranks
+    else ranks.select(col("id"),
+      (col("rank") * lit(t.getLong(0).toDouble / t.getDouble(1))).as("rank"))
   }
 
-  /** Neighborhood aggregation via GraphX aggregateMessages — the
-    * Pregel substrate exposed directly: per destination vertex, count
-    * and integer-cents sum of an edge property over incident edges
-    * (exact, so the relational oracle matches bit-for-bit).
+  /** Connected components, DataFrame-first with DELTA-FRONTIER min-label
+    * propagation: per round, only labels that CHANGED last round join
+    * the adjacency, so total join volume is Σ(edges incident to each
+    * round's delta) — not rounds × |E| like a full-state formulation
+    * (the round-6 shape, 12.7s at sf0.1). Once a region's labels
+    * settle, its edges are never touched again. Component id = min
+    * vertex id; the vertex set is the graph's explicit one, so an
+    * isolated vertex (e.g. a part no lineitem references) is its own
+    * singleton component.
+    *
+    * Correctness of the delta restriction: labels are monotone
+    * non-increasing and every label drop enters that round's delta, so
+    * any improvement a neighbor could offer is offered the round after
+    * it happens; an empty delta therefore witnesses the GLOBAL fixpoint
+    * (for every edge (u,v): comp(u)=comp(v), hence comp is constant per
+    * component, and since every comp value is a member id it equals the
+    * min member id). Labels only fall and are bounded below, so the
+    * loop always ends: it runs until the delta is empty, with no round
+    * cap.
+    *
+    * Scale shape: adjacency persisted pre-partitioned on the join key
+    * (each round shuffles only the narrow delta + its candidate
+    * output), per-round state localCheckpoint'ed. Rounds are bounded by
+    * the min vertex's eccentricity per component (BFS flooding); on
+    * real-world short-diameter graphs late rounds touch a vanishing
+    * frontier.
+    */
+  def connectedComponents(s: SparkSession, g: PropertyGraph): DataFrame =
+    Loop.cached { c =>
+      // no undirectedDistinct here: MIN-aggregation is idempotent under
+      // duplicate/parallel/reversed edges, so the dedup shuffle would buy
+      // nothing. Symmetrize in ONE pass over the (expensive, multi-table)
+      // edge subtree via explode — a union would evaluate it twice — and
+      // pre-partition on the round join key.
+      val adj = c(g.edges.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst"))
+        .select(explode(array(
+          struct(col("src").as("v"), col("dst").as("n")),
+          struct(col("dst").as("v"), col("src").as("n")))).as("e"))
+        .select(col("e.v").as("v"), col("e.n").as("n"))
+        .repartition(col("n")))
+      // the seed is the identity labeling; rounds carry __chg, so round 0
+      // has no delta to test
+      Loop.run(g.vertices.select(col("id")).distinct()
+          .select(col("id"), col("id").as("comp")), Int.MaxValue,
+          stop = (st: DataFrame, k: Int) => k > 0 && st.filter(col("__chg")).isEmpty) {
+          (st, k) =>
+        if (k == 1) {
+          // round 1 on the identity labeling needs no join at all:
+          // min neighbor id IS the candidate (comp(id) = id) — one
+          // aggregation replaces the heaviest (all-vertices) delta round
+          st.join(adj.groupBy(col("v")).agg(min(col("n")).as("cand"))
+                .select(col("v").as("id"), col("cand")).hint("shuffle_hash"),
+              Seq("id"), "left")
+            .select(col("id"),
+              least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"),
+              (coalesce(col("cand"), col("comp")) < col("comp")).as("__chg"))
+        } else ccAltRound(adj, st.select(col("id"), col("comp")),
+          st.filter(col("__chg")).select(col("id"), col("comp")))
+      }.state.select(col("id"), col("comp").as("component"))
+    }
+
+  /** One delta round of [[connectedComponents]]: label candidates
+    * flow ONLY out of `delta` — the (id, comp) rows whose label fell
+    * last round — into their graph neighbors; every other vertex costs
+    * nothing this round. Returns (id, comp, __chg) where __chg marks
+    * rows whose label fell (next round's delta). private[graft] so the
+    * spec can pin the delta contract directly: a better label sitting
+    * in `lab` but absent from `delta` must NOT propagate.
+    */
+  private[graft] def ccAltRound(adj: DataFrame, lab: DataFrame,
+                                delta: DataFrame): DataFrame = {
+    // shuffle_hash hints: an SMJ would re-SORT the (large, cached)
+    // adjacency and the label state every round — measured 0.9s/round
+    // at sf0.1 even with a ~2k-row delta. Hash joins build from the
+    // small per-round side and stream the cached side, and the cache's
+    // hash partitioning (repartition(n) / previous round's id-join)
+    // still elides the big side's exchange.
+    val cand = adj.join(
+        delta.select(col("id").as("n"), col("comp")).hint("shuffle_hash"), "n")
+      .groupBy(col("v")).agg(min(col("comp")).as("cand"))
+      .select(col("v").as("id"), col("cand"))
+    lab.join(cand.hint("shuffle_hash"), Seq("id"), "left")
+      .select(col("id"),
+        least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"),
+        (coalesce(col("cand"), col("comp")) < col("comp")).as("__chg"))
+  }
+
+  /** Per destination vertex of the `label` edges: the edge count and
+    * the sum of an edge property, summed in integer cents so the
+    * relational oracle matches bit-for-bit. One hash aggregate.
     */
   def neighborEdgeSum(s: SparkSession, g: PropertyGraph, label: String,
-                      prop: String): DataFrame = {
-    import s.implicits._
-    val e = g.edges.filter(col("label") === label)
-      .select(col("src"), col("dst"),
-        (org.apache.spark.sql.functions.round(col(prop) * 100)).cast("long").as("cents"))
-      .rdd.map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), r.getLong(2)))
-    val graph = Graph.fromEdges(e, defaultValue = 0)
-    val agg = graph.aggregateMessages[(Long, Long)](
-        ctx => ctx.sendToDst((1L, ctx.attr)),
-        (a, b) => (a._1 + b._1, a._2 + b._2))
-      .map { case (id, (n, cents)) => (id, n, cents / 100.0) }
-      .toDF("id", "n_edges", "prop_sum")
-    finish(agg, graph)
-  }
-
-  /** triangle count per vertex (GraphX canonicalizes direction).
-    * Graph must be partitioned for triangleCount's requirements.
-    */
-  def triangleCounts(s: SparkSession, g: PropertyGraph,
-                     labels: Seq[String] = Nil): DataFrame = {
-    import s.implicits._
-    val graph = toGraphX(g, labels)
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
-    val tc = graph.triangleCount()
-    finish(tc.vertices.toDF("id", "triangles"), graph, tc)
-  }
+                      prop: String): DataFrame =
+    g.edgesOf(Seq(label))
+      .groupBy(col("dst").as("id"))
+      .agg(count(lit(1)).as("n_edges"),
+        sum(round(col(prop) * 100).cast("long")).as("cents"))
+      .select(col("id"), col("n_edges"), (col("cents") / 100.0).as("prop_sum"))
 
   /** Total triangle count, DataFrame-first (compact-forward):
     * canonicalize to undirected distinct edges, orient every edge from
@@ -129,15 +180,14 @@ object Algorithms {
     * out-degree by O(√m), so wedge volume is Σ outdeg² ≤ m^1.5 —
     * immune to the hub-degree blowup of id-ordered wedges — and all
     * state lives in narrow shuffled pairs (AQE-splittable), never in
-    * per-vertex neighbor sets like GraphX's triangleCount. Each
-    * triangle is counted exactly once at its lowest-order corner.
-    * Also reports the non-isolated vertex count (= the GraphX graph's
-    * vertex set).
+    * per-vertex neighbor sets. Each triangle is counted exactly once
+    * at its lowest-order corner. Also reports the vertex count: the
+    * declared vertex set unfiltered, the endpoints of the selected
+    * edges under a label filter.
     */
   def triangleTotal(s: SparkSession, g: PropertyGraph,
                     labels: Seq[String] = Nil): DataFrame = {
-    val all = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val all = g.edgesOf(labels)
     // e is NOT persisted here: its two consumers (degree agg + the
     // orientation join) sit in one query, where exchange reuse already
     // dedupes the distinct — caching it only added materialization
@@ -167,7 +217,7 @@ object Algorithms {
     * twice and leaves deduplication to Catalyst's exchange reuse —
     * which only fires when a shuffle (e.g. the distinct) happens to
     * sit at the subtree root; a raw scan union runs twice
-    * (connectedComponentsAlt measured that cost). Explode duplicates
+    * (the connectedComponents adjacency measured that cost). Explode duplicates
     * each row map-side, making single evaluation structural rather
     * than an optimizer accident.
     */
@@ -244,8 +294,7 @@ object Algorithms {
     */
   def pageRankExact(s: SparkSession, g: PropertyGraph, labels: Seq[String] = Nil,
                     iters: Int = 10): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     Loop.cached { c =>
       val (edges, n) = c.counted(e0.select(col("src"), col("dst")))
       val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
@@ -305,8 +354,7 @@ object Algorithms {
   def pageRankWeightedExact(s: SparkSession, g: PropertyGraph,
       weight: org.apache.spark.sql.Column, labels: Seq[String] = Nil,
       iters: Int = 10): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     Loop.cached { c =>
       val (ew, n) = c.counted(e0.select(col("src"), col("dst"))
         .withColumn("w", weight.cast("long"))
@@ -357,8 +405,7 @@ object Algorithms {
     */
   def eigenvectorExact(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, iters: Int = 10): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     Loop.cached { c =>
       val (sym, n) = c.counted(e0.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst"))
@@ -426,8 +473,7 @@ object Algorithms {
     */
   def hitsExact(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, iters: Int = 8): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     Loop.cached { c =>
       val (e, n) = c.counted(e0.select(col("src"), col("dst")))
       if (n == 0L) e.select(col("src").as("id"), lit(0L).as("hub"),
@@ -557,8 +603,7 @@ object Algorithms {
   def randomWalks(s: SparkSession, g: PropertyGraph, seeds: DataFrame,
       labels: Seq[String] = Nil, steps: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     val adj = symmetrize(undirectedDistinct(e0))
     val w = Window.partitionBy(col("v")).orderBy(col("n"))
     Loop.cached { c =>
@@ -613,8 +658,7 @@ object Algorithms {
     */
   def greedyColoring(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, iters: Int = 16): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     val und = undirectedDistinct(e0)
     def pr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       (c % 1000003L) * lit(2654435761L) + c % 97L
@@ -698,98 +742,6 @@ object Algorithms {
     (r.state.select(col("id"), col("level")), r.converged)
   }
 
-  /** One delta round of [[connectedComponentsAlt]]: label candidates
-    * flow ONLY out of `delta` — the (id, comp) rows whose label fell
-    * last round — into their graph neighbors; every other vertex costs
-    * nothing this round. Returns (id, comp, __chg) where __chg marks
-    * rows whose label fell (next round's delta). private[graft] so the
-    * spec can pin the delta contract directly: a better label sitting
-    * in `lab` but absent from `delta` must NOT propagate.
-    */
-  private[graft] def ccAltRound(adj: DataFrame, lab: DataFrame,
-                                delta: DataFrame): DataFrame = {
-    // shuffle_hash hints: an SMJ would re-SORT the (large, cached)
-    // adjacency and the label state every round — measured 0.9s/round
-    // at sf0.1 even with a ~2k-row delta. Hash joins build from the
-    // small per-round side and stream the cached side, and the cache's
-    // hash partitioning (repartition(n) / previous round's id-join)
-    // still elides the big side's exchange.
-    val cand = adj.join(
-        delta.select(col("id").as("n"), col("comp")).hint("shuffle_hash"), "n")
-      .groupBy(col("v")).agg(min(col("comp")).as("cand"))
-      .select(col("v").as("id"), col("cand"))
-    lab.join(cand.hint("shuffle_hash"), Seq("id"), "left")
-      .select(col("id"),
-        least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"),
-        (coalesce(col("cand"), col("comp")) < col("comp")).as("__chg"))
-  }
-
-  /** Connected components, DataFrame-first with DELTA-FRONTIER min-label
-    * propagation: per round, only labels that CHANGED last round join
-    * the adjacency, so total join volume is Σ(edges incident to each
-    * round's delta) — not rounds × |E| like a full-state formulation
-    * (the round-6 shape, 12.7s at sf0.1 vs GraphX's 3.8s on the same
-    * graph). Once a region's labels settle, its edges are never touched
-    * again. Output contract matches GraphX CC exactly: component id =
-    * min vertex id, isolated vertices are singletons (explicit vertex
-    * set).
-    *
-    * Correctness of the delta restriction: labels are monotone
-    * non-increasing and every label drop enters that round's delta, so
-    * any improvement a neighbor could offer is offered the round after
-    * it happens; an empty delta therefore witnesses the GLOBAL fixpoint
-    * (for every edge (u,v): comp(u)=comp(v), hence comp is constant per
-    * component, and since every comp value is a member id it equals the
-    * min member id). Non-convergence within maxIter fails loudly.
-    *
-    * Scale shape: adjacency persisted pre-partitioned on the join key
-    * (each round shuffles only the narrow delta + its candidate
-    * output), per-round state localCheckpoint'ed — same loop mechanics
-    * as dagLayers' frontier. Rounds are bounded by the min vertex's
-    * eccentricity per component (BFS flooding); for extreme-diameter
-    * graphs the GraphX path ([[connectedComponents]]) or a pointer-jump
-    * round (O(log d) full-state rounds) is the alternative — on
-    * real-world short-diameter graphs the delta formulation strictly
-    * dominates because late rounds touch a vanishing frontier.
-    */
-  def connectedComponentsAlt(s: SparkSession, g: PropertyGraph,
-                             maxIter: Int = 50): DataFrame = Loop.cached { c =>
-    // no undirectedDistinct here: MIN-aggregation is idempotent under
-    // duplicate/parallel/reversed edges, so the dedup shuffle would buy
-    // nothing. Symmetrize in ONE pass over the (expensive, multi-table)
-    // edge subtree via explode — a union would evaluate it twice — and
-    // pre-partition on the round join key.
-    val adj = c(g.edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(explode(array(
-        struct(col("src").as("v"), col("dst").as("n")),
-        struct(col("dst").as("v"), col("src").as("n")))).as("e"))
-      .select(col("e.v").as("v"), col("e.n").as("n"))
-      .repartition(col("n")))
-    // the seed is the identity labeling; rounds carry __chg, so round 0
-    // has no delta to test
-    val r = Loop.run(g.vertices.select(col("id")).distinct()
-        .select(col("id"), col("id").as("comp")), maxIter,
-        stop = (st: DataFrame, k: Int) => k > 0 && st.filter(col("__chg")).isEmpty) {
-        (st, k) =>
-      if (k == 1) {
-        // round 1 on the identity labeling needs no join at all:
-        // min neighbor id IS the candidate (comp(id) = id) — one
-        // aggregation replaces the heaviest (all-vertices) delta round
-        st.join(adj.groupBy(col("v")).agg(min(col("n")).as("cand"))
-              .select(col("v").as("id"), col("cand")).hint("shuffle_hash"),
-            Seq("id"), "left")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"),
-            (coalesce(col("cand"), col("comp")) < col("comp")).as("__chg"))
-      } else ccAltRound(adj, st.select(col("id"), col("comp")),
-        st.filter(col("__chg")).select(col("id"), col("comp")))
-    }
-    require(r.converged,
-      s"connectedComponentsAlt did not converge in $maxIter rounds")
-    r.state.select(col("id"), col("comp"))
-  }
-
   /** Personalized PageRank, exact integer units — [[pageRankExact]]
     * with the restart mass concentrated on the seed set: a seed
     * re-injects 150000 units each round (and starts with the full
@@ -804,8 +756,7 @@ object Algorithms {
   def personalizedPageRankExact(s: SparkSession, g: PropertyGraph,
                                 seeds: DataFrame, labels: Seq[String] = Nil,
                                 iters: Int = 10): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     Loop.cached { c =>
       val (edges, n) = c.counted(e0.select(col("src"), col("dst")))
       val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
@@ -847,8 +798,8 @@ object Algorithms {
     * of the fixed `iters` rounds relabels every vertex to its
     * neighbors' most frequent label, ties broken toward the SMALLEST
     * label — so the result is bit-stable across engines, partition
-    * counts, and reduce orders, unlike GraphX's LabelPropagation
-    * (whose tie-break follows hash-map iteration order). Isolated
+    * counts, and reduce orders, unlike a LabelPropagation whose
+    * tie-break follows hash-map iteration order. Isolated
     * vertices keep their own label (singleton communities).
     *
     * Per round: one narrow (v, n) adjacency join against the (id,
@@ -886,8 +837,7 @@ object Algorithms {
     */
   def louvainLevel1(s: SparkSession, g: PropertyGraph, rounds: Int = 6,
                     labels: Seq[String] = Nil): DataFrame = {
-    val all = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val all = g.edgesOf(labels)
     Loop.cached { c =>
       val (und, nUnd) = c.counted(undirectedDistinct(all))
       val sym = c(symmetrize(und).repartition(col("n")))
@@ -936,8 +886,7 @@ object Algorithms {
 
   def labelPropagation(s: SparkSession, g: PropertyGraph, iters: Int = 4,
                        labels: Seq[String] = Nil): DataFrame = {
-    val all = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val all = g.edgesOf(labels)
     Loop.cached { c =>
       // persisted PRE-PARTITIONED on the join key: every round's
       // adjacency-side shuffle disappears (InMemoryTableScan keeps the
@@ -1005,8 +954,7 @@ object Algorithms {
     */
   def kCoreStatus(s: SparkSession, g: PropertyGraph, k: Int,
             labels: Seq[String] = Nil, maxRounds: Int = 30): (DataFrame, Boolean) = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     val r = Loop.cached { c =>
       // distinct over the canonical (a<b) pairs, then explode to both
       // directions map-side — the previous shape deduped the DOUBLED
@@ -1029,7 +977,9 @@ object Algorithms {
   /** Multi-source BFS hop distances: ONE distributed loop carries all
     * seeds at once — frontier state is narrow (seed, id) pairs, so k
     * sources cost one BFS whose volume is ≤ k× the single-source scan,
-    * not k sequential Pregel runs (each with its own graph build).
+    * not k sequential single-source runs. The BFS runs until the
+    * frontier is empty; `maxDepth` is a k-hop limit for callers that
+    * want one (kout, crosspoints), never a silent cap.
     * Per round: one join against the (persisted, narrow) edge list,
     * one distinct, one anti-join against the visited set — all keyed
     * shuffles of 16-byte rows. Same loop mechanics as
@@ -1037,10 +987,9 @@ object Algorithms {
     */
   def multiSourceHops(s: SparkSession, g: PropertyGraph, seeds: Seq[Long],
                       labels: Seq[String] = Nil, reverse: Boolean = false,
-                      maxDepth: Int = 30): DataFrame = {
+                      maxDepth: Int = Int.MaxValue): DataFrame = {
     import s.implicits._
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     val dirEdges = if (reverse)
       e0.select(col("dst").as("src"), col("src").as("dst"))
     else e0.select(col("src"), col("dst"))
@@ -1126,9 +1075,8 @@ object Algorithms {
     * is the standard sampled-diameter estimator at scale.
     */
   def eccentricity(s: SparkSession, g: PropertyGraph, seeds: Seq[Long],
-                   labels: Seq[String] = Nil, reverse: Boolean = false,
-                   maxDepth: Int = 30): DataFrame =
-    multiSourceHops(s, g, seeds, labels, reverse, maxDepth)
+                   labels: Seq[String] = Nil, reverse: Boolean = false): DataFrame =
+    multiSourceHops(s, g, seeds, labels, reverse)
       .groupBy(col("seed").as("id"))
       .agg(max(col("dist")).as("ecc"),
         sum(when(col("dist") > 0, lit(1L)).otherwise(lit(0L))).as("n_reachable"))
@@ -1153,8 +1101,7 @@ object Algorithms {
     */
   def katzExact(s: SparkSession, g: PropertyGraph,
                 labels: Seq[String] = Nil, iters: Int = 6): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     Loop.cached { c =>
       val (src, n) = c.counted(e0.select(col("src"), col("dst")))
       val edges = c(src.repartition(Loop.parts(s, n), col("src"))) // see pageRankExact
@@ -1208,8 +1155,7 @@ object Algorithms {
     */
   def maximalIndependentSet(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, maxRounds: Int = 6): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     Loop.cached { c =>
       val sym = c(symmetrize(undirectedDistinct(e0)).repartition(col("n")))
       val mis = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -1257,8 +1203,7 @@ object Algorithms {
     */
   def maximalMatching(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, maxRounds: Int = 8): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     val matched = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // state: the undecided (a, b, pr) edge set — done when it is empty
     val r = Loop.run(undirectedDistinct(e0)
@@ -1315,8 +1260,7 @@ object Algorithms {
   def simRankExact(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, iters: Int = 3,
       finalize: DataFrame => DataFrame = identity): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e0 = g.edgesOf(labels)
     Loop.cached { c =>
       val (e, nE) = c.counted(e0.select(col("src"), col("dst")).distinct())
       val verts = e.select(col("src").as("id"))
@@ -1451,8 +1395,7 @@ object Algorithms {
   def assortativity(s: SparkSession, g: PropertyGraph,
                     labels: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val all = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val all = g.edgesOf(labels)
     val und = undirectedDistinct(all).persist(MEMORY_AND_DISK)
     try {
       val deg = degreesOf(und)
@@ -1485,8 +1428,7 @@ object Algorithms {
     */
   def clusteringCoefficient(s: SparkSession, g: PropertyGraph,
                             labels: Seq[String] = Nil): DataFrame = {
-    val all = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val all = g.edgesOf(labels)
     // one persisted canonical edge list + one degree frame feed BOTH
     // the wedge count and the triangle closure (pre-round-6 this query
     // rebuilt the lineitem-wide distinct twice — 15s vs triangles' 6.6s
@@ -1509,57 +1451,73 @@ object Algorithms {
     } finally e.unpersist(blocking = false)
   }
 
-  /** single-source shortest hop-distance via Pregel. `reverse` follows
-    * edges dst→src (e.g. region → its nations → their customers).
+  /** Single-source shortest hop distances: [[multiSourceHops]] with
+    * one seed, so the BFS runs until its frontier is empty. `reverse`
+    * follows edges dst→src (e.g. region → its nations → their
+    * customers). Returns (id, dist) over the endpoints of the selected
+    * edges: a source on no such edge has no row.
     */
-  def ssspHops(s: SparkSession, g: PropertyGraph, source: VertexId,
-               labels: Seq[String] = Nil, reverse: Boolean = false): DataFrame = {
-    import s.implicits._
-    val base = toGraphX(g, labels)
-    val graph0 = (if (reverse) base.reverse else base)
-      .mapVertices((id, _) => if (id == source) 0.0 else Double.PositiveInfinity)
-    val res = graph0.pregel(Double.PositiveInfinity)(
-      (_, dist, msg) => math.min(dist, msg),
-      triplet =>
-        if (triplet.srcAttr + 1.0 < triplet.dstAttr)
-          Iterator((triplet.dstId, triplet.srcAttr + 1.0))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
-    finish(res.vertices.filter(_._2 < Double.PositiveInfinity)
-      .mapValues(_.toLong).toDF("id", "dist"), base, graph0, res)
-  }
+  def ssspHops(s: SparkSession, g: PropertyGraph, source: Long,
+               labels: Seq[String] = Nil, reverse: Boolean = false): DataFrame =
+    ifEndpoint(g, source, labels,
+      multiSourceHops(s, g, Seq(source), labels, reverse)
+        .select(col("id"), col("dist")))
 
-  /** Weighted single-source shortest path (non-negative integer
-    * weights) via Pregel — Bellman-Ford supersteps, min-combined
-    * messages, converges when no distance improves. Distances stay in
-    * exact Long arithmetic, so results are engine-portable (no float
+  /** Weighted single-source shortest path: a delta-frontier
+    * Bellman-Ford on [[graft.util.Loop]]. Per round only the vertices
+    * whose distance fell last round relax their out-edges (one join
+    * against the cached adjacency + one min-aggregate), and the loop
+    * stops when no distance improves. Distances stay in exact Long
+    * arithmetic, so results are engine-portable (no float
     * accumulation). `weight` is any Column over the edge table's
-    * (src, dst, properties…) — evaluated once, before the RDD bridge,
-    * so the cost per edge is one codegen'd projection.
+    * (src, dst, properties…), evaluated on the stored orientation
+    * before `reverse` flips it; every selected edge must carry a
+    * non-null, non-negative weight — the run fails with a message
+    * otherwise, since a dropped edge would silently lengthen paths and
+    * a negative cycle would never stop improving. Returns (id, dist)
+    * over the endpoints of the selected edges: a source on no such
+    * edge has no row.
     */
-  def ssspWeighted(s: SparkSession, g: PropertyGraph, source: VertexId,
+  def ssspWeighted(s: SparkSession, g: PropertyGraph, source: Long,
                    weight: org.apache.spark.sql.Column,
                    labels: Seq[String] = Nil,
                    reverse: Boolean = false): DataFrame = {
-    import s.implicits._
-    val e0 = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
-    val er = e0.select(col("src"), col("dst"), weight.cast("long").as("w"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getLong(2)))
-    val base = Graph.fromEdges(er, 0L)
-    val graph0 = (if (reverse) base.reverse else base)
-      .mapVertices((id, _) => if (id == source) 0L else Long.MaxValue)
-    val res = graph0.pregel(Long.MaxValue)(
-      (_, dist, msg) => math.min(dist, msg),
-      triplet =>
-        if (triplet.srcAttr != Long.MaxValue
-            && triplet.srcAttr + triplet.attr < triplet.dstAttr)
-          Iterator((triplet.dstId, triplet.srcAttr + triplet.attr))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
-    finish(res.vertices.filter(_._2 != Long.MaxValue).toDF("id", "dist"),
-      base, graph0, res)
+    val w = weight.cast("long")
+    val dists = Loop.cached { c =>
+      val we = g.edgesOf(labels).select(col("src"), col("dst"),
+        when(w.isNull || w < 0, raise_error(lit(
+          "ssspWeighted: edge weights must be non-null and non-negative")))
+          .otherwise(w).as("w"))
+      val edges = c((if (reverse)
+          we.select(col("dst").as("src"), col("src").as("dst"), col("w"))
+        else we).repartition(col("src")))
+      Loop.run(s.range(1).select(lit(source).as("id"), lit(0L).as("dist"),
+          lit(true).as("__chg")), Int.MaxValue,
+          stop = Loop.whenEmpty(_.filter(col("__chg")))) { (st, _) =>
+        val cand = edges
+          .join(st.filter(col("__chg")).select(col("id").as("src"), col("dist"))
+            .hint("shuffle_hash"), "src")
+          .groupBy(col("dst").as("id")).agg(min(col("dist") + col("w")).as("cand"))
+        st.select(col("id"), col("dist"))
+          .join(cand.hint("shuffle_hash"), Seq("id"), "full")
+          .select(col("id"), least(col("dist"), col("cand")).as("dist"),
+            (col("cand").isNotNull &&
+              (col("dist").isNull || col("cand") < col("dist"))).as("__chg"))
+      }.state.select(col("id"), col("dist"))
+    }
+    ifEndpoint(g, source, labels, dists)
   }
+
+  /** `dists` when `source` is an endpoint of an edge in `labels`, else
+    * no rows: the vertex set of a selected-edge graph is its edges'
+    * endpoints, so a source on none of them is not in it (every other
+    * row a search emits was reached over an edge).
+    */
+  private def ifEndpoint(g: PropertyGraph, source: Long, labels: Seq[String],
+                         dists: DataFrame): DataFrame =
+    dists.join(g.edgesOf(labels)
+      .filter(col("src") === source || col("dst") === source).limit(1),
+      lit(true), "left_semi")
 
   /** Neighborhood Jaccard similarity from a seed vertex — the
     * HugeGraph `jaccardsimilarity` traversal API (hugegraph-api
@@ -1775,8 +1733,7 @@ object Algorithms {
   def betweenness(s: SparkSession, g: PropertyGraph,
       labels: Seq[String] = Nil, seeds: Option[DataFrame] = None,
       maxDepth: Int = 20): DataFrame = {
-    val e = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e = g.edgesOf(labels)
     Loop.cached { c =>
       val adj = c(symmetrize(undirectedDistinct(e)).repartition(col("v")))
       val verts = adj.select(col("v").as("id")).distinct()
@@ -1849,8 +1806,7 @@ object Algorithms {
 
   def jaccardSimilarity(s: SparkSession, g: PropertyGraph, seed: Long,
                         labels: Seq[String] = Nil): DataFrame = {
-    val e = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e = g.edgesOf(labels)
     val adj = symmetrize(undirectedDistinct(e))
     val seedN = adj.filter(col("v") === seed).select(col("n"))
     val inter = adj.join(broadcast(seedN), "n")
@@ -1889,8 +1845,7 @@ object Algorithms {
   def pairShortestPath(s: SparkSession, g: PropertyGraph, source: Long,
                        target: Long, labels: Seq[String] = Nil,
                        maxDepth: Int = 4): DataFrame = {
-    val e = if (labels.isEmpty) g.edges
-    else g.edges.filter(col("label").isin(labels: _*))
+    val e = g.edgesOf(labels)
     Loop.cached { c =>
       val adj = c(symmetrize(undirectedDistinct(e)))
       var visited = s.range(1).select(lit(source).as("id"),
@@ -2161,7 +2116,7 @@ object Algorithms {
                          maxDeg: Long = 1000000L,
                          reversed: Boolean = false): DataFrame = {
     val (pSide, zSide) = if (reversed) ("dst", "src") else ("src", "dst")
-    val e = g.edges.filter(col("label") === label)
+    val e = g.edgesOf(Seq(label))
       .select(col(pSide).as("p"), col(zSide).as("z")).distinct()
     val deg = e.groupBy(col("z")).agg(count(lit(1)).as("d"))
       .filter(col("d") <= maxDeg && col("d") >= 2)
@@ -2200,7 +2155,7 @@ object Algorithms {
                       maxDeg: Long = 1000000L,
                       reversed: Boolean = false): DataFrame = {
     val (pSide, zSide) = if (reversed) ("dst", "src") else ("src", "dst")
-    val e = g.edges.filter(col("label") === label)
+    val e = g.edgesOf(Seq(label))
       .select(col(pSide).as("p"), col(zSide).as("z")).distinct()
     val deg = e.groupBy(col("z")).agg(count(lit(1)).as("d"))
       .filter(col("d") <= maxDeg && col("d") >= 2)

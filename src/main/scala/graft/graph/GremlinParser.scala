@@ -197,7 +197,7 @@ object GremlinParser {
                                        prop: String) extends GStep
   /** shortestPath() — TinkerPop's withComputer shortest-path step,
     * lowered onto the certified [[Algorithms.ssspHops]] /
-    * [[Algorithms.ssspWeighted]] Pregel programs. RELATIONAL READING:
+    * [[Algorithms.ssspWeighted]] DataFrame loops. RELATIONAL READING:
     * emits the distance relation (source, id, dist) — one row per
     * reachable vertex per source — not materialized Path objects (a
     * per-pair path list is the same driver-scale dead-end as
@@ -205,7 +205,7 @@ object GremlinParser {
     * scalable reading, and paths are recoverable by joining it with
     * the edge relation). Must follow the source DIRECTLY with explicit
     * ids (`g.V(id…).shortestPath()`) — each source is one certified
-    * single-source Pregel run, so sources are the user-typed bounded
+    * single-source search, so sources are the user-typed bounded
     * list, never a computed frontier. Modulators:
     * `.with('~tinkerpop.shortestPath.edges', __.outE|inE('l1', …))` —
     * labels + direction (inE walks edges dst→src, TinkerPop's
@@ -1465,9 +1465,7 @@ object GremlinParser {
             if (prop0.isEmpty) "gremlin.connectedComponentVertexProgram.component"
             else prop0
           val gg =
-            if (labels.isEmpty) g
-            else PropertyGraph(g.vertices,
-              g.edges.filter(col("label").isin(labels: _*)))
+            if (labels.isEmpty) g else PropertyGraph(g.vertices, g.edgesOf(labels))
           val cc = Algorithms.connectedComponents(g.vertices.sparkSession, gg)
           result = Some(t.idsDF().join(cc, "id")
             .select(col("id"), col("component").as(prop)))
@@ -1481,7 +1479,7 @@ object GremlinParser {
               "shortestPath() runs the certified SINGLE-SOURCE programs " +
                 "— spell the sources as explicit ids directly after the " +
                 "source (g.V(id…).shortestPath()); a computed frontier " +
-                "would mean one Pregel run per frontier vertex")
+                "would mean one single-source search per frontier vertex")
           val spark = g.vertices.sparkSession
           if (wprop.nonEmpty && !g.edges.columns.contains(wprop))
             throw new IllegalArgumentException(

@@ -97,6 +97,16 @@ final class PropertyGraph private (
     else ds.map(s.edge).reduce(_ union _)
   }
 
+  /** The edges whose label is in `labels`, or all edges when it is
+    * empty. A schema'd graph reads only the frames of the edge defs
+    * with those names; a plain graph filters its edge relation.
+    */
+  def edgesOf(labels: Seq[String]): DataFrame = sources match {
+    case _ if labels.isEmpty => edges
+    case Some(s) => edgeFrames(s.schema.edgeLabels.filter(d => labels.contains(d.name)))
+    case None => edges.filter(col("label").isin(labels: _*))
+  }
+
   /** The vertex relation's column names, without building the union. */
   def vertexColumns: Seq[String] = sources match {
     case Some(s) => s.vertex(s.schema.vertexLabels.head.name).columns.toSeq

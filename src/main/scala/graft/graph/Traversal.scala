@@ -426,7 +426,7 @@ final class Traversal private (val g: PropertyGraph, frame: () => DataFrame,
     // reconstructed per round by a semi-join (broadcast when the
     // frontier is small — AQE's call) and once more for the result.
     // The vertex/edge relations are re-joined EVERY round — cache them
-    // for the loop (exactly why GraphX caches its graph): without this
+    // for the loop (as a graph engine caches its graph): without this
     // each round re-runs the full derivation (for the TPC-H view that
     // includes a lineitem distinct per round). MEMORY_AND_DISK spills
     // rather than OOMs on big graphs. Frames the CALLER already cached

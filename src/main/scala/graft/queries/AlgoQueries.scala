@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.graph.{Algorithms, PropertyGraph}
 
-/** GraphX analytics queries (SURVEY §2.4 last row: PageRank/WCC/SSSP/
+/** Graph analytics queries (SURVEY §2.4 last row: PageRank/WCC/SSSP/
   * degrees — the hugegraph-computer layer fed by the reference's split
-  * operator R14). Where the result is derivable relationally, a DuckDB
-  * oracle is declared; PageRank/WCC are checked by unit tests on
-  * hand-built graphs plus rows-only here.
+  * operator R14), each a DataFrame operator of [[Algorithms]]. Where
+  * the result is derivable relationally, a DuckDB oracle is declared;
+  * the double-valued PageRank is checked by unit tests on hand-built
+  * graphs plus a tie-guarded ranking here.
   */
 object AlgoQueries {
 
@@ -46,11 +47,8 @@ object AlgoQueries {
     */
   def aBetweenness(s: SparkSession, dir: String): DataFrame = {
     val gr = g(s, dir)
-    val supLo = PropertyGraph.encodeId("supplier", 0L)
-    val supHi = PropertyGraph.encodeId("supplier",
-      (1L << PropertyGraph.Shift) - 1)
-    val e = gr.edges.filter(col("label") === "part_of" ||
-      (col("label") === "located_in" && col("src").between(supLo, supHi)))
+    val e = gr.edgeFrames(gr.schema.get.edgeLabels.filter(d =>
+      d.name == "part_of" || (d.name == "located_in" && d.srcLabel == "supplier")))
     Algorithms.betweenness(s, PropertyGraph(gr.vertices, e))
       .select(col("id"), round(col("bc")).cast("long").as("bc"))
       .orderBy(col("bc").desc, col("id")).limit(10)
@@ -75,10 +73,7 @@ object AlgoQueries {
     val mask = (1L << PropertyGraph.Shift) - 1
     def lo(l: String) = PropertyGraph.encodeId(l, 0L)
     def hi(l: String) = PropertyGraph.encodeId(l, mask)
-    val e = gr.edges.filter(col("label") === "part_of" ||
-      (col("label") === "located_in" &&
-        (col("src").between(lo("supplier"), hi("supplier")) ||
-         col("src").between(lo("customer"), hi("customer")))))
+    val e = gr.edgesOf(Seq("part_of", "located_in"))
     val seeds = gr.vertices.filter(
         (col("id").between(lo("customer"), hi("customer")) &&
           (col("id") - lo("customer")) % 101 === 0) ||
@@ -112,15 +107,16 @@ object AlgoQueries {
 
   /** static PageRank over the full graph: the top-20 RANKING (pos, id)
     * with a tie-gap guard. Rank VALUES are float-summation-order
-    * sensitive (GraphX message combine vs DuckDB SUM differ in low
+    * sensitive (Spark's partial sums vs DuckDB SUM differ in low
     * bits), but the ORDER of two ids can only differ between engines
     * if their ranks are within that noise — so each emitted row
     * requires a relative gap > 1e-6 to BOTH rank neighbors (positions
     * whose order is fp-ambiguous are dropped on both sides alike),
     * making the ranking itself hash-oracle-able: the oracle replays
-    * GraphX's exact recurrence r' = 0.15 + 0.85·Σ r/outdeg (parallel
-    * edges counted, initial rank 1.0 — pinned against hand-computed
-    * values in AlgorithmsSpec) and applies the same guard.
+    * [[Algorithms.pageRank]]'s recurrence r' = 0.15 + 0.85·Σ r/outdeg
+    * (parallel edges counted, initial rank 1.0 — pinned against
+    * hand-computed values in AlgorithmsSpec) and applies the same
+    * guard.
     *
     * Scale shape: TakeOrderedAndProject to 25 rows first; the window
     * runs on those 25 rows only, never a global sort.
@@ -145,7 +141,7 @@ object AlgoQueries {
 
   /** Deterministic integer-unit PageRank over the geo subgraph
     * (customer/supplier → nation → region): top 10 by rank. Unlike
-    * `a_pagerank_top` (GraphX doubles, rows-only), the micro-unit
+    * `a_pagerank_top` (double ranks, ranking only), the micro-unit
     * arithmetic replays exactly in SQL, so this one is hash-oracled —
     * the oracle unrolls the same 10 iterations as chained CTEs.
     */
@@ -174,8 +170,7 @@ object AlgoQueries {
     */
   def aPpr(s: SparkSession, dir: String): DataFrame = {
     val gr = g(s, dir)
-    val seeds = gr.vertices
-      .filter(col("label") === "supplier").select(col("id"))
+    val seeds = gr.vertexFrame("supplier").select(col("id"))
     Algorithms.personalizedPageRankExact(s, gr, seeds,
         labels = Seq("located_in", "part_of"), iters = 10)
       .orderBy(col("pr").desc, col("id"))
@@ -376,24 +371,12 @@ object AlgoQueries {
       .agg(count(lit(1)).as("n_in_core"), sum(col("id")).as("id_sum"))
       .orderBy(col("label_code"))
 
-  /** connected components summarized as (component, size). */
+  /** connected components summarized as (component, size); one CC
+    * operator serves both a_components and a_cc_alt.
+    */
   def aComponents(s: SparkSession, dir: String): DataFrame =
     Algorithms.connectedComponents(s, g(s, dir))
       .groupBy(col("component")).agg(count(lit(1)).as("size"))
-      .orderBy(col("component"))
-
-  /** the alternating (pointer-jumping) CC — identical output contract
-    * to a_components from a different engine, so it shares the same
-    * relational oracle; round count is bounded by the min vertex's
-    * per-component eccentricity (BFS flooding) — fine here (star
-    * schema, diameter ≤ 8) and on real-world short-diameter graphs;
-    * a chain-like graph deeper than maxIter=50 fails LOUDLY in
-    * connectedComponentsAlt, and the GraphX pointer-jump path
-    * (a_components) is the documented alternative for that regime.
-    */
-  def aCcAlt(s: SparkSession, dir: String): DataFrame =
-    Algorithms.connectedComponentsAlt(s, g(s, dir))
-      .groupBy(col("comp").as("component")).agg(count(lit(1)).as("size"))
       .orderBy(col("component"))
 
   /** triangle count over the whole graph. The star schema is
@@ -405,8 +388,8 @@ object AlgoQueries {
   def aTriangles(s: SparkSession, dir: String): DataFrame =
     Algorithms.triangleTotal(s, g(s, dir))
 
-  /** aggregateMessages neighborhood sum: per part vertex, count and
-    * quantity-sum over incoming `contains` edges — exact integer-cents
+  /** neighborhood sum: per part vertex, count and quantity-sum over
+    * incoming `contains` edges — exact integer-cents
     * arithmetic, so the relational replay is an exact oracle.
     */
   def aNeighborSum(s: SparkSession, dir: String): DataFrame =
@@ -456,8 +439,7 @@ object AlgoQueries {
     */
   def aMst(s: SparkSession, dir: String): DataFrame = {
     val gr = g(s, dir)
-    val und = gr.edges
-      .filter(col("label").isin("supplied_by", "located_in", "part_of"))
+    val und = gr.edgesOf(Seq("supplied_by", "located_in", "part_of"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
@@ -518,7 +500,7 @@ object AlgoQueries {
     */
   def aCopurchase(s: SparkSession, dir: String): DataFrame =
     Algorithms.bipartiteProjection(
-        g(s, dir).edges.filter(col("label") === "contains"),
+        g(s, dir).edgesOf(Seq("contains")),
         minSupport = 3L)
       .orderBy(col("support").desc, col("item_a"), col("item_b"))
 
@@ -537,7 +519,7 @@ object AlgoQueries {
   def aKtruss(s: SparkSession, dir: String): DataFrame =
     Algorithms.kTruss(
         Algorithms.bipartiteProjection(
-          g(s, dir).edges.filter(col("label") === "contains"),
+          g(s, dir).edgesOf(Seq("contains")),
           minSupport = 2L),
         k = 3, rounds = KtrussRounds)
       .orderBy(col("item_a"), col("item_b"))
@@ -550,7 +532,7 @@ object AlgoQueries {
   def aScan(s: SparkSession, dir: String): DataFrame =
     Algorithms.scanCluster(
         Algorithms.bipartiteProjection(
-          g(s, dir).edges.filter(col("label") === "contains"),
+          g(s, dir).edgesOf(Seq("contains")),
           minSupport = 2L)
           .select(col("item_a").as("a"), col("item_b").as("b")),
         epsNum = 3, epsDen = 5, mu = 3)
@@ -562,7 +544,7 @@ object AlgoQueries {
   def aRichclub(s: SparkSession, dir: String): DataFrame =
     Algorithms.richClub(
         Algorithms.bipartiteProjection(
-          g(s, dir).edges.filter(col("label") === "contains"),
+          g(s, dir).edgesOf(Seq("contains")),
           minSupport = 2L)
           .select(col("item_a").as("a"), col("item_b").as("b")),
         ks = Seq(1L, 2L, 4L, 8L, 16L))
@@ -669,7 +651,7 @@ object AlgoQueries {
     */
   def aModularity(s: SparkSession, dir: String): DataFrame = {
     val gr = g(s, dir)
-    val e = gr.edges.filter(col("label").isin("located_in", "part_of"))
+    val e = gr.edgesOf(Seq("located_in", "part_of"))
     val enc = PropertyGraph.encode _
     val comm = Tables.customer(s, dir).select(
         enc("customer", col("c_custkey")).as("id"),
@@ -753,7 +735,7 @@ object AlgoQueries {
     "a_eigenvector" -> (aEigenvector _),
     "a_pagerank_exact" -> (aPagerankExact _),
     "a_components" -> (aComponents _),
-    "a_cc_alt" -> (aCcAlt _),
+    "a_cc_alt" -> (aComponents _),
     "a_triangles" -> (aTriangles _),
     "a_neighbor_sum" -> (aNeighborSum _),
     "a_closeness" -> (aCloseness _),
@@ -1198,13 +1180,13 @@ object AlgoQueries {
        |SELECT id, pr FROM pr$iters ORDER BY pr DESC, id LIMIT 10""".stripMargin
   }
 
-  /** DuckDB replay of GraphX staticPageRank over the FULL graph, in
+  /** DuckDB replay of [[Algorithms.pageRank]] over the FULL graph, in
     * doubles: r0 = 1.0, r' = 0.15 + 0.85·Σ_{(u,v)∈E} r(u)/outdeg(u)
     * with parallel edges counted individually and the vertex set =
-    * edge endpoints (Graph.fromEdges drops isolated vertices) — the
-    * recurrence is pinned against hand-computed chain values in
-    * AlgorithmsSpec so the two sides cannot silently drift. GraphX's
-    * final normalization (scale ranks to sum to n) is deliberately
+    * edge endpoints (isolated vertices dropped) — the recurrence is
+    * pinned against hand-computed chain values in AlgorithmsSpec so
+    * the two sides cannot silently drift. The operator's final
+    * normalization (scale ranks to sum to n) is deliberately
     * NOT replayed: a positive scalar changes neither the order nor
     * the relative gaps this oracle compares on. Output is the
     * gap-guarded top-20 ranking (see [[aPagerankTop]]): low-bit float
@@ -1351,10 +1333,6 @@ object AlgoQueries {
        |  UNION ALL SELECT * FROM s) ORDER BY id""".stripMargin
   }
 
-  /** shared by a_components (GraphX) and a_cc_alt (pointer jumping):
-    * both declare component = min vertex id, so one relational oracle
-    * covers both engines.
-    */
   /** DuckDB replay of boruvkaMsf: MstRounds Borůvka rounds unrolled
     * as CTEs — per round, per-component min cross edge by the
     * (w, a, b) total order (ROW_NUMBER), hook with the min-root
@@ -1411,6 +1389,7 @@ object AlgoQueries {
        |FROM ($sels) ORDER BY a, b""".stripMargin
   }
 
+  /** shared by a_components and a_cc_alt: component = min vertex id. */
   private val componentsSql: String =
     s"""WITH iso AS (SELECT p_partkey FROM part
        |  WHERE p_partkey NOT IN (SELECT l_partkey FROM lineitem)),
@@ -2020,7 +1999,7 @@ object AlgoQueries {
     // The TPC-H graph's component structure is relationally derivable:
     // customers/suppliers chain to nations→regions and orders→parts, so
     // every vertex except never-ordered parts joins one giant component
-    // whose GraphX label is the minimum vertex id in it (the smallest
+    // whose component id is the minimum vertex id in it (the smallest
     // customer id); parts absent from lineitem are singletons.
     "a_components" -> componentsSql,
     "a_cc_alt" -> componentsSql,

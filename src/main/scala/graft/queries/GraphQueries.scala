@@ -466,7 +466,7 @@ object GraphQueries {
         ".by('rank').order().by('id')")
 
   /** Parsed TinkerPop OLAP connectedComponent() lowered onto the
-    * certified GraphX CC (a_components' twin — min-id component
+    * certified DataFrame CC (a_components' twin — min-id component
     * convention, isolated vertices as singletons), summarized to the
     * same (component, size) shape so the two gates share one oracle.
     */
@@ -478,7 +478,7 @@ object GraphQueries {
       .orderBy(col("component"))
 
   /** Parsed TinkerPop OLAP shortestPath() lowered onto the certified
-    * single-source Pregel (a_sssp_hops' twin): hop distances from
+    * single-source BFS (a_sssp_hops' twin): hop distances from
     * region 0 walking part_of/located_in edges REVERSED (__.inE = the
     * Direction.IN reading), summarized per distance ring.
     */
@@ -540,7 +540,7 @@ object GraphQueries {
 
   /** out-degree histogram over placed edges (degree → #customers). */
   def g7DegreeHist(s: SparkSession, dir: String): DataFrame = {
-    val e = g(s, dir).edges.filter(col("label") === "placed")
+    val e = g(s, dir).edgesOf(Seq("placed"))
     e.groupBy(col("src")).agg(count(lit(1)).as("degree"))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_vertices"))
       .orderBy(col("degree"))
@@ -757,7 +757,7 @@ object GraphQueries {
     * semi-join intersect, no driver-side sets.
     */
   def g24SameNeighbors(s: SparkSession, dir: String): DataFrame = {
-    val e = g(s, dir).edges.filter(col("label") === "contains")
+    val e = g(s, dir).edgesOf(Seq("contains"))
       .select(col("src").as("id"), col("dst").as("part"))
     // parts 260/625 share five orders at the sf0.01 gate scale (a
     // zero-row result would pass the oracle vacuously)

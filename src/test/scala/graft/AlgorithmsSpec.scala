@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.graph.{Algorithms, PropertyGraph}
 
 /** Golden-value tests on hand-built graphs (FIXTURES.md: chain5,
-  * two-component graph) for the GraphX bridge.
+  * two-component graph) for the graph algorithms.
   */
 class AlgorithmsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -38,12 +38,10 @@ class AlgorithmsSpec extends AnyFunSuite {
 
   test("pregel checkpointing: a >25-superstep GraphX CC neither grows " +
        "lineage unbounded nor leaks pinned RDDs (SCALE.md open item)") {
-    // 60-vertex path graph: GraphX ConnectedComponents converges in
-    // ~diameter supersteps, crossing the 10-superstep checkpoint
-    // cadence several times (TestSpark sets
-    // spark.graphx.pregel.checkpointInterval=10 + a checkpoint dir —
-    // without them Pregel's per-round graph lineage deepens without
-    // bound and >20-superstep runs eventually OOM the planner)
+    // 60-vertex path graph: the delta-frontier CC needs ~diameter
+    // rounds, so its state lineage must stay rolled (one checkpoint
+    // per round, the previous one released) for the run to neither
+    // deepen its plans nor pin one RDD per round
     val chain = mkGraph((1L until 60L).map(i => (i, i + 1)))
     val before = spark.sparkContext.getPersistentRDDs.size
     val cc = Algorithms.connectedComponents(spark, chain)
@@ -52,7 +50,7 @@ class AlgorithmsSpec extends AnyFunSuite {
       "deep-chain CC converged wrong")
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after - before <= 4,
-      s"deep Pregel run leaked ${after - before} pinned RDDs")
+      s"deep CC run leaked ${after - before} pinned RDDs")
     // the DataFrame fixpoints hold the same O(1) pin at 25 rounds
     val pr = Algorithms.pageRankExact(spark, chain, iters = 25)
     assert(pr.count() == 60)
@@ -144,6 +142,47 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
   }
 
+  test("sssp hops: a 40-deep chain returns every distance (no depth cap)") {
+    val g = mkGraph((1L until 41L).map(i => (i, i + 1)))
+    val got = Algorithms.ssspHops(spark, g, 1L)
+      .as[(Long, Long)].collect().toMap
+    assert(got == (1L to 41L).map(i => i -> (i - 1)).toMap)
+  }
+
+  test("sssp: a source with no edge in the label set returns no row") {
+    // 1 has only an `other` edge; 2 sits on a `link` edge as its dst,
+    // so it is in the link graph's vertex set (dist 0) and reaches nothing
+    val v = Seq(1L, 2L, 3L).map(id => (id, "node")).toDF("id", "label")
+    val e = Seq((1L, 3L, "other"), (3L, 2L, "link"))
+      .map { case (s, d, l) => (s, d, l, 1L) }
+      .toDF("src", "dst", "label", "sort_key")
+    val g = PropertyGraph(v, e)
+    assert(Algorithms.ssspHops(spark, g, 1L, Seq("link")).isEmpty)
+    assert(Algorithms.ssspWeighted(spark, g, 1L, col("sort_key"), Seq("link")).isEmpty)
+    assert(Algorithms.ssspHops(spark, g, 2L, Seq("link"))
+      .as[(Long, Long)].collect().toSeq == Seq(2L -> 0L))
+    assert(Algorithms.ssspWeighted(spark, g, 2L, col("sort_key"), Seq("link"))
+      .as[(Long, Long)].collect().toSeq == Seq(2L -> 0L))
+  }
+
+  test("ssspWeighted: a null or negative weight fails with a message") {
+    // a dropped edge would silently lengthen paths: 1→2 is the only
+    // way to 2, so a null weight must fail the run, not vanish
+    val v = Seq(1L, 2L, 3L).map(id => (id, "node")).toDF("id", "label")
+    val e = Seq[(Long, Long, java.lang.Long)]((1L, 2L, null), (1L, 3L, 4L))
+      .toDF("src", "dst", "sort_key").withColumn("label", lit("link"))
+    val g = PropertyGraph(v, e)
+    val ex = intercept[Exception] {
+      Algorithms.ssspWeighted(spark, g, 1L, col("sort_key")).collect()
+    }
+    assert(ex.getMessage.contains("non-null and non-negative"), ex.getMessage)
+    val neg = intercept[Exception] {
+      Algorithms.ssspWeighted(spark, g, 1L, coalesce(col("sort_key"), lit(-1L)))
+        .collect()
+    }
+    assert(neg.getMessage.contains("non-null and non-negative"), neg.getMessage)
+  }
+
   test("sssp reverse follows edges backwards") {
     val g = mkGraph(Seq((1L, 2L), (2L, 3L)))
     val got = Algorithms.ssspHops(spark, g, 3L, reverse = true)
@@ -174,12 +213,6 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(got(1L) == 2 && got(2L) == 3 && got(3L) == 1)
   }
 
-  test("triangle count finds the planted triangle") {
-    val g = mkGraph(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)))
-    val got = Algorithms.triangleCounts(spark, g).as[(Long, Int)].collect().toMap
-    assert(got(1L) == 1 && got(2L) == 1 && got(3L) == 1 && got(4L) == 0)
-  }
-
   test("triangleTotal matches GraphX on planted graphs") {
     // two triangles sharing an edge + a pendant; reversed/duplicate
     // edges must not inflate the count
@@ -188,9 +221,6 @@ class AlgorithmsSpec extends AnyFunSuite {
     val df = Algorithms.triangleTotal(spark, g).collect()(0)
     assert(df.getLong(0) == 2, s"expected 2 triangles, got ${df.getLong(0)}")
     assert(df.getLong(1) == 5) // non-isolated vertex count
-    val viaGraphX = Algorithms.triangleCounts(spark, g)
-      .agg(org.apache.spark.sql.functions.sum(col("triangles"))).collect()(0).getLong(0)
-    assert(viaGraphX == 3 * 2) // GraphX counts each triangle at all 3 corners
   }
 
   test("ssspWeighted picks the lighter path, not the shorter one") {
@@ -294,6 +324,13 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(got(3L) == Map(3L -> 0L, 4L -> 1L))
   }
 
+  test("closeness: a 40-vertex chain reaches all 39 vertices past the seed") {
+    val g = mkGraph((1L until 40L).map(i => (i, i + 1)))
+    val got = Algorithms.closeness(spark, g, Seq(1L))
+      .select("n_reachable", "total_dist").as[(Long, Long)].collect().toSeq
+    assert(got == Seq((39L, (1L to 39L).sum)))
+  }
+
   test("closeness: hand-computed on a star") {
     // center 1 → leaves 2,3,4 (dist 1 each): closeness = 3/3 = 1.0
     val g = mkGraph(Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 9L)))
@@ -324,9 +361,9 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(got == Seq((5L, 1L, 0.6)))
   }
 
-  test("connectedComponentsAlt matches GraphX CC: islands, chain, isolated") {
-    // two islands + a 16-node chain (high diameter — the pointer-jump
-    // path this variant exists for) + an isolated vertex
+  test("connectedComponents: islands, chain, isolated") {
+    // two islands + a 16-node chain (high diameter: one label hop per
+    // round) + an isolated vertex
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)) ++
       (20L until 35L).map(i => (i, i + 1))
     val vids = (edges.flatMap(e => Seq(e._1, e._2)) :+ 99L).distinct
@@ -334,12 +371,11 @@ class AlgorithmsSpec extends AnyFunSuite {
     val e = edges.map { case (s, d) => (s, d, "link", null.asInstanceOf[java.lang.Long]) }
       .toDF("src", "dst", "label", "sort_key")
     val g = PropertyGraph(v, e)
-    val alt = Algorithms.connectedComponentsAlt(spark, g)
+    val got = Algorithms.connectedComponents(spark, g)
       .as[(Long, Long)].collect().toMap
-    val gx = Algorithms.connectedComponents(spark, g)
-      .as[(Long, Long)].collect().toMap
-    assert(alt == gx)
-    assert(alt(99L) == 99L && alt(35L) == 20L && alt(3L) == 1L)
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+      99L -> 99L) ++ (20L to 35L).map(_ -> 20L)
+    assert(got == want)
   }
 
   test("ccAltRound consumes ONLY the delta frame (frontier contract)") {
@@ -358,15 +394,6 @@ class AlgorithmsSpec extends AnyFunSuite {
     val out2 = Algorithms.ccAltRound(adj, lab, delta2)
       .select("id", "comp").as[(Long, Long)].collect().toMap
     assert(out2 == Map(1L -> 0L, 2L -> 0L, 3L -> 3L))
-  }
-
-  test("connectedComponentsAlt fails loudly when maxIter is too low") {
-    // 6-node chain needs ~5 propagation rounds; cap at 2 → require fires
-    val g = mkGraph((1L to 5L).map(i => (i, i + 1)))
-    val ex = intercept[IllegalArgumentException] {
-      Algorithms.connectedComponentsAlt(spark, g, maxIter = 2).collect()
-    }
-    assert(ex.getMessage.contains("did not converge"))
   }
 
   test("scc: empty graph returns an empty (id, scc) frame") {
@@ -413,10 +440,10 @@ class AlgorithmsSpec extends AnyFunSuite {
 
   test("pageRank recurrence matches the a_pagerank_top oracle contract on chain3") {
     // the DuckDB oracle replays r0 = 1.0, r' = 0.15 + 0.85*Σ r/outdeg
-    // WITHOUT GraphX's final normalization (ranks scaled to sum to n):
+    // WITHOUT pageRank's final normalization (ranks scaled to sum to n):
     // a positive scalar preserves both the order and the RELATIVE gaps
     // the gate query guards on, so the oracle may skip it — but only
-    // while GraphX's recurrence itself matches. This hand-computed pin
+    // while the operator's recurrence itself matches. This hand-computed pin
     // fails before the gate query could silently drift.
     //   iter1: (0.15, 1.0, 1.0)   iter2: (0.15, 0.2775, 1.0)
     //   normalized ×3/1.4275: (0.31524, 0.58319, 2.10158)

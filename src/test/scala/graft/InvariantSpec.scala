@@ -129,7 +129,7 @@ class InvariantSpec extends AnyFunSuite {
         if (ra != rb) parent(ra max rb) = ra min rb
       }
       val want = ids.map(i => i -> find(i)).toMap
-      val got = graft.graph.Algorithms.connectedComponentsAlt(spark, g)
+      val got = graft.graph.Algorithms.connectedComponents(spark, g)
         .as[(Long, Long)].collect().toMap
       assert(got == want, s"edges=$edges")
     }

@@ -132,7 +132,7 @@ class LoopSpec extends AnyFunSuite {
     "labelPropagation" -> (g => Algorithms.labelPropagation(spark, g)),
     "louvainLevel1" -> (g => Algorithms.louvainLevel1(spark, g)),
     "dagLayers" -> (g => Algorithms.dagLayers(spark, g)),
-    "connectedComponentsAlt" -> (g => Algorithms.connectedComponentsAlt(spark, g)),
+    "connectedComponents" -> (g => Algorithms.connectedComponents(spark, g)),
     "kCore" -> (g => Algorithms.kCore(spark, g, 2)),
     "maximalIndependentSet" -> (g => Algorithms.maximalIndependentSet(
       spark, g, maxRounds = 30)),

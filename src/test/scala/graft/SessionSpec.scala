@@ -10,8 +10,11 @@ class SessionSpec extends AnyFunSuite {
     val conf = spark.sparkContext.getConf
     assert(conf.get("spark.serializer") ==
       "org.apache.spark.serializer.KryoSerializer")
-    assert(conf.get("spark.kryo.classesToRegister")
-      .contains("org.apache.spark.graphx.Edge"))
+    // no graph-engine registrations or keys: every algorithm is a
+    // DataFrame loop
+    assert(!conf.getOption("spark.kryo.classesToRegister")
+      .exists(_.contains("graphx")))
+    assert(!conf.getAll.exists(_._1.startsWith("spark.graphx")))
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     // every table read declares its schema (Tables.schemas), so no read
     // needs nanosecond parquet timestamps mapped to longs
