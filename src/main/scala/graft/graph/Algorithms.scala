@@ -982,8 +982,8 @@ object Algorithms {
     * want one (kout, crosspoints), never a silent cap.
     * Per round: one join against the (persisted, narrow) edge list,
     * one distinct, one anti-join against the visited set — all keyed
-    * shuffles of 16-byte rows. Same loop mechanics as
-    * Traversal.repeatUntil (eager localCheckpoint keeps plans flat).
+    * shuffles of 16-byte rows, run by [[graft.util.Loop.frontier]]
+    * (eager layer checkpoints keep plans flat).
     */
   def multiSourceHops(s: SparkSession, g: PropertyGraph, seeds: Seq[Long],
                       labels: Seq[String] = Nil, reverse: Boolean = false,
@@ -1005,26 +1005,14 @@ object Algorithms {
     // shuffle I/O on any cluster where the cache is not node-local.
     Loop.cached { c =>
       val edges = c(dirEdges.repartition(col("src")))
-      var frontier = seeds.toDF("seed")
-        .select(col("seed"), col("seed").as("id")).localCheckpoint()
-      var visited = frontier
-      var reached = Seq.empty[DataFrame]
-      var depth = 0
-      while (depth < maxDepth && !frontier.isEmpty) {
-        depth += 1
-        val next = frontier
-          .join(edges, frontier("id") === edges("src"))
+      val seed = seeds.distinct.toDF("seed").select(col("seed"), col("seed").as("id"))
+      Loop.frontier(seed, Seq("seed", "id"), maxDepth) { (frontier, _) =>
+        frontier.join(edges, frontier("id") === edges("src"))
           .select(col("seed"), col("dst").as("id"))
           .distinct()
-          .join(visited, Seq("seed", "id"), "left_anti")
-          .localCheckpoint()
-        reached = reached :+ next.withColumn("dist", lit(depth.toLong))
-        visited = visited.union(next)
-        frontier = next
-      }
-      val zero = seeds.toDF("seed")
-        .select(col("seed"), col("seed").as("id"), lit(0L).as("dist"))
-      reached.foldLeft(zero)(_ unionByName _)
+      }.state.zipWithIndex
+        .map { case (layer, d) => layer.withColumn("dist", lit(d.toLong)) }
+        .reduce(_ unionByName _)
     }
   }
 
@@ -1738,31 +1726,20 @@ object Algorithms {
       val adj = c(symmetrize(undirectedDistinct(e)).repartition(col("v")))
       val verts = adj.select(col("v").as("id")).distinct()
       val seedIds = seeds.getOrElse(verts).select(col("id"))
-      // ---- forward BFS: layers(d) = (seed, id, sigma) at distance d
-      val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var frontier = seedIds.select(col("id").as("seed"), col("id"),
-        lit(1L).as("sigma")).localCheckpoint()
-      layers += frontier
-      var visited = frontier.select(col("seed"), col("id"))
-      var d = 0
-      var live = !frontier.isEmpty
-      while (d < maxDepth && live) {
-        d += 1
-        val next = frontier.join(adj, col("id") === col("v"))
+      // ---- forward BFS: layers(d) = (seed, id, sigma) at distance d;
+      // sigma sums over predecessors per (seed, id), the anti-join's
+      // key, so summing before the visited anti-join drops whole groups
+      val bfs = Loop.frontier(seedIds.select(col("id").as("seed"), col("id"),
+          lit(1L).as("sigma")), Seq("seed", "id"), maxDepth) { (frontier, _) =>
+        frontier.join(adj, col("id") === col("v"))
           .select(col("seed"), col("n").as("id"), col("sigma"))
-          .join(visited, Seq("seed", "id"), "left_anti")
           .groupBy(col("seed"), col("id")).agg(sum(col("sigma")).as("sigma"))
-          .localCheckpoint()
-        live = !next.isEmpty
-        if (live) {
-          layers += next
-          visited = visited.union(next.select(col("seed"), col("id")))
-          frontier = next
-        }
       }
-      require(!live,
+      require(bfs.converged,
         s"betweenness BFS still expanding at depth $maxDepth — " +
           "raise maxDepth (a truncated BFS drops pairs silently)")
+      // past the seed, the last layer is the empty one that stopped the loop
+      val layers = if (bfs.rounds == 0) bfs.state else bfs.state.init
       // ---- backward dependency accumulation, deepest layer first
       val deepest = layers.length - 1
       var delta = layers(deepest)
@@ -1839,7 +1816,11 @@ object Algorithms {
     * Scale shape: per layer, the narrow (id, parent) frontier joins
     * the persisted undirected adjacency, anti-joins the visited set,
     * and min-aggregates parents — all on 8-byte ids; the payload
-    * never shuffles. The final parent walk is ≤ maxDepth chained
+    * never shuffles. The loop is [[graft.util.Loop.frontier]]'s BFS
+    * written out: the combinator anti-joins AFTER the caller's
+    * expansion, which puts the min-parent aggregate first and costs
+    * one more stage job per round (a_pair_path at sf0.1: 33 → 35
+    * jobs). The final parent walk is ≤ maxDepth chained
     * 1-row broadcast joins, not a driver loop of collects.
     */
   def pairShortestPath(s: SparkSession, g: PropertyGraph, source: Long,
@@ -1863,7 +1844,7 @@ object Algorithms {
           .withColumn("dist", lit(d))
           .localCheckpoint()
         // LAZY union of the already-checkpointed layers (the
-        // repeatUntil visited-set shape): re-checkpointing the whole
+        // Loop.frontier visited-set shape): re-checkpointing the whole
         // set per layer wrote O(V) rows per round for nothing
         visited = visited
           .union(layer.select(col("id"), col("dist"), col("parent")))

@@ -3,7 +3,10 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 import graft.schema.EdgeLabelDef
+import graft.util.Loop
 
 /** Property predicates — the HugeGraph/TinkerPop `P`/`Text` surface the
   * store contract serves (SURVEY §2.4): eq/gt/gte/lt/lte/between/
@@ -394,104 +397,21 @@ final class Traversal private (val g: PropertyGraph, frame: () => DataFrame,
   /** Gremlin repeat(step).until(frontier empty) — variable-depth
     * expansion to a fixed point (reachability / unbounded repeats the
     * hugegraph engine runs over this store). Result = every vertex
-    * reached at depth ≥ 1, dedup'd.
+    * reached at depth ≥ 1, dedup'd: [[repeatUntilReached]] with no
+    * stop predicate and every reached vertex emitted.
     *
     * Shape per round: one distributed join (the step) + one anti-join
-    * against the visited set; `localCheckpoint` truncates the growing
-    * lineage so round N doesn't replay rounds 1..N-1 (on a real
-    * cluster with an HDFS checkpoint dir, `checkpoint` — same call
-    * shape). Only the emptiness TEST touches the driver — frontiers
+    * against the visited set, as a [[graft.util.Loop.frontier]] BFS
+    * whose eager layer checkpoints keep round N from replaying rounds
+    * 1..N-1. Only the emptiness TEST touches the driver — frontiers
     * and the visited set stay distributed, so this is BFS with
     * O(diameter) rounds, not a driver loop over rows. `maxDepth` caps
     * runaway cycles (safety net, not semantics — visited-exclusion
-    * already terminates any finite graph).
+    * already terminates any finite graph); a walk it cuts short is
+    * refused, not trimmed.
     */
-  def repeatUntil(step: Traversal => Traversal, maxDepth: Int = 50): Traversal = {
-    requireV()
-    // query-shape guard: the fixed point dedups by VERTEX, so it
-    // cannot carry a per-origin marker — running inside a filter
-    // context (where/not/choose, detected by the internal SFO rider)
-    // would silently route EVERY origin to the same verdict; refuse
-    // with the real reason instead of the opaque unresolved-column
-    // error the enclosing semi-join would throw. USER riders
-    // (path()/as() tags) are simply consumed — the barrier ends
-    // per-traverser history, exactly as fold() does — and the parser
-    // front-end gives clean positional errors when a LATER step would
-    // have needed them.
-    requireNotFilterContext("repeat().until()")
-    // BFS state is ID-ONLY: frontiers, the visited set, and the reached
-    // accumulator are narrow long columns, so every per-round shuffle,
-    // dedup, and checkpoint moves 8-byte keys, not full property rows
-    // (measured 3× on the reachability gate query). Vertex rows are
-    // reconstructed per round by a semi-join (broadcast when the
-    // frontier is small — AQE's call) and once more for the result.
-    // The vertex/edge relations are re-joined EVERY round — cache them
-    // for the loop (as a graph engine caches its graph): without this
-    // each round re-runs the full derivation (for the TPC-H view that
-    // includes a lineitem distinct per round). MEMORY_AND_DISK spills
-    // rather than OOMs on big graphs. Frames the CALLER already cached
-    // are left alone (unpersisting them here would silently drop the
-    // caller's cache); frames persisted here are released in the
-    // finally — blocking, so repeated or failing invocations never
-    // stack copies — and the result is rebuilt against the original
-    // vertices so it stays valid afterwards.
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val none = org.apache.spark.storage.StorageLevel.NONE
-    // Persist ONLY the edge relation for the loop: it hides real work
-    // (the TPC-H view has a lineitem distinct) that would otherwise
-    // re-run every round. The vertex relation is a shuffle-free union
-    // of column-pruned parquet scans — re-scanning it per round costs
-    // less than one eager build of the full wide cache (arrays/maps
-    // for ~1M rows), which dominated the gate query's wall-clock.
-    val ownE = g.edges.storageLevel == none
-    // swap the wide vertex union for a cached narrow (id, label) frame
-    // when the step provably never reads a vertex property — the
-    // in-loop joins are then one InMemoryTableScan instead of a
-    // 6-scan union re-derived (and re-broadcast) every round; the
-    // result hydration below still uses the ORIGINAL wide vertices.
-    // The loop's own edge cache is likewise pruned to (src, dst,
-    // label) when no edge property is referenced.
-    val ownV = !stepReferencesVertexProps(Seq(step))
-    val loopV = if (ownV) narrowLoopVertices(level) else g.vertices
-    val loopE =
-      if (!ownE) g.edges
-      else if (stepNeedsEdgeProps(Seq(step))) g.edges.persist(level)
-      else g.edges.select(col("src"), col("dst"), col("label")).persist(level)
-    val gc = PropertyGraph(
-      loopV,
-      loopE,
-      g.edgesByDst) // table-backed when present — cheap to rescan
-    try {
-      var frontierIds = df.select(col("id")).dropDuplicates("id").localCheckpoint()
-      var visited = frontierIds
-      var reached: Option[DataFrame] = None
-      var depth = 0
-      while (depth < maxDepth && !frontierIds.isEmpty) {
-        val frontierV = gc.vertices.join(frontierIds, Seq("id"), "left_semi")
-        val stepped = step(Traversal(gc, frontierV, isEdge = false))
-        require(!stepped.isEdge, "repeatUntil step must end on a vertex frontier")
-        val nextIds = stepped.df.select(col("id")).dropDuplicates("id")
-          .join(visited, Seq("id"), "left_anti")
-          .localCheckpoint()
-        reached = Some(reached.map(_.union(nextIds)).getOrElse(nextIds))
-        visited = visited.union(nextIds)
-        frontierIds = nextIds
-        depth += 1
-      }
-      // the no-new-vertices fixed point not reached inside the cap is
-      // a truncated answer, not an answer (ADVICE r13) — refuse loudly
-      if (!frontierIds.isEmpty)
-        throw new IllegalStateException(
-          s"repeat().until(count().is(0)) did not reach its fixed point " +
-            s"within maxDepth=$maxDepth rounds — raise maxDepth (DSL " +
-            "repeatUntil parameter) or bound the walk with times(n)")
-      val ids = reached.getOrElse(df.limit(0).select(col("id")))
-      merged(g.vertices.join(ids, Seq("id"), "left_semi"), edge = false)
-    } finally {
-      if (ownE) loopE.unpersist(blocking = true)
-      if (ownV) loopV.unpersist(blocking = true)
-    }
-  }
+  def repeatUntil(step: Traversal => Traversal, maxDepth: Int = 50): Traversal =
+    fixpoint(step, None, maxDepth, emitAll = true, "repeat().until()")
 
   /** the whole-frontier fixed points cannot run inside a per-origin
     * context: they dedup by VERTEX, so every origin would collapse to
@@ -545,7 +465,7 @@ final class Traversal private (val g: PropertyGraph, frame: () => DataFrame,
           })
         }.flatten
       }.toSet)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** May the loop's edge cache drop the edge PROPERTY columns
     * (everything beyond src/dst/label)? Same introspection contract
@@ -568,11 +488,9 @@ final class Traversal private (val g: PropertyGraph, frame: () => DataFrame,
     * plan's partitioning/ordering survive InMemoryTableScan), and the
     * round's dedup + visited anti-join inherit the id partitioning.
     */
-  private def narrowLoopVertices(
-      level: org.apache.spark.storage.StorageLevel): DataFrame =
+  private def narrowLoopVertices: DataFrame =
     g.vertices.select(col("id"), col("label"))
       .repartition(col("id")).sortWithinPartitions("id")
-      .persist(level)
 
   /** Gremlin repeat(step).until(predicate) — the TARGET-REACHED stop
     * (`repeat(out()).until(hasId(x) | has('k',v) | hasLabel('l'))`):
@@ -603,76 +521,92 @@ final class Traversal private (val g: PropertyGraph, frame: () => DataFrame,
     */
   def repeatUntilReached(step: Traversal => Traversal,
       stop: Traversal => Traversal, maxDepth: Int = 50,
-      emitAll: Boolean = false): Traversal = {
+      emitAll: Boolean = false): Traversal =
+    fixpoint(step, Some(stop), maxDepth, emitAll, "repeat().until(predicate)")
+
+  /** The visited-set BFS behind both repeat-until forms. State is
+    * ID-ONLY: frontiers, the visited set and the reached layers are
+    * narrow long columns, so every per-round shuffle, dedup and
+    * checkpoint moves 8-byte keys, not full property rows (measured 3×
+    * on the reachability gate query). Vertex rows are rebuilt per
+    * round by a semi-join and once more, against the ORIGINAL wide
+    * vertices, for the result.
+    *
+    * The graph is re-joined every round, so the loop caches it in a
+    * [[graft.util.Loop.cached]] scope (as a graph engine caches its
+    * graph): the edge relation hides real work (the TPC-H view has a
+    * lineitem distinct), and it is pruned to (src, dst, label) when no
+    * edge property is referenced. When neither the step nor the stop
+    * predicate reads a vertex property, the wide vertex union is
+    * swapped for a cached narrow (id, label) frame, so the in-loop
+    * joins are one InMemoryTableScan instead of a 6-scan union
+    * re-derived every round; the wide union itself is never cached
+    * (re-scanning its column-pruned parquet per round costs less than
+    * one build of the wide cache). An edge frame the CALLER already
+    * cached is used as it is (unpersisting it here would drop the
+    * caller's cache). The caches, the layers and the stop set are
+    * released when the call fails or refuses a truncated fixed point.
+    */
+  private def fixpoint(step: Traversal => Traversal,
+      stop: Option[Traversal => Traversal], maxDepth: Int, emitAll: Boolean,
+      what: String): Traversal = {
     requireV()
-    requireNotFilterContext("repeat().until(predicate)")
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val none = org.apache.spark.storage.StorageLevel.NONE
-    val ownE = g.edges.storageLevel == none
-    // narrow in-loop vertices / pruned edge cache when neither the
-    // step nor the stop predicate reads the property columns — see
-    // repeatUntil
-    val probeFns = Seq(step, (t: Traversal) => t.where(stop))
-    val ownV = !stepReferencesVertexProps(probeFns)
-    val loopV = if (ownV) narrowLoopVertices(level) else g.vertices
-    val loopE =
-      if (!ownE) g.edges
-      else if (stepNeedsEdgeProps(probeFns)) g.edges.persist(level)
-      else g.edges.select(col("src"), col("dst"), col("label")).persist(level)
-    val gc = PropertyGraph(
-      loopV,
-      loopE,
-      g.edgesByDst)
-    try {
+    // query-shape guard: the fixed point dedups by VERTEX, so it
+    // cannot carry a per-origin marker — running inside a filter
+    // context would silently route EVERY origin to the same verdict;
+    // refuse with the real reason instead of the opaque
+    // unresolved-column error the enclosing semi-join would throw.
+    // USER riders (path()/as() tags) are simply consumed — the barrier
+    // ends per-traverser history, exactly as fold() does.
+    requireNotFilterContext(what)
+    val probeFns = step +: stop.map(p => (t: Traversal) => t.where(p)).toSeq
+    val ids = Loop.cached { c =>
+      val loopV =
+        if (stepReferencesVertexProps(probeFns)) g.vertices else c(narrowLoopVertices)
+      val loopE =
+        if (g.edges.storageLevel != StorageLevel.NONE) g.edges
+        else if (stepNeedsEdgeProps(probeFns)) c(g.edges)
+        else c(g.edges.select(col("src"), col("dst"), col("label")))
+      // edgesByDst is table-backed when present — cheap to rescan
+      val gc = PropertyGraph(loopV, loopE, g.edgesByDst)
       // The stop verdict is PER-VERTEX and frontier-independent: the
       // sub-traversal sees one fresh traverser (PATH = [id]) per
       // candidate, so whether it yields anything depends only on the
       // (constant) graph. Evaluating it ONCE over all vertices and
-      // semi-joining each round's new frontier replaces the per-round
-      // where() subplan — for a hop stop that was 2-3 joins plus
-      // their broadcast builds EVERY round (r15 JobProbe: the g66
-      // hop-stop rounds carried ~20 broadcast-future jobs each).
-      val stopSet = Traversal(gc, gc.vertices, isEdge = false)
-        .where(stop).df.select(col("id")).localCheckpoint()
-      var frontierIds = df.select(col("id")).dropDuplicates("id").localCheckpoint()
-      var visited = frontierIds
-      var halted: Option[DataFrame] = None
-      var depth = 0
-      while (depth < maxDepth && !frontierIds.isEmpty) {
-        val frontierV = gc.vertices.join(frontierIds, Seq("id"), "left_semi")
-        val stepped = step(Traversal(gc, frontierV, isEdge = false))
-        require(!stepped.isEdge,
-          "repeatUntilReached step must end on a vertex frontier")
-        val nextIds = stepped.df.select(col("id")).dropDuplicates("id")
-          .join(visited, Seq("id"), "left_anti")
-          .localCheckpoint()
-        // LAZY like frontierIds: a depth-1 semi-join over two
-        // checkpointed frames — no per-round stop job at all
-        val stopIds = nextIds.join(stopSet, Seq("id"), "left_semi")
-        val emitted = if (emitAll) nextIds else stopIds
-        halted = Some(halted.map(_.union(emitted)).getOrElse(emitted))
-        visited = visited.union(nextIds)
-        // LAZY: both inputs are already checkpointed, so the anti-join
-        // is a depth-1 plan over cached blocks — its two evaluations
-        // (the emptiness test + the next round's semi-join) cost less
-        // than the third checkpoint job per round this used to run
-        frontierIds = nextIds.join(stopSet, Seq("id"), "left_anti")
-        depth += 1
-      }
-      // a target deeper than maxDepth must not silently vanish from
-      // the result (ADVICE r13): surface the truncated fixed point
-      if (!frontierIds.isEmpty)
+      // anti-joining each new layer replaces a per-round where()
+      // subplan — for a hop stop that was 2-3 joins plus their
+      // broadcast builds EVERY round (the g66 hop-stop rounds carried
+      // ~20 broadcast-future jobs each).
+      val stopSet = stop.map(p => Traversal(gc, gc.vertices, isEdge = false)
+        .where(p).df.select(col("id")).localCheckpoint())
+      // a halted traverser stays in its layer (and in visited) but is
+      // not expanded; LAZY: a depth-1 anti-join over two checkpoints
+      val live = (l: DataFrame) => stopSet.fold(l)(l.join(_, Seq("id"), "left_anti"))
+      val r = try {
+        Loop.frontier(df.select(col("id")).dropDuplicates("id"), Seq("id"),
+            maxDepth, live) { (ids, _) =>
+          val stepped = step(Traversal(gc,
+            gc.vertices.join(ids, Seq("id"), "left_semi"), isEdge = false))
+          require(!stepped.isEdge, s"$what step must end on a vertex frontier")
+          stepped.df.select(col("id")).dropDuplicates("id")
+        }
+      } catch { case t: Throwable => stopSet.foreach(Loop.release); throw t }
+      // a walk the cap cut short is a truncated answer, not an answer:
+      // a target deeper than maxDepth must not silently vanish
+      if (!r.converged) {
+        (r.state ++ stopSet).foreach(Loop.release)
         throw new IllegalStateException(
-          s"repeat().until(<predicate>) still had live traversers after " +
-            s"maxDepth=$maxDepth rounds — the stop target may be deeper " +
-            "than the cap; raise maxDepth (DSL repeatUntilReached " +
-            "parameter) or bound the walk with times(n)")
-      val ids = halted.getOrElse(df.limit(0).select(col("id")))
-      merged(g.vertices.join(ids, Seq("id"), "left_semi"), edge = false)
-    } finally {
-      if (ownE) loopE.unpersist(blocking = true)
-      if (ownV) loopV.unpersist(blocking = true)
+          s"$what still had live traversers after maxDepth=$maxDepth " +
+            "rounds — raise maxDepth or bound the walk with times(n)")
+      }
+      val reached = r.state.tail
+      val emitted = stopSet match {
+        case Some(set) if !emitAll => reached.map(_.join(set, Seq("id"), "left_semi"))
+        case _ => reached
+      }
+      emitted.reduceOption(_ union _).getOrElse(r.state.head.limit(0))
     }
+    merged(g.vertices.join(ids, Seq("id"), "left_semi"), edge = false)
   }
 
   /** Gremlin union(t1, t2, …): bag union of every branch applied to
@@ -846,7 +780,7 @@ final class Traversal private (val g: PropertyGraph, frame: () => DataFrame,
       .distinct()
     val reuseOn =
       try df.sparkSession.conf.get("spark.sql.exchange.reuse", "true").toBoolean
-      catch { case _: Throwable => true }
+      catch { case NonFatal(_) => true }
     val reached = if (pinCond || !reuseOn) shared.localCheckpoint() else shared
     val tb = onTrue(kept(
       df.join(reached, col("id") === col("__origin"), "left_semi")))

@@ -562,9 +562,11 @@ object Dedup {
     * small and shallow by construction (clones of one source document),
     * so this terminates in 2–3 rounds regardless of corpus size; all
     * per-round state is narrow (id, comp) longs — the shuffles move
-    * 16-byte rows, never text. `localCheckpoint` truncates the growing
-    * loop lineage exactly as in Traversal.repeatUntil; the convergence
-    * TEST is the only driver-side action. Returns (id, comp) with
+    * 16-byte rows, never text. [[graft.util.Loop.run]]'s rolling
+    * `localCheckpoint` truncates the growing loop lineage (the
+    * rolling-state sibling of the [[graft.util.Loop.frontier]] BFS the
+    * traversals run); the convergence TEST is the only driver-side
+    * action. Returns (id, comp) with
     * comp = min doc_id reachable, i.e. the canonical representative.
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = Loop.cached { c =>

@@ -237,9 +237,10 @@ object GraphQueries {
     * corpus hits first (the engine-side loop behind the reference's
     * per-hop store scans, TikvTable.java:30-58 query IR). The string
     * `repeat(__.in()).until(__.count().is(0))` lowers onto
-    * [[graft.graph.Traversal.repeatUntil]] — the same fixed-point BFS
-    * the DSL gate g18 runs — so this gate is the string-front-end twin
-    * of g18, sharing its oracle (TraversalSpec pins sameResult).
+    * [[graft.graph.Traversal.repeatUntil]] — the same
+    * [[graft.util.Loop.frontier]] BFS the DSL gate g18 runs — so this
+    * gate is the string-front-end twin of g18, sharing its oracle
+    * (TraversalSpec pins sameResult).
     */
   def g46UntilParsed(s: SparkSession, dir: String): DataFrame =
     graft.graph.GremlinParser.run(g(s, dir),
@@ -310,9 +311,10 @@ object GraphQueries {
     * Round 1 lands on nations (predicate false — they keep walking),
     * round 2 on regions (halt, emitted); the result is exactly the
     * regions hosting BUILDING customers. Lowers onto
-    * [[graft.graph.Traversal.repeatUntilReached]]: per-round
-    * distributed stop-set semi-join, id-only BFS state —
-    * TraversalSpec pins sameResult against the DSL twin.
+    * [[graft.graph.Traversal.repeatUntilReached]]: a
+    * [[graft.util.Loop.frontier]] BFS whose live frontier drops the
+    * precomputed stop set each round, id-only state — TraversalSpec
+    * pins sameResult against the DSL twin.
     */
   def g52UntilStop(s: SparkSession, dir: String): DataFrame =
     graft.graph.GremlinParser.run(g(s, dir),

@@ -63,10 +63,13 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *    loops, whose estimate grows linearly.
   *
   * Only strictly rolling state belongs in [[run]]: each round's frames
-  * are read by the next round alone. Frames a loop keeps for a later
-  * pass (Brandes' per-level sweep, per-round selections unioned at the
-  * end) are checkpointed by the step itself and released by the
-  * operator with [[release]].
+  * are read by the next round alone. A visited-set BFS keeps every
+  * layer (the visited set is their union, and the caller reads them
+  * after the loop: reached sets, hop distances, Brandes' backward
+  * sweep), so it runs on [[frontier]]. Other frames a loop keeps for a
+  * later pass (per-round selections unioned at the end) are
+  * checkpointed by the step itself and released by the operator with
+  * [[release]].
   */
 object Loop {
 
@@ -204,6 +207,44 @@ object Loop {
       Result(state, k, done)
     } catch {
       case t: Throwable => slots.foreach(_.release()); throw t
+    }
+  }
+
+  /** Visited-set BFS. Layer 0 is `seed`; layer k is `expand(frontier,
+    * k)` without the rows already seen on the `keys` columns (one
+    * anti-join against the visited set). Every layer is checkpointed
+    * eagerly, and the visited set is the lazy union of the checkpointed
+    * layers, never rolled: re-checkpointing it would rewrite every row
+    * seen so far on every round. Round 1 expands the seed; every later
+    * round expands `live(layer)` of the layer before it (the whole
+    * layer by default; a caller drops the traversers that halt there).
+    * The loop stops when that frontier is empty (converged) or after
+    * `rounds` rounds. The result holds all layers, including a last one
+    * that may be empty; they belong to the caller. When a round fails,
+    * the layers are released.
+    */
+  def frontier(seed: DataFrame, keys: Seq[String], rounds: Int,
+               live: DataFrame => DataFrame = identity)
+              (expand: (DataFrame, Int) => DataFrame): Result[Seq[DataFrame]] = {
+    val layers = scala.collection.mutable.ArrayBuffer(seed.localCheckpoint())
+    def seen(df: DataFrame): DataFrame = df.select(keys.map(col): _*)
+    try {
+      var visited = seen(layers.head)
+      var next = layers.head
+      var done = next.isEmpty
+      var k = 0
+      while (!done && k < rounds) {
+        k += 1
+        val layer = expand(next, k).join(visited, keys, "left_anti")
+          .localCheckpoint()
+        layers += layer
+        visited = visited.union(seen(layer))
+        next = live(layer)
+        done = next.isEmpty
+      }
+      Result(layers.toSeq, k, done)
+    } catch {
+      case t: Throwable => layers.foreach(release); throw t
     }
   }
 

@@ -324,6 +324,13 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(got(3L) == Map(3L -> 0L, 4L -> 1L))
   }
 
+  test("multiSourceHops: a repeated seed is one source with one dist-0 row") {
+    val g = mkGraph(Seq((1L, 2L), (2L, 3L)))
+    val twice = Algorithms.multiSourceHops(spark, g, Seq(1L, 1L))
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+    assert(twice == Seq((1L, 1L, 0L), (1L, 2L, 1L), (1L, 3L, 2L)))
+  }
+
   test("closeness: a 40-vertex chain reaches all 39 vertices past the seed") {
     val g = mkGraph((1L until 40L).map(i => (i, i + 1)))
     val got = Algorithms.closeness(spark, g, Seq(1L))

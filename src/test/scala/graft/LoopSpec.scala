@@ -73,6 +73,106 @@ class LoopSpec extends AnyFunSuite {
     assert(left.isEmpty, s"RDDs still persisted after the failure: $left")
   }
 
+  test("a repeat-until refusing a truncated fixed point leaves no RDD persisted") {
+    val v = spark.range(6).select(col("id"), lit("n").as("label"))
+    val e = spark.range(5).select(col("id").as("src"), (col("id") + 1).as("dst"),
+      lit("next").as("label"), lit(null).cast("long").as("sort_key"))
+    val g = PropertyGraph(v, e)
+    val before = persistedIds
+    val walks: Seq[() => DataFrame] = Seq(
+      () => g.V(0L).repeatUntil(_.out("next"), maxDepth = 2).toDF,
+      () => g.V(0L).repeatUntilReached(_.out("next"), _.hasId(9L), maxDepth = 2).toDF)
+    for (walk <- walks) {
+      val ex = intercept[IllegalStateException](walk())
+      assert(ex.getMessage.contains("maxDepth=2"))
+      val left = persistedIds -- before
+      assert(left.isEmpty, s"RDDs still persisted after the refusal: $left")
+    }
+  }
+
+  // ---- Loop.frontier: the visited-set BFS
+
+  private def chain(n: Int): DataFrame =
+    spark.range(n).select(col("id").as("src"), (col("id") + 1).as("dst"))
+
+  // a semi-join hop: its size estimate is the edge list's, so it does
+  // not grow round over round (an inner join's estimate multiplies and
+  // tips the plan from broadcast to shuffle joins after a few rounds)
+  private def hop(edges: DataFrame)(f: DataFrame, k: Int): DataFrame =
+    edges.join(f, edges("src") === f("id"), "left_semi").select(col("dst").as("id"))
+
+  test("frontier: a round cap keeps every layer and reports converged = false") {
+    val r = Loop.frontier(spark.range(1).toDF("id"), Seq("id"), 3)(hop(chain(10)))
+    assert(r.rounds == 3 && !r.converged)
+    assert(r.state.map(_.collect().map(_.getLong(0)).toSeq) ==
+      Seq(Seq(0L), Seq(1L), Seq(2L), Seq(3L)))
+    // the same walk left uncapped ends on the empty layer past the tail
+    val full = Loop.frontier(spark.range(1).toDF("id"), Seq("id"), 50)(hop(chain(4)))
+    assert(full.rounds == 5 && full.converged)
+    assert(full.state.map(_.count()) == Seq(1L, 1L, 1L, 1L, 1L, 0L))
+    full.state.foreach(Loop.release)
+    r.state.foreach(Loop.release)
+  }
+
+  test("frontier: the visited anti-join keys on every key column, and live " +
+       "drops the traversers that halt") {
+    // two seeds on a 3-cycle 0→1→2→0: each (seed, id) pair is new once,
+    // so both seeds reach all three vertices and stop after round 3
+    val e = spark.range(3).select(col("id").as("src"), ((col("id") + 1) % 3).as("dst"))
+    val seeds = spark.range(2).select(col("id").as("seed"), col("id"))
+    val r = Loop.frontier(seeds, Seq("seed", "id"), 10) { (f, _) =>
+      f.join(e, f("id") === e("src")).select(col("seed"), col("dst").as("id"))
+    }
+    assert(r.converged && r.rounds == 3)
+    val pairs = r.state.reduce(_ union _).collect().map(x => (x.getLong(0), x.getLong(1)))
+    assert(pairs.sorted.toSeq == (for (s <- 0L to 1L; v <- 0L to 2L) yield (s, v)))
+    // a live frontier without vertex 2 halts the walk there: 0→1→2 stops
+    val halted = Loop.frontier(spark.range(1).toDF("id"), Seq("id"), 10,
+        live = _.filter(col("id") =!= 2L))(hop(chain(10)))
+    assert(halted.converged && halted.rounds == 2)
+    assert(halted.state.last.collect().map(_.getLong(0)).toSeq == Seq(2L))
+    (r.state ++ halted.state).foreach(Loop.release)
+  }
+
+  /** Jobs one [[Loop.frontier]] round of the chain walk runs at this
+    * size, the layer checkpoint and the emptiness test among them.
+    */
+  private val FrontierJobsPerRound = 4
+
+  test("frontier: each round costs a pinned number of Spark jobs") {
+    // the pin stops a change from quietly adding per-round work, such
+    // as re-checkpointing the visited set every round; count only jobs
+    // carrying this thread's job group (suites share one session)
+    val gid = "frontier-jobs-probe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (gid == js.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+        ()
+      }
+    }
+    def jobsFor(n: Int): Int = {
+      val edges = chain(n).localCheckpoint()
+      jobs.set(0)
+      spark.sparkContext.setJobGroup(gid, "frontier job probe")
+      val r = try Loop.frontier(spark.range(1).toDF("id"), Seq("id"), 50)(hop(edges))
+        finally spark.sparkContext.clearJobGroup()
+      Thread.sleep(1500) // listener bus drain
+      assert(r.rounds == n + 1 && r.converged)
+      (r.state :+ edges).foreach(Loop.release)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val (three, six) = (jobsFor(3), jobsFor(6))
+      assert(six - three == 3 * FrontierJobsPerRound,
+        s"3 more rounds ran ${six - three} more jobs")
+      assert(three == 17, s"a 4-round walk ran $three jobs")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("resetStats keeps a 30-round self-join's size estimate bounded") {
     // pointer jumping joins the rolled state with itself: an inherited
     // estimate squares on every roll (the Borůvka hang)
@@ -137,6 +237,11 @@ class LoopSpec extends AnyFunSuite {
     "maximalIndependentSet" -> (g => Algorithms.maximalIndependentSet(
       spark, g, maxRounds = 30)),
     "simRankExact" -> (g => Algorithms.simRankExact(spark, g)),
+    "repeatUntil" -> (g => g.V(0L, 1L).repeatUntil(_.out("link")).toDF),
+    "repeatUntilReached" -> (g => g.V(0L, 1L)
+      .repeatUntilReached(_.out("link"), _.hasId(7L)).toDF),
+    "multiSourceHops" -> (g => Algorithms.multiSourceHops(spark, g, Seq(0L, 1L))),
+    "betweenness" -> (g => Algorithms.betweenness(spark, g)),
     "dupClusters" -> (g => Dedup.dupClusters(
       g.edges.select(col("src").as("a_id"), col("dst").as("b_id")))))
 
