@@ -582,29 +582,29 @@ final class Traversal private (val g: PropertyGraph, frame: () => DataFrame,
       // a halted traverser stays in its layer (and in visited) but is
       // not expanded; LAZY: a depth-1 anti-join over two checkpoints
       val live = (l: DataFrame) => stopSet.fold(l)(l.join(_, Seq("id"), "left_anti"))
-      val r = try {
-        Loop.frontier(df.select(col("id")).dropDuplicates("id"), Seq("id"),
-            maxDepth, live) { (ids, _) =>
+      try {
+        val r = Loop.frontier(df.select(col("id")).dropDuplicates("id"),
+            Seq("id"), maxDepth, live) { (ids, _) =>
           val stepped = step(Traversal(gc,
             gc.vertices.join(ids, Seq("id"), "left_semi"), isEdge = false))
           require(!stepped.isEdge, s"$what step must end on a vertex frontier")
           stepped.df.select(col("id")).dropDuplicates("id")
         }
+        // a walk the cap cut short is a truncated answer, not an answer:
+        // a target deeper than maxDepth must not silently vanish
+        if (!r.converged) {
+          r.state.foreach(Loop.release)
+          throw new IllegalStateException(
+            s"$what still had live traversers after maxDepth=$maxDepth " +
+              "rounds — raise maxDepth or bound the walk with times(n)")
+        }
+        val reached = r.state.tail
+        val emitted = stopSet match {
+          case Some(set) if !emitAll => reached.map(_.join(set, Seq("id"), "left_semi"))
+          case _ => reached
+        }
+        emitted.reduceOption(_ union _).getOrElse(r.state.head.limit(0))
       } catch { case t: Throwable => stopSet.foreach(Loop.release); throw t }
-      // a walk the cap cut short is a truncated answer, not an answer:
-      // a target deeper than maxDepth must not silently vanish
-      if (!r.converged) {
-        (r.state ++ stopSet).foreach(Loop.release)
-        throw new IllegalStateException(
-          s"$what still had live traversers after maxDepth=$maxDepth " +
-            "rounds — raise maxDepth or bound the walk with times(n)")
-      }
-      val reached = r.state.tail
-      val emitted = stopSet match {
-        case Some(set) if !emitAll => reached.map(_.join(set, Seq("id"), "left_semi"))
-        case _ => reached
-      }
-      emitted.reduceOption(_ union _).getOrElse(r.state.head.limit(0))
     }
     merged(g.vertices.join(ids, Seq("id"), "left_semi"), edge = false)
   }
