@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Loop
 
@@ -34,37 +34,83 @@ object Algorithms {
       .agg(count(lit(1)).cast("int").as("degree"))
   }
 
+  /** One round's pull over `edges`: the state (id, …) joins on `from`,
+    * every edge yields `contrib`, and the sums group on `to` as (id, m).
+    * The shuffle_hash hint rides the narrow state side, so the state is
+    * the hash-join build side and the cached, pre-partitioned edges
+    * stream: a sort-merge join would re-sort them every round, and
+    * building on the edge side measured 2× slower on the 750k-edge
+    * hitsExact gate (r16).
+    */
+  private def pull(edges: DataFrame, from: String, to: String, st: DataFrame,
+                   contrib: Column): DataFrame =
+    edges.join(st.withColumnRenamed("id", from).hint("shuffle_hash"), from)
+      .groupBy(col(to).as("id")).agg(sum(contrib).as("m"))
+
+  /** The loop-invariant frames of the PageRank/Katz loops, built by
+    * [[rankGraph]]: `edges` (src, dst, …, sw) cached pre-partitioned on
+    * src, every edge carrying its src's out-weight; `verts` (id, sw,
+    * indeg), one cached row per endpoint; `n` the edge count.
+    */
+  private final case class RankGraph(edges: DataFrame, verts: DataFrame, n: Long) {
+
+    /** The rank loop: the state starts at `init` over `verts`; each
+      * round [[pull]]s `contrib` along the out-edges, maps the sums
+      * (id, m) through `update`, and appends the vertices with no
+      * in-edge at `restart`. Those receive no mass in any round, so a
+      * filter of the cached vertex frame gives them, and the union
+      * replaces a per-round left join against every vertex (r15).
+      * Caching that filter as well cost 5 more Spark jobs per query
+      * (a_pagerank_exact at sf0.1 on 4 cores: 43 against 38). The
+      * state rolls at cadence 5: each round's state feeds one consumer,
+      * the next round's join ([[graft.util.Loop]]).
+      */
+    def rounds(iters: Int, init: Column, restart: Column, contrib: Column)
+              (update: DataFrame => DataFrame): DataFrame = {
+      val noIn = verts.filter(col("indeg") === 0L).select(col("id"), restart)
+      Loop.run(verts.select(col("id"), init), iters, every = 5) { (st, _) =>
+        update(pull(edges, "src", "dst", st, contrib)).unionByName(noIn)
+      }.state
+    }
+  }
+
+  /** Checkpoint and count `src` (src, dst, …) and build its
+    * [[RankGraph]]. One explode aggregate over both endpoints gives
+    * every vertex its out-weight Σ`w` and in-degree, so the vertex set,
+    * the src annotation, the no-in-edge set and a max in-degree all
+    * read one cached frame instead of three passes over the source.
+    * The annotated edges are repartitioned on src, the per-round join
+    * key, into a size-derived count ([[Loop.parts]]): without it the
+    * cache keeps the scan layout and every round re-exchanges the |E|
+    * side (r16).
+    */
+  private def rankGraph(s: SparkSession, c: Loop.Caches, src: DataFrame,
+                        w: Column = lit(1L)): RankGraph = {
+    val (e, n) = c.counted(src)
+    val verts = c(e.select(explode(array(
+        struct(col("src").as("id"), w.as("ow"), lit(0L).as("ic")),
+        struct(col("dst").as("id"), lit(0L).as("ow"), lit(1L).as("ic")))).as("x"))
+      .groupBy(col("x.id").as("id"))
+      .agg(sum(col("x.ow")).as("sw"), sum(col("x.ic")).as("indeg")))
+    RankGraph(c(e.join(verts.select(col("id").as("src"), col("sw")), "src")
+      .repartition(Loop.parts(s, n), col("src"))), verts, n)
+  }
+
   /** Static PageRank in doubles over the endpoints of all edges: every
     * rank starts at 1.0, each round sets r' = 0.15 + 0.85·Σ r·(1/outdeg)
     * over the in-edges (parallel edges counted), and after `iters`
     * rounds the ranks are scaled to sum to n — GraphX's staticPageRank.
     * Double sums depend on the reduce order, so values agree across
     * engines only up to the last bits; [[pageRankExact]] is the
-    * bit-exact variant. Same loop shape as pageRankExact: the
-    * degree-annotated edges cached pre-partitioned on src, the
-    * constant no-in-edge frame, cadence 5.
+    * bit-exact variant.
     */
   def pageRank(s: SparkSession, g: PropertyGraph, iters: Int = 10): DataFrame = {
     val ranks = Loop.cached { c =>
-      val (edges, n) = c.counted(g.edges.select(col("src"), col("dst")))
-      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      val edgesDeg = c(edges.join(outdeg, "src")
-        .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("inv"))
-        .repartition(Loop.parts(s, n), col("src")))
-      val verts = c(edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct())
-      val noIn = c(verts
-        .join(edgesDeg.select(col("dst").as("id")), Seq("id"), "left_anti")
-        .select(col("id"), lit(0.15).as("rank")))
-      Loop.run(verts.select(col("id"), lit(1.0).as("rank")), iters,
-          every = 5) { (r, _) =>
-        edgesDeg
-          .join(r.select(col("id").as("src"), col("rank"))
-            .hint("shuffle_hash"), "src")
-          .groupBy(col("dst").as("id")).agg(sum(col("rank") * col("inv")).as("m"))
-          .select(col("id"), (lit(0.15) + lit(0.85) * col("m")).as("rank"))
-          .unionByName(noIn)
-      }.state
+      rankGraph(s, c, g.edges.select(col("src"), col("dst")))
+        .rounds(iters, lit(1.0).as("rank"), lit(0.15).as("rank"),
+          col("rank") * (lit(1.0) / col("sw"))) {
+          _.select(col("id"), (lit(0.15) + lit(0.85) * col("m")).as("rank"))
+        }
     }
     val t = ranks.agg(count(lit(1)), sum(col("rank"))).head()
     if (t.isNullAt(1)) ranks
@@ -236,7 +282,7 @@ object Algorithms {
     * distinct + degree build runs once per query, not once per caller.
     * Returns the eagerly-materialized 1-row total.
     */
-  private def triangleFrom(e: DataFrame, deg: DataFrame): DataFrame = {
+  private def triangleFrom(e: DataFrame, deg: DataFrame): DataFrame = Loop.cached { c =>
     val withDeg = e
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
@@ -250,24 +296,20 @@ object Algorithms {
     // sort-free (r15, guide §2.4 — the cached plan's partitioning and
     // ordering survive InMemoryTableScan), instead of exchanging the
     // oriented list twice per query
-    val o = withDeg.select(
+    val o = c(withDeg.select(
         when(fwd, col("a")).otherwise(col("b")).as("u"),
         when(fwd, col("b")).otherwise(col("a")).as("w"),
         when(fwd, col("db")).otherwise(col("da")).as("dw"))
-      .repartition(col("u")).sortWithinPartitions("u")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val wedges = o.select(col("u"), col("w").as("w1"), col("dw").as("d1"))
-        .join(o.select(col("u"), col("w").as("w2"), col("dw").as("d2")), "u")
-        .filter(col("d1") < col("d2") ||
-          (col("d1") === col("d2") && col("w1") < col("w2")))
-        .select(col("w1"), col("w2"))
-      val triangles = wedges.join(
-        o.select(col("u").as("w1"), col("w").as("w2")), Seq("w1", "w2"), "left_semi")
-      // one row out — materialize before releasing the cached edges
-      triangles.agg(count(lit(1)).cast("long").as("total_triangles"))
-        .localCheckpoint(eager = true)
-    } finally o.unpersist(blocking = false)
+      .repartition(col("u")).sortWithinPartitions("u"))
+    val wedges = o.select(col("u"), col("w").as("w1"), col("dw").as("d1"))
+      .join(o.select(col("u"), col("w").as("w2"), col("dw").as("d2")), "u")
+      .filter(col("d1") < col("d2") ||
+        (col("d1") === col("d2") && col("w1") < col("w2")))
+      .select(col("w1"), col("w2"))
+    val triangles = wedges.join(
+      o.select(col("u").as("w1"), col("w").as("w2")), Seq("w1", "w2"), "left_semi")
+    // one row out, checkpointed by the scope before the cache is released
+    triangles.agg(count(lit(1)).cast("long").as("total_triangles"))
   }
 
   /** Deterministic fixed-point PageRank over a label-filtered subgraph,
@@ -286,51 +328,19 @@ object Algorithms {
     * Loop mechanics follow Dedup.dupClusters, not one giant lazy plan:
     * a 10-deep unrolled join tree made Catalyst re-analyze the whole
     * tree per step (measured ~8 s on a 16k-edge graph — planning, not
-    * data). Instead the loop-invariant relations (edges pre-joined
-    * with out-degree, vertex set) persist once and the narrow (id, pr)
-    * state rolls through [[graft.util.Loop]] at cadence 5 (each
-    * round's state feeds exactly one consumer, the next round's join),
-    * so every step is one shallow two-stage job regardless of `iters`.
+    * data). Instead the loop-invariant relations persist once and the
+    * narrow (id, pr) state rolls ([[RankGraph.rounds]]), so every step
+    * is one shallow two-stage job regardless of `iters`.
     */
   def pageRankExact(s: SparkSession, g: PropertyGraph, labels: Seq[String] = Nil,
                     iters: Int = 10): DataFrame = {
     val e0 = g.edgesOf(labels)
     Loop.cached { c =>
-      val (edges, n) = c.counted(e0.select(col("src"), col("dst")))
-      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      // pre-partitioned on the per-round join key (r16): outdeg is small
-      // enough that the build join broadcasts it, so WITHOUT the explicit
-      // repartition the cache keeps the parquet scan layout and every
-      // round's state join re-exchanges (or re-sorts) the |E| side;
-      // the partition count is size-derived (Loop.parts)
-      val edgesDeg = c(edges.join(outdeg, "src")
-        .select(col("src"), col("dst"), col("outdeg"))
-        .repartition(Loop.parts(s, n), col("src")))
-      val verts = c(edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct())
-      // vertices with NO in-edge receive zero propagated mass in every
-      // round, so their rank is the constant 150000 restart term —
-      // computed ONCE. contrib below covers exactly the has-in-edge
-      // set (pr always spans all vertices, so every dst gets a
-      // contribution row), which turns the per-round verts LEFT join —
-      // a full-vertex scan plus a broadcast build every round — into a
-      // shuffle-free union with this constant frame (r15, guide §2.4).
-      val noIn = c(verts
-        .join(edgesDeg.select(col("dst").as("id")), Seq("id"), "left_anti")
-        .select(col("id"), lit(150000L).as("pr")))
-      Loop.run(verts.select(col("id"), lit(1000000L).as("pr")), iters,
-          every = 5) { (pr, _) =>
-        // shuffle_hash on the narrow state side: an SMJ would re-SORT
-        // the cached pre-partitioned adjacency every round (the LPA /
-        // ccAltRound lesson applied to the PR loop family, r16)
-        edgesDeg
-          .join(pr.select(col("id").as("src"), col("pr"))
-            .hint("shuffle_hash"), "src")
-          .select(col("dst").as("id"), expr("pr div outdeg").as("c"))
-          .groupBy(col("id")).agg(sum(col("c")).as("m"))
-          .select(col("id"), expr("150000L + (85L * m) div 100L").as("pr"))
-          .unionByName(noIn)
-      }.state
+      rankGraph(s, c, e0.select(col("src"), col("dst")))
+        .rounds(iters, lit(1000000L).as("pr"), lit(150000L).as("pr"),
+          expr("pr div sw")) {
+          _.select(col("id"), expr("150000L + (85L * m) div 100L").as("pr"))
+        }
     }
   }
 
@@ -347,38 +357,21 @@ object Algorithms {
     * while a relational replay errors on the division. Out-of-contract
     * edges are filtered out (w > 0) so both engines see the same
     * positive-weight graph instead of diverging silently.
-    * Scale: identical plan family to pageRankExact — one persisted
-    * pre-partitioned weighted adjacency, per round one narrow join +
-    * hash-agg.
+    * Scale: identical plan family to pageRankExact ([[RankGraph]]).
     */
   def pageRankWeightedExact(s: SparkSession, g: PropertyGraph,
-      weight: org.apache.spark.sql.Column, labels: Seq[String] = Nil,
+      weight: Column, labels: Seq[String] = Nil,
       iters: Int = 10): DataFrame = {
     val e0 = g.edgesOf(labels)
     Loop.cached { c =>
-      val (ew, n) = c.counted(e0.select(col("src"), col("dst"))
-        .withColumn("w", weight.cast("long"))
-        .filter(col("w") > 0)) // positive-weight contract (see scaladoc)
-      val sw = ew.groupBy(col("src")).agg(sum(col("w")).as("sw"))
-      val edgesW = c(ew.join(sw, "src")
-        .select(col("src"), col("dst"), col("w"), col("sw"))
-        .repartition(Loop.parts(s, n), col("src"))) // see pageRankExact
-      val verts = c(edgesW.select(col("src").as("id"))
-        .union(edgesW.select(col("dst").as("id"))).distinct())
-      // constant no-in-edge frame — see pageRankExact (r15, guide §2.4)
-      val noIn = c(verts
-        .join(edgesW.select(col("dst").as("id")), Seq("id"), "left_anti")
-        .select(col("id"), lit(150000L).as("pr")))
-      Loop.run(verts.select(col("id"), lit(1000000L).as("pr")), iters,
-          every = 5) { (pr, _) =>
-        edgesW
-          .join(pr.select(col("id").as("src"), col("pr"))
-            .hint("shuffle_hash"), "src") // stream the cache, build on state (r16)
-          .select(col("dst").as("id"), expr("(pr * w) div sw").as("c"))
-          .groupBy(col("id")).agg(sum(col("c")).as("m"))
-          .select(col("id"), expr("150000L + (85L * m) div 100L").as("pr"))
-          .unionByName(noIn)
-      }.state
+      rankGraph(s, c, e0.select(col("src"), col("dst"))
+          .withColumn("w", weight.cast("long"))
+          .filter(col("w") > 0), // positive-weight contract (see scaladoc)
+          col("w"))
+        .rounds(iters, lit(1000000L).as("pr"), lit(150000L).as("pr"),
+          expr("(pr * w) div sw")) {
+          _.select(col("id"), expr("150000L + (85L * m) div 100L").as("pr"))
+        }
     }
   }
 
@@ -419,7 +412,7 @@ object Algorithms {
       // expand the plan tree exponentially across 10 steps)
       val adj = c(sym.union(
           sym.select(col("v")).distinct().select(col("v"), col("v").as("n")))
-        .repartition(Loop.parts(s, n), col("n"))) // see pageRankExact
+        .repartition(Loop.parts(s, n), col("n"))) // see rankGraph
       // vertex-set contract: scores are defined over vertices incident
       // to at least one (label-filtered) non-loop edge — isolated
       // vertices have no centrality mass and are absent from the
@@ -439,11 +432,7 @@ object Algorithms {
         }
         val r = Loop.run(adj.select(col("v").as("id")).distinct()
             .select(col("id"), lit(1000000L).as("score")), iters) { (st, k) =>
-          adj.join((if (k == 1) st else scores(st))
-              .select(col("id").as("n"), col("score"))
-              .hint("shuffle_hash"), "n") // stream the cache, build on state (r16)
-            .groupBy(col("v")).agg(sum(col("score")).as("m"))
-            .select(col("v").as("id"), col("m"))
+          pull(adj, "n", "v", if (k == 1) st else scores(st), col("score"))
         }
         if (r.rounds == 0) r.state else scores(r.state)
       }
@@ -500,15 +489,6 @@ object Algorithms {
         def scores(m: DataFrame): DataFrame =
           m.crossJoin(broadcast(m.agg(max(col("m")).as("mx"))))
             .select(col("id"), expr("(m * 1000000L) div mx").as("score"))
-        // hint rides the narrow STATE side → it becomes the hash-join
-        // build side (building on the 750k-edge side instead measured
-        // 2× slower); the pre-partitioned persisted edges stream
-        def pull(edges: DataFrame, from: String, to: String,
-                 st: DataFrame): DataFrame = edges
-          .join(st.select(col("id").as(from), col("score"))
-            .hint("shuffle_hash"), from)
-          .groupBy(col(to)).agg(sum(col("score")).as("m"))
-          .select(col(to).as("id"), col("m"))
         // one round per HALF-step over (hub sums, authority sums), one
         // rolling slot each: odd rounds pull authorities from hubs, even
         // rounds hubs from authorities, so a hub roll never releases
@@ -519,8 +499,9 @@ object Algorithms {
         val (h, a) = Loop.run((h0, h0.limit(0)), 2 * iters) {
           case ((h, a), t) =>
             if (t % 2 == 1) (h, pull(eBySrc, "src", "dst",
-              if (t == 1) h.withColumnRenamed("m", "score") else scores(h)))
-            else (pull(eByDst, "dst", "src", scores(a)), a)
+              if (t == 1) h.withColumnRenamed("m", "score") else scores(h),
+              col("score")))
+            else (pull(eByDst, "dst", "src", scores(a), col("score")), a)
         }.state
         eBySrc.select(col("src").as("id"))
           .union(eByDst.select(col("dst").as("id"))).distinct()
@@ -551,35 +532,31 @@ object Algorithms {
     * vertex-cut pattern), then two hash-aggs of (comm) keys — output
     * is ONE row; no driver state beyond scalars.
     */
-  def modularity(s: SparkSession, edges: DataFrame, comm: DataFrame): DataFrame = {
-    val und = undirectedDistinct(edges)
-    val lab = und
-      .join(comm.select(col("id").as("a"), col("comm").as("ca")), "a")
-      .join(comm.select(col("id").as("b"), col("comm").as("cb")), "b")
-      .persist()
-    try {
+  def modularity(s: SparkSession, edges: DataFrame, comm: DataFrame): DataFrame =
+    Loop.cached { c =>
+      val lab = c(undirectedDistinct(edges)
+        .join(comm.select(col("id").as("a"), col("comm").as("ca")), "a")
+        .join(comm.select(col("id").as("b"), col("comm").as("cb")), "b"))
       val m = lab.count()
-      if (m == 0L) {
-        return lab.select(lit(0L).as("m"), lit(0L).as("n_comm"),
-          lit(0L).as("q_num"), lit(0L).as("q_den"),
-          lit(0.0).as("q")).limit(0)
+      if (m == 0L) lab.select(lit(0L).as("m"), lit(0L).as("n_comm"),
+        lit(0L).as("q_num"), lit(0L).as("q_den"), lit(0.0).as("q")).limit(0)
+      else {
+        val intra = lab.filter(col("ca") === col("cb"))
+          .groupBy(col("ca").as("comm")).agg(count(lit(1)).as("e_c"))
+        val degMass = lab
+          .select(explode(array(col("ca"), col("cb"))).as("comm"))
+          .groupBy(col("comm")).agg(count(lit(1)).as("d_c"))
+        val perComm = degMass.join(intra, Seq("comm"), "left")
+          .select(col("comm"), coalesce(col("e_c"), lit(0L)).as("e_c"),
+            col("d_c"))
+        perComm.agg(
+            count(lit(1)).as("n_comm"),
+            sum(expr(s"4L * ${m}L * e_c - d_c * d_c")).as("q_num"))
+          .select(lit(m).as("m"), col("n_comm"), col("q_num"),
+            lit(4L * m * m).as("q_den"),
+            round(col("q_num").cast("double") / lit(4.0 * m * m), 6).as("q"))
       }
-      val intra = lab.filter(col("ca") === col("cb"))
-        .groupBy(col("ca").as("comm")).agg(count(lit(1)).as("e_c"))
-      val degMass = lab
-        .select(explode(array(col("ca"), col("cb"))).as("comm"))
-        .groupBy(col("comm")).agg(count(lit(1)).as("d_c"))
-      val perComm = degMass.join(intra, Seq("comm"), "left")
-        .select(col("comm"), coalesce(col("e_c"), lit(0L)).as("e_c"),
-          col("d_c"))
-      perComm.agg(
-          count(lit(1)).as("n_comm"),
-          sum(expr(s"4L * ${m}L * e_c - d_c * d_c")).as("q_num"))
-        .select(lit(m).as("m"), col("n_comm"), col("q_num"),
-          lit(4L * m * m).as("q_den"),
-          round(col("q_num").cast("double") / lit(4.0 * m * m), 6).as("q"))
-    } finally lab.unpersist(blocking = false)
-  }
+    }
 
   /** Deterministic random-walk sampling (the node2vec/DeepWalk corpus
     * generator): from each seed, `steps` hops over the undirected
@@ -749,68 +726,27 @@ object Algorithms {
     * Rank therefore measures proximity to the seeds — the
     * recommendation/expansion primitive of the HugeGraph analytics
     * suite. Same loop mechanics and scale shape as pageRankExact
-    * (persisted degree-annotated edges, narrow (id, pr) state
-    * localCheckpoint'ed per round); the seed flag joins once into a
-    * persisted loop-invariant vertex frame, not per round.
+    * ([[RankGraph]]); the seed flag joins the vertex frame once, into
+    * a cached frame that gives the initial and restart values, and
+    * each round joins the SMALL seed set, not that flagged frame.
     */
   def personalizedPageRankExact(s: SparkSession, g: PropertyGraph,
                                 seeds: DataFrame, labels: Seq[String] = Nil,
                                 iters: Int = 10): DataFrame = {
     val e0 = g.edgesOf(labels)
     Loop.cached { c =>
-      val (edges, n) = c.counted(e0.select(col("src"), col("dst")))
-      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      val edgesDeg = c(edges.join(outdeg, "src")
-        .select(col("src"), col("dst"), col("outdeg"))
-        .repartition(Loop.parts(s, n), col("src"))) // see pageRankExact
-      val vflag = c(edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct()
-        .join(seeds.select(col("id")).distinct()
-          .withColumn("__seed", lit(1L)), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__seed"), lit(0L)).as("seed")))
-      // constant no-in-edge frame (per-vertex seed restart mass only) —
-      // see pageRankExact; the contrib side re-attaches the seed flag by
-      // joining the SMALL seed set instead of the full vflag frame
-      val seedFlag = c(seeds.select(col("id")).distinct()
-        .withColumn("__seed", lit(1L)))
-      val noIn = c(vflag
-        .join(edgesDeg.select(col("dst").as("id")), Seq("id"), "left_anti")
-        .select(col("id"), (col("seed") * 150000L).as("pr")))
-      Loop.run(vflag.select(col("id"), (col("seed") * 1000000L).as("pr")),
-          iters, every = 5) { (pr, _) =>
-        edgesDeg
-          .join(pr.select(col("id").as("src"), col("pr"))
-            .hint("shuffle_hash"), "src") // stream the cache, build on state (r16)
-          .select(col("dst").as("id"), expr("pr div outdeg").as("c"))
-          .groupBy(col("id")).agg(sum(col("c")).as("m"))
-          .join(seedFlag, Seq("id"), "left")
-          .select(col("id"),
-            (coalesce(col("__seed"), lit(0L)) * 150000L +
-              expr("(85L * m) div 100L")).as("pr"))
-          .unionByName(noIn)
-      }.state
+      val flag = c(seeds.select(col("id")).distinct().withColumn("__seed", lit(1L)))
+      val seed = coalesce(col("__seed"), lit(0L))
+      val r = rankGraph(s, c, e0.select(col("src"), col("dst")))
+      r.copy(verts = c(r.verts.join(flag, Seq("id"), "left")))
+        .rounds(iters, (seed * 1000000L).as("pr"), (seed * 150000L).as("pr"),
+          expr("pr div sw")) {
+          _.join(flag, Seq("id"), "left")
+            .select(col("id"), (seed * 150000L + expr("(85L * m) div 100L")).as("pr"))
+        }
     }
   }
 
-  /** Deterministic synchronous label propagation (community
-    * detection — the LPA of the HugeGraph analytics suite, here
-    * DataFrame-first): every vertex starts in its own community; each
-    * of the fixed `iters` rounds relabels every vertex to its
-    * neighbors' most frequent label, ties broken toward the SMALLEST
-    * label — so the result is bit-stable across engines, partition
-    * counts, and reduce orders, unlike a LabelPropagation whose
-    * tie-break follows hash-map iteration order. Isolated
-    * vertices keep their own label (singleton communities).
-    *
-    * Per round: one narrow (v, n) adjacency join against the (id,
-    * label) state + two hash-aggs — shuffles carry 16-byte pairs, the
-    * adjacency list is persisted for the loop, and state is eagerly
-    * localCheckpoint'ed per round (the Dedup.dupClusters loop
-    * mechanics; a lazily-unrolled 4-iteration plan re-analyzes the
-    * whole lineage each round). Fixed iteration count: synchronous
-    * LPA can oscillate on bipartite regions, so convergence testing
-    * would not terminate — fixed-k is the standard batch variant.
-    */
   /** Louvain community detection, LEVEL-1 local-move phase (Blondel et
     * al. 2008) with INTEGER-EXACT modularity gains: each vertex
     * considers its neighbors' communities (plus its own) and moves to
@@ -884,6 +820,25 @@ object Algorithms {
     }
   }
 
+  /** Deterministic synchronous label propagation (community
+    * detection — the LPA of the HugeGraph analytics suite, here
+    * DataFrame-first): every vertex starts in its own community; each
+    * of the fixed `iters` rounds relabels every vertex to its
+    * neighbors' most frequent label, ties broken toward the SMALLEST
+    * label — so the result is bit-stable across engines, partition
+    * counts, and reduce orders, unlike a LabelPropagation whose
+    * tie-break follows hash-map iteration order. Isolated
+    * vertices keep their own label (singleton communities).
+    *
+    * Per round: one narrow (v, n) adjacency join against the (id,
+    * label) state + two hash-aggs — shuffles carry 16-byte pairs, the
+    * adjacency list is persisted for the loop, and state is eagerly
+    * localCheckpoint'ed per round (the Dedup.dupClusters loop
+    * mechanics; a lazily-unrolled 4-iteration plan re-analyzes the
+    * whole lineage each round). Fixed iteration count: synchronous
+    * LPA can oscillate on bipartite regions, so convergence testing
+    * would not terminate — fixed-k is the standard batch variant.
+    */
   def labelPropagation(s: SparkSession, g: PropertyGraph, iters: Int = 4,
                        labels: Seq[String] = Nil): DataFrame = {
     val all = g.edgesOf(labels)
@@ -1083,37 +1038,22 @@ object Algorithms {
     * state exactly once (the [[pageRankExact]]/[[eigenvectorExact]]
     * template family).
     *
-    * Scale: per step one narrow (id, score) join against the persisted
-    * edge list pre-partitioned on src (the step's join key) + one
-    * hash-agg; driver traffic is the single up-front maxInDeg scalar.
+    * Scale: the [[RankGraph]] loop — per step one narrow (id, score)
+    * join against the cached edges + one hash-agg; driver traffic is
+    * the single up-front maxInDeg scalar, read off the vertex frame.
     */
   def katzExact(s: SparkSession, g: PropertyGraph,
                 labels: Seq[String] = Nil, iters: Int = 6): DataFrame = {
     val e0 = g.edgesOf(labels)
     Loop.cached { c =>
-      val (src, n) = c.counted(e0.select(col("src"), col("dst")))
-      val edges = c(src.repartition(Loop.parts(s, n), col("src"))) // see pageRankExact
-      val verts = c(edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct())
-      if (n == 0L) verts.select(col("id"), lit(1000000L).as("score")).limit(0)
+      val r = rankGraph(s, c, e0.select(col("src"), col("dst")))
+      if (r.n == 0L) r.verts.select(col("id"), lit(1000000L).as("score")).limit(0)
       else {
-        val maxInDeg = edges.groupBy(col("dst"))
-          .agg(count(lit(1)).as("d")).agg(max(col("d"))).head().getLong(0)
-        val denom = 2L * maxInDeg
-        // constant no-in-edge frame — see pageRankExact (r15, §2.4)
-        val noIn = c(verts
-          .join(edges.select(col("dst").as("id")), Seq("id"), "left_anti")
-          .select(col("id"), lit(1000000L).as("score")))
-        Loop.run(verts.select(col("id"), lit(1000000L).as("score")), iters,
-            every = 5) { (x, _) =>
-          edges
-            .join(x.select(col("id").as("src"), col("score"))
-              .hint("shuffle_hash"), "src") // stream the cache (r16)
-            .groupBy(col("dst")).agg(sum(col("score")).as("m"))
-            .select(col("dst").as("id"),
-              expr(s"1000000L + m div ${denom}L").as("score"))
-            .unionByName(noIn)
-        }.state
+        val denom = 2L * r.verts.agg(max(col("indeg"))).head().getLong(0)
+        r.rounds(iters, lit(1000000L).as("score"), lit(1000000L).as("score"),
+            col("score")) {
+          _.select(col("id"), expr(s"1000000L + m div ${denom}L").as("score"))
+        }
       }
     }
   }
@@ -1382,30 +1322,28 @@ object Algorithms {
     */
   def assortativity(s: SparkSession, g: PropertyGraph,
                     labels: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val all = g.edgesOf(labels)
-    val und = undirectedDistinct(all).persist(MEMORY_AND_DISK)
-    try {
-      val deg = degreesOf(und)
-      val d = (c: org.apache.spark.sql.Column) => c.cast("double")
-      // degree-REGULAR graphs (cycle, perfect matching) make the
-      // variance denominator n·Σx²−(Σx)² exactly 0; r is undefined
-      // there and NaN/±Inf render differently across engines, so both
-      // this expression and the oracle return NULL via a nullif-style
-      // guard instead (ADVICE r9)
-      symmetrize(und)
-        .join(deg.select(col("v"), col("d").as("x")), "v")
-        .join(deg.select(col("v").as("n"), col("d").as("y")), "n")
-        .agg(count(lit(1)).as("n_ends"), sum(col("x")).as("sx"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("x") * col("y")).as("sxy"))
-        .select(col("n_ends"), col("sx"), col("sxx"), col("sxy"),
-          round(
-            (d(col("n_ends")) * d(col("sxy")) - d(col("sx")) * d(col("sx"))) /
-              nullif(d(col("n_ends")) * d(col("sxx")) - d(col("sx")) * d(col("sx")),
-                lit(0.0)),
-            6).as("assortativity"))
-    } finally und.unpersist(blocking = false)
+    // und is NOT persisted: both of its readers sit in one plan, as in
+    // triangleTotal
+    val und = undirectedDistinct(g.edgesOf(labels))
+    val deg = degreesOf(und)
+    val d = (c: Column) => c.cast("double")
+    // degree-REGULAR graphs (cycle, perfect matching) make the
+    // variance denominator n·Σx²−(Σx)² exactly 0; r is undefined
+    // there and NaN/±Inf render differently across engines, so both
+    // this expression and the oracle return NULL via a nullif-style
+    // guard instead (ADVICE r9)
+    symmetrize(und)
+      .join(deg.select(col("v"), col("d").as("x")), "v")
+      .join(deg.select(col("v").as("n"), col("d").as("y")), "n")
+      .agg(count(lit(1)).as("n_ends"), sum(col("x")).as("sx"),
+        sum(col("x") * col("x")).as("sxx"),
+        sum(col("x") * col("y")).as("sxy"))
+      .select(col("n_ends"), col("sx"), col("sxx"), col("sxy"),
+        round(
+          (d(col("n_ends")) * d(col("sxy")) - d(col("sx")) * d(col("sx"))) /
+            nullif(d(col("n_ends")) * d(col("sxx")) - d(col("sx")) * d(col("sx")),
+              lit(0.0)),
+          6).as("assortativity"))
   }
 
   /** Global clustering coefficient = 3·triangles / wedges, where
@@ -1417,26 +1355,23 @@ object Algorithms {
   def clusteringCoefficient(s: SparkSession, g: PropertyGraph,
                             labels: Seq[String] = Nil): DataFrame = {
     val all = g.edgesOf(labels)
-    // one persisted canonical edge list + one degree frame feed BOTH
-    // the wedge count and the triangle closure (pre-round-6 this query
-    // rebuilt the lineitem-wide distinct twice — 15s vs triangles' 6.6s
-    // at sf0.1)
-    val e = undirectedDistinct(all)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Loop.cached { c =>
+      // one cached canonical edge list + one degree frame feed BOTH the
+      // wedge count and the triangle closure (pre-round-6 this query
+      // rebuilt the lineitem-wide distinct twice — 15s vs triangles' 6.6s
+      // at sf0.1)
+      val e = c(undirectedDistinct(all))
       val deg = degreesOf(e)
       // empty / all-degree-1 edge sets: SUM over zero rows is NULL and
       // Divide by 0 is NULL under non-ANSI — define both as exact 0
       val wedges = deg.agg(
         coalesce(sum(expr("d * (d - 1) div 2")), lit(0L)).as("n_wedges"))
-      val tri = triangleFrom(e, deg)
-      wedges.crossJoin(tri)
+      wedges.crossJoin(triangleFrom(e, deg))
         .select(col("n_wedges"), col("total_triangles"),
           when(col("n_wedges") === 0, lit(0.0)).otherwise(
             round(lit(3.0) * col("total_triangles").cast("double") /
               col("n_wedges").cast("double"), 6)).as("global_clustering"))
-        .localCheckpoint(eager = true)
-    } finally e.unpersist(blocking = false)
+    }
   }
 
   /** Single-source shortest hop distances: [[multiSourceHops]] with
@@ -1467,7 +1402,7 @@ object Algorithms {
     * edge has no row.
     */
   def ssspWeighted(s: SparkSession, g: PropertyGraph, source: Long,
-                   weight: org.apache.spark.sql.Column,
+                   weight: Column,
                    labels: Seq[String] = Nil,
                    reverse: Boolean = false): DataFrame = {
     val w = weight.cast("long")
@@ -1507,23 +1442,6 @@ object Algorithms {
       .filter(col("src") === source || col("dst") === source).limit(1),
       lit(true), "left_semi")
 
-  /** Neighborhood Jaccard similarity from a seed vertex — the
-    * HugeGraph `jaccardsimilarity` traversal API (hugegraph-api
-    * `JaccardSimilarityAPI`, served by the store through repeated R4
-    * prefix scans per candidate; reference witness: the EDGE_OUT/
-    * EDGE_IN adjacency tables, TikvTables.java:128-149). Candidates
-    * are exactly the vertices sharing ≥ 1 neighbor with the seed;
-    * J(v) = |N(seed) ∩ N(v)| / |N(seed) ∪ N(v)| over the (optionally
-    * label-filtered) undirected distinct neighbor sets. Returns
-    * (id, inter, uni, jaccard) — exact integer counts, ONE rounded
-    * division, so a relational replay agrees bit-for-bit.
-    *
-    * Scale shape: the seed neighborhood is one vertex's adjacency
-    * list — broadcast it; candidate intersections are then a
-    * broadcast-hash join of the full adjacency against it plus one
-    * hash-agg on narrow (v) keys. Degrees are one more hash-agg on
-    * the same adjacency. No O(V²) pairing, no driver state.
-    */
   /** Strongly connected components (directed) — trim + forward-
     * coloring + backward-within-color, the standard distributed SCC
     * decomposition (FW-BW/coloring family, Orzan-style): each outer
@@ -1781,6 +1699,23 @@ object Algorithms {
     }
   }
 
+  /** Neighborhood Jaccard similarity from a seed vertex — the
+    * HugeGraph `jaccardsimilarity` traversal API (hugegraph-api
+    * `JaccardSimilarityAPI`, served by the store through repeated R4
+    * prefix scans per candidate; reference witness: the EDGE_OUT/
+    * EDGE_IN adjacency tables, TikvTables.java:128-149). Candidates
+    * are exactly the vertices sharing ≥ 1 neighbor with the seed;
+    * J(v) = |N(seed) ∩ N(v)| / |N(seed) ∪ N(v)| over the (optionally
+    * label-filtered) undirected distinct neighbor sets. Returns
+    * (id, inter, uni, jaccard) — exact integer counts, ONE rounded
+    * division, so a relational replay agrees bit-for-bit.
+    *
+    * Scale shape: the seed neighborhood is one vertex's adjacency
+    * list — broadcast it; candidate intersections are then a
+    * broadcast-hash join of the full adjacency against it plus one
+    * hash-agg on narrow (v) keys. Degrees are one more hash-agg on
+    * the same adjacency. No O(V²) pairing, no driver state.
+    */
   def jaccardSimilarity(s: SparkSession, g: PropertyGraph, seed: Long,
                         labels: Seq[String] = Nil): DataFrame = {
     val e = g.edgesOf(labels)

@@ -187,13 +187,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
   }
 
-  /** Map-only nearest-centroid assignment: per-row argmax over literal
-    * centroid vectors via `greatest(struct(cosine, -centroid_id))` —
-    * the same pattern as TextAnalysis.langId. No join, no window, no
-    * Exchange (pinned in PlanSpec): at 100 TB the corpus assigns cells
-    * in the same stage as the parquet scan. The negated id reproduces
-    * the ORDER BY cdist DESC, centroid_id ASC tie-break.
-    */
   /** argmax over (score, -id) structs — `greatest` needs ≥ 2 args, so
     * the degenerate single-centroid quantizer short-circuits.
     */
@@ -201,6 +194,13 @@ object Similarity {
     -(if (scored.length == 1) scored.head
       else greatest(scored: _*)).getField("ncid")
 
+  /** Map-only nearest-centroid assignment: per-row argmax over literal
+    * centroid vectors via `greatest(struct(cosine, -centroid_id))` —
+    * the same pattern as TextAnalysis.langId. No join, no window, no
+    * Exchange (pinned in PlanSpec): at 100 TB the corpus assigns cells
+    * in the same stage as the parquet scan. The negated id reproduces
+    * the ORDER BY cdist DESC, centroid_id ASC tie-break.
+    */
   private[graft] def assignCells(df: DataFrame, vec: String,
       centroids: Array[(Long, Array[Float])]): DataFrame = {
     val scored = centroids.map { case (cid, cvec) =>
@@ -383,24 +383,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
   }
 
-  /** IVF probe path with a DETERMINISTIC, SQL-replayable coarse
-    * quantizer — the correctness-gate face of [[ivfTopK]]: cell
-    * centroids are the corpus vectors with the `nCentroids` smallest
-    * vec_ids (collected once — k rows, the same scale-bounded driver
-    * state as the trained quantizer), cell assignment is argmax over
-    * ROUND(cosine, 6) with ties to the lower centroid id — a raw
-    * double argmax would hinge on last-ulp agreement between engines,
-    * the rounded one replays exactly (the e1 lesson) — and each query
-    * probes its `nprobe` nearest cells (the standard IVF recall
-    * knob), so the search space is nprobe/nCentroids of the corpus,
-    * not all of it. [[ivfTopK]]'s trained k-means quantizer is the
-    * production path; its recall is pinned in SimilaritySpec instead
-    * (iterated float means are not bit-replayable in SQL).
-    *
-    * Scale shape: identical to ivfTopK — map-only cell assignment
-    * against literal centroids, candidates meet on the (narrow) cell
-    * key, exact rerank only inside probed cells.
-    */
   /** The deterministic seeded coarse quantizer behind [[ivfTopKSeeded]]
     * and the e7 cluster-profile report: centroids = the corpus vectors
     * with the `nCentroids` smallest vec_ids (cid = rank order), scored
@@ -429,6 +411,24 @@ object Similarity {
       .withColumn("cell", argmaxCid(seededCellScored(centroids, "embedding")))
   }
 
+  /** IVF probe path with a DETERMINISTIC, SQL-replayable coarse
+    * quantizer — the correctness-gate face of [[ivfTopK]]: cell
+    * centroids are the corpus vectors with the `nCentroids` smallest
+    * vec_ids (collected once — k rows, the same scale-bounded driver
+    * state as the trained quantizer), cell assignment is argmax over
+    * ROUND(cosine, 6) with ties to the lower centroid id — a raw
+    * double argmax would hinge on last-ulp agreement between engines,
+    * the rounded one replays exactly (the e1 lesson) — and each query
+    * probes its `nprobe` nearest cells (the standard IVF recall
+    * knob), so the search space is nprobe/nCentroids of the corpus,
+    * not all of it. [[ivfTopK]]'s trained k-means quantizer is the
+    * production path; its recall is pinned in SimilaritySpec instead
+    * (iterated float means are not bit-replayable in SQL).
+    *
+    * Scale shape: identical to ivfTopK — map-only cell assignment
+    * against literal centroids, candidates meet on the (narrow) cell
+    * key, exact rerank only inside probed cells.
+    */
   def ivfTopKSeeded(queries: DataFrame, corpus: DataFrame, k: Int,
                     nCentroids: Int = 8, nprobe: Int = 2,
                     maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {

@@ -139,11 +139,11 @@ class LoopSpec extends AnyFunSuite {
     */
   private val FrontierJobsPerRound = 4
 
-  test("frontier: each round costs a pinned number of Spark jobs") {
-    // the pin stops a change from quietly adding per-round work, such
-    // as re-checkpointing the visited set every round; count only jobs
-    // carrying this thread's job group (suites share one session)
-    val gid = "frontier-jobs-probe"
+  /** Run `body` and count the Spark jobs it started. Only jobs
+    * carrying this thread's job group count: suites share one session.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val gid = "loop-jobs-probe"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -153,24 +153,30 @@ class LoopSpec extends AnyFunSuite {
         ()
       }
     }
-    def jobsFor(n: Int): Int = {
-      val edges = chain(n).localCheckpoint()
-      jobs.set(0)
-      spark.sparkContext.setJobGroup(gid, "frontier job probe")
-      val r = try Loop.frontier(spark.range(1).toDF("id"), Seq("id"), 50)(hop(edges))
-        finally spark.sparkContext.clearJobGroup()
-      Thread.sleep(1500) // listener bus drain
-      assert(r.rounds == n + 1 && r.converged)
-      (r.state :+ edges).foreach(Loop.release)
-      jobs.get()
-    }
     spark.sparkContext.addSparkListener(l)
     try {
-      val (three, six) = (jobsFor(3), jobsFor(6))
-      assert(six - three == 3 * FrontierJobsPerRound,
-        s"3 more rounds ran ${six - three} more jobs")
-      assert(three == 17, s"a 4-round walk ran $three jobs")
+      spark.sparkContext.setJobGroup(gid, "loop job probe")
+      val out = try body finally spark.sparkContext.clearJobGroup()
+      Thread.sleep(1500) // listener bus drain
+      (out, jobs.get())
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("frontier: each round costs a pinned number of Spark jobs") {
+    // the pin stops a change from quietly adding per-round work, such
+    // as re-checkpointing the visited set every round
+    def jobsFor(n: Int): Int = {
+      val edges = chain(n).localCheckpoint()
+      val (r, jobs) = jobsOf(
+        Loop.frontier(spark.range(1).toDF("id"), Seq("id"), 50)(hop(edges)))
+      assert(r.rounds == n + 1 && r.converged)
+      (r.state :+ edges).foreach(Loop.release)
+      jobs
+    }
+    val (three, six) = (jobsFor(3), jobsFor(6))
+    assert(six - three == 3 * FrontierJobsPerRound,
+      s"3 more rounds ran ${six - three} more jobs")
+    assert(three == 17, s"a 4-round walk ran $three jobs")
   }
 
   test("resetStats keeps a 30-round self-join's size estimate bounded") {
@@ -242,6 +248,9 @@ class LoopSpec extends AnyFunSuite {
       .repeatUntilReached(_.out("link"), _.hasId(7L)).toDF),
     "multiSourceHops" -> (g => Algorithms.multiSourceHops(spark, g, Seq(0L, 1L))),
     "betweenness" -> (g => Algorithms.betweenness(spark, g)),
+    "pageRank" -> (g => Algorithms.pageRank(spark, g)),
+    "modularity" -> (g => Algorithms.modularity(spark, g.edges,
+      g.vertices.select(col("id"), (col("id") % 3).as("comm")))),
     "dupClusters" -> (g => Dedup.dupClusters(
       g.edges.select(col("src").as("a_id"), col("dst").as("b_id")))))
 
@@ -256,4 +265,13 @@ class LoopSpec extends AnyFunSuite {
       assert(acc.value == nEdges.toLong,
         s"the caller's action re-read ${acc.value - nEdges} edge rows")
     }
+
+  test("pageRankExact plus a collect costs a pinned number of Spark jobs") {
+    // the pin keeps the rank set-up at one aggregate over its source:
+    // building the vertex set, the out-degrees and the no-in-edge
+    // frame in three passes ran 46 jobs here
+    val (g, _) = countingGraph()
+    val (_, jobs) = jobsOf(Algorithms.pageRankExact(spark, g).collect())
+    assert(jobs == 38, s"pageRankExact and a collect ran $jobs jobs")
+  }
 }

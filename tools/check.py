@@ -10,12 +10,16 @@ and cell values (rows sorted, NaN-safe, exact for non-floats, tight
 tolerance for floats so we notice any nondeterminism before the driver
 does).
 
+Each OK line ends with the SHA-256 of the query's Spark rows in the
+canonical order (columns by name, rows sorted), so two runs' outputs
+are hash-identical iff their OK listings diff clean.
+
 The Arrow-type check exists because the driver's hash path goes through
 Arrow: a DuckDB HUGEINT (e.g. an uncast window SUM) surfaces as
 decimal128(38,0) there and hash-mismatches Spark's int64 even when every
 Python-level value compares equal — exactly the d12 r04/r05 flag.
 """
-import json, math, sys, glob, os
+import hashlib, json, math, sys, glob, os
 import duckdb
 import pyarrow.parquet as pq
 import pyarrow.types as pt
@@ -101,6 +105,7 @@ for name in sorted(oracle):
         print(f"VALS     {name}: row {bad[0]}\n  spark={bad[1]}\n  duck ={bad[2]}")
         fail += 1
     else:
-        print(f"OK       {name} ({len(spark_rows)} rows)")
+        digest = hashlib.sha256(repr(a).encode()).hexdigest()
+        print(f"OK       {name} ({len(spark_rows)} rows) {digest}")
 print(f"\n{'FAIL' if fail else 'PASS'}: {len(oracle)-fail}/{len(oracle)}")
 sys.exit(1 if fail else 0)
