@@ -136,8 +136,8 @@ object Dedup {
     * Jaccard j is 1-(1-j^rows)^bands (the standard S-curve).
     *
     * Scale shape (learned from the sf0.1 bench): the candidate
-    * shuffles carry ONLY narrow (a_id, b_id) pairs — shingle arrays are
-    * joined back after pair dedup, so the band self-join and the
+    * shuffles carry ONLY narrow (a_id, b_id) pairs — the hash arrays
+    * are joined back after pair dedup, so the band self-join and the
     * dropDuplicates never ship payloads. `maxBucketSize` is the skew
     * guard: a band bucket holding more docs than this is
     * non-discriminative (its members pair via other bands if truly
@@ -150,44 +150,37 @@ object Dedup {
                      tokenHash: Column => Column = fastTokenHash): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    // ONE shingle pass for the whole operator (guide §2.4, remove the
-    // duplicated subtree): the hashed DISTINCT shingle rows feed BOTH
-    // the signature aggregation and the exact-Jaccard verify join.
-    // Previously minhashSignatures re-derived its own shingleRows, so
-    // the tokenize + explode (+ k-gram window) + distinct shuffle ran
-    // TWICE per query — and exchange reuse does not bridge the two
-    // consumers (different aggregates above the shared subtree). The
-    // verify joins meet on the 63-bit shingle HASH, not the string —
-    // the cached rows are (doc_id, long), 16 bytes; identical counts
-    // absent a 63-bit collision (the same caveat the band bucketing
-    // already accepts), and the oracle replays the hash join. EAGER
-    // localCheckpoint, not a lazy persist: the kTruss lesson — a
-    // multi-scan consumer re-derives a lazily-cached input under each
-    // scan before the cache fills.
-    val sh = shingleRows(docs, k)
-      .select(col("doc_id"), tokenHash(col("s")).as("h"))
-      .localCheckpoint(eager = true)
+    // ONE per-doc aggregate over ONE shingle pass feeds the whole
+    // operator: the numHashes MIN columns m$i (the signature) and the
+    // doc's shingle hashes hs, checkpointed once — the band keys read
+    // the m$i, the verify reads hs. Shingles are hashed to a long before
+    // the aggregate, so the arrays hold longs, not strings: the counts
+    // match a string-level Jaccard absent a hash collision between two
+    // shingles of one doc (the same caveat the band bucketing already
+    // accepts). EAGER localCheckpoint, not a lazy
+    // persist: the kTruss lesson — a multi-scan consumer re-derives a
+    // lazily-cached input under each scan before the cache fills.
     val sigAggs = (0 until numHashes).map(i =>
       min(derivedHash(col("h"), i)).as(s"m$i"))
-    val sigs = sh.groupBy(col("doc_id"))
-      .agg(sigAggs.head, sigAggs.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("signature"))
+    val sig = shingleRows(docs, k)
+      .select(col("doc_id"), tokenHash(col("s")).as("h"))
+      .groupBy(col("doc_id"))
+      .agg(sigAggs.head, (sigAggs.tail :+ collect_list(col("h")).as("hs")): _*)
+      .localCheckpoint(eager = true)
 
     // (band, bucket=hash(slice), doc) — one row per band per doc
     val bandStructs = array((0 until bands).map { b =>
       struct(lit(b).as("band"),
-        xxhash64(lit(b) +: (0 until rows).map(r =>
-          col("signature").getItem(b * rows + r)): _*).as("bucket"))
+        xxhash64(lit(b) +: (0 until rows).map(r => col(s"m${b * rows + r}")): _*)
+          .as("bucket"))
     }: _*)
-    val buckets = sigs
+    val buckets = sig
       .select(col("doc_id"), explode(bandStructs).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
     // skew guard: drop non-discriminative mega-buckets
     val sized = buckets
-      .withColumn("bsize", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
+      .withColumn("bsize", count(lit(1)).over(Window.partitionBy("band", "bucket")))
       .filter(col("bsize") <= maxBucketSize)
       .drop("bsize")
 
@@ -199,19 +192,15 @@ object Dedup {
       .select(col("a_id"), col("b_id"))
       .dropDuplicates("a_id", "b_id")
 
-    // verify: exact Jaccard on candidates via the sparse shingle rows —
-    // |A∩B| = count of shingles the pair shares (one join fan-out of
-    // candidates × |A|, matched against B's rows), |A∪B| from per-doc
-    // sizes. No shingle arrays materialize and no interpreted
-    // array_intersect runs; everything stays codegen'd.
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val ni = cands
-      .join(sh.select(col("doc_id").as("a_id"), col("h")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("h")), Seq("b_id", "h"))
-      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("ni"))
-    ni
-      .join(sizes.select(col("doc_id").as("a_id"), col("n").as("na")), "a_id")
-      .join(sizes.select(col("doc_id").as("b_id"), col("n").as("nb")), "b_id")
+    // verify: exact Jaccard on candidates from the two docs' hash
+    // arrays — |A∩B| = size(array_intersect), |A∪B| = |A|+|B|−|A∩B|.
+    val hs = sig.select(col("doc_id"), col("hs"))
+    cands
+      .join(hs.select(col("doc_id").as("a_id"), col("hs").as("ha")), "a_id")
+      .join(hs.select(col("doc_id").as("b_id"), col("hs").as("hb")), "b_id")
+      .select(col("a_id"), col("b_id"),
+        size(array_intersect(col("ha"), col("hb"))).as("ni"),
+        size(col("ha")).as("na"), size(col("hb")).as("nb"))
       .withColumn("jaccard", round(col("ni").cast("double") /
         (col("na") + col("nb") - col("ni")).cast("double"), 6))
       .filter(col("jaccard") >= threshold)
@@ -366,7 +355,8 @@ object Dedup {
     * population stays O(1) as the corpus decades up, so in-bucket
     * candidate volume tracks true near-dup density, not n²/2^16. The
     * band join still shuffles only (table, key-hash, doc_id, sig)
-    * rows and dedups narrow id pairs before the hamming verify.
+    * rows, and the hamming verify runs on the join's output before the
+    * narrow (a_id, b_id, hamming) rows reach the pair dedup.
     * `maxBucketSize` (default OFF) is the MinHash-style mega-bucket
     * skew guard for pathological corpora (a hot chunk value from
     * near-empty/boilerplate docs): enabling it caps per-bucket
@@ -448,13 +438,18 @@ object Dedup {
       col("doc_id").as("a_id"), col("simhash").as("a_sim"))
     val b = sized.select(col("tbl"), col("key"),
       col("doc_id").as("b_id"), col("simhash").as("b_sim"))
+    // the hamming test runs BEFORE the pair dedup: the band join emits
+    // a pair once per colliding table, every copy with the same
+    // (a_sim, b_sim), so filtering first drops the far pairs (most of
+    // the join's output) before the dedup aggregate ever sees them —
+    // the result is the same either way. Catalyst cannot make this move
+    // itself: after the dedup, a_sim and b_sim are non-key aggregate
+    // outputs.
     val ham = bit_count(col("a_sim").bitwiseXOR(col("b_sim")))
     a.join(b, Seq("tbl", "key"))
-      .filter(col("a_id") < col("b_id"))
+      .filter(col("a_id") < col("b_id") && ham <= maxHamming)
+      .select(col("a_id"), col("b_id"), ham.as("hamming"))
       .dropDuplicates("a_id", "b_id")
-      .withColumn("hamming", ham)
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a_id"), col("b_id"), col("hamming"))
   }
 
   // ------------------------------------------- embedding near-duplicates

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The pointer-swap seam of [[TxTable]]: resolve the committed version
   * and advance it with a compare-and-swap. The default implementation
@@ -210,9 +211,14 @@ final class ConditionalPutPointer(svc: ConditionalPutService,
   * Layout:
   * {{{
   *   <root>/v_000001-9f3ac2d1/…parquet…   committed or in-flight version
+  *   <root>/v_000001-9f3ac2d1/_schema.json  the version's schema (JSON)
   *   <root>/v_000002-41be77c0/…
   *   <root>/_CURRENT                      one line: the committed name
   * }}}
+  *
+  * `_schema.json` lets a read skip parquet's schema-inference job; a
+  * version written without it reads by inference. Spark's file listing
+  * skips `_`-prefixed names, so the file is never scanned as data.
   *
   * Invariants:
   *  - readers resolve the pointer once and scan only that directory, so
@@ -253,14 +259,26 @@ object TxTable {
                      pointer: VersionPointer = AtomicRenamePointer): Option[String] =
     pointer.current(root)
 
-  /** read the committed version — never an in-flight one */
+  /** read the committed version — never an in-flight one. The
+    * version's stored schema, when present, spares the read its
+    * footer-inference job.
+    */
   def read(spark: SparkSession, root: String,
            pointer: VersionPointer = AtomicRenamePointer): DataFrame =
     pointer.current(root) match {
-      case Some(v) => spark.read.parquet(s"$root/$v")
+      case Some(v) =>
+        val schemaFile = Paths.get(root, v, SchemaFile)
+        val reader =
+          if (Files.exists(schemaFile))
+            spark.read.schema(DataType.fromJson(Files.readString(schemaFile))
+              .asInstanceOf[StructType])
+          else spark.read
+        reader.parquet(s"$root/$v")
       case None => throw new IllegalStateException(
         s"TxTable at $root has no committed version")
     }
+
+  private val SchemaFile = "_schema.json"
 
   /** Write `df` as a new UNIQUELY-NAMED version directory WITHOUT
     * committing it — the crash window made explicit (StorageSpec kills
@@ -281,6 +299,9 @@ object TxTable {
     val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val v = f"v_$n%06d-$nonce"
     df.write.mode("error").parquet(s"$root/$v")
+    // after the data, before the caller's CAS: a crash in between still
+    // leaves only an orphan directory
+    Files.writeString(Paths.get(root, v, SchemaFile), df.schema.json)
     v
   }
 

@@ -2,8 +2,11 @@ package graft.tools
 
 import graft.{Bench, Session, SparkEntry}
 import graft.sources.QueryMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.concurrent.TrieMap
 
 /** Operator-facing probe over the registered queries, run under the
@@ -11,9 +14,11 @@ import scala.collection.concurrent.TrieMap
   *
   *   - `time <query>...`: median of SPARK_GRAFT_RUNS (default 3) timed
   *     runs per query, steal-contaminated runs excluded.
-  *   - `jobs <query>...`: one run split into its Spark jobs — which of
-  *     an iterative query's jobs (round checkpoints, emptiness tests,
-  *     final materialization) carry the wall-clock.
+  *   - `jobs <query>...`: one run split into its Spark jobs, grouped
+  *     under the SQL execution (a checkpoint, a count, the final write)
+  *     that launched them — which of an iterative query's steps (round
+  *     checkpoints, emptiness tests, final materialization) carry the
+  *     wall-clock.
   *   - `explain <query>...`: formatted physical plans.
   *   - `inventory`: query and oracle counts, rows-only queries and
   *     oracles with no query.
@@ -125,16 +130,28 @@ object Probe {
   }
 
   private def jobs(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
-    val starts = TrieMap.empty[Int, (Long, String)]
-    val done = TrieMap.empty[Int, (Double, String)]
+    // a job carries the id of the SQL execution that launched it (AQE
+    // submits query stages and broadcasts from a thread pool, so the
+    // job's own call site rarely names the step); the execution's
+    // description does
+    val execs = TrieMap.empty[Long, String]
+    val starts = TrieMap.empty[Int, (Long, String, Option[Long])]
+    val done = TrieMap.empty[Int, (Double, String, Option[Long])]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execs.put(x.executionId, x.description)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val name = js.stageInfos.lastOption.map(_.name).getOrElse("?")
-        starts.put(js.jobId, (System.nanoTime(), name))
+        val exec = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .map(_.toLong)
+        starts.put(js.jobId, (System.nanoTime(), name, exec))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        starts.remove(je.jobId).foreach { case (t0, name) =>
-          done.put(je.jobId, ((System.nanoTime() - t0) / 1e9, name))
+        starts.remove(je.jobId).foreach { case (t0, name, exec) =>
+          done.put(je.jobId, ((System.nanoTime() - t0) / 1e9, name, exec))
         }
     }
     names.foreach { n =>
@@ -142,6 +159,7 @@ object Probe {
       run(spark, n, dir)
       QueryMetrics.flush(spark)
       done.clear()
+      execs.clear()
       spark.sparkContext.addSparkListener(listener)
       val total = seconds(run(spark, n, dir))
       QueryMetrics.flush(spark)
@@ -149,7 +167,13 @@ object Probe {
       val rs = done.toSeq.sortBy(_._1)
       val jobSum = rs.map(_._2._1).sum
       println(f"\n===== $n total=$total%.2fs jobs=${rs.size} jobSum=$jobSum%.2fs (gap=${total - jobSum}%.2fs driver/plan) =====")
-      rs.foreach { case (id, (d, name)) => println(f"  job $id%4d  $d%7.3fs  $name") }
+      // executions in the order of their first job
+      rs.groupBy(_._2._3).toSeq.sortBy(_._2.head._1).foreach { case (exec, js) =>
+        val what = exec.fold("(no SQL execution)")(e =>
+          s"execution $e: ${execs.getOrElse(e, "?")}")
+        println(f"  ${js.size}%3d jobs  ${js.map(_._2._1).sum}%7.3fs  $what")
+        js.foreach { case (id, (d, name, _)) => println(f"      job $id%4d  $d%7.3fs  $name") }
+      }
     }
   }
 }

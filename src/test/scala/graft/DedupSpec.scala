@@ -143,6 +143,68 @@ class DedupSpec extends AnyFunSuite {
     assert(guarded.subsetOf(all))
   }
 
+  test("simhashNearDup tests hamming below its (a_id, b_id) pair dedup") {
+    // the band join's far pairs must not reach the dedup aggregate
+    import org.apache.spark.sql.catalyst.expressions.{Attribute,
+      BitwiseCount, Expression, LessThanOrEqual}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join}
+    val plan = Dedup.simhashNearDup(longDocs, maxHamming = 3, subset = 1)
+      .queryExecution.optimizedPlan
+    val dedups = plan.collect {
+      case a: Aggregate if a.groupingExpressions.collect {
+        case r: Attribute => r.name }.toSet == Set("a_id", "b_id") => a
+    }
+    assert(dedups.size == 1, s"expected one pair dedup in\n$plan")
+    def hamTest(e: Expression): Boolean =
+      e.exists { case LessThanOrEqual(_: BitwiseCount, _) => true; case _ => false }
+    val below = dedups.head.child.exists {
+      case f: Filter => hamTest(f.condition)
+      case j: Join => j.condition.exists(hamTest)
+      case _ => false
+    }
+    assert(below, s"no hamming test below the pair dedup in\n$plan")
+  }
+
+  // doc 10 with a copy, a 4-word tail edit and a half rewrite (pair
+  // jaccards 1.0, 0.75 and 0.4) plus two unrelated docs: a pair at
+  // jaccard >= 0.3 escapes all 32 one-row bands with probability at
+  // most 0.7^32, so recall at threshold 0.3 is total
+  private lazy val plantedDocs = {
+    val words = (0 until 30).map(i => s"w$i")
+    def text(ws: Seq[String]) = ws.mkString(" ")
+    Seq(
+      (10L, text(words)), (11L, text(words)),                       // copy
+      (12L, text(words.take(26) ++ Seq("x1", "x2", "x3", "x4"))),    // tail
+      (13L, text(words.take(18) ++ (18 until 30).map(i => s"y$i"))), // half
+      (14L, text((0 until 30).map(i => s"z$i"))),
+      (15L, text((0 until 30).map(i => s"q$i")))
+    ).toDF("doc_id", "text")
+  }
+
+  test("minhash verify scores every emitted pair with the exact " +
+       "3-shingle jaccard of jaccardPairs") {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("a_id", "b_id", "jaccard").as[(Long, Long, Double)].collect()
+        .map { case (a, b, j) => (a, b) -> j }.toMap
+    val exact = pairs(Dedup.jaccardPairs(plantedDocs, k = 3,
+      threshold = 0.3, maxDocId = 100))
+    val lsh = pairs(Dedup.minhashNearDup(plantedDocs, k = 3, numHashes = 32,
+      bands = 32, threshold = 0.3))
+    assert(exact.keySet.contains((10L, 11L)) && exact.size >= 4,
+      s"the fixture lost its planted pairs: $exact")
+    assert(lsh == exact)
+  }
+
+  test("minhashNearDup plus a collect costs a pinned number of Spark jobs") {
+    // one per-doc aggregate checkpoint feeds the bands and the verify;
+    // a per-shingle checkpoint with a size aggregate and two verify
+    // joins against it ran 11
+    val (out, jobs) = TestSpark.jobsOf(
+      Dedup.minhashNearDup(docs, k = 3, threshold = 0.5).collect())
+    assert(out.nonEmpty)
+    assert(jobs == 7, s"minhashNearDup and a collect ran $jobs jobs")
+  }
+
   test("dedupDocuments keeps one representative per near-dup cluster") {
     val kept = Dedup.dedupDocuments(docs, jaccardThreshold = 0.5)
       .select("doc_id").as[Long].collect().toSet

@@ -15,6 +15,7 @@ import graft.util.Loop
   */
 class LoopSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  import TestSpark.jobsOf
 
   private def isCheckpoint(df: DataFrame): Boolean =
     df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
@@ -138,29 +139,6 @@ class LoopSpec extends AnyFunSuite {
     * size, the layer checkpoint and the emptiness test among them.
     */
   private val FrontierJobsPerRound = 4
-
-  /** Run `body` and count the Spark jobs it started. Only jobs
-    * carrying this thread's job group count: suites share one session.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val gid = "loop-jobs-probe"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (gid == js.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.sparkContext.setJobGroup(gid, "loop job probe")
-      val out = try body finally spark.sparkContext.clearJobGroup()
-      Thread.sleep(1500) // listener bus drain
-      (out, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("frontier: each round costs a pinned number of Spark jobs") {
     // the pin stops a change from quietly adding per-round work, such

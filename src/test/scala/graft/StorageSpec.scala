@@ -240,6 +240,52 @@ class StorageSpec extends AnyFunSuite {
     graft.sources.TxTable.drop(root)
   }
 
+  test("TxTable: a read plans from the stored schema without a Spark job") {
+    val root = freshTx("schema")
+    graft.sources.TxTable.init(spark, root, Seq((1L, "a", 2.5)).toDF("k", "s", "x"))
+    val (df, jobs) = TestSpark.jobsOf(graft.sources.TxTable.read(spark, root))
+    assert(jobs == 0, s"TxTable.read launched $jobs jobs before its action")
+    assert(df.as[(Long, String, Double)].collect().toSeq == Seq((1L, "a", 2.5)))
+    graft.sources.TxTable.drop(root)
+  }
+
+  test("TxTable: the stored schema reads as the inferred one, " +
+       "nullability included") {
+    val root = freshTx("schema_eq")
+    // non-null k and x, nullable s: both paths read every column nullable
+    graft.sources.TxTable.init(spark, root,
+      Seq((1L, Option("a"), 2.5), (2L, None, 3.5)).toDF("k", "s", "x"))
+    val v = graft.sources.TxTable.currentVersion(root).get
+    val inferred = spark.read.parquet(s"$root/$v").schema
+    val stored = graft.sources.TxTable.read(spark, root).schema
+    assert(stored == inferred)
+    assert(stored.fields.forall(_.nullable))
+    graft.sources.TxTable.drop(root)
+  }
+
+  test("TxTable: a version without a stored schema reads by inference") {
+    val root = freshTx("schema_none")
+    graft.sources.TxTable.init(spark, root, Seq((1L, 7L)).toDF("k", "v"))
+    val v = graft.sources.TxTable.currentVersion(root).get
+    val schemaFile = java.nio.file.Paths.get(root, v, "_schema.json")
+    assert(java.nio.file.Files.deleteIfExists(schemaFile))
+    assert(graft.sources.TxTable.read(spark, root)
+      .as[(Long, Long)].collect().toSeq == Seq((1L, 7L)))
+    graft.sources.TxTable.drop(root)
+  }
+
+  test("TxTable: vacuum removes a version's stored schema with its dir") {
+    val root = freshTx("schema_vac")
+    val v1 = graft.sources.TxTable.init(spark, root, Seq((1L, 1L)).toDF("k", "v"))
+    graft.sources.TxTable.commit(spark, root, identity)
+    val old = java.nio.file.Paths.get(root, v1, "_schema.json")
+    assert(java.nio.file.Files.exists(old))
+    assert(graft.sources.TxTable.vacuum(root, graceMs = 0L) == 1)
+    assert(!java.nio.file.Files.exists(old.getParent))
+    assert(graft.sources.TxTable.read(spark, root).count() == 1)
+    graft.sources.TxTable.drop(root)
+  }
+
   test("TxTable: two commits racing from the SAME base — the loser's " +
        "refusal must leave the winner's committed files untouched " +
        "(unique version directories, no lost update)") {
