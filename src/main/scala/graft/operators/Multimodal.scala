@@ -132,6 +132,39 @@ object Multimodal {
     * pixel values.
     */
   def decodePgm(row: MediaRow): MediaFeatures = {
+    val r = pgmRaster(row)
+    val (b, i, n) = (row.bytes, r.offset, r.n)
+    var sum = 0L
+    var mn = 255; var mx = 0
+    val hist = new Array[Float](8)
+    var j = 0
+    while (j < n) {
+      val v = b(i + j) & 0xff
+      sum += v
+      if (v < mn) mn = v
+      if (v > mx) mx = v
+      hist(v >> 5) += 1f
+      j += 1
+    }
+    val mean = if (n > 0) sum.toDouble / n else 0.0
+    val checksum = b.slice(i, i + math.min(8, n))
+      .map("%02x".format(_)).mkString
+    MediaFeatures(row.media_id, row.kind, r.width, r.height, n.toLong,
+      checksum, mean, 1, hist)
+  }
+
+  /** A P5 raster located in its payload: pixels are bytes
+    * [offset, offset + n) of the row's blob, n = width·height.
+    */
+  private case class PgmRaster(width: Int, height: Int, offset: Int, n: Int)
+
+  /** The P5 PGM header walk both image decoders share: the "P5" magic,
+    * three whitespace-separated ASCII integers (width, height, maxval),
+    * maxval 255 only, exactly ONE whitespace byte before the raster
+    * (PGM spec), and a raster the payload really holds. Every
+    * malformed case fails loudly rather than yielding garbage.
+    */
+  private def pgmRaster(row: MediaRow): PgmRaster = {
     val b = row.bytes
     require(b.length >= 2 && b(0) == 'P'.toByte && b(1) == '5'.toByte,
       s"media ${row.media_id}: not a P5 PGM (magic ${b.take(2).mkString(",")})")
@@ -151,30 +184,15 @@ object Multimodal {
     require(maxval == 255, s"media ${row.media_id}: unsupported maxval $maxval")
     require(i < b.length && isWs(b(i)),
       s"media ${row.media_id}: missing raster separator")
-    i += 1 // exactly ONE whitespace byte before the raster (PGM spec)
-    // Long product: w·h > 2³¹ would overflow to a negative Int that
-    // passes the truncation check (same fix as decodePgmAhash)
+    i += 1
+    // Long arithmetic: adversarial header values (w·h > 2³¹) overflow
+    // an Int to a NEGATIVE n that passes a `length - i >= n` check and
+    // silently decodes zero pixels — and the average hash feeds dedup
+    // decisions (ADVICE r10). After the bound check n fits an Int.
     val nL = w.toLong * h.toLong
     require(nL >= 0 && nL <= (b.length - i).toLong,
       s"media ${row.media_id}: raster truncated (${b.length - i} of $nL bytes)")
-    val n = nL.toInt
-    var sum = 0L
-    var mn = 255; var mx = 0
-    val hist = new Array[Float](8)
-    var j = 0
-    while (j < n) {
-      val v = b(i + j) & 0xff
-      sum += v
-      if (v < mn) mn = v
-      if (v > mx) mx = v
-      hist(v >> 5) += 1f
-      j += 1
-    }
-    val mean = if (n > 0) sum.toDouble / n else 0.0
-    val checksum = b.slice(i, i + math.min(8, n))
-      .map("%02x".format(_)).mkString
-    MediaFeatures(row.media_id, row.kind, w, h, n.toLong, checksum, mean,
-      1, hist)
+    PgmRaster(w, h, i, nL.toInt)
   }
 
   /** Re-encode audio rows as REAL audio files: canonical RIFF/WAVE
@@ -495,9 +513,9 @@ object Multimodal {
                       ahash_lo: Long, ahash_hi: Long, nbits: Int)
 
   /** Perceptual AVERAGE HASH from REAL decoded pixels: parse the P5
-    * PGM container (same walk as [[decodePgm]] — magic, ASCII header
-    * ints, single raster separator), then bit i of the 64-bit
-    * signature is 1 iff pixel i ≥ the image's integer mean pixel
+    * PGM container (the header walk [[decodePgm]] shares — magic,
+    * ASCII header ints, single raster separator), then bit i of the
+    * 64-bit signature is 1 iff pixel i ≥ the image's integer mean pixel
     * (sum div n — floor, so both engines agree exactly). The hash is
     * carried as TWO unsigned 32-bit halves in BIGINTs (bits 0–31 /
     * 32–63) so no engine ever sees a sign bit. Rasters shorter than
@@ -506,34 +524,8 @@ object Multimodal {
     * cheap enough to run on every image of a 100 TB crawl.
     */
   def decodePgmAhash(row: MediaRow): AhashRow = {
-    val b = row.bytes
-    require(b.length >= 2 && b(0) == 'P'.toByte && b(1) == '5'.toByte,
-      s"media ${row.media_id}: not a P5 PGM")
-    var i = 2
-    def isWs(c: Byte) = c == ' ' || c == '\n' || c == '\r' || c == '\t'
-    def readInt(): Int = {
-      while (i < b.length && isWs(b(i))) i += 1
-      require(i < b.length && b(i) >= '0' && b(i) <= '9',
-        s"media ${row.media_id}: malformed PGM header at byte $i")
-      var v = 0
-      while (i < b.length && b(i) >= '0' && b(i) <= '9') {
-        v = v * 10 + (b(i) - '0'); i += 1
-      }
-      v
-    }
-    val w = readInt(); val h = readInt(); val maxval = readInt()
-    require(maxval == 255, s"media ${row.media_id}: unsupported maxval $maxval")
-    require(i < b.length && isWs(b(i)),
-      s"media ${row.media_id}: missing raster separator")
-    i += 1
-    // Long arithmetic: adversarial header values (w·h > 2³¹) overflow
-    // an Int to a NEGATIVE n that passes a `length - i >= n` check and
-    // silently hashes zero pixels — and this hash feeds dedup
-    // decisions (ADVICE r10). After the bound check n fits an Int.
-    val nL = w.toLong * h.toLong
-    require(nL >= 0 && nL <= (b.length - i).toLong,
-      s"media ${row.media_id}: raster truncated")
-    val n = nL.toInt
+    val r = pgmRaster(row)
+    val (b, i, n) = (row.bytes, r.offset, r.n)
     var sum = 0L
     var j = 0
     while (j < n) { sum += b(i + j) & 0xff; j += 1 }
@@ -547,7 +539,7 @@ object Multimodal {
       }
       j += 1
     }
-    AhashRow(row.media_id, w, h, lo, hi, nbits)
+    AhashRow(row.media_id, r.width, r.height, lo, hi, nbits)
   }
 
   /** Per-image average hashes over the image rows of a PGM-wrapped
@@ -592,12 +584,13 @@ object Multimodal {
       col("ahash_hi").as("b_hi"))
     val ham = (bit_count(col("a_lo").bitwiseXOR(col("b_lo"))) +
       bit_count(col("a_hi").bitwiseXOR(col("b_hi"))))
+    // the hamming test runs BEFORE the pair dedup (the simhashNearDup
+    // order): every copy of a pair carries the same halves, so the
+    // result is the same, and the dedup aggregate sees near pairs only
     a.join(b, Seq("chunk", "key"))
-      .filter(col("a_id") < col("b_id"))
+      .filter(col("a_id") < col("b_id") && ham <= maxHamming)
+      .select(col("a_id"), col("b_id"), ham.as("hamming"))
       .dropDuplicates("a_id", "b_id")
-      .withColumn("hamming", ham)
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a_id"), col("b_id"), col("hamming"))
   }
 
   /** Per-image near-dup counts via DISTINCT-HASH compression — the
@@ -637,12 +630,12 @@ object Multimodal {
     val ham = (bit_count(col("a_lo").bitwiseXOR(col("b_lo"))) +
       bit_count(col("a_hi").bitwiseXOR(col("b_hi"))))
     // DIRECTED distinct-group pairs (both orientations survive the
-    // dedup) so one groupBy on the a-side sums every neighbor once
+    // dedup) so one groupBy on the a-side sums every neighbor once;
+    // the hamming test runs before the dedup, as in ahashNearDup
     val cross = a.join(b, Seq("chunk", "key"))
-      .filter(col("a_lo") =!= col("b_lo") || col("a_hi") =!= col("b_hi"))
+      .filter((col("a_lo") =!= col("b_lo") || col("a_hi") =!= col("b_hi")) &&
+        ham <= maxHamming)
       .dropDuplicates("a_lo", "a_hi", "b_lo", "b_hi")
-      .withColumn("hamming", ham)
-      .filter(col("hamming") <= maxHamming)
       .groupBy(col("a_lo").as("ahash_lo"), col("a_hi").as("ahash_hi"))
       .agg(sum(col("b_sz")).as("cross_n"))
     val neigh = g.join(cross, Seq("ahash_lo", "ahash_hi"), "left")

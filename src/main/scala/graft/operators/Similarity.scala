@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Loop
@@ -8,13 +8,24 @@ import graft.util.Loop
 /** Similarity search over embedding columns (ArrayType(FloatType)) —
   * BASELINE.json north-star surface.
   *
-  * Two paths:
-  *  - brute-force top-k: corpus × queries with the query side broadcast
-  *    — exact baseline; linear in corpus size, parallel over corpus
-  *    partitions, so it scales as long as the query set is small.
-  *  - LSH (random hyperplane) bucketing: signature equality prunes the
-  *    candidate space; approximate, constant-factor cheaper; the
-  *    100 TB path for large query sets.
+  * Every top-k search is candidate generation followed by one exact
+  * refinement. The generators differ only in which (query, vector)
+  * pairs they let through:
+  *  - brute force ([[bruteForceTopK]]): every pair — the exact
+  *    baseline, linear in corpus size;
+  *  - sign-LSH ([[lshTopK]]): pairs that share a (table, signature)
+  *    bucket under multi-table, multi-probe hashing;
+  *  - IVF ([[ivfTopK]], [[ivfTopKSeeded]]): pairs inside the query's
+  *    `nprobe` nearest coarse cells;
+  *  - PQ/ADC ([[pqTopK]], [[pqTopKSeeded]], [[ivfPqTopKSeeded]]): the
+  *    top `rerank` vectors by compressed-code score, over every code
+  *    or over the probed cells only.
+  * All of them meet the corpus through one guarded join (the query
+  * side is broadcast while small, so the corpus never shuffles) and
+  * end in one cut: round-6 cosine, then each query's first k by
+  * (cosine DESC, vec_id ASC) — the tie rule every e-gate oracle
+  * replays. [[rangeSearch]] is the brute-force scan with a threshold
+  * in place of the cut.
   *
   * The kernels are pure Catalyst higher-order functions (zip_with +
   * aggregate) — per-row, codegen-friendly, no UDF.
@@ -53,40 +64,75 @@ object Similarity {
     dot(qa, qb) / sqrt(dot(qa, qa) * dot(qb, qb))
   }
 
+  /** micro-unit (1e-6) round-half-up of a double — the integer bridge
+    * both engines agree on bit-for-bit (the e5/e6 lesson: cross-engine
+    * double comparisons ride on rounded integers, never raw doubles).
+    */
+  private def micro(x: Column): Column =
+    floor(x * 1000000d + 0.5d).cast("long")
+
+  /** [[cosineMicro]] in integer micro-units: the similarity every
+    * comparison of [[mmrSelect]] and [[kcenterSelect]] is made on.
+    */
+  private def microCos(a: Column, b: Column): Column = micro(cosineMicro(a, b))
+
   /** Query sets above this row count are NOT broadcast: the join
-    * degrades to a shuffle join instead of OOMing the broadcast. The
-    * guard costs one count() job over the (narrow) query frame,
-    * amortized against the corpus-sized join it protects.
+    * degrades to a shuffle join instead of OOMing the broadcast. Each
+    * search counts its (narrow) query frame once — one job, amortized
+    * against the corpus-sized join it protects.
     */
   val DefaultMaxBroadcastRows: Long = 1000000L
 
-  /** Broadcast `side` only when `counted` (the un-exploded query frame)
-    * is verifiably small; otherwise leave the hint off and let AQE pick
-    * the join strategy.
+  /** Broadcast `side` — the query frame exploded `explosion`-fold —
+    * only when its `nq` query rows keep it under
+    * [[DefaultMaxBroadcastRows]]; otherwise leave the hint off and let
+    * AQE pick the join strategy.
     */
-  private def maybeBroadcast(side: DataFrame, counted: DataFrame,
-                             maxRows: Long): DataFrame =
-    if (maxRows > 0 && counted.count() <= maxRows) broadcast(side) else side
+  private def guarded(side: DataFrame, nq: Long, explosion: Long = 1L): DataFrame = {
+    val maxRows = DefaultMaxBroadcastRows / explosion
+    if (maxRows > 0 && nq <= maxRows) broadcast(side) else side
+  }
+
+  /** Candidate generation's join: corpus-side rows meet the [[guarded]]
+    * query side on `on` (every pair when `on` is empty), and a vector
+    * never answers its own query.
+    */
+  private def meet(corpus: DataFrame, qs: DataFrame, on: Seq[String],
+                   nq: Long, explosion: Long = 1L): DataFrame = {
+    val side = guarded(qs, nq, explosion)
+    (if (on.isEmpty) corpus.crossJoin(side) else corpus.join(side, on))
+      .filter(col("vec_id") =!= col("query_id"))
+  }
+
+  /** Round-6 exact cosine of each (embedding, query_vec) pair. */
+  private def scored(pairs: DataFrame): DataFrame =
+    pairs.withColumn("cosine", round(cosine(col("embedding"), col("query_vec")), 6))
+
+  /** The exact refinement every top-k search ends in: round-6 cosine,
+    * then each query's first `k` by (cosine DESC, vec_id ASC).
+    */
+  private def exactTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+    scored(pairs).withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+  }
+
+  /** Every (query, vector) pair: the query side broadcast (guarded), so
+    * the corpus never shuffles.
+    */
+  private def scan(queries: DataFrame, corpus: DataFrame): DataFrame =
+    meet(corpus.select(col("vec_id"), col("embedding")),
+      queries.select(col("query_id"), col("query_vec")), Nil, queries.count())
 
   /** Exact top-k cosine neighbors for each query vector.
     * queries: (query_id, query_vec); corpus: (vec_id, embedding).
     * Small query sets are broadcast — the corpus never shuffles; large
     * query sets fall back to a (cartesian) shuffle join.
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                     maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
-    val q = maybeBroadcast(
-      queries.select(col("query_id"), col("query_vec")), queries, maxBroadcastRows)
-    val scored = corpus.select(col("vec_id"), col("embedding"))
-      .crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", round(cosine(col("embedding"), col("query_vec")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
-  }
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    exactTopK(scan(queries, corpus), k)
 
   /** Range search: ALL corpus vectors within the cosine threshold of
     * each query — the fixed-radius dual of [[bruteForceTopK]] (recall
@@ -98,17 +144,11 @@ object Similarity {
     * at all, so the operator is a pure map over the corpus at any
     * scale.
     */
-  def rangeSearch(queries: DataFrame, corpus: DataFrame, minCosine: Double,
-                  maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
-    val q = maybeBroadcast(
-      queries.select(col("query_id"), col("query_vec")), queries, maxBroadcastRows)
-    corpus.select(col("vec_id"), col("embedding"))
-      .crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", round(cosine(col("embedding"), col("query_vec")), 6))
+  def rangeSearch(queries: DataFrame, corpus: DataFrame,
+                  minCosine: Double): DataFrame =
+    scored(scan(queries, corpus))
       .filter(col("cosine") >= minCosine)
       .select(col("query_id"), col("vec_id"), col("cosine"))
-  }
 
   /** Deterministic random hyperplanes: nBits × dim doubles from a fixed
     * seed, embedded as a literal — identical on every executor.
@@ -149,8 +189,7 @@ object Similarity {
     * payload); the query side is broadcast ×L×(nBits+1).
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              nBits: Int = 8, dim: Int = 64, tables: Int = 8,
-              maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
+              nBits: Int = 8, dim: Int = 64, tables: Int = 8): DataFrame = {
     val allPlanes = (0 until tables).map(t =>
       hyperplanes(nBits, dim, seed = 42L + t))
 
@@ -173,18 +212,10 @@ object Similarity {
     // the broadcast side is qs = queries × tables × (nBits+1 probes) —
     // guard against the EXPLODED size, not the input row count
     val explosion = tables.toLong * (nBits + 1)
-    val scored = cs.join(
-      maybeBroadcast(qs, queries, maxBroadcastRows / explosion), Seq("table", "sig"))
-      .filter(col("vec_id") =!= col("query_id"))
+    exactTopK(meet(cs, qs, Seq("table", "sig"), queries.count(), explosion)
       // a candidate can match several (table, probe) cells — dedup
       // narrow ids before the (cheap) cosine rank
-      .dropDuplicates("query_id", "vec_id")
-      .withColumn("cosine", round(cosine(col("embedding"), col("query_vec")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+      .dropDuplicates("query_id", "vec_id"), k)
   }
 
   /** argmax over (score, -id) structs — `greatest` needs ≥ 2 args, so
@@ -194,6 +225,42 @@ object Similarity {
     -(if (scored.length == 1) scored.head
       else greatest(scored: _*)).getField("ncid")
 
+  /** A coarse quantizer: literal centroid vectors, each row's cell the
+    * argmax of its cosine to them with ties to the lower centroid id.
+    * The trained quantizer scores by raw cosine; the seeded one by
+    * ROUND(cosine, 6), which a SQL oracle replays exactly (a raw double
+    * argmax hinges on last-ulp agreement between engines — the e1
+    * lesson).
+    */
+  private case class Quantizer(centroids: Array[(Long, Array[Float])],
+                               rounded: Boolean) {
+    /** (cd, -cid) structs of `vec` against every centroid: the greatest
+      * is the nearest cell, and an ascending sort reversed ranks cells
+      * by (cd DESC, cid ASC).
+      */
+    def scores(vec: String): Seq[Column] = centroids.map { case (cid, cv) =>
+      val cd = cosine(col(vec), array(cv.map(x => lit(x)): _*))
+      struct((if (rounded) round(cd, 6) else cd).as("cd"), lit(-cid).as("ncid"))
+    }.toSeq
+
+    /** map-only nearest-cell id of `vec` */
+    def cellOf(vec: String): Column = argmaxCid(scores(vec))
+
+    /** (vec_id, embedding, cell) for every corpus vector, map-only */
+    def assign(corpus: DataFrame): DataFrame =
+      corpus.select(col("vec_id"), col("embedding"))
+        .withColumn("cell", cellOf("embedding"))
+
+    /** The cell probe: one (query_id, query_vec, cell) row for each of a
+      * query's `nprobe` nearest cells.
+      */
+    def probe(queries: DataFrame, nprobe: Int): DataFrame =
+      queries.select(col("query_id"), col("query_vec"),
+          explode(slice(reverse(array_sort(array(scores("query_vec"): _*))),
+            1, nprobe)).as("pc"))
+        .select(col("query_id"), col("query_vec"), (-col("pc.ncid")).as("cell"))
+  }
+
   /** Map-only nearest-centroid assignment: per-row argmax over literal
     * centroid vectors via `greatest(struct(cosine, -centroid_id))` —
     * the same pattern as TextAnalysis.langId. No join, no window, no
@@ -202,13 +269,22 @@ object Similarity {
     * the ORDER BY cdist DESC, centroid_id ASC tie-break.
     */
   private[graft] def assignCells(df: DataFrame, vec: String,
-      centroids: Array[(Long, Array[Float])]): DataFrame = {
-    val scored = centroids.map { case (cid, cvec) =>
-      val cvLit = array(cvec.map(x => lit(x)): _*)
-      struct(cosine(col(vec), cvLit).as("cdist"), lit(-cid).as("ncid"))
-    }
-    df.withColumn("centroid_id", argmaxCid(scored.toSeq))
-  }
+      centroids: Array[(Long, Array[Float])]): DataFrame =
+    df.withColumn("centroid_id", Quantizer(centroids, rounded = false).cellOf(vec))
+
+  /** One Lloyd update's means: per `keys` group, the mean of column `x`
+    * accumulated in exact micro-units (longs), not float sums — float
+    * addition is association-order dependent across partitions and
+    * would make trained centroids, and every downstream assignment,
+    * nondeterministic run to run. Partial aggregation keeps the
+    * shuffle at one row per group, and only the (keys..., mean) table
+    * is collected.
+    */
+  private def lloydMeans(rows: DataFrame, keys: Column*): Array[Row] =
+    rows.groupBy(keys: _*)
+      .agg((sum(round(col("x") * 1000000).cast("long")) / 1000000.0 /
+        count(lit(1))).as("mean"))
+      .collect()
 
   /** Deterministic Lloyd k-means for the IVF coarse quantizer.
     *
@@ -228,10 +304,7 @@ object Similarity {
     * collected per iteration (scale-bounded, the canonical
     * distributed k-means).
     *
-    * Dimension means accumulate in exact micro-units (longs), not
-    * float sums: float addition is association-order dependent across
-    * partitions and would make trained centroids — and every
-    * downstream cell assignment — nondeterministic run to run.
+    * Dimension means accumulate in exact micro-units ([[lloydMeans]]).
     * An emptied cell keeps its previous centroid.
     */
   def trainCentroids(corpus: DataFrame, vec: String = "embedding",
@@ -318,12 +391,10 @@ object Similarity {
       var centroids: Array[(Long, Array[Float])] =
         seeds.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toArray
       for (_ <- 1 to iters) {
-        val means = assignCells(base.select(col(vec)), vec, centroids)
-          .select(col("centroid_id"), posexplode(col(vec)).as(Seq("dim", "x")))
-          .groupBy(col("centroid_id"), col("dim"))
-          .agg((sum(round(col("x") * 1000000).cast("long")) / 1000000.0 /
-            count(lit(1))).as("m"))
-          .collect()
+        val means = lloydMeans(
+            assignCells(base.select(col(vec)), vec, centroids)
+              .select(col("centroid_id"), posexplode(col(vec)).as(Seq("dim", "x"))),
+            col("centroid_id"), col("dim"))
           .groupBy(_.getLong(0))
           .map { case (cid, rows) =>
             val m = new Array[Float](rows.length)
@@ -337,6 +408,17 @@ object Similarity {
       centroids
     } finally base.unpersist(blocking = true)
   }
+
+  /** IVF search: every corpus vector assigned to its cell map-only
+    * against literal centroids, each query's `nprobe` nearest cells
+    * probed, candidates meeting on the (narrow) cell key, and the
+    * exact cut only inside probed cells. The trained and seeded faces
+    * differ only in their quantizer.
+    */
+  private def ivfSearch(queries: DataFrame, corpus: DataFrame, k: Int,
+                        cells: Quantizer, nprobe: Int): DataFrame =
+    exactTopK(meet(cells.assign(corpus), cells.probe(queries, nprobe),
+      Seq("cell"), queries.count(), nprobe), k)
 
   /** IVF-style coarse quantization: assign every vector to its nearest
     * of `nCentroids` k-means centroids (trainCentroids; `trainIters=0`
@@ -356,60 +438,34 @@ object Similarity {
     * corpus rows) — the standard IVF shape.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              nCentroids: Int = 8, trainIters: Int = 2, nprobe: Int = 2,
-              maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
-    val centroids = trainCentroids(corpus, "embedding", nCentroids, trainIters)
+              nCentroids: Int = 8, trainIters: Int = 2, nprobe: Int = 2): DataFrame =
+    ivfSearch(queries, corpus, k, Quantizer(
+      trainCentroids(corpus, "embedding", nCentroids, trainIters), rounded = false),
+      nprobe)
 
-    // query probes its nprobe nearest cells: rank cells by
-    // (cosine DESC, cid ASC) = reverse of the ascending struct sort
-    val cellStructs = array(centroids.map { case (cid, cv) =>
-      val cvLit = array(cv.map(x => lit(x)): _*)
-      struct(cosine(col("query_vec"), cvLit).as("cd"), lit(-cid).as("ncid"))
-    }.toSeq: _*)
-    val qs = queries.select(col("query_id"), col("query_vec"),
-        explode(slice(reverse(array_sort(cellStructs)), 1, nprobe)).as("pc"))
-      .select(col("query_id"), col("query_vec"),
-        (-col("pc.ncid")).as("centroid_id"))
-    val cs = assignCells(
-      corpus.select(col("vec_id"), col("embedding")), "embedding", centroids)
-    val scored = cs.join(
-        maybeBroadcast(qs, queries, maxBroadcastRows / nprobe), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", round(cosine(col("embedding"), col("query_vec")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
-  }
+  /** The `n` corpus vectors with the smallest vec_ids, in vec_id order —
+    * the seeds of the seeded coarse quantizer and of the seeded PQ
+    * codebook. One collect of n rows: scale-bounded driver state.
+    */
+  private def lowestIdVectors(corpus: DataFrame, n: Int): Array[Array[Float]] =
+    corpus.select(col("vec_id"), col("embedding"))
+      .orderBy(col("vec_id")).limit(n).collect()
+      .map(_.getSeq[Float](1).toArray)
 
   /** The deterministic seeded coarse quantizer behind [[ivfTopKSeeded]]
-    * and the e7 cluster-profile report: centroids = the corpus vectors
-    * with the `nCentroids` smallest vec_ids (cid = rank order), scored
-    * by ROUND(cosine, 6) with ties to the lower cid — SQL-replayable
-    * by construction.
+    * and the e7 cluster-profile report: centroids = the seed vectors in
+    * vec_id order (cid = rank order), scored by ROUND(cosine, 6) with
+    * ties to the lower cid — SQL-replayable by construction.
     */
-  private[graft] def seededCentroids(corpus: DataFrame,
-      nCentroids: Int): Array[(Long, Array[Float])] =
-    corpus.select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(nCentroids).collect()
-      .map(r => r.getSeq[Float](1).toArray)
-      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
-
-  private def seededCellScored(centroids: Array[(Long, Array[Float])],
-      vec: String): Seq[Column] = centroids.map { case (cid, cv) =>
-    val cvLit = array(cv.map(x => lit(x)): _*)
-    struct(round(cosine(col(vec), cvLit), 6).as("cd"), lit(-cid).as("ncid"))
-  }.toSeq
+  private def seededQuantizer(seeds: Array[Array[Float]]): Quantizer =
+    Quantizer(seeds.zipWithIndex.map { case (v, i) => (i.toLong, v) },
+      rounded = true)
 
   /** map-only (vec_id, embedding, cell) assignment of every corpus
     * vector under the seeded quantizer.
     */
-  def seededCells(corpus: DataFrame, nCentroids: Int = 8): DataFrame = {
-    val centroids = seededCentroids(corpus, nCentroids)
-    corpus.select(col("vec_id"), col("embedding"))
-      .withColumn("cell", argmaxCid(seededCellScored(centroids, "embedding")))
-  }
+  def seededCells(corpus: DataFrame, nCentroids: Int = 8): DataFrame =
+    seededQuantizer(lowestIdVectors(corpus, nCentroids)).assign(corpus)
 
   /** IVF probe path with a DETERMINISTIC, SQL-replayable coarse
     * quantizer — the correctness-gate face of [[ivfTopK]]: cell
@@ -430,53 +486,31 @@ object Similarity {
     * key, exact rerank only inside probed cells.
     */
   def ivfTopKSeeded(queries: DataFrame, corpus: DataFrame, k: Int,
-                    nCentroids: Int = 8, nprobe: Int = 2,
-                    maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
-    val centroids = seededCentroids(corpus, nCentroids)
-    def cellScored(vec: String): Seq[Column] = seededCellScored(centroids, vec)
-    val cs = seededCells(corpus, nCentroids)
-    // query probes: rank cells by (cd DESC, cid ASC) = reverse of the
-    // ascending (cd, ncid) struct sort, take the first nprobe
-    val qs = queries.select(col("query_id"), col("query_vec"),
-        explode(slice(reverse(array_sort(array(cellScored("query_vec"): _*))),
-          1, nprobe)).as("pc"))
-      .select(col("query_id"), col("query_vec"), (-col("pc.ncid")).as("cell"))
-    val scored = cs.join(maybeBroadcast(qs, queries, maxBroadcastRows / nprobe),
-        Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", round(cosine(col("embedding"), col("query_vec")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
-  }
+                    nCentroids: Int = 8, nprobe: Int = 2): DataFrame =
+    ivfSearch(queries, corpus, k,
+      seededQuantizer(lowestIdVectors(corpus, nCentroids)), nprobe)
 
   // ------------------------------------------------ product quantization
 
   /** Seeded PQ codebook: sub-centroid `j` of subspace `m` is dims
     * [m·dsub, (m+1)·dsub) of the corpus vector with the j-th smallest
     * vec_id — the same deterministic, SQL-replayable seeding rule as
-    * [[seededCentroids]] (a trained per-subspace k-means would drop in
+    * the seeded quantizer (a trained per-subspace k-means would drop in
     * the same way [[trainCentroids]] does for IVF; its float means are
     * not bit-replayable, so the gate face stays seeded). Collected
     * once: ksub × dim floats of driver state, scale-bounded.
     */
   private[graft] def pqCodebook(corpus: DataFrame, nSub: Int, dsub: Int,
-      ksub: Int): Array[Array[Array[Float]]] = {
-    val seeds = corpus.select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(ksub).collect()
-      .map(_.getSeq[Float](1).toArray)
-    require(seeds.length == ksub, s"pqCodebook: corpus has < $ksub rows")
-    Array.tabulate(nSub)(m => seeds.map(_.slice(m * dsub, (m + 1) * dsub)))
-  }
+      ksub: Int): Array[Array[Array[Float]]] =
+    codebook(lowestIdVectors(corpus, ksub), nSub, dsub, ksub)
 
-  /** micro-unit (1e-6) round-half-up of a double — the integer bridge
-    * both engines agree on bit-for-bit (the e5/e6 lesson: cross-engine
-    * double comparisons ride on rounded integers, never raw doubles).
-    */
-  private def micro(x: Column): Column =
-    floor(x * 1000000d + 0.5d).cast("long")
+  /** the seeded codebook over the first `ksub` of `seeds` */
+  private def codebook(seeds: Array[Array[Float]], nSub: Int, dsub: Int,
+                       ksub: Int): Array[Array[Array[Float]]] = {
+    require(seeds.length >= ksub, s"pqCodebook: corpus has < $ksub rows")
+    val first = seeds.take(ksub)
+    Array.tabulate(nSub)(m => first.map(_.slice(m * dsub, (m + 1) * dsub)))
+  }
 
   /** Map-only PQ encoding: per subspace, argmax of the micro-unit
     * subvector dot product over the codebook entries, ties to the
@@ -506,8 +540,8 @@ object Similarity {
     * SimilaritySpec instead). Starts from the seeded codebook; each
     * iteration is ONE distributed pass for all subspaces: the map-only
     * [[pqEncode]] assigns codes, an explode to (m, code, dim, x) rows
-    * feeds a hash-agg of micro-unit BIGINT means (association-order
-    * free — the trainCentroids determinism rule), and only the
+    * feeds the micro-unit mean aggregate ([[lloydMeans]], the
+    * trainCentroids determinism rule), and only the
     * nSub × ksub × dsub mean table is collected. Emptied codes keep
     * their previous entry.
     */
@@ -525,10 +559,7 @@ object Similarity {
               slice(col(vec), m * dsub + 1, dsub).as("sv"))): _*)).as("r"))
           .select(col("r.m").as("m"), col("r.j").as("j"),
             posexplode(col("r.sv")).as(Seq("d", "x")))
-        val means = subRows.groupBy(col("m"), col("j"), col("d"))
-          .agg((sum(round(col("x") * 1000000).cast("long")) / 1000000.0 /
-            count(lit(1))).as("mean"))
-          .collect()
+        val means = lloydMeans(subRows, col("m"), col("j"), col("d"))
           .groupBy(r => (r.getInt(0), r.getInt(1)))
           .map { case ((m, j), rows) =>
             val v = cb(m)(j).clone()
@@ -552,11 +583,10 @@ object Similarity {
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
              nSub: Int = 8, dsub: Int = 8, ksub: Int = 16,
-             trainIters: Int = 3, rerank: Int = 10,
-             maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame =
+             trainIters: Int = 3, rerank: Int = 10): DataFrame =
     adcTopK(queries, corpus, k,
       trainPqCodebooks(corpus, "embedding", nSub, dsub, ksub, trainIters),
-      nSub, dsub, ksub, rerank, maxBroadcastRows)
+      dsub, rerank, None)
 
   /** Approximate top-k via product quantization with asymmetric
     * distance (ADC) and exact rerank — the compressed-exhaustive-scan
@@ -582,18 +612,30 @@ object Similarity {
     */
   def pqTopKSeeded(queries: DataFrame, corpus: DataFrame, k: Int,
                    nSub: Int = 8, dsub: Int = 8, ksub: Int = 16,
-                   rerank: Int = 10,
-                   maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame =
+                   rerank: Int = 10): DataFrame =
     adcTopK(queries, corpus, k, pqCodebook(corpus, nSub, dsub, ksub),
-      nSub, dsub, ksub, rerank, maxBroadcastRows)
+      dsub, rerank, None)
 
-  /** shared ADC scan + exact rerank over a given codebook (seeded gate
-    * face and trained production face differ only in `cb`).
+  /** The ADC stage every PQ search runs over its codebook `cb`: encode
+    * the corpus, build each query's LUT, score every candidate by its
+    * codes, keep each query's top `rerank` by (approx DESC, vec_id
+    * ASC), re-attach their embeddings and end in the exact cut.
+    * `cells` = (quantizer, nprobe) restricts the candidates to each
+    * query's probed cells (IVF-PQ); without it every code is scored.
+    * The query set is counted once, for both of its broadcasts.
     */
   private def adcTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                      cb: Array[Array[Array[Float]]],
-                      nSub: Int, dsub: Int, ksub: Int,
-                      rerank: Int, maxBroadcastRows: Long): DataFrame = {
+                      cb: Array[Array[Array[Float]]], dsub: Int, rerank: Int,
+                      cells: Option[(Quantizer, Int)]): DataFrame = {
+    val (nSub, ksub) = (cb.length, cb.head.length)
+    val nq = queries.count()
+    val vecs = corpus.select(col("vec_id"), col("embedding"))
+    val qvecs = queries.select(col("query_id"), col("query_vec"))
+    val (base, probes, on, explosion) = cells match {
+      case Some((q, nprobe)) =>
+        (q.assign(corpus), q.probe(queries, nprobe), Seq("cell"), nprobe.toLong)
+      case None => (vecs, qvecs, Nil, 1L)
+    }
     // The repartition is a MATERIALIZATION BARRIER, not a distribution
     // choice: without it CollapseProject folds the 128-dot encode
     // projection into the BroadcastNestedLoopJoin's output, and a BNLJ
@@ -602,25 +644,30 @@ object Similarity {
     // 1.0 s on the sf0.1-scale probe, PqProbe). The exchange pins the
     // encode to once per row and ships only the narrow (vec_id, codes)
     // table — exactly the PQ-codes relation a production system
-    // materializes anyway.
-    val codes = pqEncode(corpus.select(col("vec_id"), col("embedding")),
-      "embedding", cb, dsub)
-      .select(col("vec_id") +: (0 until nSub).map(m => col(s"c$m")): _*)
-      .repartition(col("vec_id"))
+    // materializes anyway. Behind the cell join the collapsed
+    // cell-assign + encode projection would instead re-evaluate per
+    // MATCHED join row (~nprobe×nq/nCentroids times per vector —
+    // measured 18.9 s vs 3.7 s at the 10× probe scale), so IVF-PQ
+    // partitions on the join key, which doubles as the co-location
+    // choice.
+    val codes = pqEncode(base, "embedding", cb, dsub)
+      .select((col("vec_id") +: on.map(col)) ++
+        (0 until nSub).map(m => col(s"c$m")): _*)
+      .repartition(col(on.headOption.getOrElse("vec_id")))
     // per-query LUT: entry m*ksub+j = micro dot(query subvector m,
-    // codebook[m][j]) — one flat array column, ksub×nSub longs
+    // codebook[m][j]) — one flat array column, ksub×nSub longs; built
+    // after the probe expansion (nprobe rows per query), since the LUT
+    // is cheaper recomputed than shuffled wide
     val lutCells = (0 until nSub).flatMap { m =>
       cb(m).map { cv =>
         val cvLit = array(cv.map(x => lit(x)): _*)
         micro(dot(slice(col("query_vec"), m * dsub + 1, dsub), cvLit))
       }
     }
-    val qs = queries.select(col("query_id"), col("query_vec"),
-      array(lutCells: _*).as("lut"))
-    val approx = codes
-      .crossJoin(maybeBroadcast(qs.select(col("query_id"), col("lut")), queries,
-        maxBroadcastRows))
-      .filter(col("vec_id") =!= col("query_id"))
+    val approx = meet(codes,
+        probes.select((col("query_id") +: on.map(col)) :+
+          array(lutCells: _*).as("lut"): _*),
+        on, nq, explosion)
       .withColumn("approx", (0 until nSub)
         .map(m => element_at(col("lut"), (col(s"c$m") + lit(m * ksub + 1)).cast("int")))
         .reduce(_ + _))
@@ -632,16 +679,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id"))
     // exact rerank of the short candidate list: embeddings re-attach by
     // id so the ADC scan never carries the float payload
-    val scored = cands
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(maybeBroadcast(qs.select(col("query_id"), col("query_vec")),
-        queries, maxBroadcastRows), "query_id")
-      .withColumn("cosine", round(cosine(col("embedding"), col("query_vec")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+    exactTopK(cands.join(vecs, "vec_id").join(guarded(qvecs, nq), "query_id"), k)
   }
 
   /** IVF-PQ: the production 100 TB ANN layout — coarse cells prune the
@@ -652,62 +690,16 @@ object Similarity {
     * one map-only encode pass: (cell, c0..c7) materialize in the same
     * stage as the parquet scan, the ADC join meets on the narrow cell
     * key, and the only corpus-sized shuffle is the (query_id, vec_id,
-    * approx) top-`rerank` window inside probed cells.
+    * approx) top-`rerank` window inside probed cells. One collect of
+    * the lowest-vec_id vectors seeds both the cells and the codebook.
     */
   def ivfPqTopKSeeded(queries: DataFrame, corpus: DataFrame, k: Int,
                       nCentroids: Int = 8, nprobe: Int = 2,
                       nSub: Int = 8, dsub: Int = 8, ksub: Int = 16,
-                      rerank: Int = 10,
-                      maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
-    val centroids = seededCentroids(corpus, nCentroids)
-    val cb = pqCodebook(corpus, nSub, dsub, ksub)
-    // repartition = materialization barrier (see pqTopKSeeded): without
-    // it the collapsed cell-assign + encode projection re-evaluates per
-    // MATCHED join row (~nprobe×nq/nCentroids times per vector through
-    // the cell join — measured 18.9 s vs 3.7 s at the 10× probe scale).
-    // Partitioning on the join key doubles as the co-location choice.
-    val codes = pqEncode(seededCells(corpus, nCentroids), "embedding", cb, dsub)
-      .select(col("vec_id") +: col("cell") +:
-        (0 until nSub).map(m => col(s"c$m")): _*)
-      .repartition(col("cell"))
-    val lutCells = (0 until nSub).flatMap { m =>
-      cb(m).map { cv =>
-        val cvLit = array(cv.map(x => lit(x)): _*)
-        micro(dot(slice(col("query_vec"), m * dsub + 1, dsub), cvLit))
-      }
-    }
-    // probe expansion first (nprobe rows per query), then one LUT per
-    // exploded row — the LUT is 128 longs, cheaper recomputed than
-    // shuffled wide
-    val qs = queries.select(col("query_id"), col("query_vec"),
-        explode(slice(reverse(array_sort(
-          array(seededCellScored(centroids, "query_vec"): _*))), 1, nprobe)).as("pc"))
-      .select(col("query_id"), col("query_vec"), (-col("pc.ncid")).as("cell"),
-        array(lutCells: _*).as("lut"))
-    val approx = codes
-      .join(maybeBroadcast(qs.select(col("query_id"), col("cell"), col("lut")),
-        queries, maxBroadcastRows / nprobe), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("approx", (0 until nSub)
-        .map(m => element_at(col("lut"), (col(s"c$m") + lit(m * ksub + 1)).cast("int")))
-        .reduce(_ + _))
-      .select(col("query_id"), col("vec_id"), col("approx"))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = approx.withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= rerank)
-      .select(col("query_id"), col("vec_id"))
-    val scored = cands
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(maybeBroadcast(
-        queries.select(col("query_id"), col("query_vec")), queries,
-        maxBroadcastRows), "query_id")
-      .withColumn("cosine", round(cosine(col("embedding"), col("query_vec")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+                      rerank: Int = 10): DataFrame = {
+    val seeds = lowestIdVectors(corpus, math.max(nCentroids, ksub))
+    adcTopK(queries, corpus, k, codebook(seeds, nSub, dsub, ksub), dsub, rerank,
+      Some((seededQuantizer(seeds.take(nCentroids)), nprobe)))
   }
 
   // -------------------------------------------------------- SemDeDup
@@ -849,13 +841,10 @@ object Similarity {
     * rank, all partitioned by query_id, nothing on the driver.
     */
   def mmrSelect(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    def microCos(a: Column, b: Column): Column =
-      floor(cosineMicro(a, b) * 1000000d + 0.5d).cast("long")
     Loop.cached { c =>
       val cand = c(candidates.select(col("vec_id"), col("embedding"))
-        .crossJoin(maybeBroadcast(
-          queries.select(col("query_id"), col("query_vec")), queries,
-          DefaultMaxBroadcastRows))
+        .crossJoin(guarded(
+          queries.select(col("query_id"), col("query_vec")), queries.count()))
         .select(col("query_id"), col("vec_id"),
           microCos(col("embedding"), col("query_vec")).as("simqu")))
       val pairs = c(candidates.select(col("vec_id").as("a"), col("embedding").as("ea"))
@@ -914,8 +903,6 @@ object Similarity {
     * total — the textbook FPS cost — with nothing quadratic in n.
     */
   def kcenterSelect(corpus: DataFrame, k: Int = 8): DataFrame = {
-    def microCos(a: Column, b: Column): Column =
-      floor(cosineMicro(a, b) * 1000000d + 0.5d).cast("long")
     Loop.cached { c =>
       val pts = c(corpus.select(col("vec_id"), col("embedding")))
       // picks are eager 1-row checkpoints that must outlive the state

@@ -248,38 +248,39 @@ object WriteQueries {
     */
   def w16TxUpsert(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = s"${sys.props("java.io.tmpdir")}/graft_w16_tx"
-    graft.sources.TxTable.drop(root) // leftovers from prior JVMs
-    val nation = Tables.nation(s, dir)
-    graft.sources.TxTable.init(s, root, nation)
-    val staleBase = graft.sources.TxTable.currentVersion(root)
+    // a fresh root per call, dropped on the way out: two calls — in one
+    // JVM or in two processes on one host — never share a table
+    val root = java.nio.file.Files.createTempDirectory("graft_w16_tx").toString
+    try {
+      val nation = Tables.nation(s, dir)
+      graft.sources.TxTable.init(s, root, nation)
 
-    // crash window: version written, pointer NOT swapped
-    val updates = nation.filter(col("n_nationkey") < 5)
-      .withColumn("n_regionkey", col("n_regionkey") + 100L)
-    graft.sources.TxTable.writeVersion(s, root,
-      Writer.upsert(nation, updates, Seq("n_nationkey")))
-    val mid = graft.sources.TxTable.read(s, root)
-      .agg(count(lit(1)).as("n"), sum(col("n_regionkey")).as("rsum"))
-      .head()
+      // crash window: version written, pointer NOT swapped
+      val updates = nation.filter(col("n_nationkey") < 5)
+        .withColumn("n_regionkey", col("n_regionkey") + 100L)
+      graft.sources.TxTable.writeVersion(s, root,
+        Writer.upsert(nation, updates, Seq("n_nationkey")))
+      val mid = graft.sources.TxTable.read(s, root)
+        .agg(count(lit(1)).as("n"), sum(col("n_regionkey")).as("rsum"))
+        .head()
 
-    // real commit (recomputes from the still-current base; the crashed
-    // attempt's uniquely-named directory stays behind as a vacuum-able
-    // orphan — never a collision for the retry)
-    graft.sources.TxTable.upsert(s, root, updates, Seq("n_nationkey"))
-    val after = graft.sources.TxTable.read(s, root)
-      .agg(count(lit(1)).as("n"), sum(col("n_regionkey")).as("rsum"))
-      .head()
+      // real commit (recomputes from the still-current base; the crashed
+      // attempt's uniquely-named directory stays behind as a vacuum-able
+      // orphan — never a collision for the retry)
+      graft.sources.TxTable.upsert(s, root, updates, Seq("n_nationkey"))
+      val after = graft.sources.TxTable.read(s, root)
+        .agg(count(lit(1)).as("n"), sum(col("n_regionkey")).as("rsum"))
+        .head()
 
-    // stale-commit refusal (version-level CAS) is pinned in
-    // StorageSpec, where the interleaving is controlled; here the
-    // superseded v1 plus any orphan must vacuum away (grace 0: the
-    // gate owns this table exclusively)
-    val vacuumed = graft.sources.TxTable.vacuum(root, graceMs = 0L)
-    graft.sources.TxTable.drop(root)
-    Seq((mid.getLong(0), mid.getLong(1), after.getLong(0), after.getLong(1),
-      vacuumed > 0))
-      .toDF("n_mid", "rsum_mid", "n_after", "rsum_after", "vacuumed_orphans")
+      // stale-commit refusal (version-level CAS) is pinned in
+      // StorageSpec, where the interleaving is controlled; here the
+      // superseded v1 plus any orphan must vacuum away (grace 0: the
+      // gate owns this table exclusively)
+      val vacuumed = graft.sources.TxTable.vacuum(root, graceMs = 0L)
+      Seq((mid.getLong(0), mid.getLong(1), after.getLong(0), after.getLong(1),
+        vacuumed > 0))
+        .toDF("n_mid", "rsum_mid", "n_after", "rsum_after", "vacuumed_orphans")
+    } finally graft.sources.TxTable.drop(root)
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, Multimodal, TextAnalysis}
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -143,26 +143,44 @@ class DedupSpec extends AnyFunSuite {
     assert(guarded.subsetOf(all))
   }
 
-  test("simhashNearDup tests hamming below its (a_id, b_id) pair dedup") {
-    // the band join's far pairs must not reach the dedup aggregate
+  /** The optimized plan of `df` holds exactly one pair-dedup aggregate
+    * grouped on `keys`, with a hamming test (a `<=` over a bit count)
+    * below it: the join's far pairs never reach the dedup.
+    */
+  private def hammingBelowDedup(df: org.apache.spark.sql.DataFrame,
+                                keys: Set[String]): Unit = {
     import org.apache.spark.sql.catalyst.expressions.{Attribute,
       BitwiseCount, Expression, LessThanOrEqual}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join}
-    val plan = Dedup.simhashNearDup(longDocs, maxHamming = 3, subset = 1)
-      .queryExecution.optimizedPlan
+    val plan = df.queryExecution.optimizedPlan
     val dedups = plan.collect {
       case a: Aggregate if a.groupingExpressions.collect {
-        case r: Attribute => r.name }.toSet == Set("a_id", "b_id") => a
+        case r: Attribute => r.name }.toSet == keys => a
     }
     assert(dedups.size == 1, s"expected one pair dedup in\n$plan")
-    def hamTest(e: Expression): Boolean =
-      e.exists { case LessThanOrEqual(_: BitwiseCount, _) => true; case _ => false }
+    def hamTest(e: Expression): Boolean = e.exists {
+      case LessThanOrEqual(l, _) => l.exists(_.isInstanceOf[BitwiseCount])
+      case _ => false
+    }
     val below = dedups.head.child.exists {
       case f: Filter => hamTest(f.condition)
       case j: Join => j.condition.exists(hamTest)
       case _ => false
     }
     assert(below, s"no hamming test below the pair dedup in\n$plan")
+  }
+
+  test("simhashNearDup tests hamming below its (a_id, b_id) pair dedup") {
+    hammingBelowDedup(Dedup.simhashNearDup(longDocs, maxHamming = 3, subset = 1),
+      Set("a_id", "b_id"))
+  }
+
+  test("the ahash near-dup joins test hamming below their pair dedups") {
+    val hashes = Seq((0L, 1L, 2L), (1L, 1L, 3L), (2L, 7L, 2L))
+      .toDF("media_id", "ahash_lo", "ahash_hi")
+    hammingBelowDedup(Multimodal.ahashNearDup(hashes), Set("a_id", "b_id"))
+    hammingBelowDedup(Multimodal.ahashNearDupCounts(hashes),
+      Set("a_lo", "a_hi", "b_lo", "b_hi"))
   }
 
   // doc 10 with a copy, a 4-word tail edit and a half rewrite (pair

@@ -203,18 +203,32 @@ class MultimodalSpec extends AnyFunSuite {
   test("decodePgm rejects malformed blobs loudly") {
     import Multimodal.MediaRow
     def row(bytes: Array[Byte]) = MediaRow(1L, "image", bytes, 0, 0, 0)
-    // wrong magic
-    assertThrows[IllegalArgumentException](
-      Multimodal.decodePgm(row("P6\n2 2\n255\n1234".getBytes)))
-    // truncated raster: header promises 4 pixels, payload has 2
-    assertThrows[IllegalArgumentException](
-      Multimodal.decodePgm(row("P5\n2 2\n255\nab".getBytes)))
-    // unsupported maxval
-    assertThrows[IllegalArgumentException](
-      Multimodal.decodePgm(row("P5\n1 1\n65535\n  ".getBytes)))
+    // both image decoders read their header through one parser
+    val decoders: Seq[MediaRow => Any] =
+      Seq(Multimodal.decodePgm, Multimodal.decodePgmAhash)
+    decoders.foreach { decode =>
+      // wrong magic
+      assertThrows[IllegalArgumentException](
+        decode(row("P6\n2 2\n255\n1234".getBytes)))
+      // truncated raster: header promises 4 pixels, payload has 2
+      assertThrows[IllegalArgumentException](
+        decode(row("P5\n2 2\n255\nab".getBytes)))
+      // unsupported maxval
+      assertThrows[IllegalArgumentException](
+        decode(row("P5\n1 1\n65535\n  ".getBytes)))
+      // no separator byte between maxval and the raster
+      assertThrows[IllegalArgumentException](
+        decode(row("P5\n1 1\n255".getBytes)))
+      // 65536·65536 wraps an Int to 0 pixels; the Long guard refuses it
+      assertThrows[IllegalArgumentException](
+        decode(row("P5\n65536 65536\n255\nab".getBytes)))
+    }
     // arbitrary-whitespace header (the general PGM form) parses fine
     val ok = Multimodal.decodePgm(row("P5 2\t1\r\n255\nAB".getBytes))
     assert(ok.width == 2 && ok.height == 1 && ok.mean_byte == 65.5)
+    val okHash = Multimodal.decodePgmAhash(row("P5 2\t1\r\n255\nAB".getBytes))
+    // pixels 65, 66 against the integer mean 65: both bits set
+    assert(okHash.width == 2 && okHash.height == 1 && okHash.ahash_lo == 3L)
   }
 
   test("metadata-only scan does not touch the bytes column") {

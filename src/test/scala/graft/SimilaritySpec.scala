@@ -161,19 +161,28 @@ class SimilaritySpec extends AnyFunSuite {
     val corpus = (0 until 64).map { i =>
       (i.toLong, Array.tabulate(8)(j => math.sin(i + j).toFloat))
     }.toDF("vec_id", "embedding")
-    val queries = corpus
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    // maxBroadcastRows = 0 models a query set over the safety threshold.
+    // lshTopK's query side explodes tables × (nBits + 1) = 10-fold, so
+    // a real query set one row past DefaultMaxBroadcastRows / 10 is over
+    // the safety threshold, and one at it is not
+    val limit = Similarity.DefaultMaxBroadcastRows / (2 * (4 + 1))
+    def plan(nq: Long): String = {
+      val queries = spark.range(nq).select(col("id").as("query_id"),
+        array((0 until 8).map(j => sin(col("id") + j).cast("float")): _*)
+          .as("query_vec"))
+      Similarity.lshTopK(queries, corpus, 1, nBits = 4, dim = 8, tables = 2)
+        .queryExecution.executedPlan.toString
+    }
     // Auto-broadcast is off for the assertion so only a HARD-CODED hint
     // (the old bug) could still produce a broadcast join.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p = Similarity.lshTopK(queries, corpus, 1, nBits = 4, dim = 8,
-          tables = 2, maxBroadcastRows = 0)
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("BroadcastHashJoin"),
-        s"query side must not carry a forced broadcast hint:\n$p")
+      val over = plan(limit + 1)
+      assert(!over.contains("BroadcastHashJoin"),
+        s"query side must not carry a forced broadcast hint:\n$over")
+      val at = plan(limit)
+      assert(at.contains("BroadcastHashJoin"),
+        s"a query set at the threshold must broadcast:\n$at")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -394,6 +403,19 @@ class SimilaritySpec extends AnyFunSuite {
     val full = top3(Similarity.ivfPqTopKSeeded(queries, emb, 3,
       nprobe = 8, rerank = n))
     assert(full == exact, "full-probe full-rerank must equal brute force")
+  }
+
+  test("ivfPqTopKSeeded plus a collect costs a pinned number of Spark jobs") {
+    // one seed collect feeds both the cells and the codebook, and one
+    // count guards both query broadcasts; a collect per seeded quantity
+    // (the centroids twice) and a count per broadcast ran 13
+    val emb = Tables.embeddings(spark, TestSpark.sfDir)
+    val queries = emb.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val (out, jobs) = TestSpark.jobsOf(
+      Similarity.ivfPqTopKSeeded(queries, emb, 3).collect())
+    assert(out.nonEmpty)
+    assert(jobs == 9, s"ivfPqTopKSeeded and a collect ran $jobs jobs")
   }
 
   test("semdedupPrune: within-cell near-dup pruned, cross-cell kept") {

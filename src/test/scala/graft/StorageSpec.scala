@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
-import graft.sources.{DataSources, GraphStorage}
+import graft.sources.GraphStorage
 
 /** Physical layout semantics: label-partition pruning, dual bucketed
   * edge tables (EDGE_OUT/EDGE_IN analog) eliminating the edge-side
@@ -143,36 +143,6 @@ class StorageSpec extends AnyFunSuite {
     assert(back.toSeq == Seq(2L, 3L))
   }
 
-  test("csv and json round-trip with explicit schema") {
-    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "v")
-    DataSources.writeCsv(df, s"$wh/csv_rt")
-    DataSources.writeJsonLines(df, s"$wh/json_rt")
-    val back = DataSources.readCsv(spark, s"$wh/csv_rt", df.schema)
-    val backJ = DataSources.readJsonLines(spark, s"$wh/json_rt", df.schema)
-    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
-    assert(backJ.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
-  }
-
-  test("orc round-trip with pushed filter") {
-    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "c", 3.5))
-      .toDF("id", "name", "v")
-    DataSources.writeOrc(df, s"$wh/orc_rt")
-    val back = DataSources.readOrc(spark, s"$wh/orc_rt").filter(col("id") > 1L)
-    assert(back.count() == 2)
-    val plan = back.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("id"), s"plan:\n$plan")
-  }
-
-  test("partitioned parquet write prunes on partition column") {
-    val df = Seq((1L, "x", "2024"), (2L, "y", "2025")).toDF("id", "name", "year")
-    DataSources.writeParquet(df, s"$wh/part_rt", Seq("year"))
-    val back = DataSources.readParquet(spark, s"$wh/part_rt")
-      .filter(col("year") === "2024")
-    val plan = back.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"))
-    assert(back.count() == 1)
-  }
-
   // ---- TxTable: the W9/W10 ACID story (versioned parquet behind an
   // atomically-swapped pointer) ----
 
@@ -284,6 +254,20 @@ class StorageSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(old.getParent))
     assert(graft.sources.TxTable.read(spark, root).count() == 1)
     graft.sources.TxTable.drop(root)
+  }
+
+  test("w16_tx_upsert: two calls at once in one JVM each get the serial result") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // each call owns its table root, so neither drops the other's table
+    def w16() = graft.queries.WriteQueries.w16TxUpsert(spark, TestSpark.sfDir)
+      .collect().toSeq
+    val serial = w16()
+    assert(serial.size == 1)
+    val both = Await.result(Future.sequence(Seq(Future(w16()), Future(w16()))),
+      5.minutes)
+    both.foreach(r => assert(r == serial))
   }
 
   test("TxTable: two commits racing from the SAME base — the loser's " +
