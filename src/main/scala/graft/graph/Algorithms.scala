@@ -118,93 +118,119 @@ object Algorithms {
       (col("rank") * lit(t.getLong(0).toDouble / t.getDouble(1))).as("rank"))
   }
 
-  /** Connected components, DataFrame-first with DELTA-FRONTIER min-label
-    * propagation: per round, only labels that CHANGED last round join
-    * the adjacency, so total join volume is Σ(edges incident to each
-    * round's delta) — not rounds × |E| like a full-state formulation
-    * (the round-6 shape, 12.7s at sf0.1). Once a region's labels
-    * settle, its edges are never touched again. Component id = min
-    * vertex id; the vertex set is the graph's explicit one, so an
-    * isolated vertex (e.g. a part no lineitem references) is its own
-    * singleton component.
-    *
-    * Correctness of the delta restriction: labels are monotone
-    * non-increasing and every label drop enters that round's delta, so
-    * any improvement a neighbor could offer is offered the round after
-    * it happens; an empty delta therefore witnesses the GLOBAL fixpoint
-    * (for every edge (u,v): comp(u)=comp(v), hence comp is constant per
-    * component, and since every comp value is a member id it equals the
-    * min member id). Labels only fall and are bounded below, so the
-    * loop always ends: it runs until the delta is empty, with no round
-    * cap.
-    *
-    * Scale shape: adjacency persisted pre-partitioned on the join key
-    * (each round shuffles only the narrow delta + its candidate
-    * output), per-round state localCheckpoint'ed. Rounds are bounded by
-    * the min vertex's eccentricity per component (BFS flooding); on
-    * real-world short-diameter graphs late rounds touch a vanishing
-    * frontier.
+  /** Connected components: min-label propagation on the relaxation
+    * kernel ([[relax]]) over the symmetrized edges, from the identity
+    * seed. Component id = min vertex id; the vertex set is the graph's
+    * explicit one, so an isolated vertex (e.g. a part no lineitem
+    * references) is its own singleton component. Labels only fall and
+    * are bounded below, so the loop always ends: it runs until no label
+    * falls, with no round cap. Per round only the labels that fell the
+    * round before join the adjacency, so the join volume is Σ(edges
+    * incident to each round's delta), not rounds × |E| like a
+    * full-state formulation (the round-6 shape, 12.7s at sf0.1); on
+    * short-diameter graphs late rounds touch a vanishing frontier.
     */
   def connectedComponents(s: SparkSession, g: PropertyGraph): DataFrame =
+    components(g.edges.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst")),
+      Some(g.vertices.select(col("id")).distinct()))
+      .select(col("id"), col("x").as("component"))
+
+  /** Min-label components of the undirected graph on the (src, dst)
+    * rows of `e` over the vertex set `verts` (id), or over the
+    * endpoints of `e` when `verts` is None: (id, x) with x = the min
+    * vertex id of the component. Shared by [[connectedComponents]] and
+    * [[graft.operators.Dedup.dupClusters]].
+    */
+  private[graft] def components(e: DataFrame, verts: Option[DataFrame]): DataFrame =
     Loop.cached { c =>
-      // no undirectedDistinct here: MIN-aggregation is idempotent under
-      // duplicate/parallel/reversed edges, so the dedup shuffle would buy
-      // nothing. Symmetrize in ONE pass over the (expensive, multi-table)
-      // edge subtree via explode — a union would evaluate it twice — and
-      // pre-partition on the round join key.
-      val adj = c(g.edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst"))
-        .select(explode(array(
-          struct(col("src").as("v"), col("dst").as("n")),
-          struct(col("dst").as("v"), col("src").as("n")))).as("e"))
-        .select(col("e.v").as("v"), col("e.n").as("n"))
-        .repartition(col("n")))
-      // the seed is the identity labeling; rounds carry __chg, so round 0
-      // has no delta to test
-      Loop.run(g.vertices.select(col("id")).distinct()
-          .select(col("id"), col("id").as("comp")), Int.MaxValue,
-          stop = (st: DataFrame, k: Int) => k > 0 && st.filter(col("__chg")).isEmpty) {
-          (st, k) =>
-        if (k == 1) {
-          // round 1 on the identity labeling needs no join at all:
-          // min neighbor id IS the candidate (comp(id) = id) — one
-          // aggregation replaces the heaviest (all-vertices) delta round
-          st.join(adj.groupBy(col("v")).agg(min(col("n")).as("cand"))
-                .select(col("v").as("id"), col("cand")).hint("shuffle_hash"),
-              Seq("id"), "left")
-            .select(col("id"),
-              least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"),
-              (coalesce(col("cand"), col("comp")) < col("comp")).as("__chg"))
-        } else ccAltRound(adj, st.select(col("id"), col("comp")),
-          st.filter(col("__chg")).select(col("id"), col("comp")))
-      }.state.select(col("id"), col("comp").as("component"))
+      // no dedup shuffle: MIN-aggregation is idempotent under
+      // duplicate/parallel/reversed edges. Symmetrize in ONE pass over
+      // the (expensive, multi-table or LSH-sourced) edge subtree via
+      // explode — a union would evaluate it twice — and pre-partition on
+      // the round join key.
+      val adj = c(e.select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        .repartition(col("src")))
+      val vs = verts.getOrElse(adj.select(col("src").as("id")).distinct())
+      relax(adj, identitySeed(adj, vs), col("x"), lower = true, Int.MaxValue).state
     }
 
-  /** One delta round of [[connectedComponents]]: label candidates
-    * flow ONLY out of `delta` — the (id, comp) rows whose label fell
-    * last round — into their graph neighbors; every other vertex costs
-    * nothing this round. Returns (id, comp, __chg) where __chg marks
-    * rows whose label fell (next round's delta). private[graft] so the
-    * spec can pin the delta contract directly: a better label sitting
-    * in `lab` but absent from `delta` must NOT propagate.
+  /** The monotone relaxation kernel that connected components, DAG
+    * layering, weighted SSSP, SCC forward coloring and
+    * [[graft.operators.Dedup.dupClusters]] share: a label x per vertex
+    * that only falls (`lower`, min) or only rises (max), on
+    * [[graft.util.Loop.run]], stopping when no label moved.
+    *
+    * `edges` (src, dst[, w]) is cached by the caller and pre-partitioned
+    * on src, the round's join key. `seed` is (id, x, __chg), where
+    * __chg flags the labels the next round propagates. Each round
+    * ([[relaxRound]]) joins only the flagged rows to the edges on src,
+    * aggregates `cand` (a Column over the edge and x, e.g. x, x + 1 or
+    * x + w) per dst, and merges it into the state ([[settle]]). With
+    * `grow` the merge is a full join, so endpoints the seed lacks enter
+    * the state when first reached (SSSP from one source); otherwise
+    * the seed is the vertex set.
+    *
+    * Correctness of the delta restriction: every label move enters that
+    * round's delta, so any improvement a neighbour could offer is
+    * offered the round after it happens; an empty delta therefore
+    * witnesses the global fixpoint. Each round equals one full-state
+    * round, so a cap of `rounds` allows exactly `rounds` propagation
+    * rounds past the seed. The result's `converged` is false when the
+    * cap fired with labels still moving; the state is (id, x, __chg).
     */
-  private[graft] def ccAltRound(adj: DataFrame, lab: DataFrame,
-                                delta: DataFrame): DataFrame = {
-    // shuffle_hash hints: an SMJ would re-SORT the (large, cached)
-    // adjacency and the label state every round — measured 0.9s/round
-    // at sf0.1 even with a ~2k-row delta. Hash joins build from the
-    // small per-round side and stream the cached side, and the cache's
-    // hash partitioning (repartition(n) / previous round's id-join)
-    // still elides the big side's exchange.
-    val cand = adj.join(
-        delta.select(col("id").as("n"), col("comp")).hint("shuffle_hash"), "n")
-      .groupBy(col("v")).agg(min(col("comp")).as("cand"))
-      .select(col("v").as("id"), col("cand"))
-    lab.join(cand.hint("shuffle_hash"), Seq("id"), "left")
-      .select(col("id"),
-        least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"),
-        (coalesce(col("cand"), col("comp")) < col("comp")).as("__chg"))
+  private def relax(edges: DataFrame, seed: DataFrame, cand: Column,
+                    lower: Boolean, rounds: Int,
+                    grow: Boolean = false): Loop.Result[DataFrame] =
+    Loop.run(seed, rounds, stop = Loop.whenEmpty(_.filter(col("__chg")))) {
+      (st, _) => relaxRound(edges, st, cand, lower, grow)
+    }
+
+  /** One [[relax]] round: `cand` flows ONLY out of the rows of `st`
+    * flagged __chg into their out-neighbours; every other vertex costs
+    * nothing this round. private[graft] so the spec can pin the delta
+    * contract directly: a better label sitting in `st` unflagged must
+    * NOT propagate.
+    */
+  private[graft] def relaxRound(edges: DataFrame, st: DataFrame, cand: Column,
+                                lower: Boolean, grow: Boolean): DataFrame = {
+    // shuffle_hash on the delta: an SMJ would re-SORT the (large,
+    // cached) edges every round — measured 0.9s/round at sf0.1 even
+    // with a ~2k-row delta. The hash join builds from the small delta
+    // and streams the cache, whose src partitioning elides the big
+    // side's exchange.
+    val offers = edges
+      .join(st.filter(col("__chg")).select(col("id").as("src"), col("x"))
+        .hint("shuffle_hash"), "src")
+      .groupBy(col("dst").as("id")).agg((if (lower) min(cand) else max(cand)).as("cand"))
+    settle(st.select(col("id"), col("x")), offers, lower, if (grow) "full" else "left")
   }
+
+  /** Merge per-vertex offers (id, cand) into the labels `st` (id, x):
+    * x moves to the better of the two (`least`/`greatest` skip a null
+    * side) and __chg flags the rows whose x moved or first appeared.
+    * The offers are the hash-join build side.
+    */
+  private def settle(st: DataFrame, offers: DataFrame, lower: Boolean,
+                     how: String): DataFrame = {
+    val (x, c) = (col("x"), col("cand"))
+    st.join(offers.hint("shuffle_hash"), Seq("id"), how)
+      .select(col("id"), (if (lower) least(x, c) else greatest(x, c)).as("x"),
+        (c.isNotNull && (x.isNull || (if (lower) c < x else c > x))).as("__chg"))
+  }
+
+  /** The [[relax]] seed of an identity-labelled min loop (x = id over
+    * `verts`) after its first round, which needs no join: with x = id
+    * every vertex's candidate is its min in-neighbour id, one aggregate
+    * over `edges` in place of the heaviest (all-vertices) delta round.
+    */
+  private def identitySeed(edges: DataFrame, verts: DataFrame): DataFrame =
+    settle(verts.select(col("id"), col("id").as("x")),
+      edges.groupBy(col("dst").as("id")).agg(min(col("src")).as("cand")),
+      lower = true, "left")
 
   /** Per destination vertex of the `label` edges: the edge count and
     * the sum of an edge property, summed in integer cents so the
@@ -666,11 +692,12 @@ object Algorithms {
     * expect a DAG no deeper than `iters` pass strict = true, turning a
     * truncated (silently wrong) layering into a loud error instead.
     *
-    * Scale: per round ONE narrow join on src + one hash-agg on dst
-    * over (id, level) pairs — never adjacency lists; the edge list is
-    * persisted across rounds and state is eagerly localCheckpoint'ed
-    * (the pageRankExact loop mechanics). O(depth) rounds, each a
-    * single exchange pair.
+    * Scale: max-propagation on the relaxation kernel ([[relax]]): only
+    * vertices whose level ROSE last round raise a successor, so each
+    * edge is joined once per layer it propagates through — Σ|delta|
+    * work, not rounds × |E| — and the loop stops itself on an empty
+    * frontier (depth+1 rounds on a DAG) instead of burning fixed
+    * iterations past convergence.
     */
   def dagLayers(s: SparkSession, g: PropertyGraph, iters: Int = 8,
                 strict: Boolean = false): DataFrame =
@@ -686,37 +713,16 @@ object Algorithms {
   def dagLayersStatus(s: SparkSession, g: PropertyGraph, iters: Int = 8,
                       strict: Boolean = false): (DataFrame, Boolean) = {
     val r = Loop.cached { c =>
-      // pre-partitioned on the per-round join key so the cached edge
-      // list never re-shuffles inside the loop (the LPA adjacency trick,
-      // pinned in PlanSpec)
       val edges = c(g.edges.select(col("src"), col("dst"))
         .repartition(col("src")))
-      // frontier (delta) formulation: only vertices whose level ROSE
-      // last round (__rose) can raise a successor this round, so the
-      // expensive edges-join touches each edge once per layer it
-      // propagates through — Σ|delta| work, not rounds × |E| — and the
-      // loop stops itself on an empty frontier (depth+1 rounds on a
-      // DAG) instead of burning fixed iterations past convergence.
-      Loop.run(g.vertices.select(col("id")).distinct()
-          .select(col("id"), lit(0L).as("level"), lit(true).as("__rose")),
-          iters, stop = Loop.whenEmpty(_.filter(col("__rose")))) { (st, _) =>
-        val cand = edges
-          .join(st.filter(col("__rose")).select(col("id").as("src"), col("level"))
-            .hint("shuffle_hash"), "src") // stream the cache (r16)
-          .groupBy(col("dst")).agg(max(col("level") + 1L).as("cand"))
-          .select(col("dst").as("id"), col("cand"))
-        st.select(col("id"), col("level"))
-          .join(cand.hint("shuffle_hash"), Seq("id"), "left")
-          .select(col("id"),
-            greatest(col("level"), coalesce(col("cand"), col("level")))
-              .as("level"),
-            (col("cand") > col("level")).as("__rose"))
-      }
+      relax(edges, g.vertices.select(col("id")).distinct()
+          .select(col("id"), lit(0L).as("x"), lit(true).as("__chg")),
+        col("x") + 1L, lower = false, iters)
     }
     if (strict) require(r.converged,
       s"dagLayers frontier still live after $iters rounds — graph is " +
         "deeper than iters or cyclic (pass strict=false for detector mode)")
-    (r.state.select(col("id"), col("level")), r.converged)
+    (r.state.select(col("id"), col("x").as("level")), r.converged)
   }
 
   /** Personalized PageRank, exact integer units — [[pageRankExact]]
@@ -850,7 +856,7 @@ object Algorithms {
       val verts = c(g.vertices.select(col("id")).distinct())
       Loop.run(verts.select(col("id"), col("id").as("lbl")), iters) { (lab, _) =>
         // shuffle_hash: an SMJ would re-SORT the cached pre-partitioned
-        // adjacency every round (the ccAltRound lesson — ~0.9s/round)
+        // adjacency every round (the relaxRound lesson — ~0.9s/round)
         val nb = adj.join(
           lab.select(col("id").as("n"), col("lbl")).hint("shuffle_hash"), "n")
         // explicit repartition(v) BEFORE the two-level agg (r16): both
@@ -1382,31 +1388,34 @@ object Algorithms {
     */
   def ssspHops(s: SparkSession, g: PropertyGraph, source: Long,
                labels: Seq[String] = Nil, reverse: Boolean = false): DataFrame =
-    ifEndpoint(g, source, labels,
+    ifEndpoint(g.edgesOf(labels), source,
       multiSourceHops(s, g, Seq(source), labels, reverse)
         .select(col("id"), col("dist")))
 
   /** Weighted single-source shortest path: a delta-frontier
-    * Bellman-Ford on [[graft.util.Loop]]. Per round only the vertices
-    * whose distance fell last round relax their out-edges (one join
-    * against the cached adjacency + one min-aggregate), and the loop
-    * stops when no distance improves. Distances stay in exact Long
-    * arithmetic, so results are engine-portable (no float
-    * accumulation). `weight` is any Column over the edge table's
-    * (src, dst, properties…), evaluated on the stored orientation
-    * before `reverse` flips it; every selected edge must carry a
-    * non-null, non-negative weight — the run fails with a message
-    * otherwise, since a dropped edge would silently lengthen paths and
-    * a negative cycle would never stop improving. Returns (id, dist)
+    * Bellman-Ford on the relaxation kernel ([[relax]]), whose state
+    * grows from the source as vertices are first reached. Per round
+    * only the vertices whose distance fell last round relax their
+    * out-edges (one join against the cached adjacency + one
+    * min-aggregate), and the loop stops when no distance improves.
+    * Distances stay in exact Long arithmetic, so results are
+    * engine-portable (no float accumulation). `weight` is any Column
+    * over the edge table's (src, dst, properties…), evaluated on the
+    * stored orientation before `reverse` flips it; every selected
+    * edge must carry a non-null, non-negative weight — the run fails
+    * with a message otherwise, since a dropped edge would silently
+    * lengthen paths and a negative cycle would never stop improving.
+    * Returns (id, dist)
     * over the endpoints of the selected edges: a source on no such
-    * edge has no row.
+    * edge has no row (its seed is empty, tested on the edge cache, so
+    * the edge source is read once).
     */
   def ssspWeighted(s: SparkSession, g: PropertyGraph, source: Long,
                    weight: Column,
                    labels: Seq[String] = Nil,
                    reverse: Boolean = false): DataFrame = {
     val w = weight.cast("long")
-    val dists = Loop.cached { c =>
+    Loop.cached { c =>
       val we = g.edgesOf(labels).select(col("src"), col("dst"),
         when(w.isNull || w < 0, raise_error(lit(
           "ssspWeighted: edge weights must be non-null and non-negative")))
@@ -1414,32 +1423,20 @@ object Algorithms {
       val edges = c((if (reverse)
           we.select(col("dst").as("src"), col("src").as("dst"), col("w"))
         else we).repartition(col("src")))
-      Loop.run(s.range(1).select(lit(source).as("id"), lit(0L).as("dist"),
-          lit(true).as("__chg")), Int.MaxValue,
-          stop = Loop.whenEmpty(_.filter(col("__chg")))) { (st, _) =>
-        val cand = edges
-          .join(st.filter(col("__chg")).select(col("id").as("src"), col("dist"))
-            .hint("shuffle_hash"), "src")
-          .groupBy(col("dst").as("id")).agg(min(col("dist") + col("w")).as("cand"))
-        st.select(col("id"), col("dist"))
-          .join(cand.hint("shuffle_hash"), Seq("id"), "full")
-          .select(col("id"), least(col("dist"), col("cand")).as("dist"),
-            (col("cand").isNotNull &&
-              (col("dist").isNull || col("cand") < col("dist"))).as("__chg"))
-      }.state.select(col("id"), col("dist"))
+      relax(edges, ifEndpoint(edges, source, s.range(1).select(lit(source).as("id"),
+          lit(0L).as("x"), lit(true).as("__chg"))), col("x") + col("w"),
+        lower = true, Int.MaxValue, grow = true)
+        .state.select(col("id"), col("x").as("dist"))
     }
-    ifEndpoint(g, source, labels, dists)
   }
 
-  /** `dists` when `source` is an endpoint of an edge in `labels`, else
+  /** `rows` when `source` is an endpoint of `edges` (src, dst, …), else
     * no rows: the vertex set of a selected-edge graph is its edges'
     * endpoints, so a source on none of them is not in it (every other
     * row a search emits was reached over an edge).
     */
-  private def ifEndpoint(g: PropertyGraph, source: Long, labels: Seq[String],
-                         dists: DataFrame): DataFrame =
-    dists.join(g.edgesOf(labels)
-      .filter(col("src") === source || col("dst") === source).limit(1),
+  private def ifEndpoint(edges: DataFrame, source: Long, rows: DataFrame): DataFrame =
+    rows.join(edges.filter(col("src") === source || col("dst") === source).limit(1),
       lit(true), "left_semi")
 
   /** Strongly connected components (directed) — trim + forward-
@@ -1449,9 +1446,11 @@ object Algorithms {
     * vertices are singleton SCCs by definition, and on DAG-heavy
     * graphs (this one included) trimming alone finishes the job —
     * then (2) colors the cyclic core by forward min-id propagation to
-    * fixpoint, (3) marks vertices that reach their color's root
-    * BACKWARD within the color: those are exactly the root's SCC
-    * (v ↔ root: forward reachability gave v the root's color,
+    * fixpoint (the relaxation kernel, [[relax]], from the identity
+    * seed: only colors that fell last round propagate), (3) marks
+    * vertices that reach their color's root BACKWARD within the
+    * color: those are exactly the root's SCC (v ↔ root: forward
+    * reachability gave v the root's color,
     * backward gives the return path), which is assigned and removed.
     *
     * Returns (id, scc) with scc = min member id — the a_components
@@ -1526,26 +1525,19 @@ object Algorithms {
           val verts = deg.select(col("id")).localCheckpoint()
           Loop.release(deg)
           // the one edge refilter per OUTER round: restrict to the
-          // surviving cyclic core before the coloring joins
-          val edges = within(edges0, verts).localCheckpoint()
-          // ---- forward coloring to fixpoint: c(v) = min id reaching v.
-          // Colors are monotone non-increasing, so an exact decimal sum
-          // is a sufficient convergence witness — one scalar aggregate
-          // per step instead of a full compare-join.
-          val fwd = Loop.run(verts.select(col("id"), col("id").as("c")), maxIter,
-              stop = Loop.whenUnchanged(Loop.decimalSum("c"))) { (c, _) =>
-            val in = edges.join(c.select(col("id").as("src"), col("c")), "src")
-              .groupBy(col("dst")).agg(min(col("c")).as("cin"))
-              .select(col("dst").as("id"), col("cin"))
-            c.join(in, Seq("id"), "left")
-              .select(col("id"), least(col("c"), coalesce(col("cin"),
-                col("c"))).as("c"))
-          }
+          // surviving cyclic core before the coloring joins, partitioned
+          // on the coloring's join key
+          val edges = within(edges0, verts).repartition(col("src")).localCheckpoint()
+          // ---- forward coloring to fixpoint on the relaxation kernel:
+          // c(v) = min id reaching v. The identity seed is the first
+          // propagation round, so the kernel's cap is maxIter − 1.
+          val fwd = relax(edges, identitySeed(edges, verts), col("x"),
+            lower = true, maxIter - 1)
           // a non-fixpoint coloring (propagation distance > maxIter)
           // would silently mis-assign components — fail instead
           require(fwd.converged,
             s"SCC forward coloring did not converge in $maxIter steps")
-          val c = fwd.state
+          val c = fwd.state.select(col("id"), col("x").as("c"))
           // ---- backward reachability of the color root, within color
           val e2 = edges
             .join(c.select(col("id").as("src"), col("c").as("c_src")), "src")

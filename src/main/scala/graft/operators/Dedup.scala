@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Loop
 
 /** Deduplication operators for training-data pipelines (BASELINE.json
   * north-star surface).
@@ -551,50 +550,21 @@ object Dedup {
     * duplicates (A~B, B~C ⇒ {A,B,C} one cluster) and elect a canonical
     * representative (min doc_id) per cluster.
     *
-    * Iterative min-label propagation on DataFrames: every round each
-    * vertex takes the min of its own label and its neighbors' labels;
-    * converges in O(cluster diameter) rounds. Near-dup clusters are
-    * small and shallow by construction (clones of one source document),
-    * so this terminates in 2–3 rounds regardless of corpus size; all
-    * per-round state is narrow (id, comp) longs — the shuffles move
-    * 16-byte rows, never text. [[graft.util.Loop.run]]'s rolling
-    * `localCheckpoint` truncates the growing loop lineage (the
-    * rolling-state sibling of the [[graft.util.Loop.frontier]] BFS the
-    * traversals run); the convergence TEST is the only driver-side
-    * action. Returns (id, comp) with
-    * comp = min doc_id reachable, i.e. the canonical representative.
+    * [[graft.graph.Algorithms.connectedComponents]] over the pair
+    * graph, whose vertex set is the pair endpoints: delta min-label
+    * propagation on the relaxation kernel, from the identity seed, run
+    * to its fixpoint (labels only fall and are bounded below, so it
+    * always ends — a long near-dup chain is never cut short). Per-round
+    * state is narrow (id, comp) longs — the shuffles move 16-byte rows,
+    * never text — and the pair list is symmetrized in one pass, so an
+    * LSH-sourced pair pipeline (the d9/d24 gate path) runs once.
+    * Returns (id, comp) with comp = min doc_id reachable, i.e. the
+    * canonical representative.
     */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = Loop.cached { c =>
-    // explode-symmetrize in ONE pass over the pair subtree: a union of
-    // (fwd, reversed-fwd) names the pair pipeline twice, and Catalyst
-    // reuses identical union branches only when an exchange sits at
-    // the subtree root — here the branches differ in their projection,
-    // so an LSH-sourced pair list (the d9/d24 gate path) would
-    // materialize its whole banding+verify DAG TWICE before the first
-    // cluster round (the Algorithms.symmetrize lesson)
-    val edges = c(pairs.select(explode(array(
-        struct(col("a_id").as("src"), col("b_id").as("dst")),
-        struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("src"))) // pre-partition for the per-round join (r16)
-    // convergence witness: the id set is constant across rounds and
-    // labels are monotone NON-INCREASING, so the exact decimal sum of
-    // comps is unchanged iff no label changed — ONE scalar aggregate
-    // over the just-checkpointed frame replaces a compare-join (+ its
-    // shuffle) per round (the stronglyConnected discipline); an empty
-    // pair list (a scanCluster corpus with no core-core edges) sums
-    // to 0 and converges on round 1
-    Loop.run(edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")), maxIter,
-        stop = Loop.whenUnchanged(Loop.decimalSum("comp"))) { (labels, _) =>
-      val viaNbr = edges
-        .join(labels.select(col("id").as("src"), col("comp"))
-          .hint("shuffle_hash"), "src") // stream the cache (r16)
-        .select(col("dst").as("id"), col("comp"))
-      labels.union(viaNbr)
-        .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-    }.state
-  }
+  def dupClusters(pairs: DataFrame): DataFrame =
+    graft.graph.Algorithms.components(
+        pairs.select(col("a_id").as("src"), col("b_id").as("dst")), None)
+      .select(col("id"), col("x").as("comp"))
 
   /** Train/eval decontamination — the benchmark-leakage check of a
     * training pipeline (GPT-3/Gopher style n-gram collision filtering,

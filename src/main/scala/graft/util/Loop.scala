@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
@@ -16,7 +16,12 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *
   * An operator opens a [[cached]] scope for its loop-invariant frames
   * and runs its rounds with [[run]]; the round maths stay at the call
-  * site as a `step`. This module owns everything else:
+  * site as a `step`, or in a kernel that a family of operators shares:
+  * the PageRank/Katz rank loop (`Algorithms.RankGraph`) and the
+  * monotone min/max relaxation of connected components, DAG layering,
+  * weighted SSSP, SCC coloring and `Dedup.dupClusters`
+  * (`Algorithms.relax`, a delta round that stops [[whenEmpty]]). This
+  * module owns everything else:
   *
   *  - '''Caches.''' Frames persist MEMORY_AND_DISK for the scope's
   *    lifetime. [[Caches.counted]] checkpoints the loop's SOURCE and
@@ -253,8 +258,8 @@ object Loop {
     (st, _) => rows(st).isEmpty
 
   /** Stop when `measure` reads the same value off two consecutive
-    * states — an unchanged row count or decimal sum. Stateful: build
-    * one per [[run]].
+    * states, e.g. an unchanged row count. Stateful: build one per
+    * [[run]].
     */
   def whenUnchanged[A](measure: DataFrame => A): (DataFrame, Int) => Boolean = {
     var last: Option[A] = None
@@ -264,14 +269,6 @@ object Loop {
       last = Some(v)
       same
     }
-  }
-
-  /** Exact decimal sum of a long column (0 over no rows) — a
-    * convergence witness for monotone labels over a fixed id set.
-    */
-  def decimalSum(c: String): DataFrame => java.math.BigDecimal = { df =>
-    val d = df.agg(sum(col(c).cast("decimal(38,0)"))).head().getDecimal(0)
-    if (d == null) java.math.BigDecimal.ZERO else d
   }
 
   /** Free the cached blocks behind a localCheckpoint'ed frame (also one

@@ -385,21 +385,20 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("ccAltRound consumes ONLY the delta frame (frontier contract)") {
-    // adjacency 1–2; lab holds a better label for 1 (comp 0) that is
-    // NOT in delta — it must not reach 2. Delta holds 3's label for a
-    // vertex with no edges — nothing propagates from it either.
-    val adj = Seq((1L, 2L), (2L, 1L)).toDF("v", "n")
-    val lab = Seq((1L, 0L), (2L, 2L), (3L, 3L)).toDF("id", "comp")
-    val delta = Seq((3L, 3L)).toDF("id", "comp")
-    val out = Algorithms.ccAltRound(adj, lab, delta)
-      .select("id", "comp").as[(Long, Long)].collect().toMap
+  test("a relaxation round consumes ONLY the delta rows (frontier contract)") {
+    // edges 1–2; the state holds a better label for 1 (x 0) that is NOT
+    // flagged __chg — it must not reach 2. The flagged row is 3's label
+    // on a vertex with no edges — nothing propagates from it either.
+    val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    def round(st: Seq[(Long, Long, Boolean)]): Map[Long, Long] =
+      Algorithms.relaxRound(edges, st.toDF("id", "x", "__chg"), col("x"),
+          lower = true, grow = false)
+        .select("id", "x").as[(Long, Long)].collect().toMap
+    val out = round(Seq((1L, 0L, false), (2L, 2L, false), (3L, 3L, true)))
     assert(out == Map(1L -> 0L, 2L -> 2L, 3L -> 3L),
       "a label outside delta must not propagate in a delta round")
     // same round with 1's label IN delta: now 2 picks it up
-    val delta2 = Seq((1L, 0L)).toDF("id", "comp")
-    val out2 = Algorithms.ccAltRound(adj, lab, delta2)
-      .select("id", "comp").as[(Long, Long)].collect().toMap
+    val out2 = round(Seq((1L, 0L, true), (2L, 2L, false), (3L, 3L, false)))
     assert(out2 == Map(1L -> 0L, 2L -> 0L, 3L -> 3L))
   }
 

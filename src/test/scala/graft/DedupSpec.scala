@@ -400,25 +400,26 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("dupClusters: multi-round chain converges to min-label components " +
-    "(sum-witness convergence — r15 optimization)") {
+  test("dupClusters: chains of any length converge to min-label components") {
     // a 7-link chain needs ~6 min-label propagation rounds (the label 10
-    // must walk the whole chain), so a broken convergence witness that
-    // stops one round early yields a non-min comp for the far end;
-    // plus a separate 2-cluster and a singleton pair to pin components
-    val pairs = Seq(
+    // must walk the whole chain), so a broken convergence test that
+    // stops one round early yields a non-min comp for the far end; a
+    // 25-link chain outruns any fixed round cap of 20, which returned
+    // a non-min comp for its far end; plus a separate 2-cluster and a
+    // singleton pair to pin components
+    val pairs = (Seq(
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L),
       (15L, 16L), (16L, 17L), // chain 10..17
       (30L, 31L), (31L, 32L), // chain 30..32
       (50L, 51L) // pair
-    ).toDF("a_id", "b_id")
+    ) ++ (100L until 125L).map(i => (i, i + 1))).toDF("a_id", "b_id") // 100..125
     val got = Dedup.dupClusters(pairs)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     val want = (10L to 17L).map(i => (i, 10L)) ++
-      (30L to 32L).map(i => (i, 30L)) ++ Seq((50L, 50L), (51L, 50L))
+      (30L to 32L).map(i => (i, 30L)) ++ Seq((50L, 50L), (51L, 50L)) ++
+      (100L to 125L).map(i => (i, 100L))
     assert(got == want)
-    // empty pair list: converge round 1 with an empty frame (the SUM
-    // witness is NULL over zero rows — must not NPE)
+    // empty pair list: an empty vertex set converges on the seed
     assert(Dedup.dupClusters(pairs.limit(0)).isEmpty)
   }
 }

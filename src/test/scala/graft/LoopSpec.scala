@@ -230,7 +230,9 @@ class LoopSpec extends AnyFunSuite {
     "modularity" -> (g => Algorithms.modularity(spark, g.edges,
       g.vertices.select(col("id"), (col("id") % 3).as("comm")))),
     "dupClusters" -> (g => Dedup.dupClusters(
-      g.edges.select(col("src").as("a_id"), col("dst").as("b_id")))))
+      g.edges.select(col("src").as("a_id"), col("dst").as("b_id")))),
+    "ssspWeighted" -> (g => Algorithms.ssspWeighted(spark, g, 0L, col("src") % 3 + 1)),
+    "stronglyConnected" -> (g => Algorithms.stronglyConnected(spark, g)))
 
   for ((name, op) <- operators)
     test(s"$name evaluates its edge source once and returns a frame " +
@@ -251,5 +253,20 @@ class LoopSpec extends AnyFunSuite {
     val (g, _) = countingGraph()
     val (_, jobs) = jobsOf(Algorithms.pageRankExact(spark, g).collect())
     assert(jobs == 38, s"pageRankExact and a collect ran $jobs jobs")
+  }
+
+  // the relaxation kernel's pins: the identity seed's join-free first
+  // round and one delta round per later propagation step
+  test("connectedComponents plus a collect costs a pinned number of Spark jobs") {
+    val (g, _) = countingGraph()
+    val (_, jobs) = jobsOf(Algorithms.connectedComponents(spark, g).collect())
+    assert(jobs == 17, s"connectedComponents and a collect ran $jobs jobs")
+  }
+
+  test("dupClusters plus a collect costs a pinned number of Spark jobs") {
+    val (g, _) = countingGraph()
+    val (_, jobs) = jobsOf(Dedup.dupClusters(
+      g.edges.select(col("src").as("a_id"), col("dst").as("b_id"))).collect())
+    assert(jobs == 17, s"dupClusters and a collect ran $jobs jobs")
   }
 }

@@ -1,14 +1,12 @@
 package graft
 
 import java.nio.file.Paths
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.jobsOf
 import graft.graph.PropertyGraph
 import graft.queries.StoreOps
-import graft.sources.QueryMetrics
 
 /** Guards the declared table schemas in `Tables`: a declared schema is
   * not checked against the parquet footer, so a misspelled column or a
@@ -21,21 +19,6 @@ class TablesSpec extends AnyFunSuite {
   private val sfDirs: Seq[String] = {
     val root = Paths.get(TestSpark.sfDir).getParent
     Seq("sf0.001", "sf0.01", "sf0.1").map(d => root.resolve(d).toString)
-  }
-
-  /** Spark jobs `body` launches, counted by a listener on the bus. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    QueryMetrics.flush(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      QueryMetrics.flush(spark)
-      (a, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   for (dir <- sfDirs; t <- Tables.all)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.QueryMetrics
 
 /** Shared test session (one JVM-wide session; suites reuse it), under
   * the same policy as Bench and Verify (`graft.Session`).
@@ -12,6 +13,8 @@ object TestSpark {
 
   /** Run `body` and count the Spark jobs it started. Only jobs
     * carrying this thread's job group count: suites share one session.
+    * The listener bus is drained before the listener joins (so no
+    * earlier job's event reaches it) and after `body` returns.
     */
   def jobsOf[T](body: => T): (T, Int) = {
     val gid = "jobs-probe"
@@ -24,11 +27,12 @@ object TestSpark {
         ()
       }
     }
+    QueryMetrics.flush(spark)
     spark.sparkContext.addSparkListener(l)
     try {
       spark.sparkContext.setJobGroup(gid, "job probe")
       val out = try body finally spark.sparkContext.clearJobGroup()
-      Thread.sleep(1500) // listener bus drain
+      QueryMetrics.flush(spark)
       (out, jobs.get())
     } finally spark.sparkContext.removeSparkListener(l)
   }

@@ -797,33 +797,16 @@ class TraversalSpec extends AnyFunSuite {
     // ran a distributed job (checkpoint materialization) — plan-only
     // paths (explain, dry compilation) paid it. A job started during
     // construction completes synchronously before construction returns,
-    // so a short post-construction drain makes the zero-job assertion
-    // reliable; the result check then proves the lazy pin still works.
-    // suites share one session and may run in parallel — count only
-    // jobs carrying THIS thread's job group (an eager construction
+    // so draining the listener bus afterwards makes the zero-job
+    // assertion reliable; the result check then proves the lazy pin
+    // still works.
+    // suites share one session and may run in parallel — jobsOf counts
+    // only jobs carrying THIS thread's job group (an eager construction
     // job would run synchronously on this thread and inherit it)
-    val gid = "choose-lazy-probe"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (gid == js.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(gid, "construction probe")
-    try {
-      val q = triangle.V.choose(_.out("next"), _.out("next"), t => t)
-      Thread.sleep(1500) // listener bus drain
-      assert(jobs.get() == 0,
-        s"building choose() launched ${jobs.get()} Spark job(s)")
-      assert(q.toDF.count() == 3) // every vertex has an out-neighbor
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+    val (q, jobs) = TestSpark.jobsOf(
+      triangle.V.choose(_.out("next"), _.out("next"), t => t))
+    assert(jobs == 0, s"building choose() launched $jobs Spark job(s)")
+    assert(q.toDF.count() == 3) // every vertex has an out-neighbor
   }
 
   test("choose() pins ANY cut in the cond (ADVICE r13): order() before " +
@@ -833,35 +816,17 @@ class TraversalSpec extends AnyFunSuite {
     // pin observability: the pin is an EAGER localCheckpoint, so a cond
     // carrying a cut launches job(s) while the parser builds the plan —
     // the no-cut form is the zero-job lazy case the test above pins
-    val gid = "choose-pin-probe"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (gid == js.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(gid, "pin probe")
-    try {
-      // order() precedes the cut, but the out() hop AFTER it destroys
-      // the ordering — the old exemption compiled this pinCond=false
-      val q = graft.graph.GremlinParser.run(triangle,
-        "g.V().choose(__.order('score', asc).out('next').limit(1), " +
-          "__.out('next'))")
-      Thread.sleep(1500) // listener bus drain
-      assert(jobs.get() >= 1,
-        "an order()-then-hop-then-cut cond must pin (eager checkpoint)")
-      // exact partition: limit(1) keeps ONE cond row → exactly one
-      // origin routes true (hops), the other two pass through — 3 rows,
-      // and the union of branch origins is exactly the frontier
-      assert(q.count() == 3)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+    // order() precedes the cut, but the out() hop AFTER it destroys
+    // the ordering — the old exemption compiled this pinCond=false
+    val (q, jobs) = TestSpark.jobsOf(graft.graph.GremlinParser.run(triangle,
+      "g.V().choose(__.order('score', asc).out('next').limit(1), " +
+        "__.out('next'))"))
+    assert(jobs >= 1,
+      "an order()-then-hop-then-cut cond must pin (eager checkpoint)")
+    // exact partition: limit(1) keeps ONE cond row → exactly one
+    // origin routes true (hops), the other two pass through — 3 rows,
+    // and the union of branch origins is exactly the frontier
+    assert(q.count() == 3)
     // with exchange reuse DISABLED the pin is forced for every cond;
     // a nondeterministic cut cond still partitions exactly
     val prev = spark.conf.get("spark.sql.exchange.reuse", "true")
