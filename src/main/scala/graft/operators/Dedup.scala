@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines (BASELINE.json
   * north-star surface).
@@ -13,6 +14,13 @@ import org.apache.spark.sql.functions._
   * shuffle volume is O(n · bands) and the verify join touches only
   * candidates. The brute-force Jaccard pairer is intentionally bounded
   * (verification path / oracle) and documents its own limit.
+  *
+  * The per-document text work (shingle windows, MinHash signatures,
+  * SimHash votes) runs after one doc_id hash partitioning into
+  * `spark.sql.shuffle.partitions` parts ([[TextAnalysis.byDoc]]), so a
+  * corpus that scans as one split still fills every task slot; the
+  * (doc_id, ..) windows, distincts and aggregates above it need no
+  * exchange of their own.
   */
 object Dedup {
 
@@ -47,18 +55,21 @@ object Dedup {
   /** Exploded DISTINCT (doc_id, s) shingle rows — the codegen'd bulk
     * path. Tokens explode once; k-grams assemble with window lead()
     * over (doc_id, pos), all whole-stage codegen, at the cost of one
-    * narrow doc_id shuffle — the same explode-don't-transform lesson
-    * as the minhash aggregates (interpreted HOF shingling measured
-    * ~10× slower on the gate corpus). A doc with fewer than k tokens
-    * yields one whole-doc shingle: its pos-0 row survives and
-    * concat_ws skips the null leads, matching [[shingles]] exactly.
+    * narrow doc_id shuffle of the documents ([[TextAnalysis.byDoc]],
+    * before the explode), which also serves the (doc_id, s) distinct
+    * and any groupBy(doc_id) a caller puts on top — the same
+    * explode-don't-transform lesson as the minhash aggregates
+    * (interpreted HOF shingling measured ~10× slower on the gate
+    * corpus). A doc with fewer than k tokens yields one whole-doc
+    * shingle: its pos-0 row survives and concat_ws skips the null
+    * leads, matching [[shingles]] exactly.
     */
   def shingleRows(docs: DataFrame, k: Int): DataFrame = {
     // null text coalesces to "" so the doc still yields its one
     // empty-string shingle (as the Column path does) instead of
     // silently vanishing from signatures — posexplode of a null array
     // emits no rows
-    val tok = docs.select(col("doc_id"),
+    val tok = TextAnalysis.byDoc(docs).select(col("doc_id"),
       posexplode(TextAnalysis.tokens(coalesce(col("text"), lit(""))))
         .as(Seq("pos", "t")))
     if (k == 1) tok.select(col("doc_id"), col("t").as("s")).distinct()
@@ -113,8 +124,8 @@ object Dedup {
     * array functions are interpreted per element, so the seemingly
     * shuffle-free per-row formulation (64 × transform+array_min) is two
     * orders of magnitude slower; the explode shape runs in whole-stage
-    * codegen with map-side partial mins, so the one shuffle carries
-    * only (doc_id, 64 longs) rows.
+    * codegen, and the aggregate rides [[shingleRows]]' doc_id
+    * partitioning, so it adds no exchange.
     */
   def minhashSignatures(docs: DataFrame, k: Int = 3, numHashes: Int = 64,
                         tokenHash: Column => Column = fastTokenHash): DataFrame = {
@@ -245,8 +256,10 @@ object Dedup {
     * Same explode + codegen'd-aggregate shape as minhashSignatures
     * (interpreted higher-order folds are the local bottleneck): one
     * xxhash64 per distinct token, 64 SUM aggregates of ±1 bit votes,
-    * bits reassembled with shift/or. Map-side partial sums keep the
-    * shuffle narrow at scale.
+    * bits reassembled with shift/or. The documents are hash-partitioned
+    * on doc_id first ([[TextAnalysis.byDoc]]), so the vote aggregate
+    * runs on every task slot and needs no exchange of its own: the
+    * text rows move once, not the map-side partial sums.
     */
   /** default token hash: Spark's codegen'd xxhash64 — fastest, but
     * engine-specific (the oracle cannot replay it).
@@ -265,7 +278,7 @@ object Dedup {
 
   def simhash(docs: DataFrame,
               tokenHash: Column => Column = fastTokenHash): DataFrame = {
-    val exploded = docs
+    val exploded = TextAnalysis.byDoc(docs)
       .select(col("doc_id"),
         explode(array_distinct(TextAnalysis.tokens(col("text")))).as("t"))
       .select(col("doc_id"), tokenHash(col("t")).as("h"))
@@ -375,6 +388,13 @@ object Dedup {
     if (subset > 0) subset
     else simhashSubsetForCorpus(docs.count(), maxHamming)
 
+  /** SimHash near-dup pairs by chunk banding (see above). With
+    * `subset = 0` the call caches `docs` for its sizing count and drops
+    * that cache before it returns. Spark shares one cache between equal
+    * plans, so two such calls at once on one plan may drop each other's
+    * cache: the results stay right, but the other call scans its source
+    * again.
+    */
   def simhashNearDup(docs: DataFrame, maxHamming: Int = 3,
       tokenHash: Column => Column = fastTokenHash,
       subset: Int = 0, maxBucketSize: Int = Int.MaxValue): DataFrame = {
@@ -387,12 +407,21 @@ object Dedup {
     // with a cheap count should pass an explicit subset from
     // simhashSubsetForCorpus instead). Persist around that count so an
     // expensive upstream plan is computed ONCE, not once for the count
-    // and again for the banding; the MEMORY_AND_DISK cache is released
-    // by the ContextCleaner when the frame goes out of scope.
-    val input =
-      if (subset == 0)
-        docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else docs
+    // and again for the banding; the cache is released once the band
+    // checkpoint below holds its rows (nothing reads the input after
+    // it), or on failure. A caller's own cache is left alone.
+    val sizing = subset == 0 && docs.storageLevel == StorageLevel.NONE
+    val input = if (sizing) docs.persist(StorageLevel.MEMORY_AND_DISK) else docs
+    try simhashBands(input, maxHamming, tokenHash, subset, maxBucketSize)
+    finally if (sizing) input.unpersist()
+  }
+
+  /** [[simhashNearDup]] after its sizing cache: every row the returned
+    * plan reads is in the eager band checkpoint.
+    */
+  private def simhashBands(input: DataFrame, maxHamming: Int,
+      tokenHash: Column => Column, subset: Int,
+      maxBucketSize: Int): DataFrame = {
     val m = simhashEffectiveSubset(input, maxHamming, subset)
     val c = maxHamming + m
     require(c <= 64, "maxHamming + subset must be <= 64 bits")

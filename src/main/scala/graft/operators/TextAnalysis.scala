@@ -10,8 +10,9 @@ import graft.util.Loop
   * TikvTables.java:203-210).
   *
   * Everything here is per-row, codegen'd Catalyst expressions — no
-  * UDFs, no shuffles — so a 100 TB documents table maps straight
-  * through with zero exchange; only downstream aggregations shuffle.
+  * UDFs. The column functions add no shuffle; [[gopherFlags]] and the
+  * near-dup operators in [[Dedup]] spread the documents on doc_id
+  * first ([[byDoc]]), one exchange of the text rows.
   */
 object TextAnalysis {
 
@@ -41,6 +42,25 @@ object TextAnalysis {
     size(filter(tokens(text), t => array_contains(stopArr, t)))
   }
 
+  /** The documents hash-partitioned on doc_id into
+    * `spark.sql.shuffle.partitions` partitions, so the per-document
+    * text work above it (tokenizing, shingle windows, signature and
+    * vote aggregates, rule flags) runs on every task slot. A small
+    * corpus scans as one split — one parquet file is one task — and AQE
+    * merges the small shuffle after it by bytes, so without this the
+    * heavy stage runs on one or two slots. The count is fixed, which AQE
+    * does not coalesce, and a doc_id hash partitioning satisfies every
+    * (doc_id, ..) window, distinct and groupBy above it: for those
+    * operators this exchange replaces the one they already had.
+    *
+    * There is no size gate: a byte estimate does not tell how many scan
+    * splits carry rows (a one-row-group file reads on one task however
+    * small `spark.sql.files.maxPartitionBytes` is).
+    */
+  private[operators] def byDoc(docs: DataFrame): DataFrame =
+    docs.repartition(docs.sparkSession.sessionState.conf.defaultNumShufflePartitions,
+      col("doc_id"))
+
   /** Gopher quality rules (Rae et al. 2021, Appendix A — the public
     * heuristic filter battery every large-scale pretraining corpus
     * pipeline runs): per-document boolean flags for the 7 rules this
@@ -48,7 +68,9 @@ object TextAnalysis {
     * threshold is rewritten as INTEGER cross-multiplication
     * (e.g. mean word length in [3,10] ⇔ 3·n_tok ≤ chars ≤ 10·n_tok)
     * so the flags are bit-exact across engines — no double division
-    * anywhere. Map-only projection; codegen'd builtins throughout.
+    * anywhere. Codegen'd builtins throughout, evaluated after one
+    * doc_id exchange of the text rows ([[byDoc]]) that spreads the
+    * corpus over every task slot.
     */
   def gopherFlags(docs: DataFrame): DataFrame = {
     val t = col("text")
@@ -72,7 +94,7 @@ object TextAnalysis {
       (nBullet * 10 <= nLines * 9).as("r_bullet_lines"),// ≤ 90% of lines
       (nAlpha * 5 >= nTok * 4).as("r_alpha_words"),     // ≥ 80% alphabetic
       (nStopDistinct >= 2).as("r_stopwords"))           // ≥ 2 distinct stops
-    docs.select((col("doc_id") +: flags): _*)
+    byDoc(docs).select((col("doc_id") +: flags): _*)
       .withColumn("pass",
         col("r_word_count") && col("r_mean_word_len") &&
           col("r_symbol_ratio") && col("r_ellipsis_lines") &&

@@ -18,7 +18,8 @@ import scala.collection.concurrent.TrieMap
   *     under the SQL execution (a checkpoint, a count, the final write)
   *     that launched them — which of an iterative query's steps (round
   *     checkpoints, emptiness tests, final materialization) carry the
-  *     wall-clock.
+  *     wall-clock — each with the task count of its own stage, so a
+  *     stage that runs on fewer tasks than the session has slots shows.
   *   - `explain <query>...`: formatted physical plans.
   *   - `inventory`: query and oracle counts, rows-only queries and
   *     oracles with no query.
@@ -135,23 +136,26 @@ object Probe {
     // job's own call site rarely names the step); the execution's
     // description does
     val execs = TrieMap.empty[Long, String]
-    val starts = TrieMap.empty[Int, (Long, String, Option[Long])]
-    val done = TrieMap.empty[Int, (Double, String, Option[Long])]
+    val starts = TrieMap.empty[Int, (Long, String, Int, Option[Long])]
+    val done = TrieMap.empty[Int, (Double, String, Int, Option[Long])]
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart => execs.put(x.executionId, x.description)
         case _ =>
       }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val name = js.stageInfos.lastOption.map(_.name).getOrElse("?")
+        // the job's own stage is its newest; the others are parents a
+        // shuffle already wrote, skipped
+        val last = js.stageInfos.maxByOption(_.stageId)
         val exec = Option(js.properties)
           .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
           .map(_.toLong)
-        starts.put(js.jobId, (System.nanoTime(), name, exec))
+        starts.put(js.jobId, (System.nanoTime(), last.fold("?")(_.name),
+          last.fold(0)(_.numTasks), exec))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        starts.remove(je.jobId).foreach { case (t0, name, exec) =>
-          done.put(je.jobId, ((System.nanoTime() - t0) / 1e9, name, exec))
+        starts.remove(je.jobId).foreach { case (t0, name, tasks, exec) =>
+          done.put(je.jobId, ((System.nanoTime() - t0) / 1e9, name, tasks, exec))
         }
     }
     names.foreach { n =>
@@ -168,11 +172,12 @@ object Probe {
       val jobSum = rs.map(_._2._1).sum
       println(f"\n===== $n total=$total%.2fs jobs=${rs.size} jobSum=$jobSum%.2fs (gap=${total - jobSum}%.2fs driver/plan) =====")
       // executions in the order of their first job
-      rs.groupBy(_._2._3).toSeq.sortBy(_._2.head._1).foreach { case (exec, js) =>
+      rs.groupBy(_._2._4).toSeq.sortBy(_._2.head._1).foreach { case (exec, js) =>
         val what = exec.fold("(no SQL execution)")(e =>
           s"execution $e: ${execs.getOrElse(e, "?")}")
         println(f"  ${js.size}%3d jobs  ${js.map(_._2._1).sum}%7.3fs  $what")
-        js.foreach { case (id, (d, name, _)) => println(f"      job $id%4d  $d%7.3fs  $name") }
+        js.foreach { case (id, (d, name, tasks, _)) =>
+          println(f"      job $id%4d  $d%7.3fs  $tasks%4d tasks  $name") }
       }
     }
   }

@@ -223,6 +223,81 @@ class DedupSpec extends AnyFunSuite {
     assert(jobs == 7, s"minhashNearDup and a collect ran $jobs jobs")
   }
 
+  test("simhashNearDup (auto-sized) plus a collect costs a pinned number " +
+       "of Spark jobs") {
+    // the doc_id spread takes the place of the vote aggregate's
+    // exchange, so a call that fills its own sizing cache runs as many
+    // jobs as before the spread
+    val (out, jobs) = TestSpark.jobsOf(
+      Dedup.simhashNearDup(longDocs, maxHamming = 3).collect())
+    assert(out.nonEmpty)
+    assert(jobs == 9, s"simhashNearDup and a collect ran $jobs jobs")
+  }
+
+  /** The physical plan of the one checkpoint minhashNearDup runs: its
+    * per-doc signature aggregate over the shingle rows.
+    */
+  private def minhashSigPlan(in: org.apache.spark.sql.DataFrame) = {
+    val plans = TestSpark.plansOf("localCheckpoint")(
+      Dedup.minhashNearDup(in, k = 3, threshold = 0.5).collect())
+    assert(plans.size == 1, s"expected one checkpoint, saw ${plans.size}")
+    plans.head
+  }
+
+  private def aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The window and aggregate operators of `plan`. */
+  private def windowsAndAggs(plan: org.apache.spark.sql.execution.SparkPlan) =
+    aqe.collect(plan) {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+    }
+
+  test("minhashNearDup on a one-file corpus: the shingle window and the " +
+       "signature aggregate sit on ONE doc_id spread, no other exchange") {
+    val plan = minhashSigPlan(Tables.documents(spark, TestSpark.sfDir))
+    val ex = TestSpark.shuffles(plan)
+    assert(ex.size == 1 && TestSpark.isDocSpread(ex.head),
+      s"expected one doc_id spread under the checkpoint in\n$plan")
+    assert(windowsAndAggs(plan).size >= 3, s"window or aggregates missing in\n$plan")
+    assert(windowsAndAggs(ex.head.child).isEmpty,
+      s"text work below the spread in\n$plan")
+  }
+
+  test("simhashNearDup's vote aggregate runs on the doc_id spread, below " +
+       "the band exchange") {
+    val plans = TestSpark.plansOf("localCheckpoint")(
+      Dedup.simhashNearDup(longDocs, maxHamming = 3, subset = 1).collect())
+    assert(plans.size == 1)
+    val ex = TestSpark.shuffles(plans.head)
+    val spread = ex.filter(TestSpark.isDocSpread)
+    assert(ex.size == 2 && spread.size == 1, s"in\n${plans.head}")
+    assert(windowsAndAggs(spread.head.child).isEmpty)
+    // the band exchange reads the aggregate, which reads the spread
+    val band = ex.filterNot(TestSpark.isDocSpread).head
+    assert(windowsAndAggs(band.child).nonEmpty)
+  }
+
+  test("simhashNearDup releases its sizing cache and leaves a caller's alone") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a plan no earlier call cached, so the call persists it itself
+    val fresh = longDocs.filter(col("doc_id") >= 0)
+    Dedup.simhashNearDup(fresh, maxHamming = 3).collect()
+    // the one RDD the call may leave persisted is the band checkpoint
+    // its result reads (released with the result, by the cleaner)
+    val left = sc.getPersistentRDDs -- before
+    assert(left.size == 1 && left.values.forall(_.isCheckpointed),
+      s"the auto-sized call left ${left.values.mkString(", ")} persisted")
+    assert(fresh.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    val mine = longDocs.select(col("doc_id"), col("text"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    try {
+      Dedup.simhashNearDup(mine, maxHamming = 3).collect()
+      assert(mine.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    } finally mine.unpersist()
+  }
+
   test("dedupDocuments keeps one representative per near-dup cluster") {
     val kept = Dedup.dedupDocuments(docs, jaccardThreshold = 0.5)
       .select("doc_id").as[Long].collect().toSet

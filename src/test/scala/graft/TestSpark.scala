@@ -1,6 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sources.QueryMetrics
 
 /** Shared test session (one JVM-wide session; suites reuse it), under
@@ -35,5 +41,40 @@ object TestSpark {
       QueryMetrics.flush(spark)
       (out, jobs.get())
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Run `body` and return the physical plans of the SQL executions it
+    * ran under the action `action` (`localCheckpoint`, `collect`, ..),
+    * in the order they finished.
+    */
+  def plansOf(action: String)(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == action) seen.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    QueryMetrics.flush(spark)
+    spark.listenerManager.register(l)
+    try { body; QueryMetrics.flush(spark) }
+    finally spark.listenerManager.unregister(l)
+    seen.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  /** The shuffle exchanges of a physical plan, AQE's query stages
+    * included.
+    */
+  def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
+
+  /** Whether `e` is a fixed-count hash exchange on doc_id into
+    * `spark.sql.shuffle.partitions` parts — the text operators' spread.
+    */
+  def isDocSpread(e: ShuffleExchangeExec): Boolean = e.outputPartitioning match {
+    case HashPartitioning(Seq(a: Attribute), n) =>
+      a.name == "doc_id" &&
+        n == spark.conf.get("spark.sql.shuffle.partitions").toInt &&
+        e.shuffleOrigin == org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+    case _ => false
   }
 }

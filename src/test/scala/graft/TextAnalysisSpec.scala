@@ -66,6 +66,26 @@ class TextAnalysisSpec extends AnyFunSuite {
     (2L to 8L).foreach(id => assert(!f(id).getBoolean(8), s"doc $id must fail pass"))
   }
 
+  test("gopherFlags spreads a one-file corpus: one doc_id exchange " +
+       "into shuffle.partitions parts") {
+    val docs = Tables.documents(spark, TestSpark.sfDir)
+    assert(docs.inputFiles.length == 1, "the fixture is no longer one file")
+    val f = TextAnalysis.gopherFlags(docs)
+    f.collect()
+    val ex = TestSpark.shuffles(f.queryExecution.executedPlan)
+    assert(ex.size == 1 && TestSpark.isDocSpread(ex.head),
+      s"expected one doc_id spread in\n${f.queryExecution.executedPlan}")
+  }
+
+  test("gopherFlags plus a collect costs a pinned number of Spark jobs") {
+    // the spread's map stage, then the collect; without the spread a
+    // local frame's flags are collected on the driver, in no job
+    val docs = Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text")
+    val (out, jobs) = TestSpark.jobsOf(TextAnalysis.gopherFlags(docs).collect())
+    assert(out.length == 2)
+    assert(jobs == 2, s"gopherFlags and a collect ran $jobs jobs")
+  }
+
   test("langId classifies clear-cut sentences") {
     val df = Seq(
       (1L, "the cat and the dog sat in the garden with all of the birds"),
